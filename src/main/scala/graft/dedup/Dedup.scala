@@ -1523,17 +1523,6 @@ object Dedup {
         .select(col("id"), coalesce(col("component"), col("id")).as("component"))
         .select(col("id"), col("component"),
           (col("component") === col("id")).as("is_canonical")))._1
-    // RAW-immediate driver finish (r22): union-find is insensitive to
-    // duplicate pairs, edge orientation and self-loops (union(u,u) and a
-    // repeated union are no-ops), so when the RAW pair count — observed
-    // for free on the raw checkpoint's job — is already within the
-    // driver cap, the canonical-orientation + distinct pass and its
-    // eager checkpoint are pure fixed cost: collect the raw pairs
-    // directly. rawCount >= the distinct edge count, so the driver-memory
-    // bound is the same cap as before, decided one job earlier; a pair
-    // list over the cap keeps the exact pre-r22 flow, whose own immediate
-    // finish still fires once the DISTINCT count fits. cap = 0 (the spec
-    // force-distributed knob) never takes this branch.
     // DRIVER FINISH: star contraction shrinks the edge set geometrically,
     // so the TAIL rounds operate on trivially small graphs while still
     // paying full distributed fixed cost (two shuffle stages + one action

@@ -691,19 +691,10 @@ object IvfIndex {
     * with map-side partial aggregation, shuffling k rows per query per
     * partition instead of sorting all nprobe·n/nlist candidates per query
     * (the window `row_number` tail this replaced). A row lives in exactly
-    * one cell, so candidate (query, row) pairs are already distinct. */
-  def ivfTopK(model: SearcherModel, q: DataFrame, topK: Int,
-      nprobe: Int): DataFrame = {
-    import SparkSearcher._
-    val cents = model.centroids.getOrElse(
-      throw new IllegalStateException("IVF search without fitted centroids"))
-    ivfTopKOver(model.indexed.select(col(ROW_ID), col(VEC), col(CID)),
-      model.searcher.metric, cents, q, topK, nprobe)
-  }
-
-  /** Cell-pruned exact scoring over a caller-supplied `(row_id, __vec,
-    * __cell)` view — shared by IVFn,Flat (stored floats) and IVFn,SQfp16
-    * (floats reconstructed lazily in the scoring projection). */
+    * one cell, so candidate (query, row) pairs are already distinct.
+    * Scores a caller-supplied `(row_id, __vec, __cell)` view — shared by
+    * IVFn,Flat (stored floats) and IVFn,SQfp16 (floats reconstructed
+    * lazily in the scoring projection). */
   def ivfTopKOver(slim: DataFrame, metric: graft.functions.VectorFunctions.Metric,
       cents: Array[Array[Float]], q: DataFrame, topK: Int,
       nprobe: Int): DataFrame = {

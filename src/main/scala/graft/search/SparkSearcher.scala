@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{FloatType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.encoders.{Encoder, PassthroughEncoder}
@@ -140,7 +140,18 @@ final case class SearcherParams(
       * (default) = faiss/Lucene manual semantics: add() only logs the
       * guidance once growth exceeds the fitted corpus; the operator
       * calls compact() on their own schedule. */
-    autoCompactAtSegmentRatio: Double = 0.0)
+    autoCompactAtSegmentRatio: Double = 0.0) {
+  // a bad setting fails at construction, not at the first search
+  require(exactPath == "aggregate" || exactPath == "window",
+    s"exactPath must be 'aggregate' or 'window', got '$exactPath'")
+  Seq[(String, Double)]("nprobe" -> nprobe, "efSearch" -> efSearch,
+    "hnswGraphs" -> hnswGraphs, "refineKFactor" -> refineKFactor,
+    "efConstruction" -> efConstruction, "broadcastThreshold" -> broadcastThreshold,
+    "autoCompactAtSegmentRatio" -> autoCompactAtSegmentRatio).foreach { case (n, v) =>
+    require(v >= 0, s"$n must be >= 0 (0 = auto/off), got $v")
+  }
+  require(lshBatchHint >= 1, s"lshBatchHint must be >= 1, got $lshBatchHint")
+}
 
 /** Physical access path selected by the faiss-style factory string
   * (faiss_searcher.py:100-107). */
@@ -190,22 +201,24 @@ object IndexStrategy {
   private val Pq = "PQ(\\d+)(?:x(\\w+))?".r
   private val Sq = "SQ(\\w+)".r
 
-  /** Strategies that store byte codes instead of float vectors (PQ / SQ
-    * families): these need queries/vectors MATERIALIZED-normalized for cos
-    * (scoring is a raw asymmetric dot over codes — no full-vector cosine
-    * kernel exists once the floats are dropped). */
-  def codesOnly(s: IndexStrategy): Boolean = s match {
-    case PqFlat(_, _) | IvfPq(_, _, _) | SqFlat(_) | IvfSq(_, _) | OpqPq(_) => true
-    case Refined(inner) => codesOnly(inner)
-    case _ => false
+  /** The spec's unfitted (layout, storage, keep-floats) triple — the one
+    * dispatch on the parsed spec. A refine wrapper (`…,RFlat`) fits like
+    * its inner index but KEEPS the float vectors next to the codes (faiss
+    * IndexRefineFlat stores both). */
+  def kinds(s: IndexStrategy): (Layout, Storage, Boolean) = s match {
+    case ExactFlat         => (NoLayout, Floats, true)
+    case IvfFlat(n)        => (IvfCells(n), Floats, true)
+    case HnswGraph(m)      => (HnswGraphs(m), Floats, true)
+    case LshTables(t, b)   => (LshBuckets(t, b), Floats, true)
+    case PqFlat(m, nb)     => (NoLayout, PqCodes(m, nb), false)
+    case IvfPq(n, m, nb)   => (IvfCells(n), PqCodes(m, nb), false)
+    case SqFlat(nb)        => (NoLayout, sqCodes(nb), false)
+    case IvfSq(n, nb)      => (IvfCells(n), sqCodes(nb), false)
+    case OpqPq(m)          => (NoLayout, OpqCodes(m), false)
+    case Refined(inner)    => kinds(inner).copy(_3 = true)
   }
+  private def sqCodes(nbits: Int): Storage = if (nbits == 16) Fp16Codes else SqCodes(nbits)
 
-  /** The strategy whose quantizers/codes drive fit and persistence — a
-    * refine wrapper delegates everything except the kept float vectors. */
-  def effective(s: IndexStrategy): IndexStrategy = s match {
-    case Refined(inner) => inner
-    case other => other
-  }
   /** Parse the reference's index_param. `HNSWm` (the graph ANN faiss
     * special-cases at faiss_searcher.py:101-102) maps to partition-local
     * NSW graphs with `m` out-links per node ([[NswGraph]]; faiss's default
@@ -227,7 +240,7 @@ object IndexStrategy {
     // indexes — Flat/IVF/LSH/HNSW already score exact floats
     case p if p.endsWith(",RFlat") =>
       val inner = parse(p.stripSuffix(",RFlat"))
-      require(codesOnly(inner) && !inner.isInstanceOf[Refined],
+      require(!inner.isInstanceOf[Refined] && kinds(inner)._2.codesOnly,
         s"index_param '$p': RFlat refine applies once, to a code-based " +
           "index (PQ/SQ/OPQ families) — a float-scoring inner index " +
           "needs no refine, and refine-of-refine is meaningless")
@@ -370,8 +383,6 @@ object IndexStrategy {
 class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherParams()) {
   import SparkSearcher._
 
-  private lazy val fitLog = org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher")
-
   val metric: Metric = VectorFunctions.metric(params.measurement, params.metricArg)
 
   /** faiss `PCAn,…` / `PCAWn,…` / `PCARn,…` vector-transform prefix:
@@ -398,25 +409,25 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
       case _ => (None, raw)
     }
   }
-  val strategy: IndexStrategy = {
-    val s = IndexStrategy.parse(innerIndexParam)
-    // recall advisory (no semantics change): bare code-based indexes score
-    // on quantized codes only — RECALL.md measured PQ8 recall@10 = 0.38 at
-    // sf1 vs 0.64 with an exact-rescale refine stage. faiss users expect
-    // the latter; recommend the `…,RFlat` spelling once at construction.
-    if (IndexStrategy.codesOnly(s) && !s.isInstanceOf[Refined])
-      org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").info(
-        s"index_param '$innerIndexParam' scores on quantized codes only; " +
-          s"'$innerIndexParam,RFlat' adds an exact float re-rank of the " +
-          "top k*4 candidates and roughly doubles recall@10 (see RECALL.md)")
-    s
-  }
-
-  /** nprobe the IVF search paths use — the caller's knob, untouched.
-    * (Rounds ≤4 served HNSW requests by IVF(64) pruning with a floored
-    * nprobe; HNSW is now a real partition-local graph ANN, [[NswGraph]],
-    * with `efSearch` as its own recall knob.) */
-  val effectiveNprobe: Int = params.nprobe
+  val strategy: IndexStrategy = IndexStrategy.parse(innerIndexParam)
+  /** The spec's unfitted layout and storage, and whether the float vectors
+    * are kept next to the codes (always for float storage; for codes,
+    * only under a refine stage). */
+  private[search] val (layout, storage, keepFloats) = IndexStrategy.kinds(strategy)
+  // recall advisory (no semantics change): bare code-based indexes score
+  // on quantized codes only — RECALL.md measured PQ8 recall@10 = 0.38 at
+  // sf1 vs 0.64 with an exact-rescale refine stage. faiss users expect
+  // the latter; recommend the `…,RFlat` spelling once at construction.
+  if (storage.codesOnly && !keepFloats)
+    org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").info(
+      s"index_param '$innerIndexParam' scores on quantized codes only; " +
+        s"'$innerIndexParam,RFlat' adds an exact float re-rank of the " +
+        "top k*4 candidates and roughly doubles recall@10 (see RECALL.md)")
+  // OPQ's rotation preserves dot/l2 only
+  require(!storage.isInstanceOf[OpqCodes] ||
+    Set("cos", "ip", "dot", "l2").contains(params.measurement),
+    s"OPQ serves rotation-invariant metrics (cos/ip/l2); " +
+      s"'${params.measurement}' is not preserved by a rotation — use PQ")
 
   /** Build the index: encode all items, assign row_id, materialize.
     * Reference `train()` (faiss_searcher.py:116-125). */
@@ -481,290 +492,39 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
     val base = withId.select((col(ROW_ID) +: col(itemCol).as(ITEM) +: col(VEC) +:
       payloadCols.map(col).toSeq): _*)
 
-    // a Refined wrapper fits exactly like its inner strategy but KEEPS the
-    // float vectors next to the codes (faiss IndexRefineFlat stores both):
-    // memory = floats + codes, search = cheap code scan + exact re-rank
-    val keepVec = strategy match { case Refined(_) => true; case _ => false }
-    def dropVecUnlessKept(df: DataFrame): DataFrame =
-      if (keepVec) df else df.drop(VEC)
-    // Serve-parallelism floor (scale-adaptive, r21): the persisted index
-    // inherits the SCAN's partitioning, and a small parquet input is 1-3
-    // splits — every subsequent serve scan (exact/PQ/SQ/LSH-verify kernels
-    // over the cached relation) then runs on 1-3 tasks regardless of core
-    // count. Spread the FINAL indexed relation to defaultParallelism by
-    // row_id hash before persisting. Fitted parameters (centroid/codebook
-    // samples, LSH anchor) are all computed from `pre` BEFORE this point
-    // and results are partition-independent (TopKByDistance tie-breaks on
-    // (dist, row_id)), so outputs are identical. At cluster scale the
-    // input has >= parallelism partitions and this is a no-op — no extra
-    // exchange is ever paid on a big corpus. HNSW/IVF branches are
-    // excluded: their build co-locates rows (graph adjacency / cell id)
-    // and already spreads via its own grouped shuffle.
-    def spreadForServe(df: DataFrame): DataFrame =
-      graft.util.Parallelism.scanFloor(df, ROW_ID)
-    val fitted = IndexStrategy.effective(strategy) match {
-      case Refined(_) => throw new IllegalStateException("nested refine")
-      case ExactFlat =>
-        val indexed = spreadForServe(base).persist(StorageLevel.MEMORY_AND_DISK)
-        val n = indexed.count() // materialize, like index.add (faiss_searcher.py:124)
-        val d = dimOf(indexed)
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None, None)
-      case IvfFlat(nlist) =>
-        val pre = base.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val cents = IvfIndex.fitCentroids(pre, VEC,
-          IndexStrategy.resolveNlist(nlist, n), n)
-        // store each row's cell and co-partition by it, so query-time probes
-        // scan only their nprobe cells (partition pruning at cluster scale)
-        val indexed = IvfIndex
-          .assignCells(pre, VEC, cents, base.sparkSession.sparkContext.defaultParallelism)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        val d = dimOf(indexed)
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, Some(cents), None, None)
-      case OpqPq(m) =>
-        // OPQ pre-rotation (faiss "OPQm,PQm"): rotate into the fitted
-        // eigen-balanced basis, then ordinary PQ over the rotated floats.
-        // Rotation preserves dot/l2 exactly, so only those metrics qualify
-        require(Set("cos", "ip", "dot", "l2").contains(params.measurement),
-          s"OPQ serves rotation-invariant metrics (cos/ip/l2); " +
-            s"'${params.measurement}' is not preserved by a rotation — use PQ$m")
-        val pre0 =
-          if (params.measurement == "cos")
+    val (indexed, n, d, fittedLayout, fittedStorage) =
+      if (layout == NoLayout && storage == Floats) {
+        // Flat: one pass — spread, persist, count (faiss index.add,
+        // faiss_searcher.py:124)
+        val indexed = layout.spread(base).persist(StorageLevel.MEMORY_AND_DISK)
+        val n = indexed.count()
+        (indexed, n, dimOf(indexed), layout, storage)
+      } else {
+        // codes under cos need MATERIALIZED normalization (ADC computes raw
+        // dot tables) — the reference's own norm_vec trick
+        // (faiss_searcher.py:53); every metric has a subspace ADC
+        // decomposition (PqIndex.adcScorer)
+        val pre = (if (storage.codesOnly && params.measurement == "cos")
             base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
+          else base).persist(StorageLevel.MEMORY_AND_DISK)
         val n = pre.count()
         val d = dimOf(pre)
-        require(d > 0, "OPQ fit on empty/zero-dim vectors")
-        val rot = OpqIndex.fitRotation(pre, VEC, d, m)
-        // rotated copy under its own name: codes come from rotated space,
-        // while a refine wrapper keeps the UNROTATED (normalized) vectors —
-        // exact re-rank must score in the query's own space. Plain OPQ
-        // drops VEC BEFORE this persist: only one corpus-sized float
-        // column is ever cached (two only when refine keeps the floats)
-        val rotated = pre.withColumn(VROT, OpqIndex.rotateCol(col(VEC), rot))
-          .transform(dropVecUnlessKept)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        rotated.count()
-        pre.unpersist()
-        val codebooks = PqIndex.fitCodebooks(rotated, VROT, m, d, n)
-        val indexed = spreadForServe(rotated
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VROT), codebooks))
-          .drop(VROT)
-          .transform(dropVecUnlessKept))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        rotated.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None,
-          Some(codebooks), None, Some(rot))
-      case PqFlat(m, nbits) =>
-        // every metric has a subspace ADC decomposition (PqIndex.adcScorer);
-        // cos needs MATERIALIZED normalization (ADC computes raw dot
-        // tables; there is no full-vector cosine kernel over codes) — the
-        // reference's own norm_vec trick (faiss_searcher.py:53)
-        val pre0 =
-          if (params.measurement == "cos")
-            base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "PQ fit on empty/zero-dim vectors")
-        val codebooks = PqIndex.fitCodebooks(pre, VEC, m, d, n, nbits)
-        // store BYTE codes (x4: two codes nibble-packed per byte), drop
-        // the float vectors: dim·4·8/(m·nbits)× less memory — the
-        // property that lets a 100 TB corpus stay cached
-        val indexed = spreadForServe(pre
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), codebooks, nbits))
-          .transform(dropVecUnlessKept))
+        require(d > 0, s"$strategy fit on empty/zero-dim vectors")
+        // the layout fits first: IVF cells are assigned before encoding
+        val l = layout.fit(this, pre, n, d)
+        val (st, src) = storage.fit(pre, n, d, keepFloats)
+        val encoded = st.encode(l.assign(this, src, 0))
+        val indexed = l.spread(if (keepFloats) encoded else encoded.drop(VEC))
           .persist(StorageLevel.MEMORY_AND_DISK)
         indexed.count()
         pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None,
-          Some(codebooks))
-      case IvfPq(nlist, m, nbits) =>
-        val pre0 =
-          if (params.measurement == "cos")
-            base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "IVF,PQ fit on empty/zero-dim vectors")
-        val cents = IvfIndex.fitCentroids(pre, VEC,
-          IndexStrategy.resolveNlist(nlist, n), n)
-        val codebooks = PqIndex.fitCodebooks(pre, VEC, m, d, n, nbits)
-        // cells for pruning AND byte codes for memory: the canonical
-        // faiss IVFn,PQm composition
-        val indexed = IvfIndex
-          .assignCells(pre, VEC, cents, base.sparkSession.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), codebooks, nbits))
-          .transform(dropVecUnlessKept)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, Some(cents),
-          None, Some(codebooks))
-      case SqFlat(nbits) =>
-        // like PQ, cos needs MATERIALIZED normalization (asymmetric dot
-        // over codes); bounds/levels then live in the normalized space
-        val pre0 =
-          if (params.measurement == "cos")
-            base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "SQ fit on empty/zero-dim vectors")
-        // SQfp16 is train-free (no bounds, no levels — 2·dim bytes per
-        // vector, decoded inside the scoring projection at search); SQ8/
-        // SQ4 fit per-dim bounds once, shared by encode and the synthetic
-        // ADC level codebooks (dim bytes / ⌈dim/2⌉ bytes per vector)
-        val fitted = if (nbits == 16) None else Some(SqIndex.fitBounds(pre, VEC, d))
-        val codes = fitted match {
-          case Some((vmin, vdiff)) => SqIndex.encodeCol(col(VEC), vmin, vdiff, nbits)
-          case None                => Fp16.encodeCol(col(VEC))
-        }
-        val indexed = spreadForServe(pre
-          .withColumn(PqIndex.CODES, codes)
-          .transform(dropVecUnlessKept))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None,
-          fitted.map { case (mn, df) => SqIndex.levels(mn, df, nbits) }, fitted)
-      case IvfSq(nlist, nbits) =>
-        val pre0 =
-          if (params.measurement == "cos")
-            base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-          else base
-        val pre = pre0.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "IVF,SQ fit on empty/zero-dim vectors")
-        val cents = IvfIndex.fitCentroids(pre, VEC,
-          IndexStrategy.resolveNlist(nlist, n), n)
-        // fp16 composition (IVFn,SQfp16): cells for pruning + train-free
-        // half codes, decoded in the scoring projection at search
-        val fitted = if (nbits == 16) None else Some(SqIndex.fitBounds(pre, VEC, d))
-        val codes = fitted match {
-          case Some((vmin, vdiff)) => SqIndex.encodeCol(col(VEC), vmin, vdiff, nbits)
-          case None                => Fp16.encodeCol(col(VEC))
-        }
-        val indexed = IvfIndex
-          .assignCells(pre, VEC, cents, base.sparkSession.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, codes)
-          .transform(dropVecUnlessKept)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, Some(cents),
-          None, fitted.map { case (mn, df) => SqIndex.levels(mn, df, nbits) }, fitted)
-      case HnswGraph(m) =>
-        val pre = base.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "HNSW fit on empty/zero-dim vectors")
-        // one NSW graph per parallelism slot by default: graph size stays
-        // corpus/parallelism (bounded per executor), search fans out flat
-        val numGraphs = math.max(1, if (params.hnswGraphs > 0) params.hnswGraphs
-          else base.sparkSession.sparkContext.defaultParallelism)
-        val indexed = NswGraph.buildGraphs(pre, VEC, ROW_ID, m,
-            SparkSearcher.resolveEfConstruction(params.efConstruction, m), numGraphs,
-            params.measurement, params.metricArg)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        // the FITTED layout (r20): persisted with the model so compact()'s
-        // rebuild target survives save/load onto a cluster whose
-        // parallelism differs from the one that fitted the graphs
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, None,
-          None, fittedGraphs = Some(numGraphs))
-      case LshTables(numTables0, bitsOpt) =>
-        val pre = base.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
-        val d = dimOf(pre)
-        require(d > 0, "LSH fit on empty/zero-dim vectors")
-        // `LSH0` / bare `LSH` (joint auto): bits AND tables from the
-        // closed-form recall model at a deterministic corpus-sampled
-        // anchor cosine — target 0.9 estimated recall at the anchor so
-        // the measured recall@k (whose rank-k pairs sit BELOW the
-        // sampled top-1 anchor) keeps margin. The sample underestimates
-        // neighbor similarity on large corpora (sparser than the
-        // corpus), which errs toward MORE tables — recall-safe. An
-        // explicit table count keeps the old contract: caller's tables,
-        // occupancy-held auto bits ([[IndexStrategy.resolveBits]]).
-        val lshLog = org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher")
-        val (numTables, bits) =
-          if (numTables0 > 0) (numTables0, IndexStrategy.resolveBits(bitsOpt, n))
-          else {
-            val anchor = SparkSearcher.lshRankKAnchor(pre, n)
-            val (b, t) = bitsOpt match {
-              case None => SparkSearcher.autoLshConfigServing(n, anchor,
-                params.lshBatchHint)
-              case Some(pb) => (pb, graft.dedup.Dedup.lshTablesFor(anchor, pb))
-            }
-            // the config decision, logged at fit (each term is the lever a
-            // user would tune): anchor, batch hint, chosen config, its
-            // estimated recall at the anchor, and the expected per-query
-            // candidate volume the batch path will score
-            lshLog.info(f"LSH joint-auto: n=$n%d, rank-k anchor cos ≈ " +
-              f"$anchor%.3f, batchHint=${params.lshBatchHint}%d -> " +
-              f"LSH${t}%dx$b%d (estimated recall at anchor " +
-              f"${graft.dedup.Dedup.lshRecallEstimate(anchor, b, t)}%.3f, " +
-              f"~${t.toLong * math.max(1L, n >> math.min(b, 62))}%d " +
-              "candidates/query)")
-            // r18: a joint-auto pick can still be degenerate (the cost
-            // model compares LSH configs to each other; at small n or a
-            // low anchor even the best loses to the exact scan). The
-            // fitted model will refuse to serve it ([[SearcherModel
-            // .lshServeExact]]) — say so at fit, where the user tunes
-            if (bitsOpt.isEmpty && SparkSearcher.lshExactCheaper(t, b))
-              lshLog.warn(f"LSH joint-auto: LSH$t%dx$b%d is degenerate " +
-                f"(tables·${SparkSearcher.CandidateRowOverhead}%.0f ≥ " +
-                f"2^bits — candidate verify ≥ the exact scan); serving " +
-                "will route through the exact top-k kernel (recall 1.0). " +
-                "Buckets stay fitted/saved for introspection; an explicit " +
-                s"LSH${t}x$b spelling keeps bucket semantics")
-            (t, b)
-          }
-        // recall advisory (no semantics change): LSH recall loss is
-        // PRUNING — a true neighbor whose sign pattern differs in any
-        // probed table's bits is never scored — so unlike the quantized
-        // families `,RFlat` cannot buy it back; TABLES can. The same
-        // closed-form estimate the dedup auto-config optimizes
-        // (1 − (1 − p^bits)^tables at an anchor cosine 0.9) is logged
-        // whenever it falls below 0.5, with the table count that would
-        // clear 0.9 — RECALL.md measured LSH12 auto-bits at 0.183
-        // recall@10 at sf1, a number users should not discover in
-        // production.
-        val estRecall = graft.dedup.Dedup.lshRecallEstimate(0.9, bits, numTables)
-        if (estRecall < 0.5) {
-          val pb = math.pow(graft.dedup.Dedup.lshCollisionP(0.9), bits)
-          val need = if (pb >= 1.0) numTables
-            else math.ceil(math.log(0.1) / math.log(1.0 - pb)).toInt
-          org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").info(
-            f"LSH$numTables%dx$bits%d: estimated recall@cos0.9 ≈ $estRecall%.3f " +
-              f"at n=$n — sign-LSH loses neighbors by pruning, so add tables " +
-              f"(LSH$need%dx$bits%d clears 0.9) or lower bits; RFlat cannot " +
-              "recover pruned candidates (see RECALL.md)")
-        }
-        val planes = SignLsh.planes(numTables, bits, d)
-        // store each row's per-table bucket keys; search is an equi-join on
-        // (table, bucket) — candidates only, never the full corpus
-        val indexed = spreadForServe(pre
-          .withColumn(BUCKETS, SignLsh.bucketsCol(col(VEC), planes)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
-        pre.unpersist()
-        new SearcherModel(this, indexed, payloadCols.toSeq, n, d, None, Some(planes), None)
-    }
+        src.unpersist()
+        (indexed, n, d, l, st)
+      }
     // every branch materialized its own persist (indexed.count) — the
     // PCA moments cache has served its purpose
     pcaCache.foreach(_.unpersist(blocking = false))
-    pcaFit.fold(fitted)(fitted.withPca)
+    new SearcherModel(this, indexed, payloadCols.toSeq, n, d, fittedLayout, fittedStorage, pcaFit)
   }
 
   /** Score one item against a list (reference `cal_sim`,
@@ -1026,8 +786,36 @@ object SparkSearcher {
         .map(_.trim).filter(_.nonEmpty).toList
       finally in.close()
     }
-    require(rows.nonEmpty, s"index load: $path holds no params row")
+    require(rows.length == 1, s"index load: $path must hold exactly one " +
+      s"params row, found ${rows.length} in ${parts.length} part file(s)")
     mapper.readTree(rows.head)
+  }
+
+  /** Crash-safe directory write: `write` fills a sibling staging
+    * directory, which then replaces `path` by rename — a save that dies
+    * partway leaves the previous index at `path` untouched, and its
+    * staging directory is removed. */
+  private[search] def writeStaged(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    import org.apache.hadoop.fs.Path
+    val raw = new Path(path)
+    val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target = fs.makeQualified(raw)
+    val tag = java.util.UUID.randomUUID().toString
+    val staging = new Path(target.getParent, s"${target.getName}.staging-$tag")
+    val old = new Path(target.getParent, s"${target.getName}.replaced-$tag")
+    try write(staging.toString)
+    catch { case e: Throwable => fs.delete(staging, true); throw e }
+    val replacing = fs.exists(target)
+    if (replacing && !fs.rename(target, old)) {
+      fs.delete(staging, true)
+      throw new java.io.IOException(s"save: cannot move the previous index at $target aside")
+    }
+    if (!fs.rename(staging, target)) {
+      if (replacing) fs.rename(old, target)
+      fs.delete(staging, true)
+      throw new java.io.IOException(s"save: cannot move $staging into place at $target")
+    }
+    if (replacing) fs.delete(old, true)
   }
 
   /** Load a saved model (reference `load_index`, faiss_searcher.py:109-114),
@@ -1085,153 +873,48 @@ object SparkSearcher {
         if (has("autoCompactAtSegmentRatio"))
           kv.get("autoCompactAtSegmentRatio").asDouble()
         else dflt.autoCompactAtSegmentRatio)
-    // fitted graph layout (r20): 0/missing = non-HNSW or a pre-r20 save —
-    // compact()/add() then fall back to the old params/parallelism
-    // heuristic those artifacts were operated under
-    val fittedG = lngOr("fittedGraphs", 0L).toInt
     // construct first: the searcher strips any PCA prefix off indexParam,
-    // so every strategy dispatch below sees the inner index
+    // so the kinds below are the inner index's
     val searcher = new SparkSearcher(encoder, params)
     // explicit read schema when the save recorded one (r22): parquet
     // schema inference over a just-written directory runs a footer-
     // reading Spark job per read — pure fixed cost when the writer
     // already knew the schema. Absent field (pre-r22 artifact) falls
     // back to inference.
-    val read0 =
+    val read =
       if (has("itemsSchema"))
         spark.read.schema(org.apache.spark.sql.types.DataType
             .fromJson(kv.get("itemsSchema").asText()).asInstanceOf[StructType])
           .parquet(s"$path/items")
       else spark.read.parquet(s"$path/items")
-    // HNSW graphs must be CO-LOCATED (a graph's adjacency is resolved
-    // within its task); parquet splits don't respect graph boundaries, so
-    // re-group by graph id once at load — the at-rest layout (partitioned
-    // by gpart) makes this a directory-aligned shuffle
-    // dispatch on the EFFECTIVE strategy (r22, like fit does): a
-    // Refined(IvfPq)/Refined(IvfSq) must hit the IVF exclusion arm or the
-    // row_id spread scatters the at-rest cell co-location the IVF save
-    // deliberately preserves. HnswGraph stays a raw match — Refined(HNSW)
-    // is forbidden by parse, so raw and effective agree there.
-    val read = searcher.strategy match {
-      case HnswGraph(_) => read0.repartition(col(NswGraph.GPART))
-      case st => IndexStrategy.effective(st) match {
-        // IVF keeps the at-rest cell clustering; everything else gets the
-        // same serve-parallelism floor as fit() — a small saved index is
-        // 1-3 parquet splits, which would pin every serve scan to 1-3
-        // tasks (no-op when the scan already has >= parallelism splits)
-        case IvfFlat(_) | IvfPq(_, _, _) | IvfSq(_, _) => read0
-        case _ => graft.util.Parallelism.scanFloor(read0, ROW_ID)
-      }
-    }
-    val indexed = read.persist(StorageLevel.MEMORY_AND_DISK)
+    val indexed = searcher.layout.atRest(read).persist(StorageLevel.MEMORY_AND_DISK)
     val n = indexed.count()
     require(n == lng("count"),
       s"index load: ntotal $n != stored ${lng("count")} (faiss_searcher.py:112)")
-    // Metadata reads (r22 shape): DRIVER-sorted collects over EXPLICIT
-    // static schemas. These tables are a few hundred tiny rows; the old
-    // `.orderBy(...).collect()` paid a range-partitioner boundary-sampling
-    // job AND a parquet footer-inference job on top of the collect — per
-    // metadata table, per load, pure fixed cost. The schemas are the
-    // writer's own (save() builds these frames inline); the deterministic
-    // order the arrays need is re-established on the driver for free.
-    def meta(sub: String, schema: StructType): Array[Row] =
-      spark.read.schema(schema).parquet(s"$path/$sub").collect()
-    val floatArr = ArrayType(FloatType)
-    val pq = IndexStrategy.effective(searcher.strategy) match {
-      case PqFlat(_, _) | IvfPq(_, _, _) | OpqPq(_) =>
-        val rows = meta("pq_codebooks", StructType(Seq(
-          StructField("sub", IntegerType), StructField("cid", IntegerType),
-          StructField("centroid", floatArr))))
-        Some(rows.groupBy(_.getAs[Int]("sub")).toSeq.sortBy(_._1)
-          .map { case (_, rs) =>
-            rs.sortBy(_.getAs[Int]("cid"))
-              .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-          }.toArray)
-      case _ => None
-    }
-    val sqB = IndexStrategy.effective(searcher.strategy) match {
-      case SqFlat(16) | IvfSq(_, 16) => None // fp16: nothing was fitted
-      case SqFlat(_) | IvfSq(_, _) =>
-        val rows = meta("sq_bounds", StructType(Seq(
-          StructField("i", IntegerType), StructField("vmin", FloatType),
-          StructField("vdiff", FloatType))))
-          .sortBy(_.getAs[Int]("i"))
-        Some((rows.map(_.getAs[Float]("vmin")), rows.map(_.getAs[Float]("vdiff"))))
-      case _ => None
-    }
-    // the scoring "codebooks": PQ's fitted ones, or SQ's levels rebuilt
-    // from the persisted bounds at the saved quantizer width
-    val sqNbits = IndexStrategy.effective(searcher.strategy) match {
-      case SqFlat(nb) => nb
-      case IvfSq(_, nb) => nb
-      case _ => 8
-    }
-    val cbooks = pq.orElse(sqB.map { case (mn, df) => SqIndex.levels(mn, df, sqNbits) })
-    val centroids = IndexStrategy.effective(searcher.strategy) match {
-      case IvfFlat(_) | IvfPq(_, _, _) | IvfSq(_, _) =>
-        Some(meta("centroids", StructType(Seq(
-          StructField("centroid_id", IntegerType),
-          StructField("centroid", floatArr))))
-          .sortBy(_.getAs[Int]("centroid_id"))
-          .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray))
-      case _ => None
-    }
-    val planes = searcher.strategy match {
-      case LshTables(_, _) =>
-        val rows = meta("lsh_planes", StructType(Seq(
-          StructField("tbl", IntegerType), StructField("bit", IntegerType),
-          StructField("plane", floatArr))))
-        val grouped = rows.groupBy(_.getAs[Int]("tbl")).toSeq.sortBy(_._1)
-          .map { case (_, rs) =>
-            rs.sortBy(_.getAs[Int]("bit"))
-              .map(_.getAs[scala.collection.Seq[Float]]("plane").toArray)
-          }.toArray
-        Some(grouped)
-      case _ => None
-    }
-    val rot = IndexStrategy.effective(searcher.strategy) match {
-      case OpqPq(_) =>
-        Some(meta("opq_rotation", StructType(Seq(
-          StructField("j", IntegerType), StructField("row", floatArr))))
-          .sortBy(_.getAs[Int]("j"))
-          .map(_.getAs[scala.collection.Seq[Float]]("row").toArray))
-      case _ => None
-    }
-    // dim re-derivation: PQ/SQ store codes only (no __vec) — dim is the
-    // SUM of subspace widths (SQ4 mixes size-2 pairs with a size-1
-    // trailing subspace on odd dims — m·dsub0 would be off). Other
-    // strategies re-derive from whichever FITTED artifact carries the
-    // width (IVF centroids, LSH planes — the same artifact-consistency
-    // invariant class as the codebook path, minus one head() job per
-    // load); only a bare Flat/HNSW index, with no fitted artifact at
-    // all, still reads the width off the first stored vector.
-    val d = cbooks match {
-      case Some(cbs) => cbs.map(_(0).length).sum
-      case None => centroids.map(_(0).length)
-        .orElse(planes.map(_(0)(0).length))
-        .getOrElse(IndexStrategy.effective(searcher.strategy) match {
-          // fp16 stores codes only: dim = half the code bytes
-          case SqFlat(16) | IvfSq(_, 16) =>
-            indexed.select(length(col(PqIndex.CODES))).head().getInt(0) / 2
-          case _ => indexed.select(size(col(VEC))).head().getInt(0)
-        })
-    }
+    // each kind reads its own metadata tables; fittedGraphs 0/missing =
+    // non-HNSW or a pre-r20 save, whose add()/compact() fall back to the
+    // params/parallelism heuristic those artifacts were operated under
+    val meta = new MetaDir(spark, path)
+    val layout = searcher.layout.load(meta, Some(lngOr("fittedGraphs", 0L).toInt).filter(_ > 0))
+    val storage = searcher.storage.load(meta)
+    // dim re-derivation from whichever FITTED artifact carries the width
+    // (the artifact-consistency invariant, minus one head() job per load);
+    // only a storage with no fitted width on a layout with none reads it
+    // off the first stored row
+    val d = storage.fittedDim.orElse(layout.fittedDim).getOrElse(storage.probeDim(indexed))
     require(d == lng("dim"),
       s"index load: dim $d != stored ${lng("dim")} (faiss_searcher.py:113)")
     val payload = indexed.columns
       .filterNot(Set(ROW_ID, ITEM_SAVED, VEC, IvfIndex.CID, BUCKETS, PqIndex.CODES,
         NswGraph.GPART, NswGraph.NBRS)).toSeq
     // PCA-prefix kernel: indexParam carries the spelling, so the spec is
-    // already parsed; n_components is re-asserted by the loader
+    // already parsed; n_components is re-asserted by the loader. The R
+    // rotation was composed into the saved kernel at fit time
     val pca = searcher.pcaSpec.map { case (nc, _, _) =>
-      // the R rotation was composed into the saved kernel at fit time —
-      // load sees a plain affine projection either way
       graft.whitening.VecsWhiteningModel.load(spark, s"$path/pca", Some(nc))
     }
-    val model = new SearcherModel(searcher,
-      indexed.withColumnRenamed(ITEM_SAVED, ITEM), payload, n, d, centroids,
-      planes, cbooks, sqB, rot, pca,
-      fittedGraphs = if (fittedG > 0) Some(fittedG) else None)
+    val model = new SearcherModel(searcher, indexed.withColumnRenamed(ITEM_SAVED, ITEM),
+      payload, n, d, layout, storage, pca)
     // migration notice (r19, ADVICE): a save without formatVersion
     // predates the joint-auto LSH degenerate reroute — if this load's
     // deterministic route now serves through the exact kernel, the model
@@ -1260,8 +943,8 @@ object SparkSearcher {
 
 /**
  * A trained searcher: the materialized `(row_id, item, vec, payload…)`
- * table plus (for IVF) the centroid set. Query surface mirrors
- * faiss_searcher.py:127-208.
+ * table plus its fitted [[Layout]] and [[Storage]] (and the PCA-prefix
+ * projection, if any). Query surface mirrors faiss_searcher.py:127-208.
  */
 class SearcherModel private[search] (
     val searcher: SparkSearcher,
@@ -1269,20 +952,15 @@ class SearcherModel private[search] (
     val payloadCols: Seq[String],
     val count: Long,
     val dim: Int,
-    private[search] val centroids: Option[Array[Array[Float]]],
-    private[search] val lshPlanes: Option[Array[Array[Array[Float]]]],
-    private[search] val pqCodebooks: Option[Array[Array[Array[Float]]]],
-    private[search] val sqBounds: Option[(Array[Float], Array[Float])] = None,
-    private[search] val opqRotation: Option[Array[Array[Float]]] = None,
-    private[search] val pcaModel: Option[graft.whitening.VecsWhiteningModel] = None,
-    private[search] val fittedGraphs: Option[Int] = None) {
+    private[search] val layout: Layout,
+    private[search] val storage: Storage,
+    private[search] val pcaModel: Option[graft.whitening.VecsWhiteningModel]) {
 
   import SparkSearcher._
 
-  /** Attach the fitted PCA-prefix projection (same shared `indexed`). */
-  private[search] def withPca(p: graft.whitening.VecsWhiteningModel): SearcherModel =
-    new SearcherModel(searcher, indexed, payloadCols, count, dim, centroids,
-      lshPlanes, pqCodebooks, sqBounds, opqRotation, Some(p), fittedGraphs)
+  /** The same fitted model over a grown/shrunk/rebuilt index. */
+  private def withIndex(df: DataFrame, n: Long): SearcherModel =
+    new SearcherModel(searcher, df, payloadCols, n, dim, layout, storage, pcaModel)
 
   // Grow ops CONSUME the receiver (r20, ADVICE): add()/remove()/compact()
   // release the old model's checkpoint-backed blocks once the grown index
@@ -1301,10 +979,15 @@ class SearcherModel private[search] (
         "model they RETURNED instead (faiss mutates in place; the Spark " +
         "analog hands you the grown immutable model and retires the old one)")
 
-  /** Project an encoded query column through the fitted PCA prefix, if
-    * one exists — BEFORE any cos/code normalization, mirroring fit. */
-  private def pcaProject(df: DataFrame, c: String): DataFrame =
-    pcaModel.fold(df)(m => df.withColumn(c, m.transformCol(col(c))))
+  /** Bring encoded vectors in column `c` into the index's space, in fit's
+    * order: normVec normalize → fitted PCA projection → (codes under cos)
+    * MATERIALIZED normalize in the projected space. */
+  private def toIndexSpace(df: DataFrame, c: String, codesCos: Boolean): DataFrame = {
+    def l2(d: DataFrame) = d.withColumn(c, VectorFunctions.vec_l2_normalize(col(c)))
+    val nv = if (params.normVec && params.measurement != "cos") l2(df) else df
+    val projected = pcaModel.fold(nv)(m => nv.withColumn(c, m.transformCol(col(c))))
+    if (codesCos) l2(projected) else projected
+  }
   private def params = searcher.params
   private def metric = searcher.metric
   private val spark = indexed.sparkSession
@@ -1320,35 +1003,14 @@ class SearcherModel private[search] (
     df
   }
 
-  /** Fitted model parameters, exposed for data-dependent oracle building
-    * (the correctness gate embeds them as SQL literals — they are
-    * deterministic functions of the fitted table). */
-  /** [[SparkSearcher.lshExactCheaper]] of the FITTED planes: true when
-    * serving this LSH config is estimated ≥ an exact scan per query
-    * (degenerate config — e.g. the 64-table feasibility ceiling at a
-    * large-corpus anchor). Decides the [[SearcherParams.lshExactFallback]]
-    * route; logged either way so the boundary is visible in production. */
-  private[search] lazy val lshServeExactCheaper: Boolean = lshPlanes.exists { pl =>
-    pl.nonEmpty && SparkSearcher.lshExactCheaper(pl.length, pl(0).length)
-  }
-
-  /** Should LSH serving route through the exact kernel? Two ways in:
-    * the explicit opt-in flag (any spelling), or — r18 — a JOINT-AUTO
-    * config (`LSH`/`LSH0`, no user-written tables or bits) that resolved
-    * degenerate: an auto config carries no faiss bucket-semantics
-    * obligation (nobody wrote the tables×bits that would be served), so
-    * refusing to serve a config the fit's own cost model prices at ≥ an
-    * exact scan is strictly better — same results or better (recall 1.0)
-    * at lower estimated cost. Explicit `LSHtxb` — and `LSH0xb`, where
-    * the user pinned the width — stay bucket-faithful without the flag,
-    * logging the crossover warning as before. Deterministic from fitted
-    * state, so a loaded model routes identically to the fit that saved
-    * it, and the correctness oracle can re-derive the decision. */
-  private[search] lazy val lshServeExact: Boolean = lshServeExactCheaper &&
-    (params.lshExactFallback || (searcher.strategy match {
-      case LshTables(0, None) => true
-      case _                  => false
-    }))
+  /** Does LSH serving route through the exact kernel? ([[LshBuckets.serveExact]]) */
+  private[search] def lshServeExact: Boolean = lsh.exists(_.serveExact(params.lshExactFallback))
+  private def lsh = Some(layout).collect { case l: LshBuckets => l }
+  private def hnsw = Some(layout).collect { case h: HnswGraphs => h }
+  /** Fitted HNSW graph count, None for other layouts or pre-r20 saves. */
+  private[search] def fittedGraphs: Option[Int] = hnsw.flatMap(_.fittedGraphs)
+  /** A refine stage: codes propose candidates, kept floats re-rank them. */
+  private def refined: Boolean = storage.codesOnly && searcher.keepFloats
 
   /** Fitted graph count — `max(__gpart) + 1` over the cached index (one
     * bounded agg, computed once per model). Derived from the DATA, not
@@ -1378,9 +1040,8 @@ class SearcherModel private[search] (
     * saves lack the field: fall back to the old heuristic (explicit
     * `hnswGraphs`, else this session's parallelism), the behavior those
     * artifacts were operated under. */
-  private def fittedGraphTarget: Int = fittedGraphs.getOrElse(
-    math.max(1, if (params.hnswGraphs > 0) params.hnswGraphs
-      else spark.sparkContext.defaultParallelism))
+  private def fittedGraphTarget: Int =
+    fittedGraphs.getOrElse(HnswGraphs.numGraphs(params, spark))
 
   /** [[SparkSearcher.resolveEf]] over the fitted state (efSearch=0 ⇒
     * beam-fraction auto; explicit values untouched). Lazy: the auto
@@ -1394,23 +1055,6 @@ class SearcherModel private[search] (
     ef
   }
 
-  private def lshRouteLog(routed: Boolean): Unit = {
-    val pl = lshPlanes.get
-    val (t, b) = (pl.length, pl(0).length)
-    val msg = f"LSH$t%dx$b%d: estimated candidate verify " +
-      f"(tables·n/2^bits at ${SparkSearcher.CandidateRowOverhead}%.0f× a " +
-      f"scanned row) ≥ the exact scan — " +
-      (if (routed && params.lshExactFallback)
-        "serving through the exact top-k kernel (lshExactFallback)"
-       else if (routed)
-        "auto config refused for serving; routing through the exact " +
-          "top-k kernel (recall 1.0 — an auto spelling carries no bucket " +
-          "obligation)"
-       else "set lshExactFallback=true to serve through the exact kernel " +
-         "(same or better latency, recall 1.0)")
-    org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").warn(msg)
-  }
-
   /** One-row introspection of the FITTED operating point: every auto
     * the engine resolved, as the values that will actually serve — the
     * faiss "index properties" analog for ops dashboards and config
@@ -1421,42 +1065,23 @@ class SearcherModel private[search] (
     requireLive()
     val sp = spark
     import sp.implicits._
-    val eff = IndexStrategy.effective(searcher.strategy)
-    val nprobeRes = centroids.map(c =>
-      IndexStrategy.resolveNprobe(searcher.effectiveNprobe, c.length))
-    val efRes = eff match {
-      case HnswGraph(_) => Some(effectiveEf)
-      case _            => None
-    }
+    val nprobeRes = fittedCentroids.map(c => IndexStrategy.resolveNprobe(params.nprobe, c.length))
     // HNSW serving lifecycle (r20): current vs fitted graph layout and
     // the compact() recommendation — SAME criterion as add()'s warning
     // (segment rows exceed the fitted corpus; the r19 2M ladder measured
     // batch latency ~linear in graph count, and compact() restoring the
     // fitted latency at recall 1.0), surfaced for ops dashboards so the
     // merge decision doesn't live only in driver logs
-    val (hnswG, hnswFitted, compactRec) = eff match {
-      case HnswGraph(_) =>
-        val g0 = fittedGraphTarget
-        (Some(hnswGraphCount), Some(g0),
-          Some(hnswGraphCount > g0 && count - hnswFittedRows > hnswFittedRows))
-      case _ => (None, None, None)
-    }
-    val kfRes = searcher.strategy match {
-      case Refined(_) =>
-        Some(SparkSearcher.resolveRefineKFactor(params.refineKFactor, count))
-      case _ => None
-    }
-    val (lshT, lshB) = lshPlanes match {
-      case Some(pl) if pl.nonEmpty => (Some(pl.length), Some(pl(0).length))
-      case _                       => (None, None)
-    }
+    val compactRec = hnsw.map(_ =>
+      hnswGraphCount > fittedGraphTarget && count - hnswFittedRows > hnswFittedRows)
+    val kfRes = Some(count).filter(_ => refined)
+      .map(SparkSearcher.resolveRefineKFactor(params.refineKFactor, _))
     Seq((params.indexParam, searcher.strategy.toString, count, dim,
-        nprobeRes, efRes, kfRes, lshT, lshB,
-        if (lshT.isDefined) Some(lshServeExactCheaper) else None,
-        if (lshT.isDefined) Some(if (lshServeExact) "exact" else "buckets")
-        else None,
+        nprobeRes, hnsw.map(_ => effectiveEf), kfRes,
+        lsh.map(_.planes.length), lsh.map(_.planes(0).length), lsh.map(_.exactCheaper),
+        lsh.map(_ => if (lshServeExact) "exact" else "buckets"),
         params.measurement, params.metricArg,
-        hnswG, hnswFitted, compactRec))
+        hnsw.map(_ => hnswGraphCount), hnsw.map(_ => fittedGraphTarget), compactRec))
       .toDF("index_param", "effective_index", "count", "dim",
         "resolved_nprobe", "resolved_ef_search", "resolved_refine_kfactor",
         "lsh_tables", "lsh_bits", "lsh_exact_cheaper", "lsh_route",
@@ -1464,11 +1089,17 @@ class SearcherModel private[search] (
         "hnsw_graphs", "hnsw_fitted_graphs", "compact_recommended")
   }
 
-  def fittedCodebooks: Option[Array[Array[Array[Float]]]] = pqCodebooks
-  def fittedCentroids: Option[Array[Array[Float]]] = centroids
-  def fittedLshPlanes: Option[Array[Array[Array[Float]]]] = lshPlanes
-  def fittedSqBounds: Option[(Array[Float], Array[Float])] = sqBounds
-  def fittedOpqRotation: Option[Array[Array[Float]]] = opqRotation
+  /** Fitted model parameters, exposed for data-dependent oracle building
+    * (the correctness gate embeds them as SQL literals — they are
+    * deterministic functions of the fitted table). */
+  def fittedCodebooks: Option[Array[Array[Array[Float]]]] = storage.codebooks
+  def fittedCentroids: Option[Array[Array[Float]]] =
+    Some(layout).collect { case IvfCells(_, c) => c }
+  def fittedLshPlanes: Option[Array[Array[Array[Float]]]] = lsh.map(_.planes)
+  def fittedSqBounds: Option[(Array[Float], Array[Float])] =
+    Some(storage).collect { case SqCodes(_, mn, df) => (mn, df) }
+  def fittedOpqRotation: Option[Array[Array[Float]]] =
+    Some(storage).collect { case OpqCodes(_, rot, _) => rot }
 
   /** Truncate at feature separator: `str(x).split(sep)[0]`
     * (faiss_searcher.py:150-156). `substring_index` keeps everything before
@@ -1516,19 +1147,8 @@ class SearcherModel private[search] (
     requireLive()
     val itemCol = params.itemCol.getOrElse(items.columns.head)
     require(items.columns.contains(itemCol), s"item column '$itemCol' missing")
-    val encoded0 = searcher.encoder.encode(items, itemCol, VEC)
-    val pqCos = IndexStrategy.codesOnly(searcher.strategy) && params.measurement == "cos"
-    // same pipeline order as fit: normVec normalize → PCA project →
-    // pqCos (materialized) normalize in the projected space
-    val encodedNv =
-      if (params.normVec && params.measurement != "cos")
-        encoded0.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-      else encoded0
-    val encodedP = pcaProject(encodedNv, VEC)
-    val encoded =
-      if (pqCos)
-        encodedP.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
-      else encodedP
+    val encoded = toIndexSpace(searcher.encoder.encode(items, itemCol, VEC), VEC,
+      storage.codesOnly && params.measurement == "cos")
     val withId = params.idCol match {
       case Some(c) => encoded.withColumn(ROW_ID, col(c).cast(LongType))
       case None =>
@@ -1545,88 +1165,11 @@ class SearcherModel private[search] (
       s"add: payload columns $newPayload must match the fitted $payloadCols")
     val base = withId.select((col(ROW_ID) +: col(itemCol).as(ITEM) +: col(VEC) +:
       payloadCols.map(col)): _*)
-    val newPart = searcher.strategy match {
-      case ExactFlat => base
-      case IvfFlat(_) =>
-        IvfIndex.assignCells(base, VEC, centroids.get,
-          spark.sparkContext.defaultParallelism)
-      case LshTables(_, _) =>
-        base.withColumn(BUCKETS, SignLsh.bucketsCol(col(VEC), lshPlanes.get))
-      case PqFlat(_, nb) =>
-        base.withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get, nb))
-          .drop(VEC)
-      case OpqPq(_) =>
-        base.withColumn(VEC, OpqIndex.rotateCol(col(VEC), opqRotation.get))
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get))
-          .drop(VEC)
-      // refine wrapper: codes under the fitted quantizers + the floats kept
-      case Refined(inner) => inner match {
-        case PqFlat(_, nb) =>
-          base.withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get, nb))
-        case OpqPq(_) =>
-          base.withColumn(PqIndex.CODES, PqIndex.encodeCol(
-            OpqIndex.rotateCol(col(VEC), opqRotation.get), pqCodebooks.get))
-        case SqFlat(16) => // train-free: no bounds to honor
-          base.withColumn(PqIndex.CODES, Fp16.encodeCol(col(VEC)))
-        case SqFlat(nb) =>
-          val (mn, df) = sqBounds.get
-          base.withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), mn, df, nb))
-        case IvfPq(_, _, nb) =>
-          IvfIndex.assignCells(base, VEC, centroids.get,
-            spark.sparkContext.defaultParallelism)
-            .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get, nb))
-        case IvfSq(_, 16) =>
-          IvfIndex.assignCells(base, VEC, centroids.get,
-            spark.sparkContext.defaultParallelism)
-            .withColumn(PqIndex.CODES, Fp16.encodeCol(col(VEC)))
-        case IvfSq(_, nb) =>
-          val (mn, df) = sqBounds.get
-          IvfIndex.assignCells(base, VEC, centroids.get,
-            spark.sparkContext.defaultParallelism)
-            .withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), mn, df, nb))
-        case other => throw new IllegalStateException(s"refine over $other")
-      }
-      case IvfPq(_, _, nb) =>
-        IvfIndex.assignCells(base, VEC, centroids.get,
-          spark.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, PqIndex.encodeCol(col(VEC), pqCodebooks.get, nb))
-          .drop(VEC)
-      // fp16 rows encode with no fitted state at all — the quantizer is
-      // the same for every corpus
-      case SqFlat(16) =>
-        base.withColumn(PqIndex.CODES, Fp16.encodeCol(col(VEC))).drop(VEC)
-      case IvfSq(_, 16) =>
-        IvfIndex.assignCells(base, VEC, centroids.get,
-          spark.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, Fp16.encodeCol(col(VEC)))
-          .drop(VEC)
-      // SQ8/SQ4 rows added after fit encode under the EXISTING bounds;
-      // values outside the trained range clamp to the edge levels (faiss
-      // SQ semantics — refit if the distribution moved)
-      case SqFlat(nb) =>
-        val (mn, df) = sqBounds.get
-        base.withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), mn, df, nb))
-          .drop(VEC)
-      case IvfSq(_, nb) =>
-        val (mn, df) = sqBounds.get
-        IvfIndex.assignCells(base, VEC, centroids.get,
-          spark.sparkContext.defaultParallelism)
-          .withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), mn, df, nb))
-          .drop(VEC)
-      // segment-style growth (the Lucene per-segment-HNSW shape): appended
-      // rows get FRESH graphs under gpart ids past the existing ones —
-      // built graphs are immutable, search fans out over old + new alike
-      case HnswGraph(m) =>
-        // max(__gpart)+1 via the model's cached lazy val — a model that
-        // already resolved its graph count (effectiveEf, describe, a
-        // previous search) pays no job here
-        val offset = hnswGraphCount
-        val numGraphs = math.max(1, if (params.hnswGraphs > 0) params.hnswGraphs
-          else spark.sparkContext.defaultParallelism)
-        NswGraph.buildGraphs(base, VEC, ROW_ID, m,
-          SparkSearcher.resolveEfConstruction(params.efConstruction, m), numGraphs,
-          params.measurement, params.metricArg, gpartOffset = offset)
-    }
+    // rows are assigned and encoded under the EXISTING quantizers, with
+    // the same expressions fit used; HNSW rows get fresh segment graphs
+    // past the existing ones (max(__gpart)+1 via the cached lazy val)
+    val encodedPart = storage.encode(layout.assign(searcher, base, hnswGraphCount))
+    val newPart = if (searcher.keepFloats) encodedPart else encodedPart.drop(VEC)
     // Break the lineage BEFORE dropping the parent cache (r19).
     // Mechanism (pinned by graft.ProbeCacheDep + graft.ProbeUnionCache):
     // unions over LIVE caches substitute InMemoryTableScans fine, but
@@ -1648,14 +1191,10 @@ class SearcherModel private[search] (
     // pattern): localCheckpoint(true) already scans every row, so the
     // old follow-up count() (and the policy's filter-count) were one and
     // two whole extra jobs per add
-    val unioned = searcher.strategy match {
-      case HnswGraph(_) => indexed.unionByName(newPart).observe("__addmeta",
-        org.apache.spark.sql.functions.count(lit(1)).as("__n"),
+    val unioned = indexed.unionByName(newPart).observe("__addmeta",
+      org.apache.spark.sql.functions.count(lit(1)).as("__n"), hnsw.toSeq.map(_ =>
         coalesce(sum(when(col(NswGraph.GPART) < lit(fittedGraphTarget), 1L)
-          .otherwise(0L)), lit(0L)).as("__fitted"))
-      case _ => indexed.unionByName(newPart).observe("__addmeta",
-        org.apache.spark.sql.functions.count(lit(1)).as("__n"))
-    }
+          .otherwise(0L)), lit(0L)).as("__fitted")): _*)
     val combined = unioned.localCheckpoint(true)
     val addMeta = unioned.queryExecution.observedMetrics("__addmeta")
     val n = addMeta.getLong(0)
@@ -1665,9 +1204,7 @@ class SearcherModel private[search] (
     // cache-manager entries) — drop those too; the old model is consumed
     graft.util.CacheDiscipline.release(indexed)
     markConsumed("add")
-    val grown = new SearcherModel(searcher, combined, payloadCols, n, dim,
-      centroids, lshPlanes, pqCodebooks, sqBounds, opqRotation, pcaModel,
-      fittedGraphs)
+    val grown = withIndex(combined, n)
     // segment-growth policy (r19 warning, r20 merge policy): repeated
     // HNSW add() accumulates fresh segment graphs, and per-graph beam
     // economics degrade as the segment share grows (every graph is
@@ -1680,41 +1217,39 @@ class SearcherModel private[search] (
     //   already in the fitted layout)
     // - otherwise, once segment rows exceed the fitted corpus the
     //   guidance is logged: compact() (one graph rebuild) restores it.
-    searcher.strategy match {
-      case HnswGraph(_) =>
-        val g0 = fittedGraphTarget
-        // observed on the checkpoint job above — no second scan
-        val fittedRows = addMeta.getLong(1)
-        val segRows = n - fittedRows
-        val ratio = params.autoCompactAtSegmentRatio
-        val log = org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher")
-        if (ratio > 0 && fittedRows > 0 && segRows >= ratio * fittedRows) {
-          log.info(s"HNSW add: segment rows $segRows / fitted $fittedRows " +
-            f"reached autoCompactAtSegmentRatio=$ratio%.2f — compacting " +
-            s"into the fitted $g0-graph layout")
-          // the RECEIVER is already consumed and its blocks released by
-          // this point; if the full-graph rebuild dies (executor loss/OOM)
-          // the caller must still get a usable model — return the grown
-          // segmented one (still live: compact() consumes it only after
-          // its rebuild materializes) instead of propagating and leaking
-          // its checkpoint blocks (r21, ADVICE)
-          return (try grown.compact() catch {
-            case scala.util.control.NonFatal(e) =>
-              log.warn("HNSW add: in-add compact failed — returning the " +
-                "grown segmented model; call compact() again when the " +
-                s"cluster recovers (${e.getMessage})", e)
-              grown
-          })
-        }
-        if (segRows > fittedRows)
-          log.warn(
-            s"HNSW add: segment graphs now hold $segRows rows vs " +
-              s"$fittedRows fitted — growth exceeded the fitted corpus; " +
-              "per-graph beam economics degrade from here (each graph is " +
-              "searched at the full beam). Call compact() to rebuild into " +
-              s"the fitted $g0-graph layout (or opt in to " +
-              "autoCompactAtSegmentRatio), or refit.")
-      case _ => ()
+    if (hnsw.isDefined) {
+      val g0 = fittedGraphTarget
+      // observed on the checkpoint job above — no second scan
+      val fittedRows = addMeta.getLong(1)
+      val segRows = n - fittedRows
+      val ratio = params.autoCompactAtSegmentRatio
+      val log = org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher")
+      if (ratio > 0 && fittedRows > 0 && segRows >= ratio * fittedRows) {
+        log.info(s"HNSW add: segment rows $segRows / fitted $fittedRows " +
+          f"reached autoCompactAtSegmentRatio=$ratio%.2f — compacting " +
+          s"into the fitted $g0-graph layout")
+        // the RECEIVER is already consumed and its blocks released by
+        // this point; if the full-graph rebuild dies (executor loss/OOM)
+        // the caller must still get a usable model — return the grown
+        // segmented one (still live: compact() consumes it only after
+        // its rebuild materializes) instead of propagating and leaking
+        // its checkpoint blocks (r21, ADVICE)
+        return (try grown.compact() catch {
+          case scala.util.control.NonFatal(e) =>
+            log.warn("HNSW add: in-add compact failed — returning the " +
+              "grown segmented model; call compact() again when the " +
+              s"cluster recovers (${e.getMessage})", e)
+            grown
+        })
+      }
+      if (segRows > fittedRows)
+        log.warn(
+          s"HNSW add: segment graphs now hold $segRows rows vs " +
+            s"$fittedRows fitted — growth exceeded the fitted corpus; " +
+            "per-graph beam economics degrade from here (each graph is " +
+            "searched at the full beam). Call compact() to rebuild into " +
+            s"the fitted $g0-graph layout (or opt in to " +
+            "autoCompactAtSegmentRatio), or refit.")
     }
     grown
   }
@@ -1741,32 +1276,26 @@ class SearcherModel private[search] (
     // consumed model that would silently hand the dead receiver back and
     // the caller only discovers the staleness on a later search
     requireLive()
-    searcher.strategy match {
-    case HnswGraph(m) =>
+    hnsw.filter(_ => hnswGraphCount > fittedGraphTarget).fold(this) { h =>
       val numGraphs = fittedGraphTarget
-      if (hnswGraphCount <= numGraphs) this
-      else {
-        val base = indexed.drop(NswGraph.GPART, NswGraph.NBRS)
-        // eager checkpoint before releasing the parent cache — same
-        // dependent-cache invalidation hazard as add() (see there)
-        val rebuiltObs = NswGraph.buildGraphs(base, VEC, ROW_ID, m,
-          SparkSearcher.resolveEfConstruction(params.efConstruction, m),
-          numGraphs, params.measurement, params.metricArg, gpartOffset = 0)
-          .observe("__compactmeta",
-            org.apache.spark.sql.functions.count(lit(1)).as("__n"))
-        val rebuilt = rebuiltObs.localCheckpoint(true)
-        // rides the eager checkpoint's own job (r22) — no follow-up count
-        val n2 = rebuiltObs.queryExecution.observedMetrics("__compactmeta")
-          .getLong(0)
-        org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").info(
-          s"HNSW compact: $hnswGraphCount graphs -> $numGraphs, $n2 rows")
-        indexed.unpersist()
-        graft.util.CacheDiscipline.release(indexed)
-        markConsumed("compact")
-        new SearcherModel(searcher, rebuilt, payloadCols, n2, dim, centroids,
-          lshPlanes, pqCodebooks, sqBounds, opqRotation, pcaModel, fittedGraphs)
-      }
-    case _ => this
+      val base = indexed.drop(NswGraph.GPART, NswGraph.NBRS)
+      // eager checkpoint before releasing the parent cache — same
+      // dependent-cache invalidation hazard as add() (see there)
+      val rebuiltObs = NswGraph.buildGraphs(base, VEC, ROW_ID, h.m,
+        SparkSearcher.resolveEfConstruction(params.efConstruction, h.m),
+        numGraphs, params.measurement, params.metricArg, gpartOffset = 0)
+        .observe("__compactmeta",
+          org.apache.spark.sql.functions.count(lit(1)).as("__n"))
+      val rebuilt = rebuiltObs.localCheckpoint(true)
+      // rides the eager checkpoint's own job (r22) — no follow-up count
+      val n2 = rebuiltObs.queryExecution.observedMetrics("__compactmeta")
+        .getLong(0)
+      org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").info(
+        s"HNSW compact: $hnswGraphCount graphs -> $numGraphs, $n2 rows")
+      indexed.unpersist()
+      graft.util.CacheDiscipline.release(indexed)
+      markConsumed("compact")
+      withIndex(rebuilt, n2)
     }
   }
 
@@ -1784,13 +1313,10 @@ class SearcherModel private[search] (
     // graph nodes invalidates the adjacency their neighbors route through
     // (and the anti-join would scatter graph co-location). Mirror faiss:
     // reject, refit (or filter results downstream) instead
-    searcher.strategy match {
-      case HnswGraph(_) => throw new UnsupportedOperationException(
-        "remove() is not supported on HNSW graph indexes (faiss raises " +
-          "'remove_ids not implemented' for IndexHNSW as well) — refit " +
-          "without the rows, or anti-join the search results")
-      case _ => ()
-    }
+    if (hnsw.isDefined) throw new UnsupportedOperationException(
+      "remove() is not supported on HNSW graph indexes (faiss raises " +
+        "'remove_ids not implemented' for IndexHNSW as well) — refit " +
+        "without the rows, or anti-join the search results")
     // eager checkpoint before releasing the parent cache — same
     // dependent-cache invalidation hazard as add() (see there)
     val combinedObs = indexed
@@ -1803,8 +1329,7 @@ class SearcherModel private[search] (
     indexed.unpersist()
     graft.util.CacheDiscipline.release(indexed)
     markConsumed("remove")
-    new SearcherModel(searcher, combined, payloadCols, n, dim, centroids,
-      lshPlanes, pqCodebooks, sqBounds, opqRotation, pcaModel, fittedGraphs)
+    withIndex(combined, n)
   }
 
   /**
@@ -1818,93 +1343,35 @@ class SearcherModel private[search] (
       queryIdCol: Option[String] = None): DataFrame = {
     requireLive()
     require(count > 0, "search before fit (faiss_searcher.py:187)")
-    // fp16 ranges over its reconstruction (faiss SQ range_search does the
-    // same): codes decode in the scoring projection, below
-    val fp16Codes = !indexed.columns.contains(VEC) &&
-      (IndexStrategy.effective(searcher.strategy) match {
-        case SqFlat(16) | IvfSq(_, 16) => true
-        case _                         => false
-      })
-    require(indexed.columns.contains(VEC) || fp16Codes,
+    // stored (or refine-kept) floats; else fp16 ranges over its
+    // reconstruction (faiss SQ range_search does the same), decoded in the
+    // scoring projection
+    val fp16Codes = !indexed.columns.contains(VEC)
+    val scanBase = if (!fp16Codes) Some(indexed)
+      else storage.floats(indexed, indexed.columns.filter(_ != ROW_ID).map(col): _*)
+    require(scanBase.isDefined,
       "range search needs stored vectors (Flat/IVF/LSH) or decodable fp16 " +
         "codes (PQ/SQ8/SQ4 keep lossy byte codes only)")
-    val scanBase =
-      if (fp16Codes) indexed.withColumn(VEC, Fp16.decodeCol(col(PqIndex.CODES)))
-      else indexed
     val qItemCol = params.itemCol
       .filter(queries.columns.contains).getOrElse(queries.columns.head)
     val withId = queryIdCol match {
       case Some(c) => queries.withColumn(QID, col(c))
       case None    => zipWithRowId(queries, QID)
     }
-    // same pipeline order as fit/search: normVec normalize → PCA project
-    // → codes-cos normalize (fp16 is the one code family that ranges —
-    // its cos fit normalized the corpus AND trained the IVF centroids on
-    // unit vectors, so the probing query must be normalized the same way;
-    // cos itself is scale-invariant, so threshold semantics are unchanged)
-    val encoded0 = searcher.encoder.encode(withId, qItemCol, QVEC)
-    val encodedNv =
-      if (params.normVec && params.measurement != "cos")
-        encoded0.withColumn(QVEC, VectorFunctions.vec_l2_normalize(col(QVEC)))
-      else encoded0
-    val encoded = pcaProject(encodedNv, QVEC)
-    val q = encoded.select(col(QID), col(qItemCol).as(SourceItem), col(QVEC))
-    val qn =
-      if (fp16Codes && params.measurement == "cos")
-        q.withColumn(QVEC, VectorFunctions.vec_l2_normalize(col(QVEC)))
-      else q
+    // fp16 is the one code family that ranges — its cos fit normalized the
+    // corpus AND trained the IVF centroids on unit vectors, so the probing
+    // query is normalized the same way; cos itself is scale-invariant, so
+    // threshold semantics are unchanged
+    val qn = toIndexSpace(searcher.encoder.encode(withId, qItemCol, QVEC)
+        .select(col(QID), col(qItemCol).as(SourceItem), col(QVEC)),
+      QVEC, fp16Codes && params.measurement == "cos")
     val dist = metric.dist(col(QVEC), col(VEC))
     val keep = if (metric.higherIsCloser) dist >= threshold else dist <= threshold
-    // IVF models prune: each query scans only its nprobe cells (a row
-    // lives in exactly one cell, so hits stay distinct); full probe ≡ the
-    // exact scan (spec-gated). Other strategies scan exactly.
-    val scored = searcher.strategy match {
-      case IvfFlat(_) | IvfSq(_, 16) =>
-        val cents = centroids.getOrElse(
-          throw new IllegalStateException("IVF search without fitted centroids"))
-        // clamp against the FITTED cell count, not the parsed nlist — an
-        // auto-sized model (`IVF0`) parses as nlist=0, but cents.length is
-        // always the real cell count (fit clamps to the train-sample size
-        // too, so the parsed number can overstate the cells that exist)
-        val probes = qn.withColumn(IvfIndex.CID,
-          explode(IvfIndex.nearestCentroidsCol(col(QVEC), cents,
-            IndexStrategy.resolveNprobe(searcher.effectiveNprobe, cents.length))))
-        scanBase.select((col(ROW_ID) +: col(ITEM) +: col(VEC) +:
-            col(IvfIndex.CID) +: payloadCols.map(col)): _*)
-          .join(probes, IvfIndex.CID)
-      // degenerate-config reroute (see dispatchTopK): a range scan has
-      // the same candidate economics, and the exact branch below returns
-      // a SUPERSET of any bucket-pruned result at lower estimated cost
-      case LshTables(_, _) if lshServeExact =>
-        lshRouteLog(routed = true)
-        scanBase.select((col(ROW_ID) +: col(ITEM) +: col(VEC) +:
-            payloadCols.map(col)): _*)
-          .crossJoin(broadcast(qn))
-      case LshTables(_, _) =>
-        if (lshServeExactCheaper) lshRouteLog(routed = false)
-        // bucket-collision candidates then threshold verify — approximate
-        // with LSH's usual recall semantics (a true hit that collides in
-        // no table is missed), same contract as the LSH top-k path
-        val planes = lshPlanes.getOrElse(
-          throw new IllegalStateException("LSH search without fitted planes"))
-        val probes = qn.select(col(QID), col(QVEC), col(SourceItem),
-          posexplode(SignLsh.bucketsCol(col(QVEC), planes)).as(Seq("__tbl", "__bkt")))
-        val slimB = scanBase.select(col(ROW_ID),
-          posexplode(col(BUCKETS)).as(Seq("__tbl", "__bkt")))
-        // skinny (qid, row_id) pairs shuffle FIRST; the wide sides join
-        // on after (index by row_id, broadcast queries last) — same
-        // candidate-volume discipline as lshTopK
-        probes.select(col(QID), col("__tbl"), col("__bkt"))
-          .join(slimB, Seq("__tbl", "__bkt"))
-          .select(col(QID), col(ROW_ID)).distinct()
-          .join(scanBase.select((col(ROW_ID) +: col(ITEM) +: col(VEC) +:
-            payloadCols.map(col)): _*), ROW_ID)
-          .join(broadcast(qn), QID)
-      case _ =>
-        scanBase.select((col(ROW_ID) +: col(ITEM) +: col(VEC) +:
-            payloadCols.map(col)): _*)
-          .crossJoin(broadcast(qn))
-    }
+    // the layout picks the candidate rows (IVF probes cells, LSH joins
+    // buckets, the rest scan exactly); a refine stage ranges exactly over
+    // its kept floats
+    val scored = (if (refined) NoLayout else layout).rangeScan(this, scanBase.get, qn,
+      col(ROW_ID) +: col(ITEM) +: col(VEC) +: payloadCols.map(col))
     scored
       .filter(keep)
       .select((col(QID).as(queryIdCol.getOrElse("query_id")) +:
@@ -1935,24 +1402,11 @@ class SearcherModel private[search] (
       case Some(c) => queries.withColumn(QID, col(c))
       case None    => zipWithRowId(queries, QID)
     }
-    // same pipeline order as fit: normVec normalize → PCA project →
-    // pqCos (materialized) normalize in the projected space
-    val encoded0 = searcher.encoder.encode(withId, qItemCol, QVEC)
-    val encodedNv =
-      if (params.normVec && params.measurement != "cos")
-        encoded0.withColumn(QVEC, VectorFunctions.vec_l2_normalize(col(QVEC)))
-      else encoded0
-    val encoded = pcaProject(encodedNv, QVEC)
-    val q = encoded.select(col(QID), col(qItemCol).as(SourceItem), col(QVEC))
-    val pqCos = IndexStrategy.codesOnly(searcher.strategy) && params.measurement == "cos"
-    val qn =
-      if (pqCos)
-        // PQ + cos: queries must be materialized-normalized like the fitted
-        // codes (ADC computes raw dot tables; see fit)
-        q.withColumn(QVEC, VectorFunctions.vec_l2_normalize(col(QVEC)))
-      else q
+    val qn = toIndexSpace(searcher.encoder.encode(withId, qItemCol, QVEC)
+        .select(col(QID), col(qItemCol).as(SourceItem), col(QVEC)),
+      QVEC, storage.codesOnly && params.measurement == "cos")
 
-    val hits = dispatchTopK(searcher.strategy, qn, topK)
+    val hits = topKHits(qn, topK)
 
     // payload gather-join (the reference's iloc, faiss_searcher.py:146-147).
     // The broadcast decision is row-count AND byte guarded: the row
@@ -2022,48 +1476,17 @@ class SearcherModel private[search] (
     }
   }
 
-  /** Strategy-dispatched top-k hits `(QID, SourceItem, ROW_ID, DIST,
-    * RANK)` — shared by [[search]] and the refine stage (which runs its
-    * INNER strategy at a widened k). */
-  private def dispatchTopK(s: IndexStrategy, qn: DataFrame, topK: Int): DataFrame = s match {
-    case ExactFlat      => exactTopK(qn, topK)
-    case IvfFlat(_)     => IvfIndex.ivfTopK(this, qn, topK, searcher.effectiveNprobe)
-    case HnswGraph(_)   =>
-      NswGraph.topK(indexed, qn, topK, effectiveEf, metric.name, params.metricArg)
-        .join(broadcast(qn.select(col(QID), col(SourceItem))), QID)
-        .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-    // cost-based access-path check runs on EVERY LSH serve (the config
-    // may be degenerate — the 64-table feasibility ceiling); the reroute
-    // is automatic for joint-auto spellings (no bucket obligation) and
-    // opt-in for explicit ones, where faiss semantics say the index you
-    // built is the index that serves (the hash gates pin bucket results)
-    case LshTables(_, _) if lshServeExact =>
-      lshRouteLog(routed = true); exactTopK(qn, topK)
-    case LshTables(_, _) =>
-      if (lshServeExactCheaper) lshRouteLog(routed = false)
-      lshTopK(qn, topK)
-    case PqFlat(_, _)   => pqTopK(qn, topK)
-    // queries rotate into the fitted basis, then ordinary ADC — the
-    // stored codes already live in rotated space
-    case OpqPq(_)       => pqTopK(qn.withColumn(QVEC,
-      OpqIndex.rotateCol(col(QVEC), opqRotation.getOrElse(
-        throw new IllegalStateException("OPQ search without fitted rotation")))), topK)
-    case IvfPq(_, _, _) => ivfPqTopK(qn, topK)
-    // fp16 codes don't fit the byte-indexed ADC tables: decode inside
-    // the scoring projection (codegen, fused with the distance kernel)
-    // and run the exact top-k machinery over the reconstruction
-    case SqFlat(16)     => fp16TopK(qn, topK)
-    case IvfSq(_, 16)   => ivfFp16TopK(qn, topK)
-    // SQ8/SQ4 codes score through the same ADC machinery: the fitted
-    // pqCodebooks ARE the dim×256 dequantization levels (SqIndex.levels)
-    case SqFlat(_)      => pqTopK(qn, topK)
-    case IvfSq(_, _)    => ivfPqTopK(qn, topK)
-    // faiss IndexRefineFlat (the `…,RFlat` factory suffix): the inner
-    // code-based index proposes topK·kFactor candidates cheaply, the kept
-    // float vectors re-score them EXACTLY, top-k of the exact scores wins.
-    // Candidate misses are the only recall loss left — quantization error
-    // no longer reorders the final ranking
-    case Refined(inner) =>
+  /** Top-k hits `(QID, SourceItem, ROW_ID, DIST, RANK)` through the
+    * layout's route — shared by [[search]] and the refine stage.
+    *
+    * faiss IndexRefineFlat (the `…,RFlat` factory suffix): the code-based
+    * route proposes topK·kFactor candidates cheaply, the kept float
+    * vectors re-score them EXACTLY, top-k of the exact scores wins.
+    * Candidate misses are the only recall loss left — quantization error
+    * no longer reorders the final ranking. */
+  private def topKHits(qn: DataFrame, topK: Int): DataFrame =
+    if (!refined) layout.topK(this, qn, topK)
+    else {
       // refineKFactor = 0 (default) scales the pool with the corpus
       // (quadruple per decade, the measured ladder — resolveRefineKFactor);
       // an explicit value passes through, with a warning when it is a
@@ -2078,15 +1501,10 @@ class SearcherModel private[search] (
           "fixed pool's recall decays with corpus growth (RECALL.md: x4 " +
           "reads 0.470 @ 200k, 0.347 @ 2M) — set refineKFactor=0 (auto) " +
           "or raise it, or serve IVF-auto/HNSW")
-      val cand = dispatchTopK(inner, qn, topK * kFactor)
-      val exact = cand.select(col(QID), col(ROW_ID))
+      mergeTopK(layout.topK(this, qn, topK * kFactor).select(col(QID), col(ROW_ID))
         .join(indexed.select(col(ROW_ID), col(VEC)), ROW_ID)
-        .join(broadcast(qn.select(col(QID), col(QVEC))), QID)
-        .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-      TopKAggregate.mergeHits(exact, topK, ascending = !metric.higherIsCloser)
-        .join(broadcast(qn.select(col(QID), col(SourceItem))), QID)
-        .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
+        .join(broadcast(qn.select(col(QID), col(QVEC))), QID), qn, topK)
+    }
 
   /** Multi-K on the RAW path (faiss_searcher.py:170-183: the raw branch
     * slices the aligned matrices per k — `labels[:, :k]`, line 181): ONE
@@ -2107,17 +1525,6 @@ class SearcherModel private[search] (
     }.toMap
   }
 
-  /** Exact brute-force top-k. Two physical shapes, chosen by index size
-    * (faiss's "push k into the scan" reproduced twice over — SURVEY §4):
-    *
-    *  - index fits broadcast: broadcast cross join + codegen'd distance +
-    *    `row_number` rank filter, which Catalyst rewrites to partial+final
-    *    WindowGroupLimit (map-side top-k before the exchange);
-    *  - index too large: broadcast the (small) QUERY set instead, stream
-    *    the index partitions, and heap-aggregate per query with the native
-    *    [[TopKByDistance]] TypedImperativeAggregate — O(n log k) work,
-    *    shuffle of only k rows per query per partition, no sort of the
-    *    n×q cross product. This is the 1000-executor/100 TB plan. */
   /** Session-overridable byte cap for the window path's index broadcast
     * (`graft.search.windowBroadcastByteCap`) — the default is the 2 GB
     * [[SparkSearcher.WindowBroadcastByteCap]]. */
@@ -2134,138 +1541,48 @@ class SearcherModel private[search] (
       .get("graft.search.payloadBroadcastByteCap",
         SparkSearcher.WindowBroadcastByteCap.toString).toLong
 
-  private def exactTopK(q: DataFrame, topK: Int): DataFrame =
-    params.exactPath match {
-      case "window" if SparkSearcher.windowPathFits(count, dim,
-          params.broadcastThreshold, windowByteCap) =>
-        exactTopKWindow(q, topK)
-      case "window" | "aggregate" => exactTopKAggregate(q, topK)
-      case other => throw new IllegalArgumentException(
-        s"exactPath must be 'aggregate' or 'window', got '$other'")
-    }
-
-  private def exactTopKWindow(q: DataFrame, topK: Int): DataFrame = {
-    val slim = indexed.select(col(ROW_ID), col(VEC))
-    val scored = q.crossJoin(broadcast(slim))
-      .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-    val w = Window.partitionBy(col(QID))
-      .orderBy(metric.closestFirst(col(DIST)), col(ROW_ID))
-    scored
-      .withColumn(RANK, row_number().over(w))
-      .filter(col(RANK) <= topK)
+  /** Attach each hit's source item. */
+  private[search] def withSource(hits: DataFrame, q: DataFrame): DataFrame =
+    hits.join(broadcast(q.select(col(QID), col(SourceItem))), QID)
       .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
 
-  private[search] def exactTopKAggregate(q: DataFrame, topK: Int): DataFrame = {
-    val slim = indexed.select(col(ROW_ID), col(VEC))
-    val scored = slim
-      .crossJoin(broadcast(q.select(col(QID), col(QVEC))))
-      .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-    TopKAggregate.mergeHits(scored, topK, ascending = !metric.higherIsCloser)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
+  /** Bounded-heap top-k over scored `(QID, ROW_ID, QVEC, VEC)` pairs:
+    * the native [[TopKByDistance]] aggregate, O(n log k), shuffling k rows
+    * per query per partition instead of sorting every pair. */
+  private[search] def mergeTopK(pairs: DataFrame, q: DataFrame, topK: Int): DataFrame =
+    withSource(TopKAggregate.mergeHits(
+      pairs.withColumn(DIST, metric.dist(col(QVEC), col(VEC))), topK,
+      ascending = !metric.higherIsCloser), q)
 
-  /** LSH candidate search: queries explode into their per-table bucket
-    * keys, equi-join against the stored index buckets (only colliding rows
-    * are ever scored), exact re-rank of the distinct candidates. Fully
-    * deterministic given the fitted planes — oracle-checkable despite
-    * being approximate. May return < topK rows for a query with few
-    * collisions (faiss's LSH behaves the same). */
-  private def lshTopK(q: DataFrame, topK: Int): DataFrame = {
-    val planes = lshPlanes.getOrElse(
-      throw new IllegalStateException("LSH search without fitted planes"))
-    val probes = q.select(col(QID), col(QVEC),
-      posexplode(graft.search.SignLsh.bucketsCol(col(QVEC), planes))
-        .as(Seq("__tbl", "__bkt")))
-    val slimB = indexed.select(col(ROW_ID),
-      posexplode(col(BUCKETS)).as(Seq("__tbl", "__bkt")))
-    val cands = probes.select(col(QID), col("__tbl"), col("__bkt"))
-      .join(slimB, Seq("__tbl", "__bkt"))
-      .select(col(QID), col(ROW_ID)).distinct()
-    // JOIN ORDER IS THE SCALE STORY HERE: the candidate set is
-    // |Q| × occupancy × tables rows (the r16 sf100 probe measured 506M
-    // DISTINCT candidates at |Q|=500 under the joint-auto 44×6-bit
-    // config), so the row_id shuffle must carry the SKINNY (qid, row_id)
-    // pairs only. The earlier shape attached the ~300-byte query vector
-    // BEFORE that shuffle — 160 GB in flight at |Q|=500 (ENOSPC,
-    // BENCH_r16_sf100_knnbatch2 first attempt) vs ~4 GB at the 10-query
-    // gates where it hid. Vectors join on AFTER the shuffle: the index
-    // side by row_id, the broadcast-able query side last.
-    val scored = cands
-      .join(indexed.select(col(ROW_ID), col(VEC)), ROW_ID)
-      .join(broadcast(q.select(col(QID), col(QVEC))), QID)
-      .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-    // bounded-heap top-k tail (same as the exact aggregate path): shuffles
-    // k rows per query per partition instead of sorting all candidates
-    TopKAggregate.mergeHits(scored, topK, ascending = !metric.higherIsCloser)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
+  /** Exact brute-force top-k over a `(ROW_ID, VEC)` float view. Two
+    * physical shapes (faiss's "push k into the scan" reproduced twice
+    * over — SURVEY §4):
+    *
+    *  - `exactPath = "window"` over stored floats, when the index fits
+    *    broadcast: broadcast cross join + codegen'd distance +
+    *    `row_number` rank filter, which Catalyst rewrites to partial+final
+    *    WindowGroupLimit (map-side top-k before the exchange);
+    *  - otherwise broadcast the (small) QUERY set instead, stream the
+    *    index partitions, and heap-aggregate per query ([[mergeTopK]]).
+    *    This is the 1000-executor/100 TB plan. */
+  private[search] def scanTopK(view: DataFrame, q: DataFrame, topK: Int): DataFrame =
+    if (storage == Floats && params.exactPath == "window" &&
+        SparkSearcher.windowPathFits(count, dim, params.broadcastThreshold, windowByteCap)) {
+      val w = Window.partitionBy(col(QID))
+        .orderBy(metric.closestFirst(col(DIST)), col(ROW_ID))
+      q.crossJoin(broadcast(view))
+        .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
+        .withColumn(RANK, row_number().over(w))
+        .filter(col(RANK) <= topK)
+        .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
+    } else mergeTopK(view.crossJoin(broadcast(q.select(col(QID), col(QVEC)))), q, topK)
 
-  /** PQ ADC search: delegate to [[PqIndex.pqTopK]] (per-partition distance
-    * tables over byte codes), then attach source items like the other
-    * paths. Approximate; deterministic given the seeded codebooks. */
-  private def pqTopK(q: DataFrame, topK: Int): DataFrame = {
-    val cbs = pqCodebooks.getOrElse(
-      throw new IllegalStateException("PQ search without fitted codebooks"))
-    PqIndex.pqTopK(indexed, q, topK, cbs, metric.name, searcher.params.metricArg,
-        nbits = pqNbits)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
-
-  /** Code width of the PQ stream this model scores: 4 only for the
-    * `PQmx4` family — OPQ's codes and the SQ byte-level reuse are 8-bit
-    * streams (SQ4's nibbles pair into byte-level tables at the levels
-    * layer, so its code STREAM is byte-granular too). */
-  private def pqNbits: Int = IndexStrategy.effective(searcher.strategy) match {
-    case PqFlat(_, nb)   => nb
-    case IvfPq(_, _, nb) => nb
-    case _               => 8
-  }
-
-  /** SQfp16 search: exact scoring over the half-precision reconstruction.
-    * The stored 2-byte codes decode INSIDE the scoring projection (one
-    * whole-stage-codegen span with the distance kernel — the float corpus
-    * is never materialized; codes are what's cached), then the shared
-    * bounded-heap top-k tail. Same plan as [[exactTopKAggregate]] at half
-    * the cached bytes. */
-  private def fp16TopK(q: DataFrame, topK: Int): DataFrame = {
-    val slim = indexed.select(col(ROW_ID),
-      Fp16.decodeCol(col(PqIndex.CODES)).as(VEC))
-    val scored = slim
-      .crossJoin(broadcast(q.select(col(QID), col(QVEC))))
-      .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-    TopKAggregate.mergeHits(scored, topK, ascending = !metric.higherIsCloser)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
-
-  /** IVFn,SQfp16: centroid-pruned cells, fp16 decode-and-score within the
-    * probed cells — [[IvfIndex.ivfTopKOver]] with the reconstruction as
-    * the vector view. */
-  private def ivfFp16TopK(q: DataFrame, topK: Int): DataFrame = {
-    val cents = centroids.getOrElse(
-      throw new IllegalStateException("IVF,SQfp16 search without fitted centroids"))
-    IvfIndex.ivfTopKOver(
-      indexed.select(col(ROW_ID), Fp16.decodeCol(col(PqIndex.CODES)).as(VEC),
-        col(IvfIndex.CID)),
-      metric, cents, q, topK, searcher.effectiveNprobe)
-  }
-
-  /** IVF+PQ: cell-pruned ADC — see [[IvfPqScorer.topK]]. */
-  // no nlist parameter: IvfPqScorer derives the cell count from the
-  // fitted centroids (auto-sized IVF0 models parse as nlist=0)
-  private def ivfPqTopK(q: DataFrame, topK: Int): DataFrame = {
-    val cbs = pqCodebooks.getOrElse(
-      throw new IllegalStateException("IVF,PQ search without fitted codebooks"))
-    val cents = centroids.getOrElse(
-      throw new IllegalStateException("IVF,PQ search without fitted centroids"))
-    IvfPqScorer.topK(indexed, q, topK, cbs, cents, params.nprobe,
-        metric.name, searcher.params.metricArg, nbits = pqNbits)
-      .join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
+  /** ADC top-k over byte codes ([[PqIndex.pqTopK]]: per-partition distance
+    * tables). Approximate; deterministic given the seeded codebooks. */
+  private[search] def adcTopK(q: DataFrame, topK: Int): DataFrame = {
+    val qc = storage.queries(q)
+    withSource(PqIndex.pqTopK(indexed, qc, topK, storage.codebooks.get, metric.name,
+      params.metricArg, nbits = storage.adcBits), qc)
   }
 
   /** Convenience overload mirroring the reference's `List[str]` query input
@@ -2308,137 +1625,72 @@ class SearcherModel private[search] (
     * JSON (+ IVF centroids), Spark-ML style — no object serialization. */
   def save(path: String): Unit = {
     requireLive()
-    val itemsOut = indexed.withColumnRenamed(ITEM, ITEM_SAVED)
-    IndexStrategy.effective(searcher.strategy) match {
-      // IVF-family indexes persist PARTITIONED BY CELL: on disk the cells
-      // are directories, so any cell-filtered read of a saved 100 TB index
-      // prunes at the storage layer (PartitionFilters) and touches only
-      // the probed nprobe/nlist fraction — the at-rest analog of the
-      // in-memory repartition(cell) co-location
-      case IvfFlat(_) | IvfPq(_, _, _) | IvfSq(_, _) =>
-        itemsOut.write.mode("overwrite").partitionBy(IvfIndex.CID)
-          .parquet(s"$path/items")
-      // HNSW persists partitioned by GRAPH: each graph's rows live in one
-      // directory, so load can re-co-locate a graph with one shuffle and a
-      // partial read touches whole graphs, never fragments of one
-      case HnswGraph(_) =>
-        itemsOut.write.mode("overwrite").partitionBy(NswGraph.GPART)
-          .parquet(s"$path/items")
-      case _ =>
-        itemsOut.write.mode("overwrite").parquet(s"$path/items")
+    SparkSearcher.writeStaged(spark, path) { dir =>
+      val itemsOut = indexed.withColumnRenamed(ITEM, ITEM_SAVED)
+      // IVF cells / HNSW graphs are directories at rest (see the layouts)
+      val writer = itemsOut.write.mode("overwrite")
+      layout.partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(s"$dir/items")
+      val meta = new MetaDir(spark, dir)
+      layout.save(meta)
+      storage.save(meta)
+      // PCA-prefix kernel + bias (n_components re-asserted at load)
+      pcaModel.foreach(_.save(spark, s"$dir/pca"))
+      // params as a 1-row JSON with every search-relevant knob persisted
+      // (nprobe/exactPath/broadcastThreshold included: a reloaded IVF model
+      // must keep its recall setting). Option fields use an empty-string
+      // sentinel so the field set is stable across writers. Written
+      // DRIVER-side through the path's FileSystem since r22 (Jackson does
+      // the escaping — a separator containing quotes/backslashes still
+      // round-trips): Spark's JSON writer cost a whole job + commit
+      // protocol for one row. The layout is a part file plus _SUCCESS under
+      // params.json/, so spark.read.json and every older reader parse it.
+      val p = params
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val node = mapper.createObjectNode()
+      node.put("itemCol", p.itemCol.getOrElse(""))
+      node.put("indexParam", p.indexParam)
+      node.put("measurement", p.measurement)
+      node.put("metricArg", p.metricArg)
+      node.put("normVec", p.normVec)
+      node.put("docFeatureSep", p.docFeatureSep.getOrElse(""))
+      node.put("queryFeatureSep", p.queryFeatureSep.getOrElse(""))
+      node.put("nprobe", p.nprobe)
+      node.put("efSearch", p.efSearch)
+      node.put("hnswGraphs", p.hnswGraphs)
+      node.put("exactPath", p.exactPath)
+      node.put("broadcastThreshold", p.broadcastThreshold)
+      node.put("lshBatchHint", p.lshBatchHint)
+      node.put("lshExactFallback", p.lshExactFallback)
+      node.put("refineKFactor", p.refineKFactor)
+      node.put("efConstruction", p.efConstruction)
+      node.put("autoCompactAtSegmentRatio", p.autoCompactAtSegmentRatio)
+      node.put("count", count)
+      node.put("dim", dim)
+      // the parsed strategy serving the factory string
+      node.put("effectiveIndex", searcher.strategy.toString)
+      // the FITTED graph layout (r20): compact()'s rebuild target and
+      // add()'s segment baseline, persisted so the layout contract survives
+      // load onto a cluster whose parallelism differs from the fitting one
+      // (0 sentinel = non-HNSW / pre-r20)
+      node.put("fittedGraphs", fittedGraphs.getOrElse(0).toLong)
+      // serving-format version (r19): marks saves written since the
+      // joint-auto LSH degenerate reroute landed. Loads of models WITHOUT
+      // it that the reroute now serves through the exact kernel log an
+      // explicit migration notice — the route is deterministic from fitted
+      // state, but a pre-r18 artifact's operator should not change serving
+      // silently
+      node.put("formatVersion", SparkSearcher.FormatVersion)
+      // the items table's schema (r22): lets load() skip the distributed
+      // footer-inference job with an explicit read schema. Tolerant field —
+      // absent in older saves, load falls back to inference.
+      node.put("itemsSchema", itemsOut.schema.json)
+      val pdir = new org.apache.hadoop.fs.Path(s"$dir/params.json")
+      val fs = pdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val part = fs.create(new org.apache.hadoop.fs.Path(pdir, "part-00000-graft.json"))
+      try part.write((mapper.writeValueAsString(node) + "\n").getBytes("UTF-8"))
+      finally part.close()
+      fs.create(new org.apache.hadoop.fs.Path(pdir, "_SUCCESS")).close()
     }
-    // metadata tables are a few KB–MB of fitted constants: write each as
-    // ONE file (r22) — a local Seq toDF otherwise parallelizes to the
-    // shuffle-partition count, paying ~32 write tasks and leaving ~32
-    // near-empty files for every later load to open
-    centroids.foreach { cs =>
-      val sp = spark
-      import sp.implicits._
-      cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("centroid_id", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    }
-    lshPlanes.foreach { ps =>
-      val sp = spark
-      import sp.implicits._
-      (for (t <- ps.indices; b <- ps(t).indices)
-        yield (t, b, ps(t)(b).toSeq)).toDF("tbl", "bit", "plane")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/lsh_planes")
-    }
-    opqRotation.foreach { rot =>
-      val sp = spark
-      import sp.implicits._
-      rot.indices.map(j => (j, rot(j).toSeq)).toDF("j", "row")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/opq_rotation")
-    }
-    // PCA-prefix kernel + bias (n_components re-asserted at load)
-    pcaModel.foreach(_.save(spark, s"$path/pca"))
-    // SQ persists its BOUNDS (2·dim floats), not the derived dim×256
-    // levels — load rebuilds levels from bounds, and add() after load
-    // encodes under the exact fitted bounds (no float drift)
-    IndexStrategy.effective(searcher.strategy) match {
-      // fp16 is train-free: no bounds to persist, codes self-describe
-      case SqFlat(16) | IvfSq(_, 16) => ()
-      case SqFlat(_) | IvfSq(_, _) =>
-        val (mn, df) = sqBounds.get
-        val sp = spark
-        import sp.implicits._
-        mn.indices.map(i => (i, mn(i), df(i))).toDF("i", "vmin", "vdiff")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/sq_bounds")
-      case _ =>
-        pqCodebooks.foreach { cbs =>
-          val sp = spark
-          import sp.implicits._
-          (for (m <- cbs.indices; c <- cbs(m).indices)
-            yield (m, c, cbs(m)(c).toSeq)).toDF("sub", "cid", "centroid")
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebooks")
-        }
-    }
-    // params as a 1-row JSON with every search-relevant knob persisted
-    // (nprobe/exactPath/broadcastThreshold included: a reloaded IVF model
-    // must keep its recall setting). Option fields use an empty-string
-    // sentinel so the field set is stable across writers. Written
-    // DRIVER-side through the path's FileSystem since r22 (Jackson does
-    // the escaping — a separator containing quotes/backslashes still
-    // round-trips): Spark's JSON writer cost a whole job + commit
-    // protocol for one row. The layout is unchanged — a part file plus
-    // _SUCCESS under params.json/ — so spark.read.json and every older
-    // reader still parse it.
-    val p = params
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    node.put("itemCol", p.itemCol.getOrElse(""))
-    node.put("indexParam", p.indexParam)
-    node.put("measurement", p.measurement)
-    node.put("metricArg", p.metricArg)
-    node.put("normVec", p.normVec)
-    node.put("docFeatureSep", p.docFeatureSep.getOrElse(""))
-    node.put("queryFeatureSep", p.queryFeatureSep.getOrElse(""))
-    node.put("nprobe", p.nprobe)
-    node.put("efSearch", p.efSearch)
-    node.put("hnswGraphs", p.hnswGraphs)
-    node.put("exactPath", p.exactPath)
-    node.put("broadcastThreshold", p.broadcastThreshold)
-    node.put("lshBatchHint", p.lshBatchHint)
-    node.put("lshExactFallback", p.lshExactFallback)
-    node.put("refineKFactor", p.refineKFactor)
-    node.put("efConstruction", p.efConstruction)
-    node.put("autoCompactAtSegmentRatio", p.autoCompactAtSegmentRatio)
-    node.put("count", count)
-    node.put("dim", dim)
-    // the strategy actually SERVING the factory string — differs from
-    // indexParam when a translation happened (e.g. HNSWn → IVF(64)); a
-    // loader can detect the substitution instead of assuming faiss
-    // semantics survived
-    node.put("effectiveIndex", searcher.strategy.toString)
-    // the FITTED graph layout (r20): compact()'s rebuild target and
-    // add()'s segment baseline, persisted so the layout contract survives
-    // load onto a cluster whose parallelism differs from the fitting one
-    // (0 sentinel = non-HNSW / pre-r20)
-    node.put("fittedGraphs", fittedGraphs.map(_.toLong).getOrElse(0L))
-    // serving-format version (r19): marks saves written since the
-    // joint-auto LSH degenerate reroute landed. Loads of models WITHOUT
-    // it that the reroute now serves through the exact kernel log an
-    // explicit migration notice — the route is deterministic from fitted
-    // state, but a pre-r18 artifact's operator should not change serving
-    // silently
-    node.put("formatVersion", SparkSearcher.FormatVersion)
-    // the items table's schema (r22): lets load() skip the distributed
-    // footer-inference job with an explicit read schema. Tolerant field —
-    // absent in older saves, load falls back to inference.
-    node.put("itemsSchema", itemsOut.schema.json)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/params.json")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // overwrite semantics like the old writer's mode("overwrite"): a
-    // previous save's part files (possibly differently named) must not
-    // survive next to the new row
-    fs.delete(dir, true)
-    fs.mkdirs(dir)
-    val part = fs.create(
-      new org.apache.hadoop.fs.Path(dir, "part-00000-graft.json"), true)
-    try part.write((mapper.writeValueAsString(node) + "\n").getBytes("UTF-8"))
-    finally part.close()
-    fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
   }
 
   /** Pruned `(row_id, __vec)` view of the index, for external scorers

@@ -30,11 +30,12 @@ object Parallelism {
     * internal-row RDD (`queryExecution.toRdd` — a lazy val on the plan's
     * QueryExecution) rather than `.rdd`, which additionally builds the
     * external-row conversion lineage on every access. One physical
-    * planning of `df` still happens if it wasn't planned yet; the count
-    * is the PRE-AQE one (AQE may coalesce at runtime), so callers must
-    * only use it where over-counting is the safe error — deciding a
-    * parallelism FLOOR qualifies: a plan AQE would coalesce below the
-    * floor is exactly one that needs spreading. No job is run.
+    * planning of `df` still happens if it wasn't planned yet; no job is
+    * run. The count is the PRE-AQE one: AQE may coalesce at runtime, so
+    * it can over-count, and a floor decided on it can UNDER-fire — a plan
+    * that counts >= parallelism here but that AQE coalesces below it is
+    * not spread. That is acceptable for [[scanFloor]]: AQE only coalesces
+    * small partitions, where spreading would not pay.
     */
   def planPartitions(df: DataFrame): Int =
     df.queryExecution.toRdd.getNumPartitions
@@ -65,15 +66,24 @@ object Parallelism {
     */
   def streamStatePartitions(spark: SparkSession, src: String): Int = {
     val explicit = spark.conf.get("spark.graft.stream.statePartitions", "")
-    if (explicit.nonEmpty) return explicit.toInt
+    if (explicit.nonEmpty) return positiveConf("spark.graft.stream.statePartitions", explicit).toInt
     val p = new org.apache.hadoop.fs.Path(src)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
-    val target = spark.conf
-      .get("spark.graft.stream.stateTargetBytes", (64L << 20).toString).toLong
+    val target = positiveConf("spark.graft.stream.stateTargetBytes",
+      spark.conf.get("spark.graft.stream.stateTargetBytes", (64L << 20).toString))
     val cap = math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions)
     statePartitionsFor(bytes, target, cap)
+  }
+
+  /** A sizing conf value: a whole number >= 1 (an Int for a partition
+    * count), or a clear error naming the key. */
+  private def positiveConf(key: String, v: String): Long = {
+    val n = scala.util.Try(v.trim.toLong).toOption
+      .filter(n => n >= 1 && (key.endsWith("Bytes") || n <= Int.MaxValue))
+    require(n.isDefined, s"$key must be a whole number >= 1, got '$v'")
+    n.get
   }
 
   /** The pure sizing rule behind [[streamStatePartitions]], split out so a

@@ -90,7 +90,7 @@ class PqSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").cast("long").as(SparkSearcher.QID),
         col("embedding").cast("array<float>").as(SparkSearcher.QVEC))
-    val cbs = model.pqCodebooks.get
+    val cbs = model.fittedCodebooks.get
     def run(chunk: Int) = PqIndex
       .pqTopK(model.indexed, q, 5, cbs, metricName = "l2", queryChunkSize = chunk)
       .collect().map(_.toSeq).toSet
@@ -99,7 +99,7 @@ class PqSpec extends SparkSpec {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "l2", indexParam = "IVF8,PQ8", nprobe = 4)).fit(emb)
     def runIvf(chunk: Int) = IvfPqScorer
-      .topK(ivfpq.indexed, q, 5, ivfpq.pqCodebooks.get, ivfpq.centroids.get,
+      .topK(ivfpq.indexed, q, 5, ivfpq.fittedCodebooks.get, ivfpq.fittedCentroids.get,
         nprobe = 4, metricName = "l2", queryChunkSize = chunk)
       .collect().map(_.toSeq).toSet
     assert(runIvf(7) === runIvf(Int.MaxValue))

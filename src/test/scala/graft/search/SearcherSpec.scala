@@ -229,7 +229,7 @@ class SearcherSpec extends SparkSpec {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         indexParam = "IVF0", nprobe = 1 << 20)).fit(emb)
     val expected = IndexStrategy.resolveNlist(0, n)
-    assert(model.centroids.get.length === math.min(expected.toLong, n).toInt)
+    assert(model.fittedCentroids.get.length === math.min(expected.toLong, n).toInt)
     val q = emb.filter(col("vec_id") < 3)
     // nprobe >= cells -> every cell probed -> exact: must equal Flat's result
     val exact = embModel().search(q, topK = 5, keepRankNo = true,
@@ -242,7 +242,7 @@ class SearcherSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf0").toString
     model.save(dir)
     val loaded = SparkSearcher.load(spark, dir)
-    assert(loaded.centroids.get.length === model.centroids.get.length)
+    assert(loaded.fittedCentroids.get.length === model.fittedCentroids.get.length)
     val again = loaded.search(q, topK = 5, keepRankNo = true,
       queryIdCol = Some("vec_id")).orderBy("vec_id", "rank_no").collect()
     assert(again === exact)
@@ -287,7 +287,7 @@ class SearcherSpec extends SparkSpec {
       measurement = "cos", indexParam = "IVF0")
     val auto = new SparkSearcher(new PassthroughEncoder("embedding"),
       params.copy(nprobe = 0)).fit(emb)
-    val resolved = IndexStrategy.resolveNprobe(0, auto.centroids.get.length)
+    val resolved = IndexStrategy.resolveNprobe(0, auto.fittedCentroids.get.length)
     val pinned = new SparkSearcher(new PassthroughEncoder("embedding"),
       params.copy(nprobe = resolved)).fit(emb)
     val q = emb.filter(col("vec_id") < 5)
@@ -1203,5 +1203,54 @@ class SearcherSpec extends SparkSpec {
     assert(res(grown) === res(fitH(emb)))
     assert(grown.count === emb.count())
     grown.unpersist()
+  }
+
+  test("SearcherParams rejects a bad setting at construction with a clear message") {
+    def msg(p: => SearcherParams) = intercept[IllegalArgumentException](p).getMessage
+    assert(msg(SearcherParams(exactPath = "windowed")).contains("exactPath"))
+    assert(msg(SearcherParams(nprobe = -1)).contains("nprobe"))
+    assert(msg(SearcherParams(efSearch = -1)).contains("efSearch"))
+    assert(msg(SearcherParams(hnswGraphs = -2)).contains("hnswGraphs"))
+    assert(msg(SearcherParams(refineKFactor = -4)).contains("refineKFactor"))
+    assert(msg(SearcherParams(efConstruction = -1)).contains("efConstruction"))
+    assert(msg(SearcherParams(broadcastThreshold = -1L)).contains("broadcastThreshold"))
+    assert(msg(SearcherParams(autoCompactAtSegmentRatio = -0.5))
+      .contains("autoCompactAtSegmentRatio"))
+    assert(msg(SearcherParams(lshBatchHint = 0)).contains("lshBatchHint"))
+    // the zero autos and the defaults stay valid
+    SearcherParams(nprobe = 0, efSearch = 0, exactPath = "window", lshBatchHint = 1)
+  }
+
+  test("load requires exactly one params row: a second part file fails with a clear message") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-2params").toString
+    embModel().save(dir)
+    val pdir = java.nio.file.Paths.get(s"$dir/params.json")
+    val part = java.nio.file.Files.list(pdir).filter(_.getFileName.toString.startsWith("part-"))
+      .findFirst().get()
+    java.nio.file.Files.copy(part, pdir.resolve("part-00001-extra.json"))
+    val e = intercept[IllegalArgumentException](SparkSearcher.load(spark, dir))
+    assert(e.getMessage.contains("exactly one params row"), e.getMessage)
+  }
+
+  test("a save that fails partway leaves the previous index loadable and serving") {
+    val parent = java.nio.file.Files.createTempDirectory("graft-crashsave")
+    val dir = parent.resolve("index").toString
+    val model = embModel()
+    model.save(dir)
+    val q = sf("embeddings").filter(col("vec_id") < 3)
+    def res(m: SearcherModel) = m.search(q, 3, keepRankNo = true, queryIdCol = Some("vec_id"))
+      .orderBy("vec_id", "rank_no").collect().toSeq
+    val before = res(model)
+    // a payload column parquet cannot write (a calendar interval) makes the
+    // second save throw inside its items write
+    val bad = new SparkSearcher(new PassthroughEncoder("embedding"),
+      SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id")))
+      .fit(sf("embeddings").withColumn("label", expr("make_interval(0, 0, 0, 1)")))
+    intercept[Exception](bad.save(dir))
+    spark.catalog.refreshByPath(dir)
+    assert(res(SparkSearcher.load(spark, dir)) === before)
+    // the failed save's staging directory is gone
+    assert(java.nio.file.Files.list(parent).toArray.map(_.toString).toSeq === Seq(dir))
+    bad.unpersist()
   }
 }

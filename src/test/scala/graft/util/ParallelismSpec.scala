@@ -51,4 +51,20 @@ class ParallelismSpec extends SparkSpec {
     try assert(Parallelism.streamStatePartitions(spark, dir) == 13)
     finally spark.conf.unset("spark.graft.stream.statePartitions")
   }
+
+  test("streamStatePartitions rejects a malformed or non-positive sizing conf with the key named") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-spart-bad").toString
+    spark.range(10).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
+    for ((key, bad) <- Seq("spark.graft.stream.statePartitions" -> "0",
+        "spark.graft.stream.statePartitions" -> "eight",
+        "spark.graft.stream.statePartitions" -> "99999999999",
+        "spark.graft.stream.stateTargetBytes" -> "-1",
+        "spark.graft.stream.stateTargetBytes" -> "64MB")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](Parallelism.streamStatePartitions(spark, dir))
+        assert(e.getMessage.contains(key), s"$key=$bad: ${e.getMessage}")
+      } finally spark.conf.unset(key)
+    }
+  }
 }
