@@ -3815,8 +3815,9 @@ object SparkEntry {
   }
 
   /** knn_ivfpq_cos: IVF16,PQ8 at nprobe=6 — cells and codes both live in
-    * the normalized space; a code is scored only for queries probing its
-    * cell ([[graft.search.IvfPqScorer.topK]]). */
+    * the normalized space; the per-partition cell scan scores a code only
+    * against the queries probing its cell, through each query's ADC table
+    * ([[graft.search.IvfPqScorer.topK]] over [[graft.search.CellScan]]). */
   private def ivfPqOracle(s: SparkSession, dir: String, k: Int): String = {
     val model = new SparkSearcher(new PassthroughEncoder("embedding"),
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),

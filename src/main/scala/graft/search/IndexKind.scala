@@ -67,21 +67,23 @@ final case class IvfCells(nlist: Int, centroids: Array[Array[Float]] = Array.emp
   override def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout =
     copy(centroids = meta.readRows("centroids", ("centroid_id", "centroid")))
   override def fittedDim: Option[Int] = Some(centroids(0).length)
-  // nprobe resolves against the FITTED cell count, not the parsed nlist
-  def topK(m: SearcherModel, q: DataFrame, k: Int): DataFrame =
-    m.storage.floats(m.indexed, col(IvfIndex.CID)) match {
-      case Some(view) =>
-        IvfIndex.ivfTopKOver(view, m.searcher.metric, centroids, q, k, m.searcher.params.nprobe)
-      case None => m.withSource(IvfPqScorer.topK(m.indexed, m.storage.queries(q), k,
-        m.storage.codebooks.get, centroids, m.searcher.params.nprobe, m.searcher.metric.name,
-        m.searcher.params.metricArg, nbits = m.storage.adcBits), q)
-    }
+  // nprobe resolves against the FITTED cell count, not the parsed nlist.
+  // Float views (Floats, Fp16Codes) and codes share one CellScan
+  def topK(m: SearcherModel, q: DataFrame, k: Int): DataFrame = {
+    val (metric, arg) = (m.searcher.metric, m.searcher.params.metricArg)
+    m.withSource(m.storage.floats(m.indexed, col(IvfIndex.CID)) match {
+      case Some(view) => CellScan.topK(view, q, IvfIndex.probesCol(centroids, m.searcher.params.nprobe),
+        k, !metric.higherIsCloser, PqIndex.DefaultQueryChunk)(CellScan.floats(metric.name, arg))
+      case None => IvfPqScorer.topK(m.indexed, m.storage.queries(q), k, m.storage.codebooks.get,
+        centroids, m.searcher.params.nprobe, metric.name, arg, nbits = m.storage.adcBits)
+    }, q)
+  }
   // each query scans only its nprobe cells (a row lives in one cell, so
   // hits stay distinct); full probe equals the exact scan
   override def rangeScan(m: SearcherModel, base: DataFrame, q: DataFrame,
       cols: Seq[Column]): DataFrame = {
-    val probes = q.withColumn(IvfIndex.CID, explode(IvfIndex.nearestCentroidsCol(col(QVEC),
-      centroids, IndexStrategy.resolveNprobe(m.searcher.params.nprobe, centroids.length))))
+    val probes = q.withColumn(IvfIndex.CID,
+      explode(IvfIndex.probesCol(centroids, m.searcher.params.nprobe)))
     // the cell id sits right after (row_id, item, vec)
     base.select(cols.take(3) ++ (col(IvfIndex.CID) +: cols.drop(3)): _*)
       .join(probes, IvfIndex.CID)
@@ -362,7 +364,8 @@ final case class SqCodes(nbits: Int, vmin: Array[Float] = Array.empty,
     df.withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), vmin, vdiff, nbits))
   override def save(meta: MetaDir): Unit = {
     import meta.spark.implicits._
-    meta.write("sq_bounds", vmin.indices.map(i => (i, vmin(i), vdiff(i))).toDF("i", "vmin", "vdiff"))
+    meta.write("sq_bounds", 12L * vmin.length)(
+      vmin.indices.map(i => (i, vmin(i), vdiff(i))).toDF("i", "vmin", "vdiff"))
   }
   override def load(meta: MetaDir): Storage = {
     val rows = meta.read("sq_bounds", "i" -> IntegerType, "vmin" -> FloatType, "vdiff" -> FloatType)
@@ -381,8 +384,14 @@ final case class SqCodes(nbits: Int, vmin: Array[Float] = Array.empty,
   * writer's own static schema — no footer-inference job — in a
   * driver-side order. */
 final class MetaDir(val spark: SparkSession, path: String) {
-  def write(sub: String, df: DataFrame): Unit =
+  /** Write the driver-side table `df` of `bytes` payload bytes. One task
+    * writes it, so a table past the broadcast byte cap fails first, before
+    * `df` is built or anything is written. */
+  def write(sub: String, bytes: Long)(df: => DataFrame): Unit = {
+    require(bytes <= WindowBroadcastByteCap, s"metadata table '$sub' holds $bytes bytes " +
+      s"on the driver, over the $WindowBroadcastByteCap-byte cap of a one-file write")
     df.coalesce(1).write.mode("overwrite").parquet(s"$path/$sub")
+  }
   def read(sub: String, fields: (String, DataType)*): Array[Row] =
     spark.read.schema(StructType(fields.map { case (n, t) => StructField(n, t) }))
       .parquet(s"$path/$sub").collect()
@@ -390,7 +399,7 @@ final class MetaDir(val spark: SparkSession, path: String) {
   private val floatArr = ArrayType(FloatType)
   def writeRows(sub: String, names: (String, String), a: Array[Array[Float]]): Unit = {
     import spark.implicits._
-    write(sub, a.indices.map(i => (i, a(i).toSeq)).toDF(names._1, names._2))
+    write(sub, a.map(4L + 4L * _.length).sum)(a.indices.map(i => (i, a(i).toSeq)).toDF(names._1, names._2))
   }
   def readRows(sub: String, names: (String, String)): Array[Array[Float]] =
     read(sub, names._1 -> IntegerType, names._2 -> floatArr).sortBy(_.getInt(0))
@@ -398,8 +407,8 @@ final class MetaDir(val spark: SparkSession, path: String) {
   def writeNested(sub: String, names: (String, String, String),
       a: Array[Array[Array[Float]]]): Unit = {
     import spark.implicits._
-    write(sub, (for (i <- a.indices; j <- a(i).indices) yield (i, j, a(i)(j).toSeq))
-      .toDF(names._1, names._2, names._3))
+    write(sub, a.iterator.flatten.map(8L + 4L * _.length).sum)(
+      (for (i <- a.indices; j <- a(i).indices) yield (i, j, a(i)(j).toSeq)).toDF(names._1, names._2, names._3))
   }
   def readNested(sub: String, names: (String, String, String)): Array[Array[Array[Float]]] =
     read(sub, names._1 -> IntegerType, names._2 -> IntegerType, names._3 -> floatArr)

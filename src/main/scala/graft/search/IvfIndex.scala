@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.GraftSql.{column, expression}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
@@ -411,10 +410,15 @@ case class NearestCentroids(child: Expression, index: CentroidIndex, n: Int)
  * IVF-style approximate search: k-means the corpus into `nlist` cells at
  * fit time (the analog of faiss's coarse quantizer, faiss index_factory
  * "IVFn,Flat" — /root/reference/backend/faiss_searcher.py:100-107), store
- * each row's cell id, and at query time scan only the `nprobe` nearest
- * cells. On a cluster the cells are co-partitioned (`repartition(cellId)`),
- * so a query touches nprobe/nlist of the data — the partition-pruning that
- * makes 100 TB similarity search tractable where brute force isn't.
+ * each row's cell id, and at query time score only the `nprobe` nearest
+ * cells. Serving is one [[CellScan]] for every storage kind: the driver
+ * collects each bounded query chunk with its probe list, and each
+ * partition scores a stored row only against the queries probing its cell,
+ * into one bounded heap per query. On a cluster the cells are
+ * co-partitioned (`repartition(cellId)`) and unprobed cells are filtered
+ * before their vectors are read, so a query scores nprobe/nlist of the
+ * data — the partition-pruning that makes 100 TB similarity search
+ * tractable where brute force isn't.
  */
 object IvfIndex {
   private[search] val CID = "__cell"
@@ -447,6 +451,11 @@ object IvfIndex {
 
   def nearestCentroidsCol(v: Column, cents: Array[Array[Float]], n: Int): Column =
     column(NearestCentroids(expression(v), CentroidIndex.forCentroids(cents), n))
+
+  /** Each query's probe list: its `nprobe` nearest of the FITTED cells
+    * (auto-sized `IVF0` models parse as nlist=0; nprobe=0 = auto-scaled). */
+  def probesCol(cents: Array[Array[Float]], nprobe: Int): Column =
+    nearestCentroidsCol(col(SparkSearcher.QVEC), cents, IndexStrategy.resolveNprobe(nprobe, cents.length))
 
   /** K-means centroids on a bounded sample of the vectors, Lloyd-iterated
     * ON THE DRIVER. Training the coarse quantizer on a bounded sample is
@@ -684,37 +693,4 @@ object IvfIndex {
     indexed
       .withColumn(CID, nearestCentroidsCol(col(vecCol), cents, 1).getItem(0))
       .repartition(math.min(partitions, cents.length), col(CID))
-
-  /** Query-time probe: explode each query into its nprobe nearest cells,
-    * equi-join on cell id (only those cells are scanned), then per-query
-    * top-k via the bounded-heap aggregate ([[TopKByDistance]]) — O(n log k)
-    * with map-side partial aggregation, shuffling k rows per query per
-    * partition instead of sorting all nprobe·n/nlist candidates per query
-    * (the window `row_number` tail this replaced). A row lives in exactly
-    * one cell, so candidate (query, row) pairs are already distinct.
-    * Scores a caller-supplied `(row_id, __vec, __cell)` view — shared by
-    * IVFn,Flat (stored floats) and IVFn,SQfp16 (floats reconstructed
-    * lazily in the scoring projection). */
-  def ivfTopKOver(slim: DataFrame, metric: graft.functions.VectorFunctions.Metric,
-      cents: Array[Array[Float]], q: DataFrame, topK: Int,
-      nprobe: Int): DataFrame = {
-    import SparkSearcher._
-    // nprobe resolves against the FITTED cell count (auto-sized `IVF0`
-    // models parse as nlist=0; the fit may also clamp below the requested
-    // nlist; nprobe=0 = auto-scaled, IndexStrategy.resolveNprobe)
-    val probes = q.withColumn(CID,
-      explode(nearestCentroidsCol(col(QVEC), cents,
-        IndexStrategy.resolveNprobe(nprobe, cents.length))))
-    val scored = probes.join(slim, CID)
-      .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-    val hits = scored
-      .groupBy(col(QID))
-      .agg(TopKAggregate.top_k(struct(col(ROW_ID), col(DIST)), topK,
-        asc = !metric.higherIsCloser).as("__hits"))
-      .select(col(QID), posexplode(col("__hits")).as(Seq("__pos", "__hit")))
-      .select(col(QID), col("__hit.row_id").as(ROW_ID),
-        col("__hit.dist").as(DIST), (col("__pos") + 1).cast("int").as(RANK))
-    hits.join(broadcast(q.select(col(QID), col(SourceItem))), QID)
-      .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-  }
 }

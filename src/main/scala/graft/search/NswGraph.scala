@@ -243,10 +243,11 @@ object NswGraph {
     val slim = indexed.select(col(ROW_ID), col(SparkSearcher.VEC),
       col(NBRS), col(GPART).cast("int").as(GPART))
       .sortWithinPartitions(GPART, ROW_ID)
-    val chunks = PqIndex.queryChunks(queries, queryChunkSize)
+    val chunks = PqIndex.queryChunks(
+      queries.select(col(QID).cast(LongType).as(QID), col(QVEC)), queryChunkSize)
     val single = chunks.lengthCompare(1) == 0
     val chunkResults = chunks.flatMap { chunk =>
-      val qRows = chunk.select(col(QID).cast(LongType).as(QID), col(QVEC)).collect()
+      val qRows = chunk()
         .map(r => (r.getLong(0),
           UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray): ArrayData))
       if (qRows.isEmpty) None else Some {

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -21,9 +20,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StructField, 
  * Search uses asymmetric distance computation (ADC): per query ONE
  * `m × 256` table of exact subspace distances is built, then each stored
  * code costs `m` table lookups. The per-partition table amortization is
- * genuine imperative logic, so the scorer is a `mapPartitions` over the
- * codes (the documented last-resort tier — nothing declarative can hoist
- * per-query state across rows); everything around it (top-k merge,
+ * genuine imperative logic, so the scorer runs inside the per-partition
+ * [[CellScan]] (the documented last-resort tier — nothing declarative can
+ * hoist per-query state across rows); everything around it (top-k merge,
  * payload join) stays in the declarative plan.
  *
  * Approximate by construction (codes quantize), fully deterministic given
@@ -235,73 +234,56 @@ object PqIndex {
     StructField(SparkSearcher.ROW_ID, LongType, nullable = false),
     StructField(SparkSearcher.DIST, DoubleType, nullable = false)))
 
-  /** Deterministic chunk split of a query DataFrame: hash-bucket on qid —
-    * no collect of the full batch, each chunk collected separately. */
-  private[search] def queryChunks(queries: DataFrame, chunkSize: Int): Seq[DataFrame] = {
+  /** The query batch as bounded chunks, each collected when called: one
+    * collect of up to `chunkSize + 1` rows serves a batch that fits one
+    * chunk; only a larger batch pays a count and a deterministic hash
+    * split on qid, each chunk collected separately. */
+  private[search] def queryChunks(queries: DataFrame, chunkSize: Int): Seq[() => Array[Row]] = {
     import SparkSearcher.QID
-    val nq = queries.count()
-    val nChunks = math.max(1, math.ceil(nq.toDouble / chunkSize).toInt)
-    if (nChunks == 1) Seq(queries)
-    else (0 until nChunks).map(ci =>
-      queries.filter(pmod(xxhash64(col(QID)), lit(nChunks)) === ci))
+    val head = queries.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect()
+    if (head.length <= chunkSize) Seq(() => head)
+    else {
+      val nChunks = math.ceil(queries.count().toDouble / chunkSize).toInt
+      (0 until nChunks).map(ci => () =>
+        queries.filter(pmod(xxhash64(col(QID)), lit(nChunks)) === ci).collect())
+    }
   }
 
-  /** ADC top-k: broadcast the query batch in bounded CHUNKS, stream the
-    * code rows, amortize one [[AdcScorer]] per query per partition,
-    * bounded heaps, then the same aggregate-merge tail as exact search.
+  /** [[CellScan]] scorer over byte codes: one [[AdcScorer]] per query per
+    * partition, `m` table lookups per scored code. */
+  private[search] def adcRows(spark: org.apache.spark.sql.SparkSession,
+      codebooks: Array[Array[Array[Float]]], metricName: String, metricArg: Double,
+      nbits: Int): Array[Array[Float]] => CellScan.RowScorer = {
+    val cbB = spark.sparkContext.broadcast(codebooks)
+    qvs => {
+      val scorers = qvs.map(adcScorer(_, cbB.value, metricName, metricArg, nbits))
+      (row, qis, heaps) => {
+        val codes = row.getBinary(1)
+        val id = row.getLong(0)
+        var j = 0
+        while (j < qis.length) { heaps(qis(j)).insert(scorers(qis(j)).score(codes), id); j += 1 }
+      }
+    }
+  }
+
+  /** ADC top-k over every code row: the one-cell case of [[CellScan]]
+    * (every row in cell 0, every query probing it), query batch broadcast
+    * in bounded chunks, then the same aggregate-merge tail as exact search.
     * `metricName`/`metricArg` select the subspace decomposition — all 8
     * reference metrics are served (see [[adcScorer]]). */
   def pqTopK(indexed: DataFrame, queries: DataFrame, topK: Int,
       codebooks: Array[Array[Array[Float]]], metricName: String,
       metricArg: Double = 2.0,
-      queryChunkSize: Int = DefaultQueryChunk, nbits: Int = 8): DataFrame = {
-    import SparkSearcher.{QID, QVEC, ROW_ID, DIST, RANK}
-    val spark = indexed.sparkSession
-    val cbB = spark.sparkContext.broadcast(codebooks)
-    val enc: org.apache.spark.sql.Encoder[Row] = RowEncoder.encoderFor(hitSchema)
-    val asc = !Set("ip", "dot", "cos").contains(metricName)
-    val k = topK
-    val chunkPartials = queryChunks(queries, queryChunkSize).flatMap { chunk =>
-      val qRows = chunk.select(col(QID).cast(LongType).as(QID), col(QVEC)).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      if (qRows.isEmpty) None else Some {
-        val qB = spark.sparkContext.broadcast(qRows)
-        indexed.select(col(ROW_ID), col(CODES)).mapPartitions { it =>
-          val cbs = cbB.value
-          val qs = qB.value
-          // per-query ADC scorers — built once per partition
-          val scorers = qs.map { case (_, qv) => adcScorer(qv, cbs, metricName, metricArg, nbits) }
-          val heaps = qs.map(_ => new TopKBuffer(k, asc))
-          it.foreach { r =>
-            val rowId = r.getLong(0)
-            val codes = r.getAs[Array[Byte]](1)
-            var q = 0
-            while (q < qs.length) {
-              heaps(q).insert(scorers(q).score(codes), rowId)
-              q += 1
-            }
-          }
-          qs.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
-            heaps(qi).sorted.iterator.map { case (id, d) => Row(qid, id, d) }
-          }
-        }(enc)
-      }
-    }
-    // empty query batch: no chunks produced rows — return the empty hit
-    // shape (the exact path's crossJoin degrades the same way)
-    if (chunkPartials.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], hitSchema)
-        .withColumn(RANK, lit(1).cast("int"))
-    // chunks are disjoint query sets, so union THEN one merge is exact:
-    // k per partition per query → global k (same heap aggregate)
-    TopKAggregate.mergeHits(chunkPartials.reduce(_ union _), topK, asc)
-  }
+      queryChunkSize: Int = DefaultQueryChunk, nbits: Int = 8): DataFrame =
+    CellScan.topK(indexed.select(col(SparkSearcher.ROW_ID), col(CODES), lit(0).as(IvfIndex.CID)),
+      queries, array(lit(0)), topK, !NswGraph.higherIsCloser(metricName), queryChunkSize)(
+      adcRows(indexed.sparkSession, codebooks, metricName, metricArg, nbits))
 }
 
 object IvfPqScorer {
-  import SparkSearcher.{QID, QVEC, ROW_ID, DIST, RANK}
+  import SparkSearcher.ROW_ID
 
-  /** IVF+PQ ADC search: like [[PqIndex.pqTopK]] but each row is scored
+  /** IVF+PQ ADC search: the [[CellScan]] over code rows, each row scored
     * only against the queries probing its cell — the composition that
     * gives BOTH partition pruning (IVF) and 4·dim/m× memory compression
     * (PQ), i.e. the canonical faiss `IVFn,PQm` shape for corpora where
@@ -310,76 +292,11 @@ object IvfPqScorer {
       codebooks: Array[Array[Array[Float]]], centroids: Array[Array[Float]],
       nprobe: Int, metricName: String, metricArg: Double = 2.0,
       queryChunkSize: Int = PqIndex.DefaultQueryChunk,
-      nbits: Int = 8): DataFrame = {
-    val spark = indexed.sparkSession
-    val nlist = centroids.length
-    val cbB = spark.sparkContext.broadcast(codebooks)
-    val enc: org.apache.spark.sql.Encoder[Row] = RowEncoder.encoderFor(PqIndex.hitSchema)
-    val asc = !Set("ip", "dot", "cos").contains(metricName)
-    val k = topK
-    // bounded chunks, same rationale as PqIndex.pqTopK: driver collects and
-    // executors table-up at most `queryChunkSize` queries at a time
-    val chunkPartials = PqIndex.queryChunks(queries, queryChunkSize).flatMap { chunk =>
-      val qRows = chunk
-        .select(col(QID).cast("long").as(QID), col(QVEC),
-          IvfIndex.nearestCentroidsCol(col(QVEC), centroids,
-            IndexStrategy.resolveNprobe(nprobe, nlist)).as("__probes"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray,
-          r.getSeq[Int](2).toArray))
-      if (qRows.isEmpty) None else Some {
-        val qB = spark.sparkContext.broadcast(qRows)
-        indexed
-          .select(col(ROW_ID), col(IvfIndex.CID), col(PqIndex.CODES))
-          .mapPartitions { it =>
-            val cbs = cbB.value
-            val qs = qB.value
-            val scorers = qs.map { case (_, qv, _) =>
-              PqIndex.adcScorer(qv, cbs, metricName, metricArg, nbits)
-            }
-            // cell → indices of the queries probing it (built once per
-            // partition; buffers, not immutable-array appends — a 4096-query
-            // chunk concentrating its probes on few cells would otherwise
-            // pay O(queries²) element copies per partition)
-            val byCellBuf = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Int]]()
-            qs.zipWithIndex.foreach { case ((_, _, probes), qi) =>
-              probes.foreach { c =>
-                var buf = byCellBuf.get(c)
-                if (buf == null) {
-                  buf = new scala.collection.mutable.ArrayBuffer[Int]()
-                  byCellBuf.put(c, buf)
-                }
-                buf += qi
-              }
-            }
-            val byCell = new java.util.HashMap[Int, Array[Int]]()
-            byCellBuf.forEach((c, buf) => byCell.put(c, buf.toArray))
-            val heaps = qs.map(_ => new TopKBuffer(k, asc))
-            it.foreach { r =>
-              val rowId = r.getLong(0)
-              val cell = r.getInt(1)
-              val qis = byCell.get(cell)
-              if (qis != null) {
-                val codes = r.getAs[Array[Byte]](2)
-                var j = 0
-                while (j < qis.length) {
-                  val qi = qis(j)
-                  heaps(qi).insert(scorers(qi).score(codes), rowId)
-                  j += 1
-                }
-              }
-            }
-            qs.iterator.zipWithIndex.flatMap { case ((qid, _, _), qi) =>
-              heaps(qi).sorted.iterator.map { case (id, d) => Row(qid, id, d) }
-            }
-          }(enc)
-      }
-    }
-    if (chunkPartials.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], PqIndex.hitSchema)
-        .withColumn(RANK, lit(1).cast("int"))
-    TopKAggregate.mergeHits(chunkPartials.reduce(_ union _), topK, asc)
-  }
+      nbits: Int = 8): DataFrame =
+    CellScan.topK(indexed.select(col(ROW_ID), col(PqIndex.CODES), col(IvfIndex.CID)), queries,
+      IvfIndex.probesCol(centroids, nprobe), topK, !NswGraph.higherIsCloser(metricName),
+      queryChunkSize)(
+      PqIndex.adcRows(indexed.sparkSession, codebooks, metricName, metricArg, nbits))
 }
 
 /** Codegen'd PQ encoder: array<float> → binary(m·nbits/8); codebooks ride

@@ -163,14 +163,12 @@ class VecsWhiteningModel(val kernel: Array[Array[Double]], val bias: Array[Doubl
     * columnar, SURVEY §2 O23). */
   def save(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    // one file per metadata table (r22): a local Seq toDF parallelizes to
-    // the shuffle-partition count — ~32 write tasks and near-empty files
-    // for a few-KB kernel that every load then has to open
-    kernel.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
-      .toDF("row", "kernel_row")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/kernel")
-    Seq((bias.toSeq, nComponents, originDim)).toDF("bias", "n_components", "origin_dim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    // one file per metadata table, byte-guarded (graft.search.MetaDir)
+    val meta = new graft.search.MetaDir(spark, path)
+    meta.write("kernel", kernel.map(4L + 8L * _.length).sum)(
+      kernel.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq.toDF("row", "kernel_row"))
+    meta.write("meta", 8L + 8L * bias.length)(
+      Seq((bias.toSeq, nComponents, originDim)).toDF("bias", "n_components", "origin_dim"))
   }
 }
 

@@ -156,6 +156,15 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("loaded IVF batch: one cell scan — no probe explode, no join keyed on the cell") {
+    val plan = physical(SparkEntry.queries("knn_batch_ivf_loaded")(spark, "/root/testdata/sf0.001"))
+    // a (query, row) pair join would reappear as an exploded probe list
+    // equi-joined to the index on its cell id
+    assert(!plan.contains("explode(nearest_centroids"), "IVF serve re-grew the probe explode")
+    assert(!plan.linesIterator.exists(l => l.contains("Join") && l.contains("__cell")),
+      s"IVF serve re-grew the pair join on the cell id: $plan")
+  }
+
   test("bucketed join: sort-merge with NO exchange on either side") {
     val plan = physical(SparkEntry.queries("q_bucketed_join")(spark, "/root/testdata/sf0.001"))
     assert(plan.contains("SortMergeJoin"), s"expected a sort-merge join: $plan")

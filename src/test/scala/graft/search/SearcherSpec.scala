@@ -1232,6 +1232,20 @@ class SearcherSpec extends SparkSpec {
     assert(e.getMessage.contains("exactly one params row"), e.getMessage)
   }
 
+  test("metadata tables past the byte cap fail before any write, naming the table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-metacap").toString
+    // 2^20 references to ONE 4 KB row: 4 GB by length, a few MB in memory
+    val row = new Array[Float](1024)
+    val e = intercept[IllegalArgumentException](new MetaDir(spark, dir)
+      .writeRows("centroids", ("c", "v"), Array.fill(1 << 20)(row)))
+    assert(e.getMessage.contains("'centroids'"), e.getMessage)
+    val kernelRow = new Array[Double](2048)
+    val w = intercept[IllegalArgumentException](new graft.whitening.VecsWhiteningModel(
+      Array.fill(1 << 18)(kernelRow), kernelRow, 2048, 2048).save(spark, dir))
+    assert(w.getMessage.contains("'kernel'"), w.getMessage)
+    assert(new java.io.File(dir).list().isEmpty, "nothing may be written")
+  }
+
   test("a save that fails partway leaves the previous index loadable and serving") {
     val parent = java.nio.file.Files.createTempDirectory("graft-crashsave")
     val dir = parent.resolve("index").toString
