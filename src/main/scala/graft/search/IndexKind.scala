@@ -28,8 +28,6 @@ sealed trait Layout {
   def spread(df: DataFrame): DataFrame = graft.util.Parallelism.scanFloor(df, ROW_ID)
   /** Lay loaded rows out again: the same floor as fit, unless overridden. */
   def atRest(read: DataFrame): DataFrame = spread(read)
-  /** Column the saved items table is partitioned by. */
-  def partitionCol: Option[String] = None
   def save(meta: MetaDir): Unit = ()
   def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout = this
   /** Vector width carried by the fitted quantizer, if any. */
@@ -59,9 +57,8 @@ final case class IvfCells(nlist: Int, centroids: Array[Array[Float]] = Array.emp
   override def assign(s: SparkSearcher, df: DataFrame, gpartOffset: => Int): DataFrame =
     IvfIndex.assignCells(df, VEC, centroids, df.sparkSession.sparkContext.defaultParallelism)
   override def spread(df: DataFrame): DataFrame = df
-  // cells are directories at rest: a cell-filtered read of a saved index
-  // prunes at the storage layer and touches only the probed cells
-  override def partitionCol: Option[String] = Some(IvfIndex.CID)
+  // the cell is an ordinary stored column at rest: every serve path
+  // reads the whole cached table and filters cells in the scan
   override def save(meta: MetaDir): Unit =
     meta.writeRows("centroids", ("centroid_id", "centroid"), centroids)
   override def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout =
@@ -107,9 +104,8 @@ final case class HnswGraphs(m: Int, fittedGraphs: Option[Int] = None) extends La
       s.params.metricArg, gpartOffset = gpartOffset)
   override def spread(df: DataFrame): DataFrame = df
   // a graph's adjacency resolves within its task: re-co-locate each graph
-  // at load (the at-rest layout makes this a directory-aligned shuffle)
+  // at load by its stored graph column (one shuffle)
   override def atRest(read: DataFrame): DataFrame = read.repartition(col(NswGraph.GPART))
-  override def partitionCol: Option[String] = Some(NswGraph.GPART)
   override def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout =
     copy(fittedGraphs = fittedGraphs)
   def topK(model: SearcherModel, q: DataFrame, k: Int): DataFrame =

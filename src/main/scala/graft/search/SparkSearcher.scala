@@ -497,7 +497,7 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
         // Flat: one pass — spread, persist, count (faiss index.add,
         // faiss_searcher.py:124)
         val indexed = layout.spread(base).persist(StorageLevel.MEMORY_AND_DISK)
-        val n = indexed.count()
+        val n = materialize(indexed)
         (indexed, n, dimOf(indexed), layout, storage)
       } else {
         // codes under cos need MATERIALIZED normalization (ADC computes raw
@@ -507,7 +507,7 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
         val pre = (if (storage.codesOnly && params.measurement == "cos")
             base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
           else base).persist(StorageLevel.MEMORY_AND_DISK)
-        val n = pre.count()
+        val n = materialize(pre)
         val d = dimOf(pre)
         require(d > 0, s"$strategy fit on empty/zero-dim vectors")
         // the layout fits first: IVF cells are assigned before encoding
@@ -516,13 +516,13 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
         val encoded = st.encode(l.assign(this, src, 0))
         val indexed = l.spread(if (keepFloats) encoded else encoded.drop(VEC))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        indexed.count()
+        materialize(indexed)
         pre.unpersist()
         src.unpersist()
         (indexed, n, d, l, st)
       }
-    // every branch materialized its own persist (indexed.count) — the
-    // PCA moments cache has served its purpose
+    // every branch materialized its own persist — the PCA moments
+    // cache has served its purpose
     pcaCache.foreach(_.unpersist(blocking = false))
     new SearcherModel(this, indexed, payloadCols.toSeq, n, d, fittedLayout, fittedStorage, pcaFit)
   }
@@ -768,6 +768,18 @@ object SparkSearcher {
     spark.createDataFrame(rdd, schema)
   }
 
+  /** Build persisted `df`'s cache and return its row count from that same
+    * job: the count rides the cache-filling scan via observe (the add()
+    * pattern), where `count()` would run its own aggregate jobs. */
+  private[search] def materialize(df: DataFrame): Long = {
+    val observed = df.observe("__materialize", count(lit(1)).as("__n"))
+    val qe = observed.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("materialize")) {
+      qe.toRdd.foreach(_ => ())
+    }
+    qe.observedMetrics("__materialize").getLong(0)
+  }
+
   /** The single params row Spark's JSON writer produced (a directory of
     * part files holding one JSON line), read driver-side through the
     * path's FileSystem — works on any scheme, costs zero Spark jobs. */
@@ -888,7 +900,7 @@ object SparkSearcher {
           .parquet(s"$path/items")
       else spark.read.parquet(s"$path/items")
     val indexed = searcher.layout.atRest(read).persist(StorageLevel.MEMORY_AND_DISK)
-    val n = indexed.count()
+    val n = materialize(indexed)
     require(n == lng("count"),
       s"index load: ntotal $n != stored ${lng("count")} (faiss_searcher.py:112)")
     // each kind reads its own metadata tables; fittedGraphs 0/missing =
@@ -1627,9 +1639,10 @@ class SearcherModel private[search] (
     requireLive()
     SparkSearcher.writeStaged(spark, path) { dir =>
       val itemsOut = indexed.withColumnRenamed(ITEM, ITEM_SAVED)
-      // IVF cells / HNSW graphs are directories at rest (see the layouts)
-      val writer = itemsOut.write.mode("overwrite")
-      layout.partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(s"$dir/items")
+      // flat part files for every layout: IVF cells and HNSW graphs are
+      // stored columns (load's explicit-schema read also serves older
+      // saves, whose cell/graph directories Spark maps back to columns)
+      itemsOut.write.mode("overwrite").parquet(s"$dir/items")
       val meta = new MetaDir(spark, dir)
       layout.save(meta)
       storage.save(meta)

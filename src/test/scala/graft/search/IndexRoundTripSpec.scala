@@ -11,7 +11,10 @@ import graft.encoders.PassthroughEncoder
   *
   *  - save → load → search returns the same rows and `sim_val` as search;
   *  - `add` on the loaded model equals `add` on the fitted model;
-  *  - the `describe` row is equal across save/load.
+  *  - the `describe` row is equal across save/load;
+  *  - for the cell and graph layouts, the same index with its items in the
+  *    older layout (one directory per IVF cell or HNSW graph) loads and
+  *    serves the same `sim_val` bits.
   */
 class IndexRoundTripSpec extends SparkSpec {
 
@@ -20,6 +23,9 @@ class IndexRoundTripSpec extends SparkSpec {
   private val spellings = Seq("Flat", "IVF8", "IVF0") ++ codeKinds ++
     Seq("HNSW8", "LSH8x6", "LSH0") ++ codeKinds.map(_ + ",RFlat") ++
     Seq("PCAW16,IVF8,PQ4,RFlat")
+
+  private val dirLayouts = Map("IVF8" -> IvfIndex.CID, "IVF8,PQ4" -> IvfIndex.CID,
+    "HNSW8" -> NswGraph.GPART)
 
   private def rows(df: DataFrame): Seq[Row] =
     df.select("vec_id", "rank_no", "sim_item", "sim_val", "label")
@@ -48,5 +54,20 @@ class IndexRoundTripSpec extends SparkSpec {
     assert(grownLoad.count === grownFit.count)
     assert(search(grownLoad) === search(grownFit), "add on loaded must equal add on fitted")
     grownFit.unpersist(); grownLoad.unpersist()
+    dirLayouts.get(param).foreach { dirCol =>
+      // metadata moved over as saved, items rewritten one directory per
+      // cell / graph, under a fresh path (Spark caches listings per path)
+      val old = java.nio.file.Files.createTempDirectory("graft-dirlayout").toString
+      new java.io.File(dir).listFiles().filter(_.getName != "items").foreach(f =>
+        java.nio.file.Files.move(f.toPath, java.nio.file.Paths.get(old, f.getName)))
+      spark.read.parquet(s"$dir/items").write.partitionBy(dirCol).parquet(s"$old/items")
+      assert(new java.io.File(s"$old/items").listFiles().exists(_.getName.startsWith(s"$dirCol=")))
+      val fromOld = SparkSearcher.load(spark, old)
+      def bits(rs: Seq[Row]) =
+        rs.map(r => r.toSeq.updated(3, java.lang.Float.floatToRawIntBits(r.getFloat(3))))
+      assert(bits(search(fromOld)) === bits(before), s"older $dirCol= layout must serve the same bits")
+      assert(fromOld.describe.collect().toSeq === described, s"describe of the older $dirCol= layout")
+      fromOld.unpersist()
+    }
   }
 }

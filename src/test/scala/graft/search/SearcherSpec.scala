@@ -15,6 +15,27 @@ class SearcherSpec extends SparkSpec {
         measurement = measurement))
       .fit(sf("embeddings"))
 
+  /** Overwrite numeric field `name` (now `value`) in a saved index's
+    * params.json with a different value of the same length: Spark caches
+    * FileStatus lengths per path. */
+  private def corruptParam(dir: String, name: String, value: Long): Unit = {
+    // params.json is a directory holding one JSON part file
+    val pjson = java.nio.file.Files.list(
+        java.nio.file.Paths.get(s"$dir/params.json"))
+      .filter(p => p.getFileName.toString.startsWith("part-")
+        && p.getFileName.toString.endsWith(".json"))
+      .findFirst().get()
+    val txt = new String(java.nio.file.Files.readAllBytes(pjson), "UTF-8")
+    val good = s""""$name":$value"""
+    val bad = s""""$name":${value.toString.map(c => if (c == '9') '8' else '9')}"""
+    assert(txt.contains(good), txt)
+    java.nio.file.Files.write(pjson, txt.replace(good, bad).getBytes("UTF-8"))
+    // drop hadoop's checksum sidecar, invalidated by the raw edit
+    java.nio.file.Files.deleteIfExists(
+      pjson.resolveSibling("." + pjson.getFileName.toString + ".crc"))
+    spark.catalog.refreshByPath(s"$dir/params.json")
+  }
+
   test("flagship search: result schema, self-match at rank 0, payload carry") {
     val model = embModel()
     val res = model.search(sf("embeddings").filter(col("vec_id") < 5),
@@ -162,22 +183,34 @@ class SearcherSpec extends SparkSpec {
     // fresh copy (Spark caches file metadata per path).
     val dir2 = java.nio.file.Files.createTempDirectory("graft-idx2").toString
     loaded.save(dir2)
-    // params.json is a Spark-written JSON directory: corrupt its part file
-    val pjson = java.nio.file.Files.list(
-        java.nio.file.Paths.get(s"$dir2/params.json"))
-      .filter(p => p.getFileName.toString.startsWith("part-")
-        && p.getFileName.toString.endsWith(".json"))
-      .findFirst().get()
-    val txt = new String(java.nio.file.Files.readAllBytes(pjson), "UTF-8")
-    // same-length corruption (Spark caches FileStatus lengths per path)
-    val bad = s""""count":${model.count}""".replaceAll("\\d", "9")
-    java.nio.file.Files.write(pjson,
-      txt.replace(s""""count":${model.count}""", bad).getBytes("UTF-8"))
-    // drop hadoop's checksum sidecar, invalidated by the raw edit
-    java.nio.file.Files.deleteIfExists(
-      pjson.resolveSibling("." + pjson.getFileName.toString + ".crc"))
-    spark.catalog.refreshByPath(s"$dir2/params.json")
+    corruptParam(dir2, "count", model.count)
     intercept[IllegalArgumentException](SparkSearcher.load(spark, dir2))
+  }
+
+  test("load rejects a dim mismatch (faiss_searcher.py:113)") {
+    val model = embModel()
+    val dir = java.nio.file.Files.createTempDirectory("graft-baddim").toString
+    model.save(dir)
+    corruptParam(dir, "dim", model.dim)
+    val e = intercept[IllegalArgumentException](SparkSearcher.load(spark, dir))
+    assert(e.getMessage.contains(s"dim ${model.dim} != stored "), e.getMessage)
+    model.unpersist()
+  }
+
+  test("load rejects a lost items part file as an ntotal mismatch") {
+    // items are flat part files: a lost file must fail the count
+    // re-assert, never serve a silently smaller index
+    val model = embModel()
+    val dir = java.nio.file.Files.createTempDirectory("graft-lostpart").toString
+    model.save(dir)
+    val part = new java.io.File(s"$dir/items").listFiles()
+      .filter(_.getName.startsWith("part-")).head
+    assert(part.delete())
+    new java.io.File(part.getParent, s".${part.getName}.crc").delete()
+    val e = intercept[IllegalArgumentException](SparkSearcher.load(spark, dir))
+    assert(e.getMessage.contains(s"ntotal ") &&
+      e.getMessage.contains(s"!= stored ${model.count}"), e.getMessage)
+    model.unpersist()
   }
 
   test("load tolerates params.json from an older writer (missing fields -> defaults)") {
@@ -870,32 +903,61 @@ class SearcherSpec extends SparkSpec {
     model.unpersist()
   }
 
-  test("saved IVF index is cell-partitioned: reads prune at the storage layer") {
-    val model = new SparkSearcher(new PassthroughEncoder("embedding"),
-      SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
-        indexParam = "IVF8", nprobe = 8)).fit(sf("embeddings"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpart").toString
-    model.save(dir)
-    // cells are directories on disk...
-    val cellDirs = new java.io.File(s"$dir/items").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(s"${IvfIndex.CID}="))
-    assert(cellDirs.nonEmpty, "expected __cell= partition directories")
-    // ...so a cell filter becomes a PartitionFilter (no data-file IO for
-    // other cells) — the at-rest pruning a 100 TB saved index relies on
-    val pruned = spark.read.parquet(s"$dir/items").filter(col(IvfIndex.CID) === 0)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains(s"PartitionFilters: [isnotnull(${IvfIndex.CID}"),
-      s"cell filter must appear as a PartitionFilter: $plan")
-    // and the reloaded model still answers searches identically
-    val q = sf("embeddings").filter(col("vec_id") < 5)
-    val before = model.search(q, 5, keepRankNo = true, queryIdCol = Some("vec_id"))
-      .select("vec_id", "rank_no", "sim_item", "sim_val").collect().map(_.toSeq).toSet
-    val after = SparkSearcher.load(spark, dir)
-      .search(q, 5, keepRankNo = true, queryIdCol = Some("vec_id"))
-      .select("vec_id", "rank_no", "sim_item", "sim_val").collect().map(_.toSeq).toSet
-    assert(after === before)
-    model.unpersist()
-  }
+  for ((param, stored) <- Seq("IVF8" -> IvfIndex.CID, "HNSW8" -> NswGraph.GPART))
+    test(s"saved $param index is flat part files: load lists no directory") {
+      val model = new SparkSearcher(new PassthroughEncoder("embedding"),
+        SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
+          indexParam = param, nprobe = 8)).fit(sf("embeddings"))
+      val dir = java.nio.file.Files.createTempDirectory("graft-flatitems").toString
+      model.save(dir)
+      // no __cell=/__gpart= directories: the cell (graph) id is a column
+      // stored inside each part file
+      val entries = new java.io.File(s"$dir/items").listFiles()
+      assert(!entries.exists(_.isDirectory), entries.map(_.getName).mkString(", "))
+      val parts = entries.filter(_.getName.startsWith("part-"))
+      assert(parts.nonEmpty)
+      assert(spark.read.parquet(parts.head.getPath).columns.contains(stored))
+      // load runs no job that scans with more tasks than items/ has part
+      // files. With the distributed-listing threshold at 1, a directory
+      // layout would list its leaf directories through a job of one task
+      // per directory. Stages reading a shuffle (HNSW's graph
+      // re-co-location) are sized by the shuffle, not the files
+      val tasksByJob = collection.mutable.Map.empty[Int, Int]
+      val jobOfStage = collection.mutable.Map.empty[Int, Int]
+      @volatile var drained = false
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (j.properties.getProperty("spark.job.description") == "drain") drained = true
+          else j.stageInfos.filter(_.parentIds.isEmpty)
+            .foreach(st => jobOfStage.getOrElseUpdate(st.stageId, j.jobId))
+        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          jobOfStage.get(t.stageId).foreach(j => tasksByJob(j) = tasksByJob.getOrElse(j, 0) + 1)
+      }
+      val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+      spark.conf.set(threshold, "1")
+      spark.sparkContext.addSparkListener(listener)
+      val loaded = try SparkSearcher.load(spark, dir) finally {
+        spark.conf.unset(threshold)
+        // listener events arrive in order: once the drain job is seen,
+        // every load job and task has been counted
+        spark.sparkContext.setJobDescription("drain")
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        spark.sparkContext.setJobDescription(null)
+        val deadline = System.nanoTime() + 30000000000L
+        while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(drained)
+      assert(tasksByJob.nonEmpty && tasksByJob.values.forall(_ <= parts.length),
+        s"load jobs' scan task counts $tasksByJob vs ${parts.length} part files")
+      // and the reloaded model answers searches identically
+      val q = sf("embeddings").filter(col("vec_id") < 5)
+      def hits(m: SearcherModel) = m.search(q, 5, keepRankNo = true, queryIdCol = Some("vec_id"))
+        .select("vec_id", "rank_no", "sim_item", "sim_val").collect().map(_.toSeq).toSet
+      assert(hits(loaded) === hits(model))
+      loaded.unpersist()
+      model.unpersist()
+    }
 
   test("HNSW factory string: graph strategy, save/load round-trips identically") {
     // HNSWm parses to the partition-local graph ANN (NswGraph) with m
