@@ -1,13 +1,16 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import scala.collection.mutable
 
-import SparkSearcher.{QID, QVEC, RANK}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+
+import SparkSearcher.{DIST, QID, QVEC, RANK, ROW_ID, SourceItem}
 
 /**
  * The one per-partition scan behind every cell-pruned top-k: IVF over
@@ -18,8 +21,14 @@ import SparkSearcher.{QID, QVEC, RANK}
  * chunk; each index partition is read as `InternalRow`s (no per-element
  * boxing), each stored row is scored only against the queries probing its
  * cell into one bounded heap per query, and each task emits ≤ k hits per
- * query into the shared [[TopKAggregate.mergeHits]] tail. No (query, row)
- * pair is ever a Spark row.
+ * query. No (query, row) pair is ever a Spark row.
+ *
+ * Two finishes. A batch that fits one chunk and carries its result
+ * columns is finished on the driver, like faiss's eager `search`: one job,
+ * whose tasks return their hits with the carried columns of each hit row,
+ * merged per query id as they arrive into the result as a local relation —
+ * so the caller's collect runs no job. Any other batch goes through the
+ * shared [[TopKAggregate.mergeHits]] tail.
  */
 object CellScan {
   /** Scores one stored row `(row id, payload, cell)` against some of a
@@ -29,45 +38,158 @@ object CellScan {
     def score(row: InternalRow, qis: Array[Int], heaps: Array[TopKBuffer]): Unit
   }
 
+  /** One query chunk as the scan reads it: each scored query row's id and
+    * vector, and the query rows probing each cell (null: unprobed). */
+  private final case class Chunk(qids: Array[Long], qvs: Array[Array[Float]],
+      byCell: Array[Array[Int]])
+
+  /** One driver-finish task's result: each query row's ≤ k hits, in runs of
+    * `sizes`, and the `(ROW_ID, carried…)` row of each distinct hit. */
+  private final class TaskHits(val sizes: Array[Int], val ids: Array[Long],
+      val dists: Array[Double], val rows: Array[UnsafeRow]) extends Serializable
+
   /** Top-k hits `(QID, ROW_ID, DIST, RANK)`. `rows` is `(ROW_ID, payload,
-    * CID)`; `probes` is each `(QID, QVEC)` query's `array<int>` of cells.
-    * Queries are collected [[PqIndex.queryChunks]] at a time. */
+    * CID, carried…)`; `probes` is each `(QID, QVEC)` query's `array<int>`
+    * of cells. Queries are collected [[PqIndex.queryChunks]] at a time.
+    *
+    * With carried columns and a batch of one chunk, the scan runs here and
+    * returns a local relation `(QID, SourceItem, ROW_ID, DIST, RANK,
+    * carried…)`: each query's hits, once per query row of its id, with that
+    * row's `SourceItem` (so `queries` must hold it). Otherwise the carried
+    * columns are not read. */
   def topK(rows: DataFrame, queries: DataFrame, probes: Column, k: Int, asc: Boolean,
       chunkSize: Int)(scorer: Array[Array[Float]] => RowScorer): DataFrame = {
     val spark = rows.sparkSession
-    // a query without a vector probes no cell and gets no hits
-    val chunks = PqIndex.queryChunks(queries.filter(col(QVEC).isNotNull)
-      .select(col(QID).cast(LongType).as(QID), col(QVEC), probes), chunkSize)
-    val partials = chunks.flatMap { chunk =>
-      val qs = chunk()
-      if (qs.isEmpty) None else Some {
-        val qids = qs.map(_.getLong(0))
-        val qvs = qs.map(_.getSeq[Float](1).toArray)
-        val cells = qs.indices.flatMap(qi => qs(qi).getSeq[Int](2).map(_ -> qi)).groupMap(_._1)(_._2)
-        val byCell = new Array[Array[Int]](cells.keys.max + 1)
-        cells.foreach { case (c, qis) => byCell(c) = qis.toArray }
-        val qB = spark.sparkContext.broadcast((qids, qvs, byCell))
-        // unprobed cells are filtered before the payload is read or decoded,
-        // through a mask literal: an isin list would be compiled into the
-        // generated code, one compile per distinct probe set
-        val scanned = rows.filter(get(lit(byCell.map(_ != null)), col(IvfIndex.CID)))
-        spark.createDataFrame(scanned.queryExecution.toRdd.mapPartitions { it =>
-          val (qids, qvs, byCell) = qB.value
-          val s = scorer(qvs)
-          val heaps = qids.map(_ => new TopKBuffer(k, asc))
-          it.foreach(r => s.score(r, byCell(r.getInt(2)), heaps))
-          qids.indices.iterator.flatMap(qi =>
-            heaps(qi).sorted.iterator.map { case (id, d) => Row(qids(qi), id, d) })
-        }, PqIndex.hitSchema)
+    val carried = rows.columns.length > 3
+    val chunks = PqIndex.queryChunks(queries.select(Seq(col(QID).cast(LongType).as(QID),
+      col(QVEC), probes) ++ Option.when(carried)(col(SourceItem)): _*), chunkSize)
+    if (carried && chunks.length == 1)
+      finishOnDriver(rows, chunks.head(), queries.schema(SourceItem), k, asc, scorer)
+    else {
+      val partials = chunks.flatMap { chunk =>
+        chunkOf(chunk()).map { c =>
+          val cB = spark.sparkContext.broadcast(c)
+          val scanned = probed(rows.select(rows.columns.take(3).map(col): _*), c)
+          spark.createDataFrame(scanned.queryExecution.toRdd.mapPartitions { it =>
+            val c = cB.value
+            val heaps = c.qids.map(_ => new TopKBuffer(k, asc))
+            scan(it, c, heaps, scorer(c.qvs))(null)
+            c.qids.indices.iterator.flatMap(qi =>
+              heaps(qi).sorted.iterator.map { case (id, d) => Row(c.qids(qi), id, d) })
+          }, PqIndex.hitSchema)
+        }
+      }
+      // empty query batch: the empty hit shape (the exact path's crossJoin
+      // degrades the same way)
+      if (partials.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], PqIndex.hitSchema)
+          .withColumn(RANK, lit(1).cast("int"))
+      // chunks are disjoint query sets, so union THEN one merge is exact
+      else TopKAggregate.mergeHits(partials.reduce(_ union _), k, asc)
+    }
+  }
+
+  /** The chunk's scored queries: a query without a vector probes no cell
+    * and gets no hits (None: no query to score). */
+  private def chunkOf(qs: Array[Row]): Option[Chunk] = {
+    val live = qs.filter(!_.isNullAt(1))
+    if (live.isEmpty) None else Some {
+      val cells = live.indices.flatMap(qi => live(qi).getSeq[Int](2).map(_ -> qi)).groupMap(_._1)(_._2)
+      val byCell = new Array[Array[Int]](cells.keys.max + 1)
+      cells.foreach { case (c, qis) => byCell(c) = qis.toArray }
+      Chunk(live.map(_.getLong(0)), live.map(_.getSeq[Float](1).toArray), byCell)
+    }
+  }
+
+  /** `rows` in the chunk's probed cells. Unprobed cells are filtered before
+    * the payload is read or decoded, through a mask literal: an isin list
+    * would be compiled into the generated code, one compile per distinct
+    * probe set. */
+  private def probed(rows: DataFrame, c: Chunk): DataFrame =
+    rows.filter(get(lit(c.byCell.map(_ != null)), col(IvfIndex.CID)))
+
+  /** Scores a partition's rows into `heaps`, one per query row; `admit`
+    * (if not null) sees each row that some heap took in. */
+  private def scan(it: Iterator[InternalRow], c: Chunk, heaps: Array[TopKBuffer], s: RowScorer)(
+      admit: InternalRow => Unit): Unit = {
+    def admitted(qis: Array[Int]): Long = {
+      var n = 0L; var j = 0
+      while (j < qis.length) { n += heaps(qis(j)).admitted; j += 1 }
+      n
+    }
+    it.foreach { r =>
+      val qis = c.byCell(r.getInt(2))
+      if (admit == null) s.score(r, qis, heaps)
+      else {
+        val before = admitted(qis)
+        s.score(r, qis, heaps)
+        if (admitted(qis) != before) admit(r)
       }
     }
-    // empty query batch: the empty hit shape (the exact path's crossJoin
-    // degrades the same way)
-    if (partials.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], PqIndex.hitSchema)
-        .withColumn(RANK, lit(1).cast("int"))
-    // chunks are disjoint query sets, so union THEN one merge is exact
-    else TopKAggregate.mergeHits(partials.reduce(_ union _), k, asc)
+  }
+
+  /** Keep only the rows some heap still holds. */
+  private def retain(rows: mutable.LongMap[UnsafeRow], heaps: Iterable[TopKBuffer]): Unit = {
+    val live = mutable.LongMap.empty[Unit]
+    heaps.foreach(h => (0 until h.size).foreach(i => live(h.ids(i)) = ()))
+    rows.filterInPlace((id, _) => live.contains(id))
+  }
+
+  /** The single-chunk finish: one job over the probed cells; each task
+    * returns its ≤ k hits per query row with the carried columns of each
+    * distinct hit row, merged here into one heap per query id as the tasks
+    * finish — at most q·k hits and their rows plus one task's result are
+    * held, never more than the payload broadcast the other finish builds. */
+  private def finishOnDriver(rows: DataFrame, qs: Array[Row], source: StructField, k: Int,
+      asc: Boolean, scorer: Array[Array[Float]] => RowScorer): DataFrame = {
+    val spark = rows.sparkSession
+    val kept = StructType(rows.schema.head +: rows.schema.drop(3))
+    val keptAt = (0 +: (3 until rows.schema.length)).zip(kept).map { case (i, f) =>
+      BoundReference(i, f.dataType, f.nullable) }
+    val merged = mutable.LongMap.empty[TopKBuffer]
+    val hitRows = mutable.LongMap.empty[UnsafeRow]
+    chunkOf(qs).foreach { c =>
+      val cB = spark.sparkContext.broadcast(c)
+      val task = (it: Iterator[InternalRow]) => {
+        val c = cB.value
+        val carry = UnsafeProjection.create(keptAt)
+        val found = mutable.LongMap.empty[UnsafeRow]
+        val heaps = c.qids.map(_ => new TopKBuffer(k, asc))
+        scan(it, c, heaps, scorer(c.qvs)) { r =>
+          found(r.getLong(0)) = carry(r).copy()
+          if (found.size > 2L * c.qids.length * k) retain(found, heaps)
+        }
+        retain(found, heaps)
+        new TaskHits(heaps.map(_.size), heaps.flatMap(h => h.ids.take(h.size)),
+          heaps.flatMap(h => h.dists.take(h.size)), found.values.toArray)
+      }
+      val merge = (_: Int, t: TaskHits) => {
+        var off = 0
+        t.sizes.indices.foreach { qi =>
+          val h = merged.getOrElseUpdate(c.qids(qi), new TopKBuffer(k, asc))
+          (off until off + t.sizes(qi)).foreach(j => h.insert(t.dists(j), t.ids(j)))
+          off += t.sizes(qi)
+        }
+        t.rows.foreach(r => hitRows(r.getLong(0)) = r)
+        if (hitRows.size > 2L * merged.size * k) retain(hitRows, merged.values)
+      }
+      val qe = probed(rows, c).queryExecution
+      SQLExecution.withNewExecutionId(qe, Some("cell scan")) {
+        spark.sparkContext.runJob(qe.toRdd, task, merge)
+      }
+    }
+    val toRow = CatalystTypeConverters.createToScalaConverter(kept)
+    val out = for {
+      q <- qs.toSeq if !q.isNullAt(0)
+      h <- merged.get(q.getLong(0)).toSeq
+      ((id, d), r) <- h.sorted.zipWithIndex
+    } yield Row.fromSeq(Seq(q.getLong(0), q.get(3), id, d, r + 1) ++
+      toRow(hitRows(id)).asInstanceOf[Row].toSeq.tail)
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      StructField(QID, LongType, nullable = false), source,
+      StructField(ROW_ID, LongType, nullable = false),
+      StructField(DIST, DoubleType, nullable = false),
+      StructField(RANK, IntegerType, nullable = false)) ++ kept.tail))
   }
 
   /** Scorer over `array<float>` payloads, distances bit-identical to

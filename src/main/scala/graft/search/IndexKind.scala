@@ -32,8 +32,10 @@ sealed trait Layout {
   def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout = this
   /** Vector width carried by the fitted quantizer, if any. */
   def fittedDim: Option[Int] = None
-  /** Top-k hits `(QID, SourceItem, ROW_ID, DIST, RANK)` for normalized queries. */
-  def topK(m: SearcherModel, q: DataFrame, k: Int): DataFrame
+  /** Top-k hits `(QID, SourceItem, ROW_ID, DIST, RANK)` for normalized
+    * queries. A cell scan may finish on the driver with the stored `carry`
+    * columns appended ([[CellScan.topK]]); other routes ignore them. */
+  def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame
   /** Range candidates: index rows (`cols` plus any layout column) joined
     * to the queries they may match. */
   def rangeScan(m: SearcherModel, base: DataFrame, q: DataFrame, cols: Seq[Column]): DataFrame =
@@ -42,8 +44,8 @@ sealed trait Layout {
 
 /** Every row scored: the exact kernels over floats, ADC over codes. */
 case object NoLayout extends Layout {
-  def topK(m: SearcherModel, q: DataFrame, k: Int): DataFrame =
-    m.storage.floats(m.indexed).fold(m.adcTopK(q, k))(m.scanTopK(_, q, k))
+  def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame =
+    m.storage.floats(m.indexed).fold(m.adcTopK(q, k, carry))(m.scanTopK(_, q, k))
 }
 
 /** IVF: rows stored in their nearest of `nlist` k-means cells (0 = auto,
@@ -66,13 +68,13 @@ final case class IvfCells(nlist: Int, centroids: Array[Array[Float]] = Array.emp
   override def fittedDim: Option[Int] = Some(centroids(0).length)
   // nprobe resolves against the FITTED cell count, not the parsed nlist.
   // Float views (Floats, Fp16Codes) and codes share one CellScan
-  def topK(m: SearcherModel, q: DataFrame, k: Int): DataFrame = {
+  def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame = {
     val (metric, arg) = (m.searcher.metric, m.searcher.params.metricArg)
-    m.withSource(m.storage.floats(m.indexed, col(IvfIndex.CID)) match {
+    m.withSource(m.storage.floats(m.indexed, col(IvfIndex.CID) +: carry.map(col): _*) match {
       case Some(view) => CellScan.topK(view, q, IvfIndex.probesCol(centroids, m.searcher.params.nprobe),
         k, !metric.higherIsCloser, PqIndex.DefaultQueryChunk)(CellScan.floats(metric.name, arg))
       case None => IvfPqScorer.topK(m.indexed, m.storage.queries(q), k, m.storage.codebooks.get,
-        centroids, m.searcher.params.nprobe, metric.name, arg, nbits = m.storage.adcBits)
+        centroids, m.searcher.params.nprobe, metric.name, arg, nbits = m.storage.adcBits, carry = carry)
     }, q)
   }
   // each query scans only its nprobe cells (a row lives in one cell, so
@@ -108,7 +110,7 @@ final case class HnswGraphs(m: Int, fittedGraphs: Option[Int] = None) extends La
   override def atRest(read: DataFrame): DataFrame = read.repartition(col(NswGraph.GPART))
   override def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout =
     copy(fittedGraphs = fittedGraphs)
-  def topK(model: SearcherModel, q: DataFrame, k: Int): DataFrame =
+  def topK(model: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame =
     model.withSource(NswGraph.topK(model.indexed, q, k, model.effectiveEf,
       model.searcher.metric.name, model.searcher.params.metricArg), q)
 }
@@ -228,7 +230,7 @@ final case class LshBuckets(tables: Int, bits: Option[Int],
   // joint-auto spellings and opt-in for explicit ones, where the index
   // you built is the index that serves (the hash gates pin bucket results).
   // May return < k rows for a query with few collisions, like faiss.
-  def topK(m: SearcherModel, q: DataFrame, k: Int): DataFrame = {
+  def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame = {
     val exact = serveExact(m.searcher.params.lshExactFallback)
     routeLog(m, exact)
     if (exact) m.scanTopK(m.indexed.select(col(ROW_ID), col(VEC)), q, k)

@@ -578,8 +578,8 @@ object IvfIndex {
   }
 
   /** Plain Lloyd k-means over a local sample: deterministic spread-out init
-    * (greedy farthest-point from a fixed start), 10 iterations, empty
-    * clusters re-seeded from the farthest point. */
+    * (greedy farthest-point from a fixed start), `iters` iterations; a
+    * cluster that ends an iteration empty keeps its previous centroid. */
   private[search] def lloyd(xs: Array[Array[Float]], k: Int, iters: Int): Array[Array[Float]] = {
     val n = xs.length
     val d = xs(0).length

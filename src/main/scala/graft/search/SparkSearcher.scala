@@ -417,8 +417,8 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
   // recall advisory (no semantics change): bare code-based indexes score
   // on quantized codes only — RECALL.md measured PQ8 recall@10 = 0.38 at
   // sf1 vs 0.64 with an exact-rescale refine stage. faiss users expect
-  // the latter; recommend the `…,RFlat` spelling once at construction.
-  if (storage.codesOnly && !keepFloats)
+  // the latter; recommend the `…,RFlat` spelling once per spelling and JVM.
+  if (storage.codesOnly && !keepFloats && SparkSearcher.advised.add(innerIndexParam))
     org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").info(
       s"index_param '$innerIndexParam' scores on quantized codes only; " +
         s"'$innerIndexParam,RFlat' adds an exact float re-rank of the " +
@@ -571,6 +571,9 @@ object SparkSearcher {
       rowThreshold: Long, byteCap: Long = WindowBroadcastByteCap): Boolean =
     count <= rowThreshold &&
       count * (dim.toLong * 4L + 32L) <= byteCap
+
+  /** Code spellings whose recall advisory was logged. */
+  private val advised = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   // internal column names, prefixed to dodge payload collisions
   private[search] val VEC = "__vec"
@@ -806,7 +809,8 @@ object SparkSearcher {
   /** Crash-safe directory write: `write` fills a sibling staging
     * directory, which then replaces `path` by rename — a save that dies
     * partway leaves the previous index at `path` untouched, and its
-    * staging directory is removed. */
+    * staging directory is removed. A JVM that dies between the two renames
+    * leaves nothing at `path`; [[recoverStaged]] repairs that at load. */
   private[search] def writeStaged(spark: SparkSession, path: String)(write: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val raw = new Path(path)
@@ -830,10 +834,35 @@ object SparkSearcher {
     if (replacing) fs.delete(old, true)
   }
 
+  /** A [[writeStaged]] that died between its renames left no directory at
+    * `path`, the previous index under `.replaced-<tag>` and the finished
+    * new one under `.staging-<tag>`. Promote the newest complete staging
+    * sibling (it holds `params.json/_SUCCESS`, a save's last write), else
+    * restore the newest replaced one, and delete the other siblings. */
+  private def recoverStaged(spark: SparkSession, path: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val raw = new Path(path)
+    val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val target = fs.makeQualified(raw)
+    if (!fs.exists(target) && fs.exists(target.getParent)) {
+      def siblings(kind: String) = fs.listStatus(target.getParent)
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"${target.getName}.$kind-"))
+        .sortBy(-_.getModificationTime).map(_.getPath).toSeq
+      val (staged, replaced) = (siblings("staging"), siblings("replaced"))
+      staged.find(p => fs.exists(new Path(p, "params.json/_SUCCESS"))).orElse(replaced.headOption)
+        .foreach { pick =>
+          if (!fs.rename(pick, target))
+            throw new java.io.IOException(s"load: cannot move $pick into place at $target")
+          (staged ++ replaced).filter(_ != pick).foreach(fs.delete(_, true))
+        }
+    }
+  }
+
   /** Load a saved model (reference `load_index`, faiss_searcher.py:109-114),
     * re-asserting the stored invariants: row count and vector dim. */
   def load(spark: SparkSession, path: String,
       encoder: Encoder = new PassthroughEncoder("embedding")): SearcherModel = {
+    recoverStaged(spark, path)
     // params.json is ONE row; spark.read.json(...).head() paid two fixed
     // driver round-trips (schema-inference job + head job) per load. Read
     // the line through the path's own FileSystem and parse it on the
@@ -1403,6 +1432,11 @@ class SearcherModel private[search] (
    * Result schema (faiss_searcher.py:129-131): `[<queryIdCol>, source_item,
    * sim_val: float, rank_no: int (if keepRankNo), sim_item, payload…]`,
    * rank-ordered per query, ties broken by `row_id` (SURVEY §4).
+   *
+   * Like faiss's eager `search`, a cell-scan batch that fits one query
+   * chunk runs its scan here, when called, and returns a local relation
+   * ([[CellScan.topK]]); other batches return a lazy plan. The cell scan
+   * collects its query chunk here on either finish.
    */
   def search(queries: DataFrame, topK: Int, keepRankNo: Boolean = false,
       queryIdCol: Option[String] = None): DataFrame = {
@@ -1418,8 +1452,6 @@ class SearcherModel private[search] (
         .select(col(QID), col(qItemCol).as(SourceItem), col(QVEC)),
       QVEC, storage.codesOnly && params.measurement == "cos")
 
-    val hits = topKHits(qn, topK)
-
     // payload gather-join (the reference's iloc, faiss_searcher.py:146-147).
     // The broadcast decision is row-count AND byte guarded: the row
     // threshold alone is byte-blind — 2M rows of 10 KB documents is a
@@ -1433,11 +1465,14 @@ class SearcherModel private[search] (
       (col(ROW_ID) +: col(ITEM) +: payloadCols.map(col)): _*)
     val payloadBytes =
       payloadSide.queryExecution.optimizedPlan.stats.sizeInBytes
-    val joined = hits.join(
-      if (count <= params.broadcastThreshold &&
-          payloadBytes <= BigInt(payloadByteCap)) broadcast(payloadSide)
-      else payloadSide,
-      ROW_ID)
+    val gather = count <= params.broadcastThreshold && payloadBytes <= BigInt(payloadByteCap)
+    // under the same guard a single-chunk cell scan carries the item and
+    // payload to a driver finish (CellScan.topK): it runs here, as one job,
+    // and holds at most q·k of the rows the broadcast would collect
+    val hits = topKHits(qn, topK, if (gather) payloadSide.columns.tail.toSeq else Nil)
+    val joined =
+      if (hits.columns.contains(ITEM)) hits
+      else hits.join(if (gather) broadcast(payloadSide) else payloadSide, ROW_ID)
 
     val base = Seq(
       col(QID).as(queryIdCol.getOrElse("query_id")),
@@ -1496,8 +1531,8 @@ class SearcherModel private[search] (
     * vectors re-score them EXACTLY, top-k of the exact scores wins.
     * Candidate misses are the only recall loss left — quantization error
     * no longer reorders the final ranking. */
-  private def topKHits(qn: DataFrame, topK: Int): DataFrame =
-    if (!refined) layout.topK(this, qn, topK)
+  private def topKHits(qn: DataFrame, topK: Int, carry: Seq[String]): DataFrame =
+    if (!refined) layout.topK(this, qn, topK, carry)
     else {
       // refineKFactor = 0 (default) scales the pool with the corpus
       // (quadruple per decade, the measured ladder — resolveRefineKFactor);
@@ -1513,7 +1548,7 @@ class SearcherModel private[search] (
           "fixed pool's recall decays with corpus growth (RECALL.md: x4 " +
           "reads 0.470 @ 200k, 0.347 @ 2M) — set refineKFactor=0 (auto) " +
           "or raise it, or serve IVF-auto/HNSW")
-      mergeTopK(layout.topK(this, qn, topK * kFactor).select(col(QID), col(ROW_ID))
+      mergeTopK(layout.topK(this, qn, topK * kFactor, Nil).select(col(QID), col(ROW_ID))
         .join(indexed.select(col(ROW_ID), col(VEC)), ROW_ID)
         .join(broadcast(qn.select(col(QID), col(QVEC))), QID), qn, topK)
     }
@@ -1553,9 +1588,10 @@ class SearcherModel private[search] (
       .get("graft.search.payloadBroadcastByteCap",
         SparkSearcher.WindowBroadcastByteCap.toString).toLong
 
-  /** Attach each hit's source item. */
+  /** Attach each hit's source item (a driver-finished scan carries it). */
   private[search] def withSource(hits: DataFrame, q: DataFrame): DataFrame =
-    hits.join(broadcast(q.select(col(QID), col(SourceItem))), QID)
+    if (hits.columns.contains(SourceItem)) hits
+    else hits.join(broadcast(q.select(col(QID), col(SourceItem))), QID)
       .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
 
   /** Bounded-heap top-k over scored `(QID, ROW_ID, QVEC, VEC)` pairs:
@@ -1591,10 +1627,10 @@ class SearcherModel private[search] (
 
   /** ADC top-k over byte codes ([[PqIndex.pqTopK]]: per-partition distance
     * tables). Approximate; deterministic given the seeded codebooks. */
-  private[search] def adcTopK(q: DataFrame, topK: Int): DataFrame = {
+  private[search] def adcTopK(q: DataFrame, topK: Int, carry: Seq[String]): DataFrame = {
     val qc = storage.queries(q)
     withSource(PqIndex.pqTopK(indexed, qc, topK, storage.codebooks.get, metric.name,
-      params.metricArg, nbits = storage.adcBits), qc)
+      params.metricArg, nbits = storage.adcBits, carry = carry), qc)
   }
 
   /** Convenience overload mirroring the reference's `List[str]` query input

@@ -18,6 +18,8 @@ final class TopKBuffer(val k: Int, val asc: Boolean) {
   val dists = new Array[Double](k)
   val ids = new Array[Long](k)
   var size = 0
+  /** Inserts the heap took in, evicting or not. */
+  var admitted = 0L
 
   /** true if `a` is worse than `b` (eviction order), tie-break on larger id
     * (so among equal distances the SMALLEST ids are kept — matching the
@@ -28,13 +30,13 @@ final class TopKBuffer(val k: Int, val asc: Boolean) {
   def insert(dist: Double, id: Long): Unit = {
     if (size < k) {
       var i = size
-      dists(i) = dist; ids(i) = id; size += 1
+      dists(i) = dist; ids(i) = id; size += 1; admitted += 1
       // sift up
       while (i > 0 && worse(dists(i), ids(i), dists((i - 1) / 2), ids((i - 1) / 2))) {
         swap(i, (i - 1) / 2); i = (i - 1) / 2
       }
     } else if (worse(dists(0), ids(0), dist, id)) {
-      dists(0) = dist; ids(0) = id
+      dists(0) = dist; ids(0) = id; admitted += 1
       siftDown(0)
     }
   }

@@ -16,6 +16,14 @@ class PlanShapeSpec extends SparkSpec {
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Runs `body` with a payload broadcast cap of 0: a single-chunk cell
+    * scan then keeps the distributed merge → payload-join tail instead of
+    * finishing on the driver as a local scan. */
+  private def distributedTail(body: => Unit): Unit = {
+    spark.conf.set("graft.search.payloadBroadcastByteCap", "0")
+    try body finally spark.conf.unset("graft.search.payloadBroadcastByteCap")
+  }
+
   test("knn query: vec_id filter is pushed into the parquet scan") {
     val plan = SparkEntry.queries("knn_cos_top10")(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
@@ -145,7 +153,7 @@ class PlanShapeSpec extends SparkSpec {
   test("IVF and LSH top-k tails: heap aggregate, no Sort/Window of candidates") {
     // the approximate paths must share the exact path's O(n log k) tail:
     // a window row_number tail would sort+shuffle every candidate per query
-    Seq("knn_ivf_cos", "knn_lsh_cos").foreach { q =>
+    distributedTail(Seq("knn_ivf_cos", "knn_lsh_cos").foreach { q =>
       val plan = physical(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))
       assert(plan.contains("top_k_by_distance"), s"$q lost the heap-aggregate tail")
       assert(!plan.contains("Window"), s"$q plan re-grew a Window tail")
@@ -153,16 +161,18 @@ class PlanShapeSpec extends SparkSpec {
       // (earlier in the printed tree); nothing below it may sort candidates
       val below = plan.substring(plan.indexOf("top_k_by_distance"))
       assert(!below.contains("Sort "), s"$q plan sorts candidates below the heap tail")
-    }
+    })
   }
 
   test("loaded IVF batch: one cell scan — no probe explode, no join keyed on the cell") {
+    distributedTail {
     val plan = physical(SparkEntry.queries("knn_batch_ivf_loaded")(spark, "/root/testdata/sf0.001"))
     // a (query, row) pair join would reappear as an exploded probe list
     // equi-joined to the index on its cell id
     assert(!plan.contains("explode(nearest_centroids"), "IVF serve re-grew the probe explode")
     assert(!plan.linesIterator.exists(l => l.contains("Join") && l.contains("__cell")),
       s"IVF serve re-grew the pair join on the cell id: $plan")
+    }
   }
 
   test("bucketed join: sort-merge with NO exchange on either side") {

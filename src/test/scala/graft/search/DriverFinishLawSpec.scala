@@ -1,0 +1,134 @@
+package graft.search
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+
+import graft.SparkSpec
+import graft.encoders.PassthroughEncoder
+
+/** Law: a single-chunk cell scan finished on the driver returns exactly the
+  * rows of the distributed merge → payload-join route (forced by a payload
+  * broadcast cap of 0) — every output column, raw `sim_val` bits included —
+  * for every [[CellScan]] kind under cos, l2 and ip. Batches hold duplicate
+  * query ids, a null-vector query, separator-truncated items and fresh
+  * vectors; corpora hold planted duplicates (ties fall on `row_id`), and
+  * probing one or two of eight cells leaves some queries short of k hits. */
+class DriverFinishLawSpec extends SparkSpec {
+
+  private val kinds = Seq("IVF8", "IVF8,SQfp16", "IVF8,SQ8", "IVF8,PQ4", "PQ4", "SQ8")
+  private val cap = "graft.search.payloadBroadcastByteCap"
+  private val vecType = ArrayType(FloatType, containsNull = false)
+
+  private def vec(rnd: scala.util.Random, dim: Int) = Array.fill(dim)(rnd.nextGaussian().toFloat)
+
+  private def corpus(rnd: scala.util.Random, n: Int, dim: Int): DataFrame = {
+    val vs = (0 until n).foldLeft(Vector.empty[Array[Float]]) { (acc, i) =>
+      acc :+ (if (i % 5 == 4) acc(rnd.nextInt(i)) else vec(rnd, dim))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(vs.indices.map(i =>
+      Row(i.toLong, s"v$i#doc", vs(i).toSeq, s"tag$i")): _*), StructType(Seq(
+      StructField("vec_id", LongType, nullable = false), StructField("item", StringType),
+      StructField("embedding", vecType), StructField("tag", StringType))))
+  }
+
+  /** Query rows `(qid, item, embedding)`: qid 1 twice (one copy of a stored
+    * vector, one fresh), qid 2 twice with the same vector, a null vector. */
+  private def queries(rnd: scala.util.Random, dim: Int, stored: Seq[Array[Float]]): DataFrame = {
+    val same = vec(rnd, dim)
+    val rows = Seq[(Long, Array[Float])](1L -> stored(rnd.nextInt(stored.length)), 1L -> vec(rnd, dim),
+      2L -> same, 2L -> same, 3L -> null, 4L -> vec(rnd, dim), 5L -> stored.head)
+    spark.createDataFrame(java.util.Arrays.asList(rows.zipWithIndex.map { case ((q, v), i) =>
+      Row(q, s"q$i#src", Option(v).map(_.toSeq).orNull) }: _*), StructType(Seq(
+      StructField("qid", LongType, nullable = false), StructField("item", StringType),
+      StructField("embedding", vecType))))
+  }
+
+  private val shape = for {
+    dim <- Gen.choose(1, 4).map(_ * 4); n <- Gen.choose(24, 64); k <- Gen.choose(1, 12)
+    nprobe <- Gen.choose(1, 2); seed <- Gen.long
+  } yield (dim, n, k, nprobe, seed)
+
+  /** Every output column, `sim_val` as raw bits, in a total order. */
+  private def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(r =>
+    r.toSeq.map {
+      case f: Float => java.lang.Float.floatToRawIntBits(f).toString
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted
+
+  private def driverFinished(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec]
+
+  for ((kind, ki) <- kinds.zipWithIndex; (metric, mi) <- Seq("cos", "l2", "ip").zipWithIndex)
+    test(s"driver finish ≡ distributed merge: $kind, $metric") {
+      val law = Prop.forAllNoShrink(shape) { case (dim, n, k, nprobe, seed) =>
+        val rnd = new scala.util.Random(seed)
+        val items = corpus(rnd, n, dim)
+        val stored = items.collect().toSeq.map(_.getSeq[Float](2).toArray)
+        val q = queries(rnd, dim, stored)
+        val model = new SparkSearcher(new PassthroughEncoder("embedding"),
+          SearcherParams(itemCol = Some("item"), idCol = Some("vec_id"), measurement = metric,
+            indexParam = kind, nprobe = nprobe, docFeatureSep = Some("#"),
+            queryFeatureSep = Some("#"))).fit(items)
+        try {
+          // named ids (duplicates, a null vector) and positional ids
+          def both(): Seq[DataFrame] = Seq(
+            model.search(q, k, keepRankNo = true, queryIdCol = Some("qid")),
+            model.search(q.drop("qid"), k, keepRankNo = true))
+          val driver = both()
+          spark.conf.set(cap, "0")
+          val distributed = try both() finally spark.conf.unset(cap)
+          driver.forall(driverFinished) && !distributed.exists(driverFinished) &&
+            driver.zip(distributed).forall { case (a, b) => rows(a) == rows(b) } &&
+            rows(driver.head).exists(_.contains("tag"))
+        } finally model.unpersist()
+      }
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(2)
+        .withInitialSeed(Seed(ki * 3L + mi)), law)
+      assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+    }
+
+  test("a loaded IVF0 index serves 16 local queries as one job and a local scan") {
+    val rnd = new scala.util.Random(7)
+    val items = corpus(rnd, 600, 16)
+    val model = new SparkSearcher(new PassthroughEncoder("embedding"),
+      SearcherParams(itemCol = Some("item"), idCol = Some("vec_id"), measurement = "cos",
+        indexParam = "IVF0")).fit(items)
+    val dir = java.nio.file.Files.createTempDirectory("graft-driver-finish").toString + "/index"
+    model.save(dir)
+    model.unpersist()
+    val loaded = SparkSearcher.load(spark, dir)
+    val q = spark.createDataFrame(java.util.Arrays.asList((0 until 16).map(i =>
+      Row(i.toLong, s"q$i", vec(rnd, 16).toSeq)): _*), StructType(Seq(
+      StructField("qid", LongType, nullable = false), StructField("item", StringType),
+      StructField("embedding", vecType))))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var drained = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.job.description") == "drain") drained = true
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (res, out) = try {
+      val res = loaded.search(q, 10, keepRankNo = true, queryIdCol = Some("qid"))
+      (res, res.collect())
+    } finally {
+      // listener events arrive in order: once the drain job is seen, every
+      // search job has been counted
+      spark.sparkContext.setJobDescription("drain")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(drained)
+    assert(jobs.get == 1, s"search + collect ran ${jobs.get} jobs")
+    assert(driverFinished(res), res.queryExecution.executedPlan.toString)
+    assert(out.length == 160 && out.map(_.getAs[Long]("qid")).toSet == (0L until 16L).toSet)
+    loaded.unpersist()
+  }
+}

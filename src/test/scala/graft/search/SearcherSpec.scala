@@ -1329,4 +1329,42 @@ class SearcherSpec extends SparkSpec {
     assert(java.nio.file.Files.list(parent).toArray.map(_.toString).toSeq === Seq(dir))
     bad.unpersist()
   }
+
+  test("load after a save died between its renames recovers the newest complete index") {
+    val parent = java.nio.file.Files.createTempDirectory("graft-renamegap")
+    val dir = parent.resolve("index")
+    val full = embModel()
+    val small = new SparkSearcher(new PassthroughEncoder("embedding"),
+      SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"), measurement = "cos"))
+      .fit(sf("embeddings").filter(col("vec_id") < 50))
+    def crashed(tag: String, stagingComplete: Boolean): Unit = {
+      full.save(dir.toString)
+      small.save(parent.resolve("next").toString)
+      // the state a JVM leaves when it dies between writeStaged's renames:
+      // the old index moved aside, the new one still under its staging name
+      java.nio.file.Files.move(dir, parent.resolve(s"index.replaced-$tag"))
+      java.nio.file.Files.move(parent.resolve("next"), parent.resolve(s"index.staging-$tag"))
+      if (!stagingComplete) org.apache.commons.io.FileUtils.deleteDirectory(
+        parent.resolve(s"index.staging-$tag/params.json").toFile)
+    }
+    def listing = java.nio.file.Files.list(parent).toArray.map(_.toString).toSeq
+    // a complete staging directory is the newest index
+    crashed("a", stagingComplete = true)
+    spark.catalog.refreshByPath(dir.toString)
+    val promoted = SparkSearcher.load(spark, dir.toString)
+    assert(promoted.count == small.count)
+    assert(listing === Seq(dir.toString))
+    promoted.unpersist()
+    // a staging directory without params.json never finished: the previous
+    // index comes back
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    crashed("b", stagingComplete = false)
+    spark.catalog.refreshByPath(dir.toString)
+    val restored = SparkSearcher.load(spark, dir.toString)
+    assert(restored.count == full.count)
+    assert(listing === Seq(dir.toString))
+    restored.unpersist()
+    small.unpersist()
+    full.unpersist()
+  }
 }
