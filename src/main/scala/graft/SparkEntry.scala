@@ -879,14 +879,15 @@ object SparkEntry {
             col("z.sim_vals").as("sim_val"))
       }.reduce(_ unionByName _).orderBy("k", "source_id", "pos")
     }),
-    // physical-path independence: the SAME query through the opt-in
-    // window/WindowGroupLimit plan must hash-match the heap-aggregate
-    // default (both share the brute-force cos oracle)
+    // physical-path independence: the SAME exact query through the
+    // distributed merge → payload-join finish (a broadcast threshold of 0
+    // keeps the payload off the driver) must hash-match knn_cos_top10's
+    // driver finish (both share the brute-force cos oracle)
     "knn_window_cos" -> ((s, dir) => {
       val items = table(s, dir, "embeddings")
       val model = new SparkSearcher(new PassthroughEncoder("embedding"),
         SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
-          measurement = "cos", exactPath = "window"))
+          measurement = "cos", broadcastThreshold = 0))
         .fit(items)
       knnSelect(model.search(items.filter(col("vec_id") < 10), 10,
         keepRankNo = true, queryIdCol = Some("vec_id")))
@@ -3817,7 +3818,7 @@ object SparkEntry {
   /** knn_ivfpq_cos: IVF16,PQ8 at nprobe=6 — cells and codes both live in
     * the normalized space; the per-partition cell scan scores a code only
     * against the queries probing its cell, through each query's ADC table
-    * ([[graft.search.IvfPqScorer.topK]] over [[graft.search.CellScan]]). */
+    * ([[graft.search.CellScan]]). */
   private def ivfPqOracle(s: SparkSession, dir: String, k: Int): String = {
     val model = new SparkSearcher(new PassthroughEncoder("embedding"),
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),

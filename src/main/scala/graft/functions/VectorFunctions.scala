@@ -37,10 +37,7 @@ object VectorFunctions {
     * `higherIsCloser` mirrors faiss METRIC_INNER_PRODUCT vs the rest
     * (faiss_searcher.py:77-86): cos/ip rank DESC, all others ASC. */
   final case class Metric(name: String, higherIsCloser: Boolean,
-      dist: (Column, Column) => Column) {
-    /** Ordering expression for "closest first". */
-    def closestFirst(c: Column): Column = if (higherIsCloser) c.desc else c.asc
-  }
+      dist: (Column, Column) => Column)
 
   /** Resolve a metric by reference name (faiss_searcher.py:75-90).
     * `metricArg` is faiss's metric_arg (the p of L_p). */

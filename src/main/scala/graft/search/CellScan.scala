@@ -13,9 +13,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
 import SparkSearcher.{DIST, QID, QVEC, RANK, ROW_ID, SourceItem}
 
 /**
- * The one per-partition scan behind every cell-pruned top-k: IVF over
- * floats or fp16 codes, IVF over PQ/SQ codes, and bare PQ/SQ as the
- * one-cell case. It is the shape faiss's `index.search` runs natively
+ * The one per-partition scan behind every top-k that scores stored rows:
+ * IVF over floats, fp16 or PQ/SQ codes, and, as the one-cell case (every
+ * row in cell 0, every query probing it), exact search over floats or
+ * fp16 — Flat, `SQfp16`, a PCA prefix over Flat, LSH's exact route — and
+ * bare PQ/SQ/OPQ codes. It is the shape faiss's `index.search` runs natively
  * (faiss_searcher.py:161-169): the driver collects a bounded chunk of
  * queries with their probe lists, buckets them by cell and broadcasts the
  * chunk; each index partition is read as `InternalRow`s (no per-element
@@ -79,8 +81,7 @@ object CellScan {
           }, PqIndex.hitSchema)
         }
       }
-      // empty query batch: the empty hit shape (the exact path's crossJoin
-      // degrades the same way)
+      // empty query batch (or only null vectors): the empty hit shape
       if (partials.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], PqIndex.hitSchema)
           .withColumn(RANK, lit(1).cast("int"))

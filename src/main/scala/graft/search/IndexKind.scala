@@ -42,10 +42,12 @@ sealed trait Layout {
     base.select(cols: _*).crossJoin(broadcast(q))
 }
 
-/** Every row scored: the exact kernels over floats, ADC over codes. */
+/** Every row scored — the one-cell case of the cell scan: every row in
+  * cell 0, every query probing it. The exact kernels over floats, ADC over
+  * codes. */
 case object NoLayout extends Layout {
   def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame =
-    m.storage.floats(m.indexed).fold(m.adcTopK(q, k, carry))(m.scanTopK(_, q, k))
+    m.cellTopK(q, k, carry, lit(0).as(IvfIndex.CID), array(lit(0)))
 }
 
 /** IVF: rows stored in their nearest of `nlist` k-means cells (0 = auto,
@@ -66,17 +68,9 @@ final case class IvfCells(nlist: Int, centroids: Array[Array[Float]] = Array.emp
   override def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout =
     copy(centroids = meta.readRows("centroids", ("centroid_id", "centroid")))
   override def fittedDim: Option[Int] = Some(centroids(0).length)
-  // nprobe resolves against the FITTED cell count, not the parsed nlist.
-  // Float views (Floats, Fp16Codes) and codes share one CellScan
-  def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame = {
-    val (metric, arg) = (m.searcher.metric, m.searcher.params.metricArg)
-    m.withSource(m.storage.floats(m.indexed, col(IvfIndex.CID) +: carry.map(col): _*) match {
-      case Some(view) => CellScan.topK(view, q, IvfIndex.probesCol(centroids, m.searcher.params.nprobe),
-        k, !metric.higherIsCloser, PqIndex.DefaultQueryChunk)(CellScan.floats(metric.name, arg))
-      case None => IvfPqScorer.topK(m.indexed, m.storage.queries(q), k, m.storage.codebooks.get,
-        centroids, m.searcher.params.nprobe, metric.name, arg, nbits = m.storage.adcBits, carry = carry)
-    }, q)
-  }
+  // nprobe resolves against the FITTED cell count, not the parsed nlist
+  def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame =
+    m.cellTopK(q, k, carry, col(IvfIndex.CID), IvfIndex.probesCol(centroids, m.searcher.params.nprobe))
   // each query scans only its nprobe cells (a row lives in one cell, so
   // hits stay distinct); full probe equals the exact scan
   override def rangeScan(m: SearcherModel, base: DataFrame, q: DataFrame,
@@ -233,7 +227,7 @@ final case class LshBuckets(tables: Int, bits: Option[Int],
   def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame = {
     val exact = serveExact(m.searcher.params.lshExactFallback)
     routeLog(m, exact)
-    if (exact) m.scanTopK(m.indexed.select(col(ROW_ID), col(VEC)), q, k)
+    if (exact) NoLayout.topK(m, q, k, carry)
     else m.mergeTopK(candidates(m.indexed, q)
       .join(m.indexed.select(col(ROW_ID), col(VEC)), ROW_ID)
       .join(broadcast(q.select(col(QID), col(QVEC))), QID), q, k)
@@ -383,11 +377,11 @@ final case class SqCodes(nbits: Int, vmin: Array[Float] = Array.empty,
   * driver-side order. */
 final class MetaDir(val spark: SparkSession, path: String) {
   /** Write the driver-side table `df` of `bytes` payload bytes. One task
-    * writes it, so a table past the broadcast byte cap fails first, before
-    * `df` is built or anything is written. */
+    * writes it, so a table past [[SparkSearcher.DriverTableByteCap]] fails
+    * first, before `df` is built or anything is written. */
   def write(sub: String, bytes: Long)(df: => DataFrame): Unit = {
-    require(bytes <= WindowBroadcastByteCap, s"metadata table '$sub' holds $bytes bytes " +
-      s"on the driver, over the $WindowBroadcastByteCap-byte cap of a one-file write")
+    require(bytes <= DriverTableByteCap, s"metadata table '$sub' holds $bytes bytes " +
+      s"on the driver, over the $DriverTableByteCap-byte cap of a one-file write")
     df.coalesce(1).write.mode("overwrite").parquet(s"$path/$sub")
   }
   def read(sub: String, fields: (String, DataType)*): Array[Row] =

@@ -198,9 +198,9 @@ object NswGraph {
 
   /**
    * Top-k over all graphs: broadcast the query batch in bounded chunks
-   * (same budget discipline as [[PqIndex.pqTopK]]), beam-search every
+   * (same budget discipline as [[CellScan.topK]]), beam-search every
    * locally-present graph per query, keep a per-query bounded heap per
-   * partition, merge globally with the exact path's heap aggregate. When
+   * partition, merge globally with the shared heap aggregate. When
    * `efSearch ≥` a group's size that group is scanned exhaustively (exact
    * by construction — see the object doc).
    *

@@ -265,43 +265,6 @@ object PqIndex {
       }
     }
   }
-
-  /** ADC top-k over every code row: the one-cell case of [[CellScan]]
-    * (every row in cell 0, every query probing it), query batch broadcast
-    * in bounded chunks, then the same aggregate-merge tail as exact search.
-    * `metricName`/`metricArg` select the subspace decomposition — all 8
-    * reference metrics are served (see [[adcScorer]]). `carry` names the
-    * `indexed` columns a single-chunk batch finishes with on the driver
-    * ([[CellScan.topK]]). */
-  def pqTopK(indexed: DataFrame, queries: DataFrame, topK: Int,
-      codebooks: Array[Array[Array[Float]]], metricName: String,
-      metricArg: Double = 2.0,
-      queryChunkSize: Int = DefaultQueryChunk, nbits: Int = 8,
-      carry: Seq[String] = Nil): DataFrame =
-    CellScan.topK(indexed.select(Seq(col(SparkSearcher.ROW_ID), col(CODES), lit(0).as(IvfIndex.CID)) ++
-      carry.map(col): _*), queries, array(lit(0)), topK, !NswGraph.higherIsCloser(metricName), queryChunkSize)(
-      adcRows(indexed.sparkSession, codebooks, metricName, metricArg, nbits))
-}
-
-object IvfPqScorer {
-  import SparkSearcher.ROW_ID
-
-  /** IVF+PQ ADC search: the [[CellScan]] over code rows, each row scored
-    * only against the queries probing its cell — the composition that
-    * gives BOTH partition pruning (IVF) and 4·dim/m× memory compression
-    * (PQ), i.e. the canonical faiss `IVFn,PQm` shape for corpora where
-    * neither the full scan nor the float vectors fit. `carry` as in
-    * [[PqIndex.pqTopK]]. */
-  def topK(indexed: DataFrame, queries: DataFrame, topK: Int,
-      codebooks: Array[Array[Array[Float]]], centroids: Array[Array[Float]],
-      nprobe: Int, metricName: String, metricArg: Double = 2.0,
-      queryChunkSize: Int = PqIndex.DefaultQueryChunk,
-      nbits: Int = 8, carry: Seq[String] = Nil): DataFrame =
-    CellScan.topK(indexed.select(Seq(col(ROW_ID), col(PqIndex.CODES), col(IvfIndex.CID)) ++
-      carry.map(col): _*), queries,
-      IvfIndex.probesCol(centroids, nprobe), topK, !NswGraph.higherIsCloser(metricName),
-      queryChunkSize)(
-      PqIndex.adcRows(indexed.sparkSession, codebooks, metricName, metricArg, nbits))
 }
 
 /** Codegen'd PQ encoder: array<float> → binary(m·nbits/8); codebooks ride

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -44,14 +43,9 @@ import graft.functions.VectorFunctions.Metric
  * @param hnswGraphs number of partition-local NSW graphs; 0 (default) =
  *                  the cluster's default parallelism — graph size is then
  *                  corpus/parallelism, bounded per executor
- * @param broadcastThreshold max index rows to broadcast (payload join +
- *                  the opt-in window path)
- * @param exactPath physical shape of exact search: `"aggregate"` (default —
- *                  broadcast the query set, stream the index, bounded-heap
- *                  top-k; measured 3× faster at 64k corpus and the only
- *                  shape that works when the index can't broadcast) or
- *                  `"window"` (broadcast the index, WindowGroupLimit —
- *                  right when the QUERY batch is huge and the index small)
+ * @param broadcastThreshold max index rows whose payload side is broadcast
+ *                  into the hits, or carried by a single-chunk cell scan to
+ *                  its driver finish
  */
 final case class SearcherParams(
     itemCol: Option[String] = None,
@@ -66,7 +60,6 @@ final case class SearcherParams(
     efSearch: Int = 64,
     hnswGraphs: Int = 0,
     broadcastThreshold: Long = 2000000L,
-    exactPath: String = "aggregate",
     /** Expected queries per `search` batch — sizes the joint-auto LSH
       * config (`LSH0`) for the batch it will serve: the resolver weighs
       * per-table fit cost (n·bits signature ops) against per-batch verify
@@ -142,8 +135,6 @@ final case class SearcherParams(
       * calls compact() on their own schedule. */
     autoCompactAtSegmentRatio: Double = 0.0) {
   // a bad setting fails at construction, not at the first search
-  require(exactPath == "aggregate" || exactPath == "window",
-    s"exactPath must be 'aggregate' or 'window', got '$exactPath'")
   Seq[(String, Double)]("nprobe" -> nprobe, "efSearch" -> efSearch,
     "hnswGraphs" -> hnswGraphs, "refineKFactor" -> refineKFactor,
     "efConstruction" -> efConstruction, "broadcastThreshold" -> broadcastThreshold,
@@ -370,12 +361,10 @@ object IndexStrategy {
  *    table once, assigns a stable `row_id`, and caches — the cached table IS
  *    the "index"; for IVF params it also k-means-clusters the vectors so
  *    search can prune to `nprobe` partitions.
- *  - `search` (faiss_searcher.py:161-169) is a top-K similarity join:
- *    cross-join against the (broadcast) index, native codegen'd distance
- *    expression, per-query top-k via `row_number` over a window — which
- *    Catalyst rewrites to `WindowGroupLimit`, i.e. a map-side partial top-k
- *    before any shuffle, the same pushdown faiss gets by passing k into the
- *    index (SURVEY §4).
+ *  - `search` (faiss_searcher.py:161-169) is a top-K scan: queries are
+ *    collected in bounded chunks and each index partition scores its rows
+ *    into one bounded heap per query ([[CellScan]]; exact search is its
+ *    one-cell case), so k is pushed into the scan as faiss does (SURVEY §4).
  *  - payload columns ride along into results by joining the hits back to the
  *    items table on `row_id` (the reference's positional `iloc` gather,
  *    faiss_searcher.py:146-147, becomes an equi-join).
@@ -555,22 +544,11 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
 }
 
 object SparkSearcher {
-  /** 2 GB — the window exact path's cap on broadcasting the index side:
-    * comfortable headroom under Spark's 8 GB broadcast hard limit and a
+  /** 2 GB — the cap on a table built on the driver: the payload side a
+    * search broadcasts into its hits, and a one-file metadata write.
+    * Comfortable headroom under Spark's 8 GB broadcast hard limit and a
     * sane executor memory share. */
-  private[search] val WindowBroadcastByteCap = 2L * 1024 * 1024 * 1024
-
-  /** Whether the window exact path (which broadcasts the whole index) is
-    * safe. The row threshold alone is not a sufficient guard: a wide index
-    * (dim=4096 ⇒ ~16 KB/row) can sit under the row threshold yet blow past
-    * Spark's broadcast hard limit, so the BYTE estimate — dim float32s per
-    * row + ~32 B row-id/offset overhead — must also fit
-    * [[WindowBroadcastByteCap]]. Over either bound the aggregate path
-    * (which broadcasts the small QUERY side instead) takes over. */
-  private[search] def windowPathFits(count: Long, dim: Int,
-      rowThreshold: Long, byteCap: Long = WindowBroadcastByteCap): Boolean =
-    count <= rowThreshold &&
-      count * (dim.toLong * 4L + 32L) <= byteCap
+  private[search] val DriverTableByteCap = 2L * 1024 * 1024 * 1024
 
   /** Code spellings whose recall advisory was logged. */
   private val advised = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -593,8 +571,8 @@ object SparkSearcher {
     * `sampleSize`-row query sample (rows with the smallest
     * xxhash64(row_id) — reproducible across refits, so the gate's oracle
     * re-fit resolves the identical config), measured against the FULL
-    * corpus with one bounded exact top-k pass (the same heap-aggregate
-    * plan search uses; sampleSize·n·d work, ~a 256-query exact batch).
+    * corpus with one bounded exact top-k pass (the one-cell [[CellScan]]
+    * exact search uses; sampleSize·n·d work, ~a 256-query exact batch).
     *
     * Why rank-k against the corpus and not within the sample: the r13–r16
     * anchor (median max-cos WITHIN a 256-row sample) lower-bounds the
@@ -612,19 +590,16 @@ object SparkSearcher {
     * corpora already resolve to cheap high-recall configs. */
   private[search] def lshRankKAnchor(pre: org.apache.spark.sql.DataFrame,
       n: Long, k: Int = 10, sampleSize: Int = 256): Double = {
-    import org.apache.spark.sql.functions.{broadcast, col, min, xxhash64}
     if (n < 2) return 0.9
     val qdf = pre
       .select(col(ROW_ID).as(QID), col(VEC).as(QVEC), xxhash64(col(ROW_ID)).as("__h"))
       .orderBy(col("__h")).limit(sampleSize)
       .select(col(QID), col(QVEC))
-    val scored = pre.select(col(ROW_ID), col(VEC))
-      .crossJoin(broadcast(qdf))
-      .withColumn(DIST, graft.functions.VectorFunctions.vec_cosine(col(QVEC), col(VEC)))
     // rank-k cosine per query = the minimum of its exact top-k (cos:
     // higher is closer); value-only, so heap tie-breaks don't matter
-    val rankK = TopKAggregate.mergeHits(scored, math.min(k.toLong, n).toInt,
-        ascending = false)
+    val rankK = CellScan.topK(pre.select(col(ROW_ID), col(VEC), lit(0).as(IvfIndex.CID)), qdf,
+        array(lit(0)), math.min(k.toLong, n).toInt, asc = false, PqIndex.DefaultQueryChunk)(
+        CellScan.floats("cos", 0.0))
       .groupBy(col(QID)).agg(min(col(DIST)).as("__rk"))
       .select(col("__rk")).collect().map(_.getDouble(0)).sorted
     if (rankK.isEmpty) return 0.9
@@ -872,7 +847,8 @@ object SparkSearcher {
     val kv = readParamsJson(spark, s"$path/params.json")
     // TOLERANT reads for TUNING knobs only: params.json written by an
     // older build predates fields added since (efSearch/hnswGraphs arrived
-    // with the graph ANN; exactPath with the dual exact shapes). A missing
+    // with the graph ANN). A field no longer read (exactPath, once the
+    // choice between two exact-search shapes) is ignored. A missing
     // tuning field means "the writer didn't know the knob" — the current
     // default is the right reading, not a load failure. Fields that change
     // RESULTS — indexParam, measurement, metricArg, normVec — and the
@@ -903,7 +879,6 @@ object SparkSearcher {
       efSearch = lngOr("efSearch", dflt.efSearch).toInt,
       hnswGraphs = lngOr("hnswGraphs", dflt.hnswGraphs).toInt,
       broadcastThreshold = lngOr("broadcastThreshold", dflt.broadcastThreshold),
-      exactPath = Option(str("exactPath")).getOrElse(dflt.exactPath),
       lshBatchHint = lngOr("lshBatchHint", dflt.lshBatchHint).toInt,
       lshExactFallback =
         if (has("lshExactFallback")) kv.get("lshExactFallback").asBoolean()
@@ -1572,21 +1547,13 @@ class SearcherModel private[search] (
     }.toMap
   }
 
-  /** Session-overridable byte cap for the window path's index broadcast
-    * (`graft.search.windowBroadcastByteCap`) — the default is the 2 GB
-    * [[SparkSearcher.WindowBroadcastByteCap]]. */
-  private def windowByteCap: Long =
-    indexed.sparkSession.conf
-      .get("graft.search.windowBroadcastByteCap",
-        SparkSearcher.WindowBroadcastByteCap.toString).toLong
-
   /** Session-overridable byte cap for the payload gather-join's
-    * broadcast (`graft.search.payloadBroadcastByteCap`) — same 2 GB
-    * default as the window path's cap. */
+    * broadcast (`graft.search.payloadBroadcastByteCap`) — the default is
+    * the 2 GB [[SparkSearcher.DriverTableByteCap]]. */
   private def payloadByteCap: Long =
     indexed.sparkSession.conf
       .get("graft.search.payloadBroadcastByteCap",
-        SparkSearcher.WindowBroadcastByteCap.toString).toLong
+        SparkSearcher.DriverTableByteCap.toString).toLong
 
   /** Attach each hit's source item (a driver-finished scan carries it). */
   private[search] def withSource(hits: DataFrame, q: DataFrame): DataFrame =
@@ -1602,35 +1569,21 @@ class SearcherModel private[search] (
       pairs.withColumn(DIST, metric.dist(col(QVEC), col(VEC))), topK,
       ascending = !metric.higherIsCloser), q)
 
-  /** Exact brute-force top-k over a `(ROW_ID, VEC)` float view. Two
-    * physical shapes (faiss's "push k into the scan" reproduced twice
-    * over — SURVEY §4):
-    *
-    *  - `exactPath = "window"` over stored floats, when the index fits
-    *    broadcast: broadcast cross join + codegen'd distance +
-    *    `row_number` rank filter, which Catalyst rewrites to partial+final
-    *    WindowGroupLimit (map-side top-k before the exchange);
-    *  - otherwise broadcast the (small) QUERY set instead, stream the
-    *    index partitions, and heap-aggregate per query ([[mergeTopK]]).
-    *    This is the 1000-executor/100 TB plan. */
-  private[search] def scanTopK(view: DataFrame, q: DataFrame, topK: Int): DataFrame =
-    if (storage == Floats && params.exactPath == "window" &&
-        SparkSearcher.windowPathFits(count, dim, params.broadcastThreshold, windowByteCap)) {
-      val w = Window.partitionBy(col(QID))
-        .orderBy(metric.closestFirst(col(DIST)), col(ROW_ID))
-      q.crossJoin(broadcast(view))
-        .withColumn(DIST, metric.dist(col(QVEC), col(VEC)))
-        .withColumn(RANK, row_number().over(w))
-        .filter(col(RANK) <= topK)
-        .select(col(QID), col(SourceItem), col(ROW_ID), col(DIST), col(RANK))
-    } else mergeTopK(view.crossJoin(broadcast(q.select(col(QID), col(QVEC)))), q, topK)
-
-  /** ADC top-k over byte codes ([[PqIndex.pqTopK]]: per-partition distance
-    * tables). Approximate; deterministic given the seeded codebooks. */
-  private[search] def adcTopK(q: DataFrame, topK: Int, carry: Seq[String]): DataFrame = {
-    val qc = storage.queries(q)
-    withSource(PqIndex.pqTopK(indexed, qc, topK, storage.codebooks.get, metric.name,
-      params.metricArg, nbits = storage.adcBits, carry = carry), qc)
+  /** Top-k hits through the one [[CellScan]]: the layout supplies each
+    * row's `cell` and each query's `probes`, the storage the scorer — the
+    * float kernels over a float view, ADC over codes (queries mapped into
+    * the codes' space). `carry` as in [[Layout.topK]]. */
+  private[search] def cellTopK(q: DataFrame, k: Int, carry: Seq[String], cell: Column,
+      probes: Column): DataFrame = {
+    val (asc, chunk) = (!metric.higherIsCloser, PqIndex.DefaultQueryChunk)
+    withSource(storage.floats(indexed, cell +: carry.map(col): _*) match {
+      case Some(view) => CellScan.topK(view, q, probes, k, asc, chunk)(
+        CellScan.floats(metric.name, params.metricArg))
+      case None => CellScan.topK(indexed.select(Seq(col(ROW_ID), col(PqIndex.CODES), cell) ++
+          carry.map(col): _*), storage.queries(q), probes, k, asc, chunk)(
+        PqIndex.adcRows(spark, storage.codebooks.get, metric.name, params.metricArg,
+          storage.adcBits))
+    }, q)
   }
 
   /** Convenience overload mirroring the reference's `List[str]` query input
@@ -1685,7 +1638,7 @@ class SearcherModel private[search] (
       // PCA-prefix kernel + bias (n_components re-asserted at load)
       pcaModel.foreach(_.save(spark, s"$dir/pca"))
       // params as a 1-row JSON with every search-relevant knob persisted
-      // (nprobe/exactPath/broadcastThreshold included: a reloaded IVF model
+      // (nprobe/broadcastThreshold included: a reloaded IVF model
       // must keep its recall setting). Option fields use an empty-string
       // sentinel so the field set is stable across writers. Written
       // DRIVER-side through the path's FileSystem since r22 (Jackson does
@@ -1706,7 +1659,6 @@ class SearcherModel private[search] (
       node.put("nprobe", p.nprobe)
       node.put("efSearch", p.efSearch)
       node.put("hnswGraphs", p.hnswGraphs)
-      node.put("exactPath", p.exactPath)
       node.put("broadcastThreshold", p.broadcastThreshold)
       node.put("lshBatchHint", p.lshBatchHint)
       node.put("lshExactFallback", p.lshExactFallback)

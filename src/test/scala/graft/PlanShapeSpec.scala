@@ -1,7 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /**
  * Plan-regression guards for the scale-critical physical shapes recorded in
@@ -24,11 +29,48 @@ class PlanShapeSpec extends SparkSpec {
     try body finally spark.conf.unset("graft.search.payloadBroadcastByteCap")
   }
 
+  /** Runs `body` and returns the executed plan of every named execution it
+    * ran (`collect`, `cell scan`, …) and every completed stage, drained:
+    * both listeners have seen a marker action run after `body`. */
+  private def observed(body: => Unit): (Seq[(String, String)], Seq[StageInfo]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]
+    @volatile var stagesDrained = false
+    val qel = new QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(name -> qe.executedPlan.toString)
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sl = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.name.contains("observedMarker")) stagesDrained = true
+        else stages.add(e.stageInfo)
+    }
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(sl)
+    try {
+      body
+      spark.sparkContext.setCallSite("observedMarker")
+      try spark.range(1).toDF("observed_marker").collect()
+      finally spark.sparkContext.clearCallSite()
+      val deadline = System.nanoTime() + 30000000000L
+      def planDrained = plans.asScala.exists(_._2.contains("observed_marker"))
+      while (!(stagesDrained && planDrained) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(stagesDrained && planDrained, "listeners did not drain")
+    } finally {
+      spark.listenerManager.unregister(qel)
+      spark.sparkContext.removeSparkListener(sl)
+    }
+    (plans.asScala.toSeq.filterNot(_._2.contains("observed_marker")), stages.asScala.toSeq)
+  }
+
   test("knn query: vec_id filter is pushed into the parquet scan") {
+    distributedTail {
     val plan = SparkEntry.queries("knn_cos_top10")(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(vec_id), LessThan(vec_id,10)]")
       || plan.contains("PushedFilters: [LessThan(vec_id,10)"))
+    }
   }
 
   test("q5 star join: all three dims broadcast, no shuffle join, no cartesian") {
@@ -88,58 +130,37 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("fp16 search: decode fused into the scan — no corpus exchange below the heap tail") {
-    val plan = physical(SparkEntry.queries("knn_fp16_cos")(spark, "/root/testdata/sf0.001"))
-    // decode-and-score must be one codegen projection feeding the heap
-    // aggregate: the corpus side may never materialize decoded floats
-    // through an exchange (codes are what shuffles, k rows/query/partition)
-    assert(plan.contains("fp16_decode"), "fp16 path lost the in-projection decode")
-    assert(plan.contains("partial_top_k_by_distance"),
-      "fp16 path lost the map-side heap aggregate")
-    // the ONLY exchange may carry partial heaps (k rows/query/partition,
-    // keyed by __qid); nothing below the partial aggregate — the corpus
-    // scan + decode + distance — may shuffle. The check stops at the
-    // cache boundary: the InMemoryRelation SUBTREE is the fit-time build
-    // plan (since r21 it carries the one-time serve-parallelism spread
-    // exchange), not serve dataflow — the serve invariant is exchange-free
-    // between the partial aggregate and the InMemoryTableScan.
-    val below = plan.substring(plan.indexOf("partial_top_k_by_distance"))
-    val serveBelow = below.indexOf("InMemoryRelation") match {
-      case -1 => below
-      case i  => below.substring(0, i)
+    // the decode-and-score runs inside the cell scan's tasks: the float
+    // view's plan holds the decode, and the scan job moves no corpus
+    // bytes through a shuffle (knn_ivfsq_cos: the same over SQ8 codes)
+    Seq("knn_fp16_cos", "knn_ivfsq_cos").foreach { q =>
+      val (plans, stages) = observed(
+        SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect())
+      val scans = plans.collect { case ("cell scan", p) => p }
+      assert(scans.nonEmpty, s"$q ran no cell scan")
+      if (q == "knn_fp16_cos")
+        assert(scans.forall(_.contains("fp16_decode")), "fp16 path lost the in-scan decode")
+      val scanStages = stages.filter(_.name.contains("CellScan.scala"))
+      assert(scanStages.nonEmpty, s"$q: no cell-scan stage observed")
+      scanStages.foreach { st =>
+        val m = st.taskMetrics
+        assert(m.shuffleReadMetrics.totalBytesRead == 0 && m.shuffleReadMetrics.totalBlocksFetched == 0 &&
+          m.shuffleWriteMetrics.bytesWritten == 0 && m.shuffleWriteMetrics.recordsWritten == 0,
+          s"$q: the cell-scan stage ${st.name} moved shuffle bytes")
+      }
     }
-    assert(!serveBelow.contains("Exchange hashpartitioning"),
-      "fp16 corpus side re-grew a pre-aggregate shuffle")
-    assert(!plan.contains("Window"), "fp16 plan re-grew a Window tail")
-  }
-
-  test("window exact path: byte-estimate guard falls back to the heap aggregate") {
-    // under the default 2 GB cap the tiny fixture broadcasts the index and
-    // keeps the WindowGroupLimit plan…
-    val wplan = physical(
-      SparkEntry.queries("knn_window_cos")(spark, "/root/testdata/sf0.001"))
-    assert(wplan.contains("Window"), "window path lost its window tail")
-    // …but when the BYTE estimate exceeds the cap (row count still under
-    // the row threshold), the searcher must refuse the index broadcast and
-    // delegate to the aggregate path, which broadcasts the query side
-    spark.conf.set("graft.search.windowBroadcastByteCap", "1024")
-    try {
-      val aplan = physical(
-        SparkEntry.queries("knn_window_cos")(spark, "/root/testdata/sf0.001"))
-      assert(aplan.contains("top_k_by_distance"),
-        "byte-capped window path did not delegate to the heap aggregate")
-      assert(!aplan.contains("Window"),
-        "byte-capped window path still broadcasts the index under a Window")
-    } finally spark.conf.unset("graft.search.windowBroadcastByteCap")
   }
 
   test("PCA prefix: projection is a scalar expression, not a join/shuffle stage") {
-    val plan = physical(SparkEntry.queries("knn_pcaw_cos")(spark, "/root/testdata/sf0.001"))
-    // the kernel rides as a plan reference inside whiten_transform — a
-    // matrix-multiply JOIN shape (kernel rows as a table) would shuffle
-    assert(plan.contains("whiten_transform"), "PCA prefix lost the codegen projection")
-    assert(!plan.contains("CartesianProduct"))
-    assert(plan.contains("top_k_by_distance") || plan.contains("Window"),
-      "PCA search lost its top-k tail")
+    val (plans, _) = observed(
+      SparkEntry.queries("knn_pcaw_cos")(spark, "/root/testdata/sf0.001").collect())
+    // the query side (collected in chunks by the cell scan) projects through
+    // the kernel, which rides as a plan reference inside whiten_transform —
+    // a matrix-multiply JOIN shape (kernel rows as a table) would shuffle
+    val querySide = plans.map(_._2).filter(_.contains("__qvec"))
+    assert(querySide.nonEmpty, "no query-side plan observed")
+    assert(querySide.exists(_.contains("whiten_transform")), "PCA prefix lost the codegen projection")
+    assert(!plans.exists(_._2.contains("CartesianProduct")))
   }
 
   test("q1 aggregation: partial (map-side) aggregate before the exchange") {

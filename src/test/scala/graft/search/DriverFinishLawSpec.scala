@@ -12,13 +12,17 @@ import graft.encoders.PassthroughEncoder
 /** Law: a single-chunk cell scan finished on the driver returns exactly the
   * rows of the distributed merge → payload-join route (forced by a payload
   * broadcast cap of 0) — every output column, raw `sim_val` bits included —
-  * for every [[CellScan]] kind under cos, l2 and ip. Batches hold duplicate
-  * query ids, a null-vector query, separator-truncated items and fresh
-  * vectors; corpora hold planted duplicates (ties fall on `row_id`), and
-  * probing one or two of eight cells leaves some queries short of k hits. */
+  * for every [[CellScan]] kind under cos, l2 and ip — IVF over each storage,
+  * bare codes, and exact search as the one-cell case (Flat, `SQfp16`, and a
+  * joint-auto `LSH0` that resolves degenerate and so routes to the exact
+  * scan). Batches hold duplicate query ids, a null-vector query,
+  * separator-truncated items and fresh vectors; corpora hold planted
+  * duplicates (ties fall on `row_id`), and probing one or two of eight
+  * cells leaves some queries short of k hits. */
 class DriverFinishLawSpec extends SparkSpec {
 
-  private val kinds = Seq("IVF8", "IVF8,SQfp16", "IVF8,SQ8", "IVF8,PQ4", "PQ4", "SQ8")
+  private val kinds = Seq("IVF8", "IVF8,SQfp16", "IVF8,SQ8", "IVF8,PQ4", "PQ4", "SQ8",
+    "Flat", "SQfp16", "LSH0")
   private val cap = "graft.search.payloadBroadcastByteCap"
   private val vecType = ArrayType(FloatType, containsNull = false)
 
@@ -80,6 +84,7 @@ class DriverFinishLawSpec extends SparkSpec {
           val driver = both()
           spark.conf.set(cap, "0")
           val distributed = try both() finally spark.conf.unset(cap)
+          (kind != "LSH0" || model.lshServeExact) &&
           driver.forall(driverFinished) && !distributed.exists(driverFinished) &&
             driver.zip(distributed).forall { case (a, b) => rows(a) == rows(b) } &&
             rows(driver.head).exists(_.contains("tag"))

@@ -90,18 +90,19 @@ class PqSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") < 50)
       .select(col("vec_id").cast("long").as(SparkSearcher.QID),
         col("embedding").cast("array<float>").as(SparkSearcher.QVEC))
-    val cbs = model.fittedCodebooks.get
-    def run(chunk: Int) = PqIndex
-      .pqTopK(model.indexed, q, 5, cbs, metricName = "l2", queryChunkSize = chunk)
-      .collect().map(_.toSeq).toSet
+    // the ADC cell scan over `m`'s codes at a given chunk size
+    def adcScan(m: SearcherModel, cell: org.apache.spark.sql.Column,
+        probes: org.apache.spark.sql.Column, chunk: Int) =
+      CellScan.topK(m.indexed.select(col(SparkSearcher.ROW_ID), col(PqIndex.CODES), cell), q,
+        probes, 5, asc = true, chunk)(PqIndex.adcRows(spark, m.fittedCodebooks.get, "l2", 2.0, 8))
+        .collect().map(_.toSeq).toSet
+    def run(chunk: Int) = adcScan(model, lit(0).as(IvfIndex.CID), array(lit(0)), chunk)
     assert(run(7) === run(Int.MaxValue)) // 50 queries → 8 chunks vs 1
     val ivfpq = new SparkSearcher(new PassthroughEncoder("embedding"),
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "l2", indexParam = "IVF8,PQ8", nprobe = 4)).fit(emb)
-    def runIvf(chunk: Int) = IvfPqScorer
-      .topK(ivfpq.indexed, q, 5, ivfpq.fittedCodebooks.get, ivfpq.fittedCentroids.get,
-        nprobe = 4, metricName = "l2", queryChunkSize = chunk)
-      .collect().map(_.toSeq).toSet
+    def runIvf(chunk: Int) = adcScan(ivfpq, col(IvfIndex.CID),
+      IvfIndex.probesCol(ivfpq.fittedCentroids.get, 4), chunk)
     assert(runIvf(7) === runIvf(Int.MaxValue))
     // NSW graph path: the multi-chunk eager shape must equal the lazy
     // single-chunk shape (exhaustive ef -> exact -> set equality)

@@ -129,7 +129,7 @@ class SearcherSpec extends SparkSpec {
         org.apache.spark.sql.functions.array(col("x"), col("y")).as("embedding"))
     val model = new SparkSearcher(new graft.encoders.PassthroughEncoder("embedding"),
       SearcherParams(itemCol = Some("text"), idCol = Some("vid"),
-        docFeatureSep = Some("\"\\"), nprobe = 9, exactPath = "window"))
+        docFeatureSep = Some("\"\\"), nprobe = 9))
       .fit(items)
     val dir = java.nio.file.Files.createTempDirectory("graft-esc").toString
     model.save(dir)
@@ -137,7 +137,6 @@ class SearcherSpec extends SparkSpec {
       new graft.encoders.PassthroughEncoder("embedding"))
     assert(loaded.searcher.params.docFeatureSep === Some("\"\\"))
     assert(loaded.searcher.params.nprobe === 9)
-    assert(loaded.searcher.params.exactPath === "window")
     val res = loaded.search(items, 1, keepRankNo = false, queryIdCol = Some("vid"))
     // sep-truncated matched item: everything before the first quote-backslash
     assert(res.collect().forall(r => !r.getAs[String]("sim_item").contains("\"")))
@@ -217,10 +216,14 @@ class SearcherSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-oldidx").toString
     val model = embModel()
     model.save(dir)
-    // replace the Spark-written params.json DIRECTORY with one plain file
-    // holding only the fields an older writer knew — efSearch / hnswGraphs /
-    // exactPath absent entirely (the pre-r5 shape the tolerant read serves)
     val pdir = java.nio.file.Paths.get(s"$dir/params.json")
+    // the current writer no longer records the retired exactPath knob
+    val written = java.nio.file.Files.list(pdir)
+      .filter(_.getFileName.toString.startsWith("part-")).findFirst().get()
+    assert(!new String(java.nio.file.Files.readAllBytes(written), "UTF-8").contains("exactPath"))
+    // replace the Spark-written params.json DIRECTORY with one plain file
+    // holding only the fields an older writer knew — efSearch / hnswGraphs
+    // absent entirely (the pre-r5 shape the tolerant read serves)
     def rm(p: java.nio.file.Path): Unit = {
       if (java.nio.file.Files.isDirectory(p)) {
         val it = java.nio.file.Files.list(p).iterator()
@@ -236,7 +239,6 @@ class SearcherSpec extends SparkSpec {
     val dflt = SearcherParams()
     assert(loaded.searcher.params.efSearch === dflt.efSearch)
     assert(loaded.searcher.params.hnswGraphs === dflt.hnswGraphs)
-    assert(loaded.searcher.params.exactPath === dflt.exactPath)
     assert(loaded.searcher.params.nprobe === 4)
     // r20 fields absent in an old save: build/policy knobs default, the
     // fitted-layout field reads as "unknown" (pre-r20 heuristic applies)
@@ -244,9 +246,21 @@ class SearcherSpec extends SparkSpec {
     assert(loaded.searcher.params.autoCompactAtSegmentRatio ===
       dflt.autoCompactAtSegmentRatio)
     assert(loaded.fittedGraphs === None)
-    val res = loaded.search(sf("embeddings").filter(col("vec_id") < 2),
-      topK = 2, keepRankNo = true, queryIdCol = Some("vec_id"))
-    assert(res.count() === 4)
+    def rows(m: SearcherModel) = m.search(sf("embeddings").filter(col("vec_id") < 2),
+      topK = 2, keepRankNo = true, queryIdCol = Some("vec_id")).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("rank_no"), String.valueOf(r.getAs[Any]("sim_item")),
+        java.lang.Float.floatToRawIntBits(r.getAs[Float]("sim_val")))).sorted.toSeq
+    val want = rows(loaded)
+    assert(want.length === 4)
+    // a save that still carries the retired exactPath knob (either of its
+    // two exact-search shapes) loads and serves the identical rows
+    for (shape <- Seq("window", "aggregate")) {
+      java.nio.file.Files.write(pdir, old.replace("}", s""","exactPath":"$shape"}""").getBytes("UTF-8"))
+      spark.catalog.refreshByPath(s"$dir/params.json")
+      val withKnob = SparkSearcher.load(spark, dir)
+      assert(rows(withKnob) === want, shape)
+      withKnob.unpersist()
+    }
     // result-DEFINING fields are never defaulted: drop `measurement` and
     // the load must fail fast, not silently serve cosine
     val noMeasurement = old.replace(""""measurement":"cos",""", "")
@@ -294,18 +308,6 @@ class SearcherSpec extends SparkSpec {
     assert(IvfIndex.trainTarget(65536) / 65536 >= 39L)
     // the driver-side collect stays bounded regardless of nlist
     assert(IvfIndex.trainTarget(1000000) === 4000000L)
-  }
-
-  test("window exact path guard: row threshold AND byte estimate") {
-    // the fixture shapes fit comfortably
-    assert(SparkSearcher.windowPathFits(60000L, 16, 2000000L))
-    // over the row threshold: aggregate path regardless of width
-    assert(!SparkSearcher.windowPathFits(3000000L, 16, 2000000L))
-    // UNDER the row threshold but wide: 1.9M rows of dim=4096 is ~31 GB —
-    // past Spark's 8 GB broadcast hard limit, must refuse
-    assert(!SparkSearcher.windowPathFits(1900000L, 4096, 2000000L))
-    // custom cap is honored
-    assert(!SparkSearcher.windowPathFits(100L, 16, 2000000L, byteCap = 1024L))
   }
 
   test("auto-nprobe (nprobe=0): fraction formula, and the resolved search ≡ its pinned twin") {
@@ -436,22 +438,25 @@ class SearcherSpec extends SparkSpec {
 
   test("payload broadcast is byte-guarded: a tiny cap falls back to the shuffle join, same results") {
     val emb = sf("embeddings")
-    val model = embModel()
     val q = emb.filter(col("vec_id") < 5)
-    def run() = model.search(q, 3, keepRankNo = true, queryIdCol = Some("vec_id"))
+    val cap = "graft.search.payloadBroadcastByteCap"
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "rank_no", "sim_item", "label")
         .collect().map(_.toSeq).toSet
-    val want = rows(run())
     // isolate the ENGINE's hint from Spark's own byte-aware auto
     // broadcast (10 MB default — at spec scale it would broadcast the
     // payload side with or without the hint)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val hnsw = new SparkSearcher(new PassthroughEncoder("embedding"),
+      SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
+        indexParam = "HNSW8")).fit(emb)
+    val flat = embModel()
     try {
       // assert on the PAYLOAD join specifically (the join keyed on
       // row_id), not on whole-plan substrings — the search plan carries
       // other joins (top-k agg paths) whose physical pick is Spark's
       // business and shifts across versions
+      import org.apache.spark.sql.execution.LocalTableScanExec
       import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
         ShuffledHashJoinExec, SortMergeJoinExec}
       def rowIdJoins(df: org.apache.spark.sql.DataFrame) =
@@ -466,27 +471,35 @@ class SearcherSpec extends SparkSpec {
             if j.leftKeys.exists(_.references.exists(_.name == "row_id")) =>
             ("bhj", j)
         }.map(_._1)
-      // under the default cap the engine FORCES the broadcast (the
-      // row threshold admits the corpus, cached stats sit under 2 GB)
-      val forced = run()
+      // HNSW joins the payload onto its hits: under the default cap the
+      // engine FORCES the broadcast (the row threshold admits the corpus,
+      // cached stats sit under 2 GB)
+      def runHnsw() = hnsw.search(q, 3, keepRankNo = true, queryIdCol = Some("vec_id"))
+      val forced = runHnsw()
       val forcedJoins = rowIdJoins(forced)
       assert(forcedJoins.nonEmpty && forcedJoins.forall(_ == "bhj"),
         s"forced payload join must broadcast, saw: $forcedJoins")
+      // Flat under the same guard carries the payload to the cell scan's
+      // driver finish: a local relation, no payload join at all
+      def runFlat() = flat.search(q, 3, keepRankNo = true, queryIdCol = Some("vec_id"))
+      val local = runFlat()
+      assert(local.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+        local.queryExecution.executedPlan.toString)
       // a 1-byte cap rejects the force by BYTES even though the row
       // check passes — the scale hole this guards: 2M rows × 10 KB docs
       // is a ~20 GB broadcast the row threshold alone waves through
-      spark.conf.set("graft.search.payloadBroadcastByteCap", "1")
-      val capped = run()
-      val cappedJoins = rowIdJoins(capped)
-      assert(cappedJoins.exists(_ != "bhj"),
-        s"byte-capped payload join must not broadcast, saw: $cappedJoins")
-      assert(rows(capped) === want)
-      assert(rows(forced) === want)
+      spark.conf.set(cap, "1")
+      for ((name, before, after) <- Seq(("HNSW8", forced, runHnsw()), ("Flat", local, runFlat()))) {
+        val cappedJoins = rowIdJoins(after)
+        assert(cappedJoins.nonEmpty && cappedJoins.forall(_ != "bhj"),
+          s"$name: byte-capped payload join must shuffle, saw: $cappedJoins")
+        assert(rows(after) === rows(before), name)
+      }
     } finally {
-      spark.conf.unset("graft.search.payloadBroadcastByteCap")
+      spark.conf.unset(cap)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      hnsw.unpersist(); flat.unpersist()
     }
-    model.unpersist()
   }
 
   test("degenerate-LSH exact fallback: crossover rule, route, results, persistence") {
@@ -1015,23 +1028,6 @@ class SearcherSpec extends SparkSpec {
     assert(recall >= 0.9, s"IVF recall $recall")
   }
 
-  test("big-index aggregate top-k path ≡ window path (incl. tie-break)") {
-    for (m <- Seq("cos", "l2")) {
-      val windowModel = new SparkSearcher(new PassthroughEncoder("embedding"),
-        SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
-          measurement = m, exactPath = "window"))
-        .fit(sf("embeddings"))
-      val aggModel = embModel(m) // default = aggregate path
-      val q = sf("embeddings").filter(col("vec_id") < 20)
-      def rows(mm: SearcherModel) = mm.search(q, 7, keepRankNo = true,
-        queryIdCol = Some("vec_id"))
-        .orderBy("vec_id", "rank_no")
-        .select("vec_id", "rank_no", "sim_item", "sim_val").collect()
-      assert(rows(aggModel) === rows(windowModel), s"metric $m")
-      aggModel.unpersist(); windowModel.unpersist()
-    }
-  }
-
   test("batched encoder: grouped mapPartitions path (encoder_utils.py:48-75)") {
     val enc = new BatchedEncoder(
       texts => texts.map(t => Array(t.length.toFloat, 1f)), batchSize = 4, dimension = 2)
@@ -1269,7 +1265,6 @@ class SearcherSpec extends SparkSpec {
 
   test("SearcherParams rejects a bad setting at construction with a clear message") {
     def msg(p: => SearcherParams) = intercept[IllegalArgumentException](p).getMessage
-    assert(msg(SearcherParams(exactPath = "windowed")).contains("exactPath"))
     assert(msg(SearcherParams(nprobe = -1)).contains("nprobe"))
     assert(msg(SearcherParams(efSearch = -1)).contains("efSearch"))
     assert(msg(SearcherParams(hnswGraphs = -2)).contains("hnswGraphs"))
@@ -1280,7 +1275,7 @@ class SearcherSpec extends SparkSpec {
       .contains("autoCompactAtSegmentRatio"))
     assert(msg(SearcherParams(lshBatchHint = 0)).contains("lshBatchHint"))
     // the zero autos and the defaults stay valid
-    SearcherParams(nprobe = 0, efSearch = 0, exactPath = "window", lshBatchHint = 1)
+    SearcherParams(nprobe = 0, efSearch = 0, lshBatchHint = 1)
   }
 
   test("load requires exactly one params row: a second part file fails with a clear message") {
