@@ -13,31 +13,90 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
 import SparkSearcher.{DIST, QID, QVEC, RANK, ROW_ID, SourceItem}
 
 /**
- * The one per-partition scan behind every top-k that scores stored rows:
- * IVF over floats, fp16 or PQ/SQ codes, and, as the one-cell case (every
- * row in cell 0, every query probing it), exact search over floats or
- * fp16 — Flat, `SQfp16`, a PCA prefix over Flat, LSH's exact route — and
- * bare PQ/SQ/OPQ codes. It is the shape faiss's `index.search` runs natively
- * (faiss_searcher.py:161-169): the driver collects a bounded chunk of
- * queries with their probe lists, buckets them by cell and broadcasts the
- * chunk; each index partition is read as `InternalRow`s (no per-element
- * boxing), each stored row is scored only against the queries probing its
- * cell into one bounded heap per query, and each task emits ≤ k hits per
- * query. No (query, row) pair is ever a Spark row.
+ * The one per-partition scan behind every scan-shaped top-k: IVF over
+ * floats, fp16 or PQ/SQ codes; as the one-cell case (every row in cell 0,
+ * every query probing it), exact search over floats or fp16 — Flat,
+ * `SQfp16`, a PCA prefix over Flat, LSH's exact route — and bare PQ/SQ/OPQ
+ * codes; and HNSW, whose scorer beam-searches each partition's graphs
+ * ([[NswGraph.scorer]]). It is the shape faiss's `index.search` runs
+ * natively (faiss_searcher.py:161-169): the driver collects a bounded chunk
+ * of queries with their probe lists, buckets them by cell and broadcasts
+ * the chunk; each index partition is read as `InternalRow`s (no
+ * per-element boxing) by one [[PartitionScorer]], which scores stored rows
+ * only against the queries probing their cell into one bounded heap per
+ * query, and each task emits ≤ k hits per query. No (query, row) pair is
+ * ever a Spark row.
  *
  * Two finishes. A batch that fits one chunk and carries its result
  * columns is finished on the driver, like faiss's eager `search`: one job,
  * whose tasks return their hits with the carried columns of each hit row,
  * merged per query id as they arrive into the result as a local relation —
  * so the caller's collect runs no job. Any other batch goes through the
- * shared [[TopKAggregate.mergeHits]] tail.
+ * shared [[TopKAggregate.mergeHits]] tail: lazily for one chunk, and at
+ * call time, one chunk at a time with each chunk's hits pinned, for
+ * several ([[topK]]).
  */
 object CellScan {
-  /** Scores one stored row `(row id, payload, cell)` against some of a
-    * chunk's queries; built once per partition from the chunk's vectors. */
-  trait RowScorer {
+  /** Scores one partition's stored rows `(row id, payload, cell, carried…)`
+    * against a chunk's queries; built once per partition from the chunk's
+    * vectors. */
+  trait PartitionScorer {
+    /** Insert each row's distance to every query row probing its cell
+      * (`byCell(cell)`, null: unprobed) into that query's heap; `admit` (if
+      * not null) sees each row that some heap took in. */
+    def scan(rows: Iterator[InternalRow], byCell: Array[Array[Int]], heaps: Array[TopKBuffer],
+        admit: InternalRow => Unit): Unit
+  }
+
+  /** A scorer that streams the partition one row at a time. */
+  trait RowScorer extends PartitionScorer {
     /** Insert the row's distance to each query `qis(j)` into `heaps(qis(j))`. */
     def score(row: InternalRow, qis: Array[Int], heaps: Array[TopKBuffer]): Unit
+
+    final def scan(rows: Iterator[InternalRow], byCell: Array[Array[Int]], heaps: Array[TopKBuffer],
+        admit: InternalRow => Unit): Unit = {
+      def admitted(qis: Array[Int]): Long = {
+        var n = 0L; var j = 0
+        while (j < qis.length) { n += heaps(qis(j)).admitted; j += 1 }
+        n
+      }
+      rows.foreach { r =>
+        val qis = byCell(r.getInt(2))
+        if (admit == null) score(r, qis, heaps)
+        else {
+          val before = admitted(qis)
+          score(r, qis, heaps)
+          if (admitted(qis) != before) admit(r)
+        }
+      }
+    }
+  }
+
+  /** Queries per broadcast chunk: bounds DRIVER memory (one chunk of
+    * vectors collected at a time, see [[topK]]) and EXECUTOR table memory
+    * (chunk·m·256 doubles of ADC tables per partition) regardless of
+    * query-batch size — a corpus self-search does not OOM the driver. Each
+    * chunk costs one pass over the cached index, the standard batching
+    * trade. */
+  val DefaultQueryChunk = 4096
+
+  private[search] val hitSchema = StructType(Seq(
+    StructField(QID, LongType, nullable = false),
+    StructField(ROW_ID, LongType, nullable = false),
+    StructField(DIST, DoubleType, nullable = false)))
+
+  /** The query batch as bounded chunks, each collected when called: one
+    * collect of up to `chunkSize + 1` rows serves a batch that fits one
+    * chunk; only a larger batch pays a count and a deterministic hash
+    * split on qid, each chunk collected separately. */
+  private[search] def queryChunks(queries: DataFrame, chunkSize: Int): Seq[() => Array[Row]] = {
+    val head = queries.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect()
+    if (head.length <= chunkSize) Seq(() => head)
+    else {
+      val nChunks = math.ceil(queries.count().toDouble / chunkSize).toInt
+      (0 until nChunks).map(ci => () =>
+        queries.filter(pmod(xxhash64(col(QID)), lit(nChunks)) === ci).collect())
+    }
   }
 
   /** One query chunk as the scan reads it: each scored query row's id and
@@ -52,41 +111,56 @@ object CellScan {
 
   /** Top-k hits `(QID, ROW_ID, DIST, RANK)`. `rows` is `(ROW_ID, payload,
     * CID, carried…)`; `probes` is each `(QID, QVEC)` query's `array<int>`
-    * of cells. Queries are collected [[PqIndex.queryChunks]] at a time.
+    * of cells. Queries are collected [[queryChunks]] at a time.
     *
     * With carried columns and a batch of one chunk, the scan runs here and
     * returns a local relation `(QID, SourceItem, ROW_ID, DIST, RANK,
     * carried…)`: each query's hits, once per query row of its id, with that
     * row's `SourceItem` (so `queries` must hold it). Otherwise the carried
-    * columns are not read. */
+    * columns are not read, and a batch of one chunk returns a lazy plan.
+    * A batch of several chunks runs here too, one chunk at a time: each
+    * chunk is collected, scanned, merged and pinned (`localCheckpoint`),
+    * and its broadcast released, before the next is collected — so the
+    * driver and the executors hold one chunk of query vectors at a time.
+    * The chunks are disjoint query sets, so the union of their merges is
+    * exact. The pinned hits are lineage-free (the repo-wide
+    * [[graft.util.CacheDiscipline]] contract: a lost executor fails the
+    * caller's action rather than recomputing); a long-lived session frees
+    * them with `CacheDiscipline.release(result)`. */
   def topK(rows: DataFrame, queries: DataFrame, probes: Column, k: Int, asc: Boolean,
-      chunkSize: Int)(scorer: Array[Array[Float]] => RowScorer): DataFrame = {
+      chunkSize: Int)(scorer: Array[Array[Float]] => PartitionScorer): DataFrame = {
     val spark = rows.sparkSession
     val carried = rows.columns.length > 3
-    val chunks = PqIndex.queryChunks(queries.select(Seq(col(QID).cast(LongType).as(QID),
+    val chunks = queryChunks(queries.select(Seq(col(QID).cast(LongType).as(QID),
       col(QVEC), probes) ++ Option.when(carried)(col(SourceItem)): _*), chunkSize)
     if (carried && chunks.length == 1)
       finishOnDriver(rows, chunks.head(), queries.schema(SourceItem), k, asc, scorer)
     else {
-      val partials = chunks.flatMap { chunk =>
+      val merged = chunks.flatMap { chunk =>
         chunkOf(chunk()).map { c =>
           val cB = spark.sparkContext.broadcast(c)
           val scanned = probed(rows.select(rows.columns.take(3).map(col): _*), c)
-          spark.createDataFrame(scanned.queryExecution.toRdd.mapPartitions { it =>
-            val c = cB.value
-            val heaps = c.qids.map(_ => new TopKBuffer(k, asc))
-            scan(it, c, heaps, scorer(c.qvs))(null)
-            c.qids.indices.iterator.flatMap(qi =>
-              heaps(qi).sorted.iterator.map { case (id, d) => Row(c.qids(qi), id, d) })
-          }, PqIndex.hitSchema)
+          val hits = TopKAggregate.mergeHits(spark.createDataFrame(
+            scanned.queryExecution.toRdd.mapPartitions { it =>
+              val c = cB.value
+              val heaps = c.qids.map(_ => new TopKBuffer(k, asc))
+              scorer(c.qvs).scan(it, c.byCell, heaps, null)
+              c.qids.indices.iterator.flatMap(qi =>
+                heaps(qi).sorted.iterator.map { case (id, d) => Row(c.qids(qi), id, d) })
+            }, hitSchema), k, asc)
+          if (chunks.length == 1) hits
+          else {
+            val pinned = hits.localCheckpoint(eager = true)
+            cB.unpersist(blocking = false)
+            pinned
+          }
         }
       }
       // empty query batch (or only null vectors): the empty hit shape
-      if (partials.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], PqIndex.hitSchema)
+      if (merged.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], hitSchema)
           .withColumn(RANK, lit(1).cast("int"))
-      // chunks are disjoint query sets, so union THEN one merge is exact
-      else TopKAggregate.mergeHits(partials.reduce(_ union _), k, asc)
+      else merged.reduce(_ union _)
     }
   }
 
@@ -109,26 +183,6 @@ object CellScan {
   private def probed(rows: DataFrame, c: Chunk): DataFrame =
     rows.filter(get(lit(c.byCell.map(_ != null)), col(IvfIndex.CID)))
 
-  /** Scores a partition's rows into `heaps`, one per query row; `admit`
-    * (if not null) sees each row that some heap took in. */
-  private def scan(it: Iterator[InternalRow], c: Chunk, heaps: Array[TopKBuffer], s: RowScorer)(
-      admit: InternalRow => Unit): Unit = {
-    def admitted(qis: Array[Int]): Long = {
-      var n = 0L; var j = 0
-      while (j < qis.length) { n += heaps(qis(j)).admitted; j += 1 }
-      n
-    }
-    it.foreach { r =>
-      val qis = c.byCell(r.getInt(2))
-      if (admit == null) s.score(r, qis, heaps)
-      else {
-        val before = admitted(qis)
-        s.score(r, qis, heaps)
-        if (admitted(qis) != before) admit(r)
-      }
-    }
-  }
-
   /** Keep only the rows some heap still holds. */
   private def retain(rows: mutable.LongMap[UnsafeRow], heaps: Iterable[TopKBuffer]): Unit = {
     val live = mutable.LongMap.empty[Unit]
@@ -142,7 +196,7 @@ object CellScan {
     * finish — at most q·k hits and their rows plus one task's result are
     * held, never more than the payload broadcast the other finish builds. */
   private def finishOnDriver(rows: DataFrame, qs: Array[Row], source: StructField, k: Int,
-      asc: Boolean, scorer: Array[Array[Float]] => RowScorer): DataFrame = {
+      asc: Boolean, scorer: Array[Array[Float]] => PartitionScorer): DataFrame = {
     val spark = rows.sparkSession
     val kept = StructType(rows.schema.head +: rows.schema.drop(3))
     val keptAt = (0 +: (3 until rows.schema.length)).zip(kept).map { case (i, f) =>
@@ -156,10 +210,10 @@ object CellScan {
         val carry = UnsafeProjection.create(keptAt)
         val found = mutable.LongMap.empty[UnsafeRow]
         val heaps = c.qids.map(_ => new TopKBuffer(k, asc))
-        scan(it, c, heaps, scorer(c.qvs)) { r =>
+        scorer(c.qvs).scan(it, c.byCell, heaps, r => {
           found(r.getLong(0)) = carry(r).copy()
           if (found.size > 2L * c.qids.length * k) retain(found, heaps)
-        }
+        })
         retain(found, heaps)
         new TaskHits(heaps.map(_.size), heaps.flatMap(h => h.ids.take(h.size)),
           heaps.flatMap(h => h.dists.take(h.size)), found.values.toArray)

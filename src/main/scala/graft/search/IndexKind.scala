@@ -104,14 +104,26 @@ final case class HnswGraphs(m: Int, fittedGraphs: Option[Int] = None) extends La
   override def atRest(read: DataFrame): DataFrame = read.repartition(col(NswGraph.GPART))
   override def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout =
     copy(fittedGraphs = fittedGraphs)
-  def topK(model: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame =
-    model.withSource(NswGraph.topK(model.indexed, q, k, model.effectiveEf,
-      model.searcher.metric.name, model.searcher.params.metricArg), q)
+  // the one-cell cell scan, with the graph scorer in place of a row scorer
+  def topK(model: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame = {
+    val (metric, params) = (model.searcher.metric, model.searcher.params)
+    model.withSource(CellScan.topK(HnswGraphs.scanRows(model.indexed, carry), q, array(lit(0)), k,
+      !metric.higherIsCloser, CellScan.DefaultQueryChunk)(
+      NswGraph.scorer(k, model.effectiveEf, metric.name, params.metricArg)), q)
+  }
 }
 
 object HnswGraphs {
   def numGraphs(p: SearcherParams, spark: SparkSession): Int =
     math.max(1, if (p.hnswGraphs > 0) p.hnswGraphs else spark.sparkContext.defaultParallelism)
+
+  /** The graph scorer's rows ([[NswGraph.scorer]]): `(ROW_ID, struct(VEC,
+    * NBRS, GPART), cell 0, carry…)`, each graph one run of its partition,
+    * sorted by (graph, row_id) over a spillable sort. */
+  private[search] def scanRows(indexed: DataFrame, carry: Seq[String]): DataFrame =
+    indexed.sortWithinPartitions(NswGraph.GPART, ROW_ID).select(Seq(col(ROW_ID),
+      struct(col(VEC), col(NswGraph.NBRS), col(NswGraph.GPART).cast("int")).as(NswGraph.GRAPH),
+      lit(0).as(IvfIndex.CID)) ++ carry.map(col): _*)
 }
 
 /** Sign-random-projection LSH: `tables` tables of `bits` bits; a query

@@ -3,6 +3,7 @@ package graft.search
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -21,9 +22,11 @@ import graft.functions.VectorKernels
  * one shuffle per hop. Instead the corpus is split into `numGraphs`
  * deterministic groups (`gpart = row_id mod numGraphs`), each group gets its
  * own NSW graph built locally inside one task (Malkov et al. 2014; HNSW's
- * level-0 layer), and a query beam-searches EVERY graph in parallel —
- * per-graph top-k candidates then merge through the same bounded-heap
- * aggregate as exact search. This is the Lucene/Elasticsearch shape (one
+ * level-0 layer), and a query beam-searches EVERY graph in parallel. The
+ * search is a [[CellScan]] whose [[scorer]] beam-searches each partition's
+ * graphs into the scan's per-query heaps, so HNSW shares the query
+ * chunking, both finishes and the merge with every other kind, exact
+ * search included. This is the Lucene/Elasticsearch shape (one
  * HNSW per segment/shard, merge across), and it scales the right way: graph
  * size is corpus/numGraphs (bounded per executor), search fan-out is flat
  * per graph, and no traversal ever crosses a partition.
@@ -38,8 +41,8 @@ import graft.functions.VectorKernels
  * with an unbounded result set would visit every reachable node anyway, and
  * the scan also covers nodes a pruned graph might disconnect). The
  * `knn_hnsw` correctness gate runs in this regime, proving the whole
- * pipeline (grouping, kernels, merge, payload join, tie-breaks) against the
- * exact-SQL oracle; traversal recall is spec-gated separately.
+ * pipeline (grouping, kernels, merge, tie-breaks) against the exact-SQL
+ * oracle; traversal recall is spec-gated separately.
  *
  * Everything is deterministic: insertion order is ascending `row_id`, all
  * candidate orderings tie-break on smaller local index, and the kernels are
@@ -48,6 +51,8 @@ import graft.functions.VectorKernels
 object NswGraph {
   private[search] val GPART = "__gpart"
   private[search] val NBRS = "__nbrs"
+  /** A scanned graph row's `struct(VEC, NBRS, GPART)` ([[scorer]]). */
+  private[search] val GRAPH = "__graph"
 
   /** JVM-side full-vector kernel for `metricName` — the same statics the
     * codegen distance expressions call (bit parity with the exact path);
@@ -197,139 +202,61 @@ object NswGraph {
   }
 
   /**
-   * Top-k over all graphs: broadcast the query batch in bounded chunks
-   * (same budget discipline as [[CellScan.topK]]), beam-search every
-   * locally-present graph per query, keep a per-query bounded heap per
-   * partition, merge globally with the shared heap aggregate. When
-   * `efSearch ≥` a group's size that group is scanned exhaustively (exact
-   * by construction — see the object doc).
-   *
-   * Chunk hygiene: the single-chunk case (≤ [[PqIndex.DefaultQueryChunk]]
-   * queries — the overwhelmingly common shape) stays a fully LAZY plan:
-   * nothing is pinned, the one query broadcast is reclaimed by the
-   * ContextCleaner when the plan is garbage-collected, and repeated
-   * search calls in a long session accumulate no block-manager state.
-   * Multi-chunk batches execute EAGERLY, one action per chunk, each
-   * merged to its final ≤ chunk·k rows and pinned (localCheckpoint)
-   * before the next chunk starts — so at most ONE chunk's query
-   * broadcast is resident at a time instead of all of them until the
-   * caller's terminal action. The checkpoint truncates lineage (the
-   * repo-wide [[graft.util.CacheDiscipline]] contract): if an executor
-   * holding pinned chunk blocks dies before the caller's terminal
-   * action, the query fails rather than recomputes; `unpersist` (not
-   * `destroy`) keeps the TorrentBroadcast driver copy valid for any
-   * in-flight task. Long-lived sessions issuing huge multi-chunk
-   * batches release the pinned blocks with
-   * `CacheDiscipline.release(result)` when done.
-   * Partition memory: graphs stream one GPART-run at a time over a
-   * spillable `sortWithinPartitions`, never the whole partition
-   * materialized at once (the previous `it.toArray` held every
-   * co-located graph's rows on-heap simultaneously).
+   * The [[CellScan]] scorer over graph rows `(ROW_ID, struct(VEC, NBRS,
+   * GPART), cell, carried…)`, sorted by (GPART, ROW_ID) within partitions
+   * and all in cell 0. Graph runs stream one at a time over the spillable
+   * sort, never the whole partition at once: each run's rows are copied
+   * (the input iterator reuses its rows), every query beam-searches the run
+   * and inserts its top `min(k, found)` hits — or, when `ef ≥` the run's
+   * size, scores every row of it (exact by construction, see the object
+   * doc). `admit` sees each row whose insert a heap took in.
    */
-  def topK(indexed: DataFrame, queries: DataFrame, topK: Int, efSearch: Int,
-      metricName: String, metricArg: Double,
-      queryChunkSize: Int = PqIndex.DefaultQueryChunk): DataFrame = {
-    import SparkSearcher.{QID, QVEC, ROW_ID, DIST, RANK}
-    val spark = indexed.sparkSession
-    val enc: org.apache.spark.sql.Encoder[Row] = RowEncoder.encoderFor(PqIndex.hitSchema)
-    val hic = higherIsCloser(metricName)
-    val asc = !hic
+  def scorer(k: Int, efSearch: Int, metricName: String, metricArg: Double)
+      : Array[Array[Float]] => CellScan.PartitionScorer = {
     val dist = kernel(metricName, metricArg)
-    val k = topK
-    val ef = math.max(efSearch, topK)
-    // sorted by (graph, row_id) within partitions: group-runs stream in
-    // order (no per-group sort, no full-partition buffer) and the sort
-    // spills instead of OOMing when many graphs share a partition
-    val slim = indexed.select(col(ROW_ID), col(SparkSearcher.VEC),
-      col(NBRS), col(GPART).cast("int").as(GPART))
-      .sortWithinPartitions(GPART, ROW_ID)
-    val chunks = PqIndex.queryChunks(
-      queries.select(col(QID).cast(LongType).as(QID), col(QVEC)), queryChunkSize)
-    val single = chunks.lengthCompare(1) == 0
-    val chunkResults = chunks.flatMap { chunk =>
-      val qRows = chunk()
-        .map(r => (r.getLong(0),
-          UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray): ArrayData))
-      if (qRows.isEmpty) None else Some {
-        val qB = spark.sparkContext.broadcast(qRows)
-        val partials = slim.mapPartitions { it =>
-          val qs = qB.value
-          val heaps = qs.map(_ => new TopKBuffer(k, asc))
-          val buffered = it.buffered
-          // one graph run at a time (input sorted by GPART, then ROW_ID)
-          while (buffered.hasNext) {
-            val gid = buffered.head.getInt(3)
-            val idBuf = new mutable.ArrayBuffer[Long]
-            val vecBuf = new mutable.ArrayBuffer[ArrayData]
-            val nbrBuf = new mutable.ArrayBuffer[scala.collection.Seq[Long]]
-            while (buffered.hasNext && buffered.head.getInt(3) == gid) {
-              val r = buffered.next()
-              idBuf += r.getLong(0)
-              vecBuf += UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray)
-              nbrBuf += r.getSeq[Long](2)
-            }
-            val n = idBuf.length
-            val ids = idBuf.toArray
-            val vecs = vecBuf.toArray
-            if (ef >= n) {
-              // exhaustive scan of the group: exact
-              var qi = 0
-              while (qi < qs.length) {
-                val qv = qs(qi)._2
-                var j = 0
-                while (j < n) {
-                  heaps(qi).insert(dist(qv, vecs(j)), ids(j)); j += 1
-                }
-                qi += 1
-              }
-            } else {
-              // id→local-idx map to rebuild adjacency (neighbors referencing
-              // rows not in this group — impossible by construction, but a
-              // hand-edited saved index degrades to a lost edge, not a crash)
-              val idToIdx = new java.util.HashMap[Long, Integer](n * 2)
-              var j = 0
-              while (j < n) { idToIdx.put(ids(j), j); j += 1 }
-              val adj: Array[Array[Int]] = nbrBuf.iterator.map { ns =>
-                val out = new mutable.ArrayBuffer[Int](ns.length)
-                ns.foreach { x =>
-                  val li = idToIdx.get(x)
-                  if (li != null) out += li.intValue()
-                }
-                out.toArray
-              }.toArray
-              var qi = 0
-              while (qi < qs.length) {
-                val found = beam(qs(qi)._2, vecs, adj(_), n, ef, dist, hic)
-                var t = 0
-                val lim = math.min(k, found.length)
-                while (t < lim) {
-                  heaps(qi).insert(found(t)._2, ids(found(t)._1)); t += 1
-                }
-                qi += 1
-              }
+    val hic = higherIsCloser(metricName)
+    val ef = math.max(efSearch, k)
+    qvs => {
+      val qs = qvs.map(v => UnsafeArrayData.fromPrimitiveArray(v): ArrayData)
+      (rows, byCell, heaps, admit) => {
+        val qis = byCell(0)
+        val buffered = rows.buffered
+        def graph(r: InternalRow): InternalRow = r.getStruct(1, 3)
+        while (buffered.hasNext) {
+          val gid = graph(buffered.head).getInt(2)
+          val run = mutable.ArrayBuffer.empty[InternalRow]
+          while (buffered.hasNext && graph(buffered.head).getInt(2) == gid)
+            run += buffered.next().copy()
+          val n = run.length
+          val ids = run.map(_.getLong(0)).toArray
+          val vecs = run.map(graph(_).getArray(0)).toArray
+          def insert(qi: Int, d: Double, j: Int): Unit = {
+            val before = heaps(qi).admitted
+            heaps(qi).insert(d, ids(j))
+            if (admit != null && heaps(qi).admitted != before) admit(run(j))
+          }
+          if (ef >= n) qis.foreach { qi =>
+            // exhaustive scan of the graph: exact
+            var j = 0
+            while (j < n) { insert(qi, dist(qs(qi), vecs(j)), j); j += 1 }
+          } else {
+            // id→local-idx map to rebuild adjacency (neighbors referencing
+            // rows not in this graph — impossible by construction, but a
+            // hand-edited saved index degrades to a lost edge, not a crash)
+            val idToIdx = new java.util.HashMap[Long, Integer](n * 2)
+            var j = 0
+            while (j < n) { idToIdx.put(ids(j), j); j += 1 }
+            val adj: Array[Array[Int]] = run.iterator.map { r =>
+              graph(r).getArray(1).toLongArray().flatMap(x => Option(idToIdx.get(x)).map(_.intValue()))
+            }.toArray
+            qis.foreach { qi =>
+              val found = beam(qs(qi), vecs, adj(_), n, ef, dist, hic)
+              var t = 0
+              while (t < math.min(k, found.length)) { insert(qi, found(t)._2, found(t)._1); t += 1 }
             }
           }
-          qs.iterator.zipWithIndex.flatMap { case ((qid, _), qi) =>
-            heaps(qi).sorted.iterator.map { case (id, d) => Row(qid, id, d) }
-          }
-        }(enc)
-        // chunks are DISJOINT query sets: per-chunk merge then union is
-        // exactly the single global merge. Single chunk → stay lazy (no
-        // pinning, no leak per call); multi-chunk → eager checkpoint
-        // executes the chunk now (result ≤ chunk·k rows) and the chunk's
-        // broadcast executor copies drop before the next chunk broadcasts.
-        val merged = TopKAggregate.mergeHits(partials, topK, asc)
-        if (single) merged
-        else {
-          val pinned = merged.localCheckpoint(true)
-          qB.unpersist(blocking = false)
-          pinned
         }
       }
     }
-    if (chunkResults.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], PqIndex.hitSchema)
-        .withColumn(RANK, lit(1).cast("int"))
-    chunkResults.reduce(_ union _)
   }
 }

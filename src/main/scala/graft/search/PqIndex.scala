@@ -1,12 +1,12 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.GraftSql.{column, expression}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StructField, StructType, DoubleType}
+import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /**
  * Product quantization — the faiss `PQm` factory path
@@ -220,33 +220,6 @@ object PqIndex {
       s += 1
     }
     new AdcScorer(t1, t2, isMax, m, nbits)
-  }
-
-  /** Queries per broadcast chunk: bounds DRIVER memory (one chunk of
-    * vectors collected at a time) and EXECUTOR table memory (chunk·m·256
-    * doubles of ADC tables per partition) regardless of query-batch size —
-    * a corpus self-search no longer OOMs the driver. Each chunk costs one
-    * pass over the (byte-code, cached) corpus, the standard batching trade. */
-  val DefaultQueryChunk = 4096
-
-  private[search] val hitSchema = StructType(Seq(
-    StructField(SparkSearcher.QID, LongType, nullable = false),
-    StructField(SparkSearcher.ROW_ID, LongType, nullable = false),
-    StructField(SparkSearcher.DIST, DoubleType, nullable = false)))
-
-  /** The query batch as bounded chunks, each collected when called: one
-    * collect of up to `chunkSize + 1` rows serves a batch that fits one
-    * chunk; only a larger batch pays a count and a deterministic hash
-    * split on qid, each chunk collected separately. */
-  private[search] def queryChunks(queries: DataFrame, chunkSize: Int): Seq[() => Array[Row]] = {
-    import SparkSearcher.QID
-    val head = queries.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect()
-    if (head.length <= chunkSize) Seq(() => head)
-    else {
-      val nChunks = math.ceil(queries.count().toDouble / chunkSize).toInt
-      (0 until nChunks).map(ci => () =>
-        queries.filter(pmod(xxhash64(col(QID)), lit(nChunks)) === ci).collect())
-    }
   }
 
   /** [[CellScan]] scorer over byte codes: one [[AdcScorer]] per query per

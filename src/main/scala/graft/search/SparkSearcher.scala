@@ -598,7 +598,7 @@ object SparkSearcher {
     // rank-k cosine per query = the minimum of its exact top-k (cos:
     // higher is closer); value-only, so heap tie-breaks don't matter
     val rankK = CellScan.topK(pre.select(col(ROW_ID), col(VEC), lit(0).as(IvfIndex.CID)), qdf,
-        array(lit(0)), math.min(k.toLong, n).toInt, asc = false, PqIndex.DefaultQueryChunk)(
+        array(lit(0)), math.min(k.toLong, n).toInt, asc = false, CellScan.DefaultQueryChunk)(
         CellScan.floats("cos", 0.0))
       .groupBy(col(QID)).agg(min(col(DIST)).as("__rk"))
       .select(col("__rk")).collect().map(_.getDouble(0)).sorted
@@ -630,8 +630,9 @@ object SparkSearcher {
     * of a fixed width that decays as the corpus grows (RECALL.md: ef=64
     * reads 0.901 recall@10 at 2M vectors; the fraction rule lands ~245
     * there, the certified ≥0.99 regime). Explicit values pass through
-    * untouched, including the `≥ group size ⇒ exact` escape hatch. */
-  private[search] def resolveEf(efSearch: Int, count: Long, graphs: Int): Int =
+    * untouched, including the `≥ group size ⇒ exact` escape hatch;
+    * `graphs` is read only for the auto. */
+  private[search] def resolveEf(efSearch: Int, count: Long, graphs: => Int): Int =
     if (efSearch > 0) efSearch
     else math.max(SearcherParams().efSearch,
       math.ceil(count.toDouble / math.max(1, graphs) / 256.0).toInt)
@@ -1410,8 +1411,12 @@ class SearcherModel private[search] (
    *
    * Like faiss's eager `search`, a cell-scan batch that fits one query
    * chunk runs its scan here, when called, and returns a local relation
-   * ([[CellScan.topK]]); other batches return a lazy plan. The cell scan
-   * collects its query chunk here on either finish.
+   * ([[CellScan.topK]]), unless its payload is over the broadcast guard.
+   * A batch of several chunks also runs here, one chunk at a time, and
+   * returns its pinned hits (free them with `CacheDiscipline.release`);
+   * the rest (a capped single chunk, the LSH bucket and `RFlat` routes)
+   * return a lazy plan. A cell scan collects its query chunks here on
+   * either finish.
    */
   def search(queries: DataFrame, topK: Int, keepRankNo: Boolean = false,
       queryIdCol: Option[String] = None): DataFrame = {
@@ -1575,7 +1580,7 @@ class SearcherModel private[search] (
     * the codes' space). `carry` as in [[Layout.topK]]. */
   private[search] def cellTopK(q: DataFrame, k: Int, carry: Seq[String], cell: Column,
       probes: Column): DataFrame = {
-    val (asc, chunk) = (!metric.higherIsCloser, PqIndex.DefaultQueryChunk)
+    val (asc, chunk) = (!metric.higherIsCloser, CellScan.DefaultQueryChunk)
     withSource(storage.floats(indexed, cell +: carry.map(col): _*) match {
       case Some(view) => CellScan.topK(view, q, probes, k, asc, chunk)(
         CellScan.floats(metric.name, params.metricArg))

@@ -13,16 +13,19 @@ import graft.encoders.PassthroughEncoder
   * rows of the distributed merge → payload-join route (forced by a payload
   * broadcast cap of 0) — every output column, raw `sim_val` bits included —
   * for every [[CellScan]] kind under cos, l2 and ip — IVF over each storage,
-  * bare codes, and exact search as the one-cell case (Flat, `SQfp16`, and a
+  * bare codes, exact search as the one-cell case (Flat, `SQfp16`, and a
   * joint-auto `LSH0` that resolves degenerate and so routes to the exact
-  * scan). Batches hold duplicate query ids, a null-vector query,
+  * scan), and HNSW's graph scorer, both exhaustive (graphs no larger than
+  * `efSearch`) and beam-searching one graph of ≥ 48 rows at `efSearch` 8.
+  * Batches hold duplicate query ids, a null-vector query,
   * separator-truncated items and fresh vectors; corpora hold planted
   * duplicates (ties fall on `row_id`), and probing one or two of eight
   * cells leaves some queries short of k hits. */
 class DriverFinishLawSpec extends SparkSpec {
 
+  private val beamHnsw = "HNSW8 (one graph, efSearch 8)"
   private val kinds = Seq("IVF8", "IVF8,SQfp16", "IVF8,SQ8", "IVF8,PQ4", "PQ4", "SQ8",
-    "Flat", "SQfp16", "LSH0")
+    "Flat", "SQfp16", "LSH0", "HNSW8", beamHnsw)
   private val cap = "graft.search.payloadBroadcastByteCap"
   private val vecType = ArrayType(FloatType, containsNull = false)
 
@@ -69,13 +72,15 @@ class DriverFinishLawSpec extends SparkSpec {
     test(s"driver finish ≡ distributed merge: $kind, $metric") {
       val law = Prop.forAllNoShrink(shape) { case (dim, n, k, nprobe, seed) =>
         val rnd = new scala.util.Random(seed)
-        val items = corpus(rnd, n, dim)
+        val items = corpus(rnd, if (kind == beamHnsw) n max 48 else n, dim)
         val stored = items.collect().toSeq.map(_.getSeq[Float](2).toArray)
         val q = queries(rnd, dim, stored)
+        val params = SearcherParams(itemCol = Some("item"), idCol = Some("vec_id"),
+          measurement = metric, indexParam = kind, nprobe = nprobe, docFeatureSep = Some("#"),
+          queryFeatureSep = Some("#"))
         val model = new SparkSearcher(new PassthroughEncoder("embedding"),
-          SearcherParams(itemCol = Some("item"), idCol = Some("vec_id"), measurement = metric,
-            indexParam = kind, nprobe = nprobe, docFeatureSep = Some("#"),
-            queryFeatureSep = Some("#"))).fit(items)
+          if (kind != beamHnsw) params
+          else params.copy(indexParam = "HNSW8", hnswGraphs = 1, efSearch = 8)).fit(items)
         try {
           // named ids (duplicates, a null vector) and positional ids
           def both(): Seq[DataFrame] = Seq(
@@ -95,34 +100,23 @@ class DriverFinishLawSpec extends SparkSpec {
       assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
     }
 
-  test("a loaded IVF0 index serves 16 local queries as one job and a local scan") {
-    val rnd = new scala.util.Random(7)
-    val items = corpus(rnd, 600, 16)
-    val model = new SparkSearcher(new PassthroughEncoder("embedding"),
-      SearcherParams(itemCol = Some("item"), idCol = Some("vec_id"), measurement = "cos",
-        indexParam = "IVF0")).fit(items)
-    val dir = java.nio.file.Files.createTempDirectory("graft-driver-finish").toString + "/index"
-    model.save(dir)
-    model.unpersist()
-    val loaded = SparkSearcher.load(spark, dir)
-    val q = spark.createDataFrame(java.util.Arrays.asList((0 until 16).map(i =>
-      Row(i.toLong, s"q$i", vec(rnd, 16).toSeq)): _*), StructType(Seq(
-      StructField("qid", LongType, nullable = false), StructField("item", StringType),
-      StructField("embedding", vecType))))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+  /** Runs `body` and returns its value with the jobs it ran, in the order
+    * the listener saw their events: `(start, job id, stage names)` and
+    * `(end, job id, Nil)`. */
+  private def observed[T](body: => T): (T, Seq[(Boolean, Int, Seq[String])]) = {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Int, Seq[String])]
     @volatile var drained = false
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (j.properties.getProperty("spark.job.description") == "drain") drained = true
-        else jobs.incrementAndGet()
+        else events.add((true, j.jobId, j.stageInfos.map(_.name)))
+      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        events.add((false, j.jobId, Nil))
     }
     spark.sparkContext.addSparkListener(listener)
-    val (res, out) = try {
-      val res = loaded.search(q, 10, keepRankNo = true, queryIdCol = Some("qid"))
-      (res, res.collect())
-    } finally {
+    val out = try body finally {
       // listener events arrive in order: once the drain job is seen, every
-      // search job has been counted
+      // job of `body` has been recorded
       spark.sparkContext.setJobDescription("drain")
       spark.sparkContext.parallelize(Seq(1), 1).count()
       spark.sparkContext.setJobDescription(null)
@@ -131,9 +125,73 @@ class DriverFinishLawSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
     }
     assert(drained)
-    assert(jobs.get == 1, s"search + collect ran ${jobs.get} jobs")
-    assert(driverFinished(res), res.queryExecution.executedPlan.toString)
-    assert(out.length == 160 && out.map(_.getAs[Long]("qid")).toSet == (0L until 16L).toSet)
-    loaded.unpersist()
+    import scala.jdk.CollectionConverters._
+    (out, events.asScala.toSeq)
+  }
+
+  private def queryFrame(rnd: scala.util.Random, n: Int, dim: Int): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList((0 until n).map(i =>
+      Row(i.toLong, s"q$i", vec(rnd, dim).toSeq)): _*), StructType(Seq(
+      StructField("qid", LongType, nullable = false), StructField("item", StringType),
+      StructField("embedding", vecType))))
+
+  for (kind <- Seq("IVF0", "HNSW8"))
+    test(s"a loaded $kind index serves 16 local queries as one job and a local scan") {
+      val rnd = new scala.util.Random(7)
+      val items = corpus(rnd, 600, 16)
+      val model = new SparkSearcher(new PassthroughEncoder("embedding"),
+        SearcherParams(itemCol = Some("item"), idCol = Some("vec_id"), measurement = "cos",
+          indexParam = kind)).fit(items)
+      val dir = java.nio.file.Files.createTempDirectory("graft-driver-finish").toString + "/index"
+      model.save(dir)
+      model.unpersist()
+      val loaded = SparkSearcher.load(spark, dir)
+      val q = queryFrame(rnd, 16, 16)
+      val ((res, out), events) = observed {
+        val res = loaded.search(q, 10, keepRankNo = true, queryIdCol = Some("qid"))
+        (res, res.collect())
+      }
+      val jobs = events.count(_._1)
+      assert(jobs == 1, s"search + collect ran $jobs jobs")
+      assert(driverFinished(res), res.queryExecution.executedPlan.toString)
+      assert(out.length == 160 && out.map(_.getAs[Long]("qid")).toSet == (0L until 16L).toSet)
+      loaded.unpersist()
+    }
+
+  test("a batch of several query chunks is scanned one chunk at a time") {
+    import org.apache.spark.sql.functions.col
+    import SparkSearcher.{QID, QVEC, ROW_ID, VEC}
+    val rnd = new scala.util.Random(13)
+    val model = new SparkSearcher(new PassthroughEncoder("embedding"),
+      SearcherParams(itemCol = Some("item"), idCol = Some("vec_id"), measurement = "l2",
+        indexParam = "IVF8", nprobe = 2)).fit(corpus(rnd, 300, 8))
+    // an RDD-backed batch: collecting a chunk runs a job the listener sees
+    val local = queryFrame(rnd, 50, 8)
+    val q = spark.createDataFrame(spark.sparkContext.parallelize(local.collect().toSeq, 2),
+      local.schema).select(col("qid").as(QID), col("embedding").as(QVEC))
+    def run(chunk: Int) = CellScan.topK(model.indexed.select(col(ROW_ID), col(VEC),
+        col(IvfIndex.CID)), q, IvfIndex.probesCol(model.fittedCentroids.get, 2), 5, asc = true,
+      chunk)(CellScan.floats("l2", 2.0))
+    try {
+      val (chunked, events) = observed(run(7)) // 50 queries → 8 chunks
+      // the chunk collects: the one collect call site that ran once per chunk
+      val starts = events.filter(_._1)
+      val collects = starts.flatMap(_._3.headOption).filter(_.startsWith("collect at"))
+      val chunkSite = collects.groupBy(identity).collectFirst { case (site, n) if n.size == 8 => site }
+      assert(chunkSite.nonEmpty, s"no collect ran once per chunk: $collects")
+      val at = events.zipWithIndex
+      val chunkJobs = at.collect { case ((true, id, names), i) if names.headOption == chunkSite => (id, i) }
+      def endOf(id: Int) = at.collectFirst { case ((false, `id`, _), i) => i }.get
+      // between two chunk collects, a scan job of the earlier chunk ran to
+      // its end: the next chunk is collected only after it
+      chunkJobs.sliding(2).foreach { case Seq((prev, _), (_, nextStart)) =>
+        val scans = at.collect { case ((true, id, names), i) if i > endOf(prev) &&
+          names.exists(_.startsWith("localCheckpoint at")) && endOf(id) < nextStart => id }
+        assert(scans.nonEmpty, s"chunk after job $prev collected before its scan finished: " +
+          events.mkString("\n"))
+      }
+      def sorted(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      assert(sorted(chunked) == sorted(run(Int.MaxValue)))
+    } finally model.unpersist()
   }
 }

@@ -11,14 +11,14 @@ import graft.SparkSpec
 import graft.encoders.PassthroughEncoder
 import graft.functions.VectorKernels
 
-/** Law: Flat and IVF at exhaustive settings (nprobe = nlist) return exactly
-  * the rows of a test-only brute force over [[VectorKernels]] — same
-  * `sim_item`, `rank_no` and raw `sim_val` bits — for float and fp16
-  * storage (fp16: the reference scores the half-rounded stored vectors),
-  * every metric, over seeded corpora with planted duplicates (ties fall on
-  * `row_id`) and a zero vector on each side. The reference shares no code
-  * with the engine's scan, so the law still binds now that Flat is the
-  * scan's one-cell case. */
+/** Law: Flat, IVF at exhaustive settings (nprobe = nlist) and HNSW with
+  * `efSearch` ≥ n return exactly the rows of a test-only brute force over
+  * [[VectorKernels]] — same `sim_item`, `rank_no` and raw `sim_val` bits —
+  * for float and fp16 storage (fp16: the reference scores the half-rounded
+  * stored vectors), every metric, over seeded corpora with planted
+  * duplicates (ties fall on `row_id`) and a zero vector on each side. The
+  * reference shares no code with the engine's scan, so the law still binds
+  * now that Flat and HNSW run the same scan. */
 class ExhaustiveIvfLawSpec extends SparkSpec {
 
   private val metrics = Seq("cos", "ip", "l1", "l2", "l_inf", "l_p", "brayCurtis",
@@ -81,7 +81,7 @@ class ExhaustiveIvfLawSpec extends SparkSpec {
       def rows(param: String) = {
         val model = new SparkSearcher(new PassthroughEncoder("embedding"),
           SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"), measurement = metric,
-            indexParam = param, nprobe = 8)).fit(frame("vec_id", stored))
+            indexParam = param, nprobe = 8, efSearch = Int.MaxValue)).fit(frame("vec_id", stored))
         try model.search(queries, k, keepRankNo = true, queryIdCol = Some("qid")).collect()
           .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank_no"), String.valueOf(r.getAs[Any]("sim_item")),
             java.lang.Float.floatToRawIntBits(r.getAs[Float]("sim_val")))).sorted.toSeq
@@ -93,7 +93,7 @@ class ExhaustiveIvfLawSpec extends SparkSpec {
       val exactFp16 = if (metric == "cos")
         bruteForce(metric, stored.map(v => halfRounded(normalized(v))), qvs.map(normalized), k)
         else bruteForce(metric, stored.map(halfRounded), qvs, k)
-      exact.nonEmpty && Seq("Flat", "IVF8").forall(rows(_) == exact) &&
+      exact.nonEmpty && Seq("Flat", "IVF8", "HNSW8").forall(rows(_) == exact) &&
         Seq("SQfp16", "IVF8,SQfp16").forall(rows(_) == exactFp16)
     }
     val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(2)

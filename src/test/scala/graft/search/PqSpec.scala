@@ -104,13 +104,13 @@ class PqSpec extends SparkSpec {
     def runIvf(chunk: Int) = adcScan(ivfpq, col(IvfIndex.CID),
       IvfIndex.probesCol(ivfpq.fittedCentroids.get, 4), chunk)
     assert(runIvf(7) === runIvf(Int.MaxValue))
-    // NSW graph path: the multi-chunk eager shape must equal the lazy
+    // the graph scorer: the multi-chunk eager shape must equal the lazy
     // single-chunk shape (exhaustive ef -> exact -> set equality)
     val hnsw = new SparkSearcher(new PassthroughEncoder("embedding"),
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "l2", indexParam = "HNSW8")).fit(emb)
-    def runNsw(chunk: Int) = NswGraph
-      .topK(hnsw.indexed, q, 5, efSearch = 100000, "l2", 2.0, queryChunkSize = chunk)
+    def runNsw(chunk: Int) = CellScan.topK(HnswGraphs.scanRows(hnsw.indexed, Nil), q,
+        array(lit(0)), 5, asc = true, chunk)(NswGraph.scorer(5, efSearch = 100000, "l2", 2.0))
       .collect().map(_.toSeq).toSet
     assert(runNsw(7) === runNsw(Int.MaxValue))
     hnsw.unpersist(); ivfpq.unpersist(); model.unpersist()

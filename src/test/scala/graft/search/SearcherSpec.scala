@@ -447,58 +447,55 @@ class SearcherSpec extends SparkSpec {
     // broadcast (10 MB default — at spec scale it would broadcast the
     // payload side with or without the hint)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val hnsw = new SparkSearcher(new PassthroughEncoder("embedding"),
+    def fit(param: String) = new SparkSearcher(new PassthroughEncoder("embedding"),
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
-        indexParam = "HNSW8")).fit(emb)
-    val flat = embModel()
+        indexParam = param)).fit(emb)
+    val (refined, hnsw, flat) = (fit("PQ4,RFlat"), fit("HNSW8"), embModel())
     try {
-      // assert on the PAYLOAD join specifically (the join keyed on
-      // row_id), not on whole-plan substrings — the search plan carries
-      // other joins (top-k agg paths) whose physical pick is Spark's
-      // business and shifts across versions
-      import org.apache.spark.sql.execution.LocalTableScanExec
+      // assert on the PAYLOAD join specifically (keyed on row_id, one side
+      // holding the stored item), not on whole-plan substrings or every
+      // row_id join — the refine route also joins row_id to fetch the
+      // float vectors, and that join's physical pick is Spark's business
+      import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
       import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
         ShuffledHashJoinExec, SortMergeJoinExec}
-      def rowIdJoins(df: org.apache.spark.sql.DataFrame) =
+      def payload(j: SparkPlan, keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        keys.exists(_.references.exists(_.name == "row_id")) &&
+          j.children.exists(_.output.exists(_.name == SparkSearcher.ITEM))
+      def payloadJoins(df: org.apache.spark.sql.DataFrame) =
         df.queryExecution.sparkPlan.collect {
-          case j: SortMergeJoinExec
-            if j.leftKeys.exists(_.references.exists(_.name == "row_id")) =>
-            ("smj", j: org.apache.spark.sql.execution.SparkPlan)
-          case j: ShuffledHashJoinExec
-            if j.leftKeys.exists(_.references.exists(_.name == "row_id")) =>
-            ("shj", j)
-          case j: BroadcastHashJoinExec
-            if j.leftKeys.exists(_.references.exists(_.name == "row_id")) =>
-            ("bhj", j)
-        }.map(_._1)
-      // HNSW joins the payload onto its hits: under the default cap the
-      // engine FORCES the broadcast (the row threshold admits the corpus,
-      // cached stats sit under 2 GB)
-      def runHnsw() = hnsw.search(q, 3, keepRankNo = true, queryIdCol = Some("vec_id"))
-      val forced = runHnsw()
-      val forcedJoins = rowIdJoins(forced)
-      assert(forcedJoins.nonEmpty && forcedJoins.forall(_ == "bhj"),
-        s"forced payload join must broadcast, saw: $forcedJoins")
-      // Flat under the same guard carries the payload to the cell scan's
-      // driver finish: a local relation, no payload join at all
-      def runFlat() = flat.search(q, 3, keepRankNo = true, queryIdCol = Some("vec_id"))
-      val local = runFlat()
-      assert(local.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
-        local.queryExecution.executedPlan.toString)
+          case j: SortMergeJoinExec if payload(j, j.leftKeys) => "smj"
+          case j: ShuffledHashJoinExec if payload(j, j.leftKeys) => "shj"
+          case j: BroadcastHashJoinExec if payload(j, j.leftKeys) => "bhj"
+        }
+      def run(m: SearcherModel) = m.search(q, 3, keepRankNo = true, queryIdCol = Some("vec_id"))
+      // the refine route joins the payload onto its re-ranked hits: under
+      // the default cap the engine FORCES the broadcast (the row threshold
+      // admits the corpus, cached stats sit under 2 GB)
+      val forced = run(refined)
+      assert(payloadJoins(forced) == Seq("bhj"),
+        s"forced payload join must broadcast, saw: ${payloadJoins(forced)}")
+      // Flat and HNSW under the same guard carry the payload to the cell
+      // scan's driver finish: a local relation, no payload join at all
+      val local = Seq(flat, hnsw).map(run)
+      local.foreach(df => assert(df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+        df.queryExecution.executedPlan.toString))
       // a 1-byte cap rejects the force by BYTES even though the row
       // check passes — the scale hole this guards: 2M rows × 10 KB docs
       // is a ~20 GB broadcast the row threshold alone waves through
       spark.conf.set(cap, "1")
-      for ((name, before, after) <- Seq(("HNSW8", forced, runHnsw()), ("Flat", local, runFlat()))) {
-        val cappedJoins = rowIdJoins(after)
-        assert(cappedJoins.nonEmpty && cappedJoins.forall(_ != "bhj"),
+      for ((name, model, before) <- Seq(("PQ4,RFlat", refined, forced), ("Flat", flat, local(0)),
+          ("HNSW8", hnsw, local(1)))) {
+        val after = run(model)
+        val cappedJoins = payloadJoins(after)
+        assert(cappedJoins.size == 1 && cappedJoins.forall(_ != "bhj"),
           s"$name: byte-capped payload join must shuffle, saw: $cappedJoins")
         assert(rows(after) === rows(before), name)
       }
     } finally {
       spark.conf.unset(cap)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      hnsw.unpersist(); flat.unpersist()
+      refined.unpersist(); hnsw.unpersist(); flat.unpersist()
     }
   }
 
