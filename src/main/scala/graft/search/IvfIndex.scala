@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftshim.GraftSql.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
@@ -472,16 +473,25 @@ object IvfIndex {
     // occupancy formula) BEFORE this point; nlist=0 here would degenerate
     // to a zero-centroid Lloyd, so fail fast instead
     require(nlist > 0, s"fitCentroids needs a resolved nlist > 0, got $nlist")
-    val target = trainTarget(nlist)
-    val fraction = if (total <= target) 1.0 else target.toDouble / total
-    val sample = (if (fraction < 1.0) df.sample(withReplacement = false, fraction, seed = 42) else df)
-      .select(col(vecCol).cast(ArrayType(FloatType)))
-      .collect()
-      .map(_.getSeq[Float](0).toArray)
+    val sample = trainingSample(df, vecCol, total, trainTarget(nlist))
     require(sample.nonEmpty, "IVF fit: no vectors to train on")
     val k = math.min(nlist, sample.length)
     if (k >= TwoLevelNlist) hierLloyd(sample, k, iters = 10)
     else lloyd(sample, k, iters = 10)
+  }
+
+  /** Seeded sample of about `target` of `df`'s `total` rows (every row
+    * when `total <= target`): `vecCol` as float arrays, in `collect()`
+    * order. Read from the plan's `InternalRow`s (`toFloatArray`), not
+    * through `Row.getSeq[Float]`, which boxes every component. */
+  private[search] def trainingSample(df: DataFrame, vecCol: String, total: Long,
+      target: Long): Array[Array[Float]] = {
+    val fraction = if (total <= target) 1.0 else target.toDouble / total
+    val qe = (if (fraction < 1.0) df.sample(withReplacement = false, fraction, seed = 42) else df)
+      .select(col(vecCol).cast(ArrayType(FloatType))).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.toRdd.map(_.getArray(0).toFloatArray()).collect()
+    }
   }
 
   /** Two-level Lloyd for large k: cluster the sample into ⌈√k⌉ coarse
@@ -499,23 +509,13 @@ object IvfIndex {
     val n = xs.length
     val k1 = math.min(math.ceil(math.sqrt(k.toDouble)).toInt, n)
     val coarse = lloyd(xs, k1, iters)
-    // deterministic nearest-coarse assignment (first-min wins, same rule
-    // as the Lloyd inner loop)
+    // deterministic nearest-coarse assignment (first-min wins, the Lloyd
+    // assignment kernel)
     val d = xs(0).length
-    def d2(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < d) { val t = a(i).toDouble - b(i); s += t * t; i += 1 }
-      s
-    }
+    val coarseD = coarse.map(widen)
     val assign = new Array[Int](n)
     java.util.stream.IntStream.range(0, n).parallel().forEach { i =>
-      var best = 0; var bestD = Double.MaxValue; var j = 0
-      while (j < coarse.length) {
-        val dd = d2(xs(i), coarse(j))
-        if (dd < bestD) { bestD = dd; best = j }
-        j += 1
-      }
-      assign(i) = best
+      assign(i) = nearest(xs(i), coarseD, d, null, 0, new Array[Double](4))
     }
     val counts = new Array[Int](coarse.length)
     var i = 0
@@ -577,17 +577,32 @@ object IvfIndex {
     cents
   }
 
-  /** Plain Lloyd k-means over a local sample: deterministic spread-out init
-    * (greedy farthest-point from a fixed start), `iters` iterations; a
-    * cluster that ends an iteration empty keeps its previous centroid. */
+  /** Lloyd k-means over a local sample: deterministic spread-out init
+    * (greedy farthest-point from a fixed start), then `iters` iterations;
+    * a cluster that ends an iteration empty keeps its previous centroid.
+    *
+    * The assignment step returns exactly what plain Lloyd returns — each
+    * point's first nearest centroid by the sequential double `d2`, a NaN
+    * distance never winning — with far fewer distance evaluations:
+    *  - Iteration 0 is the full scan ([[nearest]], four centroids per pass
+    *    over the point).
+    *  - After that, Elkan's triangle-inequality bounds ("Using the Triangle
+    *    Inequality to Accelerate k-Means", ICML 2003; [[LloydBounds]]) keep
+    *    an upper bound per point and a lower bound per (point, centroid). A
+    *    centroid is skipped only when `u·(1+ε) < max(l, cc/2)·(1−ε)`, with a
+    *    rounding margin ε = 1e-9 relative: a skipped centroid is strictly
+    *    farther than the point's current one in the computed doubles, so a
+    *    tie is never pruned and the first-min rule sees every candidate.
+    *  - The bounds take n·k doubles; over [[LloydBoundCap]] every iteration
+    *    runs the full scan instead.
+    *  - An iteration that changes no assignment would recompute bit-equal
+    *    centroids, so the fit stops there.
+    * Per-chunk sums are still taken over every point in sample order and
+    * merged in chunk order, so the centroids are bit-identical to the
+    * plain scan's, run to run and on any core count. */
   private[search] def lloyd(xs: Array[Array[Float]], k: Int, iters: Int): Array[Array[Float]] = {
     val n = xs.length
     val d = xs(0).length
-    def d2(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < d) { val t = a(i).toDouble - b(i); s += t * t; i += 1 }
-      s
-    }
     // assignment + partial sums parallelized over FIXED chunks (count not
     // tied to thread scheduling), partials merged in chunk order — so the
     // result is bit-deterministic run to run while the O(n·k·d) inner loops
@@ -595,13 +610,15 @@ object IvfIndex {
     val nChunks = math.min(32, n)
     val bounds = Array.tabulate(nChunks + 1)(c => (c.toLong * n / nChunks).toInt)
     // go parallel only when a round's arithmetic outweighs the fork-join
-    // dispatch (r21): the init below runs k SEQUENTIAL rounds of O(n·d)
-    // each — for a PQ subspace fit (n ≈ 8k, dsub = 8, k = 256) that is
-    // 2048 dispatches per codebook fit across the m calls, ~0.8 s of pure
-    // scheduling against ~30 µs of flops per round. The chunk decomposition
-    // and in-order merge are identical either way, so the picked centroids
-    // are bit-identical — only the executing thread count changes.
-    val parInit = n.toLong * d >= (1L << 21)
+    // dispatch: the init below runs k SEQUENTIAL rounds of O(n·d) each. A
+    // PQ subspace fit (n ≈ 8k, dsub = 8, k = 256: n·d = 64k) stays on one
+    // thread — 2048 dispatches per codebook fit would cost ~0.8 s of
+    // scheduling against ~30 µs of flops per round — while an IVF fit at
+    // 16,000 × 64 (n·d ≈ 1M, 127 rounds) splits each round over the pool.
+    // The chunk decomposition and in-order merge are identical either way,
+    // so the picked centroids are bit-identical — only the executing
+    // thread count changes.
+    val parInit = n.toLong * d >= (1L << 18)
     val parIter = n.toLong * k * d >= (1L << 21)
     def chunkStream(par: Boolean): java.util.stream.IntStream = {
       val s = java.util.stream.IntStream.range(0, nChunks)
@@ -620,12 +637,12 @@ object IvfIndex {
     val minD = Array.fill(n)(Double.MaxValue)
     var c = 1
     while (c < k) {
-      val prev = cents(c - 1)
+      val prev = widen(cents(c - 1))
       val chunkFar = chunkStream(parInit)
         .mapToObj { ch =>
           var far = -1; var farD = -1.0; var i = bounds(ch)
           while (i < bounds(ch + 1)) {
-            val dd = d2(xs(i), prev)
+            val dd = d2(xs(i), prev, d)
             if (dd < minD(i)) minD(i) = dd
             if (minD(i) > farD) { farD = minD(i); far = i }
             i += 1
@@ -640,51 +657,242 @@ object IvfIndex {
       }
       cents(c) = xs(far).clone(); c += 1
     }
+    val assign = new Array[Int](n)
+    val elkan =
+      if (n.toLong * k <= LloydBoundCap && k.toLong * k <= LloydBoundCap) new LloydBounds(n, k, d)
+      else null
+    var centsD = cents.map(widen)
     var it = 0
-    while (it < iters) {
+    var settled = false
+    while (it < iters && !settled) {
+      val cd = centsD
+      val full = it == 0 || elkan == null
       val partials = chunkStream(parIter)
-        .mapToObj { c =>
+        .mapToObj { ch =>
           val sums = Array.ofDim[Double](k, d)
           val counts = new Array[Int](k)
-          var i = bounds(c)
-          while (i < bounds(c + 1)) {
-            var best = 0; var bestD = Double.MaxValue; var j = 0
-            while (j < k) {
-              val dd = d2(xs(i), cents(j))
-              if (dd < bestD) { bestD = dd; best = j }
-              j += 1
-            }
+          val buf = new Array[Double](4)
+          val cand = if (full) null else new Array[Int](k)
+          var changed = false
+          var i = bounds(ch)
+          while (i < bounds(ch + 1)) {
+            val x = xs(i)
+            val best =
+              if (elkan == null) nearest(x, cd, d, null, 0, buf)
+              else if (full) elkan.scan(i, x, cd, buf)
+              else elkan.reassign(i, x, assign(i), cd, cand, buf)
+            if (best != assign(i)) { changed = true; assign(i) = best }
             counts(best) += 1
-            val x = xs(i); var f = 0
+            var f = 0
             while (f < d) { sums(best)(f) += x(f); f += 1 }
             i += 1
           }
-          (sums, counts)
+          (sums, counts, changed)
         }
-        .toArray(new Array[(Array[Array[Double]], Array[Int])](_))
-      val sums = Array.ofDim[Double](k, d)
-      val counts = new Array[Int](k)
-      partials.foreach { case (ps, pc) =>
+        .toArray(new Array[(Array[Array[Double]], Array[Int], Boolean)](_))
+      // no assignment changed: the update would reproduce these centroids
+      settled = it > 0 && !partials.exists(_._3)
+      if (!settled) {
+        val sums = Array.ofDim[Double](k, d)
+        val counts = new Array[Int](k)
+        partials.foreach { case (ps, pc, _) =>
+          var j = 0
+          while (j < k) {
+            counts(j) += pc(j)
+            var f = 0
+            while (f < d) { sums(j)(f) += ps(j)(f); f += 1 }
+            j += 1
+          }
+        }
+        val before = cents.clone()
         var j = 0
         while (j < k) {
-          counts(j) += pc(j)
-          var f = 0
-          while (f < d) { sums(j)(f) += ps(j)(f); f += 1 }
+          if (counts(j) > 0) {
+            val cj = new Array[Float](d); var f = 0
+            while (f < d) { cj(f) = (sums(j)(f) / counts(j)).toFloat; f += 1 }
+            cents(j) = cj
+          }
           j += 1
         }
-      }
-      var j = 0
-      while (j < k) {
-        if (counts(j) > 0) {
-          val cj = new Array[Float](d); var f = 0
-          while (f < d) { cj(f) = (sums(j)(f) / counts(j)).toFloat; f += 1 }
-          cents(j) = cj
-        }
-        j += 1
+        centsD = cents.map(widen)
+        if (elkan != null) elkan.moved(before, cents, centsD, parIter)
       }
       it += 1
     }
     cents
+  }
+
+  /** Most (point, centroid) lower bounds [[lloyd]] keeps: 4M doubles, 32 MB.
+    * At the IVF workload's shape (16,000 × 127) the bounds take 2M; a flat
+    * fit near 100k × 1,023 or a PQ codebook fit at 100k × 256 runs every
+    * iteration as the full scan instead. */
+  private val LloydBoundCap = 1L << 22
+
+  /** `Σ_f (x_f − c_f)²` over the first `d` components, accumulated in
+    * double in ascending f: the one point-to-centroid distance of every
+    * fit. `c` is a float vector widened to double, so `x(f).toDouble - c(f)`
+    * is the same double the float pair gives. */
+  private def d2(x: Array[Float], c: Array[Double], d: Int): Double = {
+    var s = 0.0; var f = 0
+    while (f < d) { val t = x(f).toDouble - c(f); s += t * t; f += 1 }
+    s
+  }
+
+  /** [[d2]] of `x` to four centroids in one pass over `x`, into
+    * `out(0..3)`: four independent sums, each in ascending f with no fused
+    * or reordered arithmetic, so `out(q)` is `d2(x, c_q, d)` bit for bit. The
+    * single sum's add chain is what bounds the plain loop; four chains
+    * keep the core busy. */
+  private def d2x4(x: Array[Float], c0: Array[Double], c1: Array[Double],
+      c2: Array[Double], c3: Array[Double], d: Int, out: Array[Double]): Unit = {
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var f = 0
+    while (f < d) {
+      val xf = x(f).toDouble
+      val t0 = xf - c0(f); s0 += t0 * t0
+      val t1 = xf - c1(f); s1 += t1 * t1
+      val t2 = xf - c2(f); s2 += t2 * t2
+      val t3 = xf - c3(f); s3 += t3 * t3
+      f += 1
+    }
+    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
+  }
+
+  /** Index of the nearest of `cs` to `x`: the first minimum of [[d2]] by
+    * ascending index, a NaN distance never winning and no finite distance
+    * leaving centroid 0 (plain `if (dd < bestD)` from `bestD = MaxValue`).
+    * Scores four centroids per pass ([[d2x4]]). With `lower` given, also
+    * stores each centroid's distance `√d2` at `lower(off + j)`. `buf` is a
+    * 4-double scratch. */
+  private def nearest(x: Array[Float], cs: Array[Array[Double]], d: Int,
+      lower: Array[Double], off: Int, buf: Array[Double]): Int = {
+    val k = cs.length
+    var best = 0; var bestD = Double.MaxValue
+    var j = 0
+    while (j < k) {
+      val m = math.min(4, k - j)
+      if (m == 4) d2x4(x, cs(j), cs(j + 1), cs(j + 2), cs(j + 3), d, buf)
+      else { var q = 0; while (q < m) { buf(q) = d2(x, cs(j + q), d); q += 1 } }
+      var q = 0
+      while (q < m) {
+        val s = buf(q)
+        if (lower != null) lower(off + j + q) = math.sqrt(s)
+        if (s < bestD) { bestD = s; best = j + q }
+        q += 1
+      }
+      j += m
+    }
+    best
+  }
+
+  private def widen(v: Array[Float]): Array[Double] = {
+    val out = new Array[Double](v.length); var f = 0
+    while (f < v.length) { out(f) = v(f); f += 1 }
+    out
+  }
+
+  /**
+   * Elkan's bounds for [[lloyd]]'s assignment step, on Euclidean distances
+   * (`√d2`): per point an upper bound `u` on the distance to its centroid,
+   * per (point, centroid) a lower bound `l`, and half the distance between
+   * every two centroids. Centroid `j` cannot beat the point's centroid `a`
+   * when `u < l(j)` or `u < cc(a, j)/2`; the test is taken with a relative
+   * margin ε on both sides, so it holds for the computed doubles and not
+   * only for the exact reals (a NaN bound never prunes):
+   *  - `d2`'s rounding is at most about `(d+3)·2^-53` relative, far inside
+   *    ε = 1e-9 for any realistic d (ε grows with d past ~10^6);
+   *  - each centroid's move is inflated by `1+ε` before `u` grows and the
+   *    `l`s shrink by it, so a bound never loses its side through a move's
+   *    rounding; the add and subtract then round relative to their result.
+   * A point whose `u` is not finite (a NaN or infinite component, or a
+   * non-finite centroid, whose move is then NaN) takes the full scan again.
+   * Every evaluated candidate is compared on its exact `d2` with the
+   * first-min rule, so the assignment equals the full scan's.
+   */
+  private final class LloydBounds(n: Int, k: Int, d: Int) {
+    private val eps = math.max(1e-9, 4.0 * (d + 8) * Math.ulp(1.0))
+    private val upper = new Array[Double](n)
+    private val lower = new Array[Double](n * k)
+    /** Each centroid's last move, inflated by `1+ε`. */
+    private var shift: Array[Double] = _
+    /** `cc(a, j)/2`, row-major `k × k`. */
+    private var half: Array[Double] = _
+    /** `min_{j≠a} cc(a, j)/2` per centroid `a`. */
+    private var sep: Array[Double] = _
+
+    /** Full scan of point `i`, setting all its bounds. */
+    def scan(i: Int, x: Array[Float], cd: Array[Array[Double]], buf: Array[Double]): Int = {
+      val best = nearest(x, cd, d, lower, i * k, buf)
+      upper(i) = lower(i * k + best)
+      best
+    }
+
+    /** Nearest centroid of point `i`, assigned to `a` before the last move. */
+    def reassign(i: Int, x: Array[Float], a0: Int, cd: Array[Array[Double]],
+        cand: Array[Int], buf: Array[Double]): Int = {
+      val off = i * k
+      var j = 0
+      while (j < k) { lower(off + j) -= shift(j); j += 1 }
+      var u = upper(i) + shift(a0)
+      if (!(u < Double.PositiveInfinity)) return scan(i, x, cd, buf)
+      val keep = 1.0 - eps
+      var a = a0
+      if (u * (1.0 + eps) < sep(a) * keep) { upper(i) = u; return a }
+      var sa = d2(x, cd(a), d)
+      u = math.sqrt(sa)
+      lower(off + a) = u
+      val thr = u * (1.0 + eps)
+      if (thr < sep(a) * keep) { upper(i) = u; return a }
+      // candidates against the tightened u, all scored: pruning against a
+      // centroid found better mid-scan would only skip more
+      var nc = 0
+      val row = a * k
+      j = 0
+      while (j < k) {
+        if (j != a && !(thr < math.max(lower(off + j), half(row + j)) * keep)) {
+          cand(nc) = j; nc += 1
+        }
+        j += 1
+      }
+      var q = 0
+      while (q < nc) {
+        val m = math.min(4, nc - q)
+        if (m == 4) d2x4(x, cd(cand(q)), cd(cand(q + 1)), cd(cand(q + 2)), cd(cand(q + 3)), d, buf)
+        else { var r = 0; while (r < m) { buf(r) = d2(x, cd(cand(q + r)), d); r += 1 } }
+        var r = 0
+        while (r < m) {
+          val cj = cand(q + r); val s = buf(r)
+          lower(off + cj) = math.sqrt(s)
+          if (s < sa || (s == sa && cj < a)) { a = cj; sa = s }
+          r += 1
+        }
+        q += m
+      }
+      upper(i) = math.sqrt(sa)
+      a
+    }
+
+    /** Centroids moved from `before` to `now` (`nowD` widened). */
+    def moved(before: Array[Array[Float]], now: Array[Array[Float]],
+        nowD: Array[Array[Double]], par: Boolean): Unit = {
+      shift = Array.tabulate(k)(j => math.sqrt(d2(before(j), nowD(j), d)) * (1.0 + eps))
+      val h = new Array[Double](k * k)
+      val rows = java.util.stream.IntStream.range(0, k)
+      (if (par) rows.parallel() else rows).forEach { a =>
+        var j = a + 1
+        while (j < k) {
+          val v = math.sqrt(d2(now(a), nowD(j), d)) / 2
+          h(a * k + j) = v; h(j * k + a) = v
+          j += 1
+        }
+      }
+      half = h
+      sep = Array.tabulate(k) { a =>
+        var m = Double.PositiveInfinity; var j = 0
+        while (j < k) { if (j != a) m = math.min(m, h(a * k + j)); j += 1 }
+        m
+      }
+    }
   }
 
   /** Assign each indexed row its cell id (fit-time, stored + co-partitioned). */

@@ -41,10 +41,7 @@ object PqIndex {
     require(dim % m == 0, s"PQ: dim $dim must divide into m=$m subspaces")
     require(nbits == 8 || nbits == 4, s"PQ nbits must be 8 or 4, got $nbits")
     val dsub = dim / m
-    val maxTrain = 100000L
-    val fraction = if (total <= maxTrain) 1.0 else maxTrain.toDouble / total
-    val sample = (if (fraction < 1.0) df.sample(withReplacement = false, fraction, seed = 42) else df)
-      .select(col(vecCol)).collect().map(_.getSeq[Float](0).toArray)
+    val sample = IvfIndex.trainingSample(df, vecCol, total, target = 100000L)
     Array.tabulate(m) { s =>
       val sub = sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
       IvfIndex.lloyd(sub, math.min(1 << nbits, sub.length), iters = 10)

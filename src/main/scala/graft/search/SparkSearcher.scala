@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.CachedData
 import org.apache.spark.sql.types.{FloatType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -513,7 +514,9 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
     // every branch materialized its own persist — the PCA moments
     // cache has served its purpose
     pcaCache.foreach(_.unpersist(blocking = false))
-    new SearcherModel(this, indexed, payloadCols.toSeq, n, d, fittedLayout, fittedStorage, pcaFit)
+    SparkSearcher.holdCache(
+      new SearcherModel(this, indexed, payloadCols.toSeq, n, d, fittedLayout, fittedStorage, pcaFit),
+      indexed)
   }
 
   /** Score one item against a list (reference `cal_sim`,
@@ -930,8 +933,8 @@ object SparkSearcher {
     val pca = searcher.pcaSpec.map { case (nc, _, _) =>
       graft.whitening.VecsWhiteningModel.load(spark, s"$path/pca", Some(nc))
     }
-    val model = new SearcherModel(searcher, indexed.withColumnRenamed(ITEM_SAVED, ITEM),
-      payload, n, d, layout, storage, pca)
+    val model = holdCache(new SearcherModel(searcher, indexed.withColumnRenamed(ITEM_SAVED, ITEM),
+      payload, n, d, layout, storage, pca), indexed)
     // migration notice (r19, ADVICE): a save without formatVersion
     // predates the joint-auto LSH degenerate reroute — if this load's
     // deterministic route now serves through the exact kernel, the model
@@ -956,6 +959,43 @@ object SparkSearcher {
   private[search] val ITEM = "__item"
   private[search] val ITEM_SAVED = "item"
   private[search] val BUCKETS = "__lsh_buckets"
+
+  // The cache entry each live model serves from. Two fits of one input
+  // frame (or two loads of one path) persist the same plan, and Spark's
+  // cache manager keeps ONE entry for both: a model releases the entry
+  // only when no other live model holds it. Weak keys: a model that is
+  // dropped without unpersist() leaves nothing here.
+  private val cacheHolders = new java.util.WeakHashMap[SearcherModel, CachedData]()
+
+  private def classicSession(df: DataFrame) =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  /** Record `model` as a holder of `persisted`'s cache entry. */
+  private[search] def holdCache(model: SearcherModel, persisted: DataFrame): SearcherModel = {
+    classicSession(persisted).sharedState.cacheManager
+      .lookupCachedData(persisted.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .foreach(cd => cacheHolders.synchronized { cacheHolders.put(model, cd) })
+    model
+  }
+
+  /** Drop `model`'s hold on its index cache; the last holder uncaches it.
+    * Releasing twice, or a model that holds nothing, is a no-op. */
+  private[search] def releaseCache(model: SearcherModel): Unit = {
+    def builder(cd: CachedData) = cd.cachedRepresentation.cacheBuilder
+    val lastHeld = cacheHolders.synchronized {
+      Option(cacheHolders.remove(model)).filterNot { cd =>
+        cacheHolders.values.stream.anyMatch(builder(_) eq builder(cd))
+      }
+    }
+    lastHeld.foreach { cd =>
+      val spark = classicSession(model.indexed)
+      val manager = spark.sharedState.cacheManager
+      // the entry may already be gone (clearCache), or replaced by a later
+      // cache of the same plan that this model never held
+      if (manager.lookupCachedData(spark, cd.plan).exists(builder(_) eq builder(cd)))
+        manager.uncacheQuery(spark, cd.plan, cascade = false)
+    }
+  }
 }
 
 /**
@@ -1215,9 +1255,9 @@ class SearcherModel private[search] (
     val combined = unioned.localCheckpoint(true)
     val addMeta = unioned.queryExecution.observedMetrics("__addmeta")
     val n = addMeta.getLong(0)
-    indexed.unpersist()
+    releaseCache(this)
     // a previous add/remove/compact left checkpoint-backed blocks the
-    // plain unpersist cannot release (they are LogicalRDD leaves, not
+    // cache release cannot reach (they are LogicalRDD leaves, not
     // cache-manager entries) — drop those too; the old model is consumed
     graft.util.CacheDiscipline.release(indexed)
     markConsumed("add")
@@ -1309,7 +1349,7 @@ class SearcherModel private[search] (
         .getLong(0)
       org.slf4j.LoggerFactory.getLogger("graft.search.SparkSearcher").info(
         s"HNSW compact: $hnswGraphCount graphs -> $numGraphs, $n2 rows")
-      indexed.unpersist()
+      releaseCache(this)
       graft.util.CacheDiscipline.release(indexed)
       markConsumed("compact")
       withIndex(rebuilt, n2)
@@ -1343,7 +1383,7 @@ class SearcherModel private[search] (
     val combined = combinedObs.localCheckpoint(true)
     // rides the eager checkpoint's own job (r22) — no follow-up count
     val n = combinedObs.queryExecution.observedMetrics("__removemeta").getLong(0)
-    indexed.unpersist()
+    releaseCache(this)
     graft.util.CacheDiscipline.release(indexed)
     markConsumed("remove")
     withIndex(combined, n)
@@ -1710,6 +1750,6 @@ class SearcherModel private[search] (
       auxPersisted.foreach(_.unpersist(blocking = false))
       auxPersisted.clear()
     }
-    indexed.unpersist()
+    releaseCache(this)
   }
 }

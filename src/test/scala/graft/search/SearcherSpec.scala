@@ -1359,4 +1359,42 @@ class SearcherSpec extends SparkSpec {
     small.unpersist()
     full.unpersist()
   }
+
+  test("two fits of one frame share a cache entry; unpersisting one keeps the other's") {
+    val s = spark
+    val rnd = new scala.util.Random(21)
+    val rows = (0 until 2000).map(i => org.apache.spark.sql.Row(i.toLong, Array.fill(16)(rnd.nextFloat()).toSeq))
+    val frame = s.createDataFrame(s.sparkContext.parallelize(rows, 4),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("vec",
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
+    def fit() = new SparkSearcher(new PassthroughEncoder("vec"),
+      SearcherParams(itemCol = Some("id"), idCol = Some("id"), measurement = "cos")).fit(frame)
+    def cached(m: SearcherModel) =
+      m.indexed.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    def serve(m: SearcherModel) = m.search(frame.filter(col("id") < 20), topK = 5,
+        keepRankNo = true, queryIdCol = Some("id"))
+      .select("id", "rank_no", "sim_item", "sim_val").collect().map(_.toSeq).toSet
+    val (a, b) = (fit(), fit())
+    val before = serve(b)
+    a.unpersist()
+    assert(cached(b), "unpersist() of one fit emptied the other fit's cache")
+    assert(serve(b) === before)
+    a.unpersist() // a second release of the same model is a no-op
+    assert(cached(b))
+    b.unpersist()
+    assert(!cached(b), "the last holder releases the entry")
+
+    // two loads of one saved index read the same cached plan too
+    val dir = java.nio.file.Files.createTempDirectory("graft-share").toString
+    fit().save(dir)
+    def load() = SparkSearcher.load(spark, dir, new PassthroughEncoder("vec"))
+    val (l1, l2) = (load(), load())
+    l1.unpersist()
+    assert(cached(l2))
+    assert(serve(l2) === before)
+    l2.unpersist()
+    assert(!cached(l2))
+  }
 }
