@@ -4080,7 +4080,7 @@ object SparkEntry {
 
   /** cluster_assign: k-means(16) assignment — embed the fitted centroids,
     * nearest by squared l2 (ascending elements, first-lowest-c ties),
-    * mirroring [[graft.search.IvfKernels.nearest]]. */
+    * mirroring the flat kernel of [[graft.search.IvfKernels.nearestIds]]. */
   private def clusterAssignOracle(s: SparkSession, dir: String): String = {
     import graft.search.IvfIndex
     val vecs = table(s, dir, "embeddings")

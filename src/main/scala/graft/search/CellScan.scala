@@ -2,13 +2,18 @@ package graft.search
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData, UnsafeProjection, UnsafeRow}
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeArrayData,
+  UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.graftshim.GraftSql
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StructField,
+  StructType}
 
 import SparkSearcher.{DIST, QID, QVEC, RANK, ROW_ID, SourceItem}
 
@@ -20,8 +25,9 @@ import SparkSearcher.{DIST, QID, QVEC, RANK, ROW_ID, SourceItem}
  * codes; and HNSW, whose scorer beam-searches each partition's graphs
  * ([[NswGraph.scorer]]). It is the shape faiss's `index.search` runs
  * natively (faiss_searcher.py:161-169): the driver collects a bounded chunk
- * of queries with their probe lists, buckets them by cell and broadcasts
- * the chunk; each index partition is read as `InternalRow`s (no
+ * of queries as `InternalRow`s, computes each query's probe list there
+ * ([[Probe]]), buckets the queries by cell and broadcasts the chunk; each
+ * index partition is read as `InternalRow`s (no
  * per-element boxing) by one [[PartitionScorer]], which scores stored rows
  * only against the queries probing their cell into one bounded heap per
  * query, and each task emits ≤ k hits per query. No (query, row) pair is
@@ -30,7 +36,8 @@ import SparkSearcher.{DIST, QID, QVEC, RANK, ROW_ID, SourceItem}
  * Two finishes. A batch that fits one chunk and carries its result
  * columns is finished on the driver, like faiss's eager `search`: one job,
  * whose tasks return their hits with the carried columns of each hit row,
- * merged per query id as they arrive into the result as a local relation —
+ * merged per query id as they arrive into the result: a local relation of
+ * `InternalRow`s, the carried columns read straight from the tasks' rows —
  * so the caller's collect runs no job. Any other batch goes through the
  * shared [[TopKAggregate.mergeHits]] tail: lazily for one chunk, and at
  * call time, one chunk at a time with each chunk's hits pinned, for
@@ -72,6 +79,14 @@ object CellScan {
     }
   }
 
+  /** Each query's cells to score, from the vectors of a chunk's scored
+    * queries (one `array<float>` each, all finite); run on the driver after
+    * the chunk is collected. */
+  type Probe = Array[Array[Float]] => Array[Array[Int]]
+
+  /** The one-cell probe: every query scores cell 0. */
+  val cellZero: Probe = { val zero = Array(0); qs => Array.fill(qs.length)(zero) }
+
   /** Queries per broadcast chunk: bounds DRIVER memory (one chunk of
     * vectors collected at a time, see [[topK]]) and EXECUTOR table memory
     * (chunk·m·256 doubles of ADC tables per partition) regardless of
@@ -89,14 +104,21 @@ object CellScan {
     * collect of up to `chunkSize + 1` rows serves a batch that fits one
     * chunk; only a larger batch pays a count and a deterministic hash
     * split on qid, each chunk collected separately. */
-  private[search] def queryChunks(queries: DataFrame, chunkSize: Int): Seq[() => Array[Row]] = {
-    val head = queries.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect()
+  private[search] def queryChunks(queries: DataFrame, chunkSize: Int): Seq[() => Array[InternalRow]] = {
+    val head = rowsOf(queries)(_.executeTake(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt))
     if (head.length <= chunkSize) Seq(() => head)
     else {
       val nChunks = math.ceil(queries.count().toDouble / chunkSize).toInt
       (0 until nChunks).map(ci => () =>
-        queries.filter(pmod(xxhash64(col(QID)), lit(nChunks)) === ci).collect())
+        rowsOf(queries.filter(pmod(xxhash64(col(QID)), lit(nChunks)) === ci))(_.executeCollect()))
     }
+  }
+
+  /** `df`'s rows as its physical plan produces them (`take` or `collect`),
+    * with no conversion to `Row`. */
+  private def rowsOf(df: DataFrame)(take: SparkPlan => Array[InternalRow]): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(take(qe.executedPlan))
   }
 
   /** One query chunk as the scan reads it: each scored query row's id and
@@ -110,8 +132,9 @@ object CellScan {
       val dists: Array[Double], val rows: Array[UnsafeRow]) extends Serializable
 
   /** Top-k hits `(QID, ROW_ID, DIST, RANK)`. `rows` is `(ROW_ID, payload,
-    * CID, carried…)`; `probes` is each `(QID, QVEC)` query's `array<int>`
-    * of cells. Queries are collected [[queryChunks]] at a time.
+    * CID, carried…)`; `probe` gives each `(QID, QVEC)` query's cells, on
+    * the driver, after its chunk is collected. Queries are collected
+    * [[queryChunks]] at a time.
     *
     * With carried columns and a batch of one chunk, the scan runs here and
     * returns a local relation `(QID, SourceItem, ROW_ID, DIST, RANK,
@@ -127,17 +150,18 @@ object CellScan {
     * [[graft.util.CacheDiscipline]] contract: a lost executor fails the
     * caller's action rather than recomputing); a long-lived session frees
     * them with `CacheDiscipline.release(result)`. */
-  def topK(rows: DataFrame, queries: DataFrame, probes: Column, k: Int, asc: Boolean,
+  def topK(rows: DataFrame, queries: DataFrame, probe: Probe, k: Int, asc: Boolean,
       chunkSize: Int)(scorer: Array[Array[Float]] => PartitionScorer): DataFrame = {
     val spark = rows.sparkSession
     val carried = rows.columns.length > 3
     val chunks = queryChunks(queries.select(Seq(col(QID).cast(LongType).as(QID),
-      col(QVEC), probes) ++ Option.when(carried)(col(SourceItem)): _*), chunkSize)
+      col(QVEC).cast(ArrayType(FloatType)).as(QVEC)) ++ Option.when(carried)(col(SourceItem)): _*),
+      chunkSize)
     if (carried && chunks.length == 1)
-      finishOnDriver(rows, chunks.head(), queries.schema(SourceItem), k, asc, scorer)
+      finishOnDriver(rows, chunks.head(), queries.schema(SourceItem), probe, k, asc, scorer)
     else {
       val merged = chunks.flatMap { chunk =>
-        chunkOf(chunk()).map { c =>
+        chunkOf(chunk(), probe).map { c =>
           val cB = spark.sparkContext.broadcast(c)
           val scanned = probed(rows.select(rows.columns.take(3).map(col): _*), c)
           val hits = TopKAggregate.mergeHits(spark.createDataFrame(
@@ -164,15 +188,21 @@ object CellScan {
     }
   }
 
-  /** The chunk's scored queries: a query without a vector probes no cell
-    * and gets no hits (None: no query to score). */
-  private def chunkOf(qs: Array[Row]): Option[Chunk] = {
-    val live = qs.filter(!_.isNullAt(1))
+  /** The chunk's scored queries, bucketed by the cells `probe` gives them.
+    * A query without an id, without a vector or with a NaN or infinite
+    * component probes no cell and gets no hits (None: no query to score). */
+  private def chunkOf(qs: Array[InternalRow], probe: Probe): Option[Chunk] = {
+    val live = qs.iterator.filter(q => !q.isNullAt(0) && !q.isNullAt(1))
+      .map(q => (q.getLong(0), q.getArray(1).toFloatArray()))
+      .filter(_._2.forall(java.lang.Float.isFinite)).toArray
     if (live.isEmpty) None else Some {
-      val cells = live.indices.flatMap(qi => live(qi).getSeq[Int](2).map(_ -> qi)).groupMap(_._1)(_._2)
-      val byCell = new Array[Array[Int]](cells.keys.max + 1)
-      cells.foreach { case (c, qis) => byCell(c) = qis.toArray }
-      Chunk(live.map(_.getLong(0)), live.map(_.getSeq[Float](1).toArray), byCell)
+      val cells = probe(live.map(_._2))
+      val counts = new Array[Int](cells.foldLeft(-1)((top, cs) => cs.foldLeft(top)(math.max)) + 1)
+      cells.foreach(_.foreach(c => counts(c) += 1))
+      val byCell = counts.map(n => if (n == 0) null else new Array[Int](n))
+      java.util.Arrays.fill(counts, 0)
+      cells.indices.foreach(qi => cells(qi).foreach { c => byCell(c)(counts(c)) = qi; counts(c) += 1 })
+      Chunk(live.map(_._1), live.map(_._2), byCell)
     }
   }
 
@@ -195,29 +225,17 @@ object CellScan {
     * distinct hit row, merged here into one heap per query id as the tasks
     * finish — at most q·k hits and their rows plus one task's result are
     * held, never more than the payload broadcast the other finish builds. */
-  private def finishOnDriver(rows: DataFrame, qs: Array[Row], source: StructField, k: Int,
-      asc: Boolean, scorer: Array[Array[Float]] => PartitionScorer): DataFrame = {
+  private def finishOnDriver(rows: DataFrame, qs: Array[InternalRow], source: StructField,
+      probe: Probe, k: Int, asc: Boolean,
+      scorer: Array[Array[Float]] => PartitionScorer): DataFrame = {
     val spark = rows.sparkSession
     val kept = StructType(rows.schema.head +: rows.schema.drop(3))
     val keptAt = (0 +: (3 until rows.schema.length)).zip(kept).map { case (i, f) =>
       BoundReference(i, f.dataType, f.nullable) }
     val merged = mutable.LongMap.empty[TopKBuffer]
     val hitRows = mutable.LongMap.empty[UnsafeRow]
-    chunkOf(qs).foreach { c =>
+    chunkOf(qs, probe).foreach { c =>
       val cB = spark.sparkContext.broadcast(c)
-      val task = (it: Iterator[InternalRow]) => {
-        val c = cB.value
-        val carry = UnsafeProjection.create(keptAt)
-        val found = mutable.LongMap.empty[UnsafeRow]
-        val heaps = c.qids.map(_ => new TopKBuffer(k, asc))
-        scorer(c.qvs).scan(it, c.byCell, heaps, r => {
-          found(r.getLong(0)) = carry(r).copy()
-          if (found.size > 2L * c.qids.length * k) retain(found, heaps)
-        })
-        retain(found, heaps)
-        new TaskHits(heaps.map(_.size), heaps.flatMap(h => h.ids.take(h.size)),
-          heaps.flatMap(h => h.dists.take(h.size)), found.values.toArray)
-      }
       val merge = (_: Int, t: TaskHits) => {
         var off = 0
         t.sizes.indices.foreach { qi =>
@@ -230,21 +248,58 @@ object CellScan {
       }
       val qe = probed(rows, c).queryExecution
       SQLExecution.withNewExecutionId(qe, Some("cell scan")) {
-        spark.sparkContext.runJob(qe.toRdd, task, merge)
+        val rdd = qe.toRdd
+        spark.sparkContext.runJob(rdd, new FinishTask(cB, keptAt, k, asc, scorer), rdd.partitions.indices,
+          merge)
       }
     }
-    val toRow = CatalystTypeConverters.createToScalaConverter(kept)
-    val out = for {
-      q <- qs.toSeq if !q.isNullAt(0)
-      h <- merged.get(q.getLong(0)).toSeq
-      ((id, d), r) <- h.sorted.zipWithIndex
-    } yield Row.fromSeq(Seq(q.getLong(0), q.get(3), id, d, r + 1) ++
-      toRow(hitRows(id)).asInstanceOf[Row].toSeq.tail)
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+    // each query row's hits: (QID, SourceItem, ROW_ID, DIST, RANK, carried…)
+    val types = kept.map(_.dataType).toArray
+    val out = Array.newBuilder[InternalRow]
+    qs.foreach { q =>
+      if (!q.isNullAt(0)) merged.get(q.getLong(0)).foreach { h =>
+        val src = q.get(2, source.dataType)
+        val hits = h.sorted
+        var r = 0
+        while (r < hits.length) {
+          val (id, d) = hits(r)
+          val hit = hitRows(id)
+          val vs = new Array[Any](4 + types.length)
+          vs(0) = q.getLong(0); vs(1) = src; vs(2) = id; vs(3) = d; vs(4) = r + 1
+          var i = 1
+          while (i < types.length) { vs(4 + i) = hit.get(i, types(i)); i += 1 }
+          out += new GenericInternalRow(vs)
+          r += 1
+        }
+      }
+    }
+    GraftSql.localRelation(spark, out.result().toSeq, StructType(Seq(
       StructField(QID, LongType, nullable = false), source,
       StructField(ROW_ID, LongType, nullable = false),
       StructField(DIST, DoubleType, nullable = false),
       StructField(RANK, IntegerType, nullable = false)) ++ kept.tail))
+  }
+
+  /** One driver-finish task: scores its partition into one heap per query
+    * row and returns each row's ≤ k hits with the `(ROW_ID, carried…)` row
+    * (`keptAt`) of each distinct hit. A class rather than a lambda, so
+    * `runJob` does not run the closure cleaner's bytecode scan per search. */
+  private final class FinishTask(cB: Broadcast[Chunk], keptAt: Seq[BoundReference], k: Int,
+      asc: Boolean, scorer: Array[Array[Float]] => PartitionScorer)
+      extends ((TaskContext, Iterator[InternalRow]) => TaskHits) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): TaskHits = {
+      val c = cB.value
+      val carry = UnsafeProjection.create(keptAt)
+      val found = mutable.LongMap.empty[UnsafeRow]
+      val heaps = c.qids.map(_ => new TopKBuffer(k, asc))
+      scorer(c.qvs).scan(it, c.byCell, heaps, r => {
+        found(r.getLong(0)) = carry(r).copy()
+        if (found.size > 2L * c.qids.length * k) retain(found, heaps)
+      })
+      retain(found, heaps)
+      new TaskHits(heaps.map(_.size), heaps.flatMap(h => h.ids.take(h.size)),
+        heaps.flatMap(h => h.dists.take(h.size)), found.values.toArray)
+    }
   }
 
   /** Scorer over `array<float>` payloads, distances bit-identical to

@@ -47,7 +47,7 @@ sealed trait Layout {
   * codes. */
 case object NoLayout extends Layout {
   def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame =
-    m.cellTopK(q, k, carry, lit(0).as(IvfIndex.CID), array(lit(0)))
+    m.cellTopK(q, k, carry, lit(0).as(IvfIndex.CID), CellScan.cellZero)
 }
 
 /** IVF: rows stored in their nearest of `nlist` k-means cells (0 = auto,
@@ -68,9 +68,13 @@ final case class IvfCells(nlist: Int, centroids: Array[Array[Float]] = Array.emp
   override def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout =
     copy(centroids = meta.readRows("centroids", ("centroid_id", "centroid")))
   override def fittedDim: Option[Int] = Some(centroids(0).length)
-  // nprobe resolves against the FITTED cell count, not the parsed nlist
-  def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame =
-    m.cellTopK(q, k, carry, col(IvfIndex.CID), IvfIndex.probesCol(centroids, m.searcher.params.nprobe))
+  @transient private lazy val index = CentroidIndex.forCentroids(centroids)
+  // each query probes its nprobe nearest cells, on the driver; nprobe
+  // resolves against the FITTED cell count, not the parsed nlist
+  def topK(m: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame = {
+    val nprobe = IndexStrategy.resolveNprobe(m.searcher.params.nprobe, centroids.length)
+    m.cellTopK(q, k, carry, col(IvfIndex.CID), IvfKernels.probes(_, index, nprobe))
+  }
   // each query scans only its nprobe cells (a row lives in one cell, so
   // hits stay distinct); full probe equals the exact scan
   override def rangeScan(m: SearcherModel, base: DataFrame, q: DataFrame,
@@ -107,7 +111,7 @@ final case class HnswGraphs(m: Int, fittedGraphs: Option[Int] = None) extends La
   // the one-cell cell scan, with the graph scorer in place of a row scorer
   def topK(model: SearcherModel, q: DataFrame, k: Int, carry: Seq[String]): DataFrame = {
     val (metric, params) = (model.searcher.metric, model.searcher.params)
-    model.withSource(CellScan.topK(HnswGraphs.scanRows(model.indexed, carry), q, array(lit(0)), k,
+    model.withSource(CellScan.topK(HnswGraphs.scanRows(model.indexed, carry), q, CellScan.cellZero, k,
       !metric.higherIsCloser, CellScan.DefaultQueryChunk)(
       NswGraph.scorer(k, model.effectiveEf, metric.name, params.metricArg)), q)
   }

@@ -2,68 +2,168 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftshim.GraftSql.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 
-/** Unboxed nearest-centroid kernels, called from generated code. */
+/** Nearest-centroid kernels over primitive float vectors: fit, cell
+  * assignment and query probes all score through the one flat distance
+  * kernel ([[d2]]/[[d2x4]]). */
 object IvfKernels {
   /** Dispatch: the flat O(k·d) scan below [[CentroidIndex.FastThreshold]]
     * — every oracle gate resolves there, and its sequential
     * `Σ(x_i−c_i)²` fp order is what the DuckDB oracles reproduce — and
     * the ILP-friendly dot-form scan ([[nearestFast]]) above it, where no
     * oracle applies (large k only arises in the sf1+/100 TB regimes,
-    * which are benched, not hashed). Both are deterministic run to run. */
+    * which are benched, not hashed). Both are deterministic run to run.
+    * Copies `v` once; called from generated code. */
   def nearestIdx(v: ArrayData, idx: CentroidIndex, n: Int): ArrayData =
-    if (idx.members != null) nearestHier(v, idx, n)
-    else if (idx.centNorm2 == null) nearest(v, idx.centroids, n)
-    else nearestFast(v, idx, n)
+    UnsafeArrayData.fromPrimitiveArray(nearestIds(v.toFloatArray(), idx, n))
 
-  /** Ids of the `n` nearest centroids to `v` by L2 (ascending). On
-    * normalized vectors L2 order equals cosine order, so one quantizer
-    * serves all metrics — the same simplification faiss's IVF makes. */
-  def nearest(v: ArrayData, centroids: Array[Array[Float]], n: Int): ArrayData = {
-    val k = centroids.length
-    val dists = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      val cent = centroids(c)
-      var s = 0.0; var i = 0
-      while (i < cent.length) {
-        val d = v.getFloat(i).toDouble - cent(i); s += d * d; i += 1
-      }
-      dists(c) = s; c += 1
+  /** [[nearestIdx]] over a float vector of the centroids' width. */
+  def nearestIds(x: Array[Float], idx: CentroidIndex, n: Int): Array[Int] = {
+    val d = idx.centroids(0).length
+    if (x.length != d) throw new IllegalArgumentException(
+      s"vector dimension mismatch: ${x.length} vs $d")
+    if (idx.members != null) nearestHier(x, idx, n)
+    else if (idx.centNorm2 == null) nearestN(x, idx.wide, n)
+    else nearestFast(x, idx, n)
+  }
+
+  /** Each query's [[nearestIds]]: in parallel over queries once the batch's
+    * arithmetic (q·k·d ≥ 2^21) outweighs the fork-join dispatch, as
+    * [[IvfIndex.lloyd]]'s iterations do. Each query's ids are the same
+    * either way. */
+  def probes(qs: Array[Array[Float]], idx: CentroidIndex, n: Int): Array[Array[Int]] = {
+    val out = new Array[Array[Int]](qs.length)
+    val range = java.util.stream.IntStream.range(0, qs.length)
+    val work = qs.length.toLong * idx.centroids.length * idx.centroids(0).length
+    (if (work >= (1L << 21)) range.parallel() else range).forEach(i => out(i) = nearestIds(qs(i), idx, n))
+    out
+  }
+
+  /** `Σ_f (x_f − c_f)²` over the first `d` components, accumulated in
+    * double in ascending f: the one point-to-centroid distance of every
+    * fit and flat probe. `c` is a float vector widened to double (or a
+    * double mean), so `x(f).toDouble - c(f)` is the same double the float
+    * pair gives. */
+  private[search] def d2(x: Array[Float], c: Array[Double], d: Int): Double = {
+    var s = 0.0; var f = 0
+    while (f < d) { val t = x(f).toDouble - c(f); s += t * t; f += 1 }
+    s
+  }
+
+  /** [[d2]] of `x` to four centroids in one pass over `x`, into
+    * `out(0..3)`: four independent sums, each in ascending f with no fused
+    * or reordered arithmetic, so `out(q)` is `d2(x, c_q, d)` bit for bit. The
+    * single sum's add chain is what bounds the plain loop; four chains
+    * keep the core busy. */
+  private[search] def d2x4(x: Array[Float], c0: Array[Double], c1: Array[Double],
+      c2: Array[Double], c3: Array[Double], d: Int, out: Array[Double]): Unit = {
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var f = 0
+    while (f < d) {
+      val xf = x(f).toDouble
+      val t0 = xf - c0(f); s0 += t0 * t0
+      val t1 = xf - c1(f); s1 += t1 * t1
+      val t2 = xf - c2(f); s2 += t2 * t2
+      val t3 = xf - c3(f); s3 += t3 * t3
+      f += 1
     }
-    val m = math.min(n, k)
-    val out = new Array[Int](m)
-    val taken = new Array[Boolean](k)
+    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
+  }
+
+  /** [[d2]] of `x` to `cs(j)`..`cs(j + g - 1)` (g ≤ 4) into `out(0..g-1)`. */
+  private def d2Group(x: Array[Float], cs: Array[Array[Double]], j: Int, g: Int, d: Int,
+      out: Array[Double]): Unit =
+    if (g == 4) d2x4(x, cs(j), cs(j + 1), cs(j + 2), cs(j + 3), d, out)
+    else { var q = 0; while (q < g) { out(q) = d2(x, cs(j + q), d); q += 1 } }
+
+  /** Index of the nearest of `cs` to `x`: the first minimum of [[d2]] by
+    * ascending index, a NaN distance never winning and no finite distance
+    * leaving centroid 0 (plain `if (dd < bestD)` from `bestD = MaxValue`).
+    * With `lower` given, also stores each centroid's distance `√d2` at
+    * `lower(off + j)`. `buf` is a 4-double scratch. */
+  private[search] def nearest(x: Array[Float], cs: Array[Array[Double]], d: Int,
+      lower: Array[Double], off: Int, buf: Array[Double]): Int = {
+    val k = cs.length
+    var best = 0; var bestD = Double.MaxValue
     var j = 0
-    while (j < m) {
-      var best = -1; var bestD = Double.MaxValue
-      c = 0
-      while (c < k) {
-        if (!taken(c) && dists(c) < bestD) { best = c; bestD = dists(c) }
-        c += 1
+    while (j < k) {
+      val g = math.min(4, k - j)
+      d2Group(x, cs, j, g, d, buf)
+      var q = 0
+      while (q < g) {
+        val s = buf(q)
+        if (lower != null) lower(off + j + q) = math.sqrt(s)
+        if (s < bestD) { bestD = s; best = j + q }
+        q += 1
       }
-      taken(best) = true; out(j) = best; j += 1
+      j += g
     }
-    new GenericArrayData(out.map(Int.box))
+    best
+  }
+
+  /** Ids of the `n` nearest of `cs` to `x` by [[d2]], ascending by
+    * (distance, id): a bounded insertion list over one pass, ties to the
+    * lower index. A distance that is not below `Double.MaxValue` (NaN,
+    * infinite) is never taken, so fewer than `min(n, k)` ids come back only
+    * when fewer centroids are at a finite distance. On normalized vectors
+    * L2 order equals cosine order, so one quantizer serves all metrics —
+    * the same simplification faiss's IVF makes. */
+  private[search] def nearestN(x: Array[Float], cs: Array[Array[Double]], n: Int): Array[Int] = {
+    val k = cs.length
+    val buf = new Array[Double](4)
+    val d = x.length
+    val m = math.min(n, k)
+    val bestD = new Array[Double](m)
+    val bestId = new Array[Int](m)
+    var filled = 0
+    var j = 0
+    while (j < k) {
+      val g = math.min(4, k - j)
+      d2Group(x, cs, j, g, d, buf)
+      var q = 0
+      while (q < g) {
+        if (buf(q) < Double.MaxValue) filled = insert(bestD, bestId, filled, buf(q), j + q)
+        q += 1
+      }
+      j += g
+    }
+    if (filled == m) bestId else java.util.Arrays.copyOf(bestId, filled)
+  }
+
+  /** Insert `(dd, id)` into the bounded list `bestD`/`bestId`, whose first
+    * `filled` entries ascend by (distance, id), the lower id first among
+    * equal distances; returns the new fill. */
+  private def insert(bestD: Array[Double], bestId: Array[Int], filled: Int, dd: Double, id: Int): Int = {
+    val m = bestD.length
+    if (m == 0 || filled == m && !(dd < bestD(m - 1) || (dd == bestD(m - 1) && id < bestId(m - 1))))
+      return filled
+    var p = if (filled < m) filled else m - 1
+    while (p > 0 && (bestD(p - 1) > dd || (bestD(p - 1) == dd && bestId(p - 1) > id))) {
+      bestD(p) = bestD(p - 1); bestId(p) = bestId(p - 1); p -= 1
+    }
+    bestD(p) = dd; bestId(p) = id
+    if (filled < m) filled + 1 else filled
+  }
+
+  private[search] def widen(v: Array[Float]): Array[Double] = {
+    val out = new Array[Double](v.length); var f = 0
+    while (f < v.length) { out(f) = v(f); f += 1 }
+    out
   }
 
   /**
-   * ILP-optimized exact nearest-n for the large-k regime. The flat kernel's
-   * inner loop is a single fp-add dependency chain (`s += d*d` — ~4 cycles
-   * per element on any modern core, and the JIT cannot reassociate fp), so
-   * at nlist=65,536 the assignment scan pays ~4M latency-bound FLOP per ROW
-   * — the named residual cost of the sf10 probe. This kernel: (a) copies
-   * the row vector out of ArrayData once (k virtual reads instead of k·d),
-   * (b) scores `d² = ‖x‖² − 2·x·c + ‖c‖²` with FOUR independent
-   * accumulators (centroid norms precomputed at build), breaking the
-   * latency chain, (c) keeps a bounded insertion top-m by (dist, id) —
-   * the same lexicographic order the flat selection produces.
+   * ILP-optimized exact nearest-n for the large-k regime: a flat scan at
+   * nlist=65,536 pays ~4M FLOP per ROW — the named residual cost of the
+   * sf10 probe. This kernel (a) scores `d² = ‖x‖² − 2·x·c + ‖c‖²` with
+   * FOUR independent accumulators (centroid norms precomputed at build)
+   * within each centroid, (b) keeps a bounded insertion top-m by
+   * (dist, id) — the same lexicographic order the flat kernel produces.
    *
    * Triangle-inequality pruning was tried here first and MEASURED SLOWER
    * (0.5× at k=4096, d=64): the corpus embeddings are near-isotropic on
@@ -81,17 +181,14 @@ object IvfKernels {
    * near-dup) whose contract tolerates boundary reshuffles. Deterministic
    * run to run: fixed arithmetic, no parallel reduction.
    */
-  def nearestFast(v: ArrayData, idx: CentroidIndex, n: Int): ArrayData = {
+  def nearestFast(x: Array[Float], idx: CentroidIndex, n: Int): Array[Int] = {
     val cents = idx.centroids
     val norms = idx.centNorm2
     val k = cents.length
     val m = math.min(n, k)
     val dim = cents(0).length
-    val x = new Array[Float](dim)
-    var i = 0
-    while (i < dim) { x(i) = v.getFloat(i); i += 1 }
     var x2 = 0.0
-    i = 0
+    var i = 0
     while (i < dim) { val d = x(i).toDouble; x2 += d * d; i += 1 }
     val bestD = new Array[Double](m)
     val bestId = new Array[Int](m)
@@ -110,23 +207,10 @@ object IvfKernels {
         i += 4
       }
       while (i < dim) { s0 += x(i).toDouble * cent(i); i += 1 }
-      val dd = x2 - 2.0 * (s0 + s1 + s2 + s3) + norms(c)
-      if (filled < m ||
-          dd < bestD(m - 1) || (dd == bestD(m - 1) && c < bestId(m - 1))) {
-        var p = if (filled < m) filled else m - 1
-        while (p > 0 &&
-            (bestD(p - 1) > dd || (bestD(p - 1) == dd && bestId(p - 1) > c))) {
-          bestD(p) = bestD(p - 1); bestId(p) = bestId(p - 1); p -= 1
-        }
-        bestD(p) = dd; bestId(p) = c
-        if (filled < m) filled += 1
-      }
+      filled = insert(bestD, bestId, filled, x2 - 2.0 * (s0 + s1 + s2 + s3) + norms(c), c)
       c += 1
     }
-    val out = new Array[Any](filled)
-    var o = 0
-    while (o < filled) { out(o) = Int.box(bestId(o)); o += 1 }
-    new GenericArrayData(out)
+    if (filled == m) bestId else java.util.Arrays.copyOf(bestId, filled)
   }
 
   /**
@@ -146,7 +230,7 @@ object IvfKernels {
    * activation is logged at build. Deterministic run to run: fixed
    * coarse fit, fixed probe order, fixed insertion tie-breaks.
    */
-  def nearestHier(v: ArrayData, idx: CentroidIndex, n: Int): ArrayData = {
+  def nearestHier(x: Array[Float], idx: CentroidIndex, n: Int): Array[Int] = {
     val cents = idx.centroids
     val norms = idx.centNorm2
     val coarse = idx.coarse
@@ -154,11 +238,8 @@ object IvfKernels {
     val members = idx.members
     val kc = coarse.length
     val dim = cents(0).length
-    val x = new Array[Float](dim)
-    var i = 0
-    while (i < dim) { x(i) = v.getFloat(i); i += 1 }
     var x2 = 0.0
-    i = 0
+    var i = 0
     while (i < dim) { val d = x(i).toDouble; x2 += d * d; i += 1 }
     val tail = dim - (dim & 3)
 
@@ -183,17 +264,7 @@ object IvfKernels {
     var cFilled = 0
     var c = 0
     while (c < kc) {
-      val dd = dotDist(coarse(c), cnorm(c))
-      if (cFilled < wc ||
-          dd < cD(wc - 1) || (dd == cD(wc - 1) && c < cId(wc - 1))) {
-        var p = if (cFilled < wc) cFilled else wc - 1
-        while (p > 0 &&
-            (cD(p - 1) > dd || (cD(p - 1) == dd && cId(p - 1) > c))) {
-          cD(p) = cD(p - 1); cId(p) = cId(p - 1); p -= 1
-        }
-        cD(p) = dd; cId(p) = c
-        if (cFilled < wc) cFilled += 1
-      }
+      cFilled = insert(cD, cId, cFilled, dotDist(coarse(c), cnorm(c)), c)
       c += 1
     }
 
@@ -209,25 +280,12 @@ object IvfKernels {
       var mi = 0
       while (mi < mem.length) {
         val id = mem(mi)
-        val dd = dotDist(cents(id), norms(id))
-        if (filled < m ||
-            dd < bestD(m - 1) || (dd == bestD(m - 1) && id < bestId(m - 1))) {
-          var p = if (filled < m) filled else m - 1
-          while (p > 0 &&
-              (bestD(p - 1) > dd || (bestD(p - 1) == dd && bestId(p - 1) > id))) {
-            bestD(p) = bestD(p - 1); bestId(p) = bestId(p - 1); p -= 1
-          }
-          bestD(p) = dd; bestId(p) = id
-          if (filled < m) filled += 1
-        }
+        filled = insert(bestD, bestId, filled, dotDist(cents(id), norms(id)), id)
         mi += 1
       }
       pc += 1
     }
-    val out = new Array[Any](filled)
-    var o = 0
-    while (o < filled) { out(o) = Int.box(bestId(o)); o += 1 }
-    new GenericArrayData(out)
+    if (filled == m) bestId else java.util.Arrays.copyOf(bestId, filled)
   }
 }
 
@@ -248,6 +306,9 @@ final class CentroidIndex(
     val members: Array[Array[Int]]) extends Serializable {
   def this(centroids: Array[Array[Float]], centNorm2: Array[Double]) =
     this(centroids, centNorm2, null, null, null)
+  /** The centroids widened to double, once per index: the flat kernel's
+    * operand. */
+  @transient lazy val wide: Array[Array[Double]] = centroids.map(IvfKernels.widen)
 }
 
 object CentroidIndex {
@@ -326,7 +387,8 @@ object CentroidIndex {
   }
 
   /** Deterministic driver-side coarse fit over the centroid ROWS: ~√k
-    * coarse cells, strided init, 5 Lloyd iterations in double precision,
+    * coarse cells, strided init, 5 Lloyd iterations in double precision
+    * (each centroid to its first-nearest cell, [[IvfKernels.nearest]]),
     * empty cells keep their previous position. Cost ~5·k·√k·d double ops
     * once per fitted matrix (~2 s at k=31k, d=64) — amortized against the
     * O(n·k·d) assignment scan it replaces. */
@@ -334,27 +396,16 @@ object CentroidIndex {
     val k = cents.length
     val d = cents(0).length
     val kc = math.max(16, math.ceil(math.sqrt(k.toDouble)).toInt)
-    var coarse = Array.tabulate(kc) { j =>
+    val coarse = Array.tabulate(kc) { j =>
       val src = cents(((j.toLong * k) / kc).toInt)
       Array.tabulate(d)(i => src(i).toDouble)
     }
     val assign = new Array[Int](k)
+    val buf = new Array[Double](4)
     var iter = 0
     while (iter < 5) {
       var c = 0
-      while (c < k) {
-        val v = cents(c)
-        var best = 0; var bestD = Double.MaxValue
-        var j = 0
-        while (j < kc) {
-          val cj = coarse(j)
-          var s = 0.0; var i = 0
-          while (i < d) { val df = v(i).toDouble - cj(i); s += df * df; i += 1 }
-          if (s < bestD) { bestD = s; best = j }
-          j += 1
-        }
-        assign(c) = best; c += 1
-      }
+      while (c < k) { assign(c) = IvfKernels.nearest(cents(c), coarse, d, null, 0, buf); c += 1 }
       val sums = Array.ofDim[Double](kc, d)
       val counts = new Array[Int](kc)
       var c2 = 0
@@ -390,7 +441,9 @@ object CentroidIndex {
   }
 }
 
-/** Codegen'd expression: `n` nearest centroid ids for a vector. The centroid
+/** Codegen'd expression: `n` nearest centroid ids for a vector (fit and add
+  * cell assignment, range probes, dedup blocking), through
+  * [[IvfKernels.nearestIdx]], which copies the vector once. The centroid
   * index (matrix + precomputed norms, prebuilt on the driver) rides along as a
   * plan reference object (broadcast-in-codegen), not a per-row closure —
   * stays inside whole-stage codegen. */
@@ -413,7 +466,8 @@ case class NearestCentroids(child: Expression, index: CentroidIndex, n: Int)
  * "IVFn,Flat" — /root/reference/backend/faiss_searcher.py:100-107), store
  * each row's cell id, and at query time score only the `nprobe` nearest
  * cells. Serving is one [[CellScan]] for every storage kind: the driver
- * collects each bounded query chunk with its probe list, and each
+ * collects each bounded query chunk and computes its probe lists
+ * ([[IvfKernels.probes]]), and each
  * partition scores a stored row only against the queries probing its cell,
  * into one bounded heap per query. On a cluster the cells are
  * co-partitioned (`repartition(cellId)`) and unprobed cells are filtered
@@ -422,6 +476,8 @@ case class NearestCentroids(child: Expression, index: CentroidIndex, n: Int)
  * tractable where brute force isn't.
  */
 object IvfIndex {
+  import IvfKernels.{d2, d2x4, nearest, widen}
+
   private[search] val CID = "__cell"
   private val MaxTrainRows = 100000L
   /** faiss warns below ~39 training points per centroid
@@ -453,8 +509,9 @@ object IvfIndex {
   def nearestCentroidsCol(v: Column, cents: Array[Array[Float]], n: Int): Column =
     column(NearestCentroids(expression(v), CentroidIndex.forCentroids(cents), n))
 
-  /** Each query's probe list: its `nprobe` nearest of the FITTED cells
-    * (auto-sized `IVF0` models parse as nlist=0; nprobe=0 = auto-scaled). */
+  /** Each query's probe list as a column, for range search: its `nprobe`
+    * nearest of the FITTED cells (auto-sized `IVF0` models parse as
+    * nlist=0; nprobe=0 = auto-scaled). */
   def probesCol(cents: Array[Array[Float]], nprobe: Int): Column =
     nearestCentroidsCol(col(SparkSearcher.QVEC), cents, IndexStrategy.resolveNprobe(nprobe, cents.length))
 
@@ -727,69 +784,6 @@ object IvfIndex {
     * fit near 100k × 1,023 or a PQ codebook fit at 100k × 256 runs every
     * iteration as the full scan instead. */
   private val LloydBoundCap = 1L << 22
-
-  /** `Σ_f (x_f − c_f)²` over the first `d` components, accumulated in
-    * double in ascending f: the one point-to-centroid distance of every
-    * fit. `c` is a float vector widened to double, so `x(f).toDouble - c(f)`
-    * is the same double the float pair gives. */
-  private def d2(x: Array[Float], c: Array[Double], d: Int): Double = {
-    var s = 0.0; var f = 0
-    while (f < d) { val t = x(f).toDouble - c(f); s += t * t; f += 1 }
-    s
-  }
-
-  /** [[d2]] of `x` to four centroids in one pass over `x`, into
-    * `out(0..3)`: four independent sums, each in ascending f with no fused
-    * or reordered arithmetic, so `out(q)` is `d2(x, c_q, d)` bit for bit. The
-    * single sum's add chain is what bounds the plain loop; four chains
-    * keep the core busy. */
-  private def d2x4(x: Array[Float], c0: Array[Double], c1: Array[Double],
-      c2: Array[Double], c3: Array[Double], d: Int, out: Array[Double]): Unit = {
-    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-    var f = 0
-    while (f < d) {
-      val xf = x(f).toDouble
-      val t0 = xf - c0(f); s0 += t0 * t0
-      val t1 = xf - c1(f); s1 += t1 * t1
-      val t2 = xf - c2(f); s2 += t2 * t2
-      val t3 = xf - c3(f); s3 += t3 * t3
-      f += 1
-    }
-    out(0) = s0; out(1) = s1; out(2) = s2; out(3) = s3
-  }
-
-  /** Index of the nearest of `cs` to `x`: the first minimum of [[d2]] by
-    * ascending index, a NaN distance never winning and no finite distance
-    * leaving centroid 0 (plain `if (dd < bestD)` from `bestD = MaxValue`).
-    * Scores four centroids per pass ([[d2x4]]). With `lower` given, also
-    * stores each centroid's distance `√d2` at `lower(off + j)`. `buf` is a
-    * 4-double scratch. */
-  private def nearest(x: Array[Float], cs: Array[Array[Double]], d: Int,
-      lower: Array[Double], off: Int, buf: Array[Double]): Int = {
-    val k = cs.length
-    var best = 0; var bestD = Double.MaxValue
-    var j = 0
-    while (j < k) {
-      val m = math.min(4, k - j)
-      if (m == 4) d2x4(x, cs(j), cs(j + 1), cs(j + 2), cs(j + 3), d, buf)
-      else { var q = 0; while (q < m) { buf(q) = d2(x, cs(j + q), d); q += 1 } }
-      var q = 0
-      while (q < m) {
-        val s = buf(q)
-        if (lower != null) lower(off + j + q) = math.sqrt(s)
-        if (s < bestD) { bestD = s; best = j + q }
-        q += 1
-      }
-      j += m
-    }
-    best
-  }
-
-  private def widen(v: Array[Float]): Array[Double] = {
-    val out = new Array[Double](v.length); var f = 0
-    while (f < v.length) { out(f) = v(f); f += 1 }
-    out
-  }
 
   /**
    * Elkan's bounds for [[lloyd]]'s assignment step, on Euclidean distances

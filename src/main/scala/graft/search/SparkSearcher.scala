@@ -487,8 +487,8 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
         // Flat: one pass — spread, persist, count (faiss index.add,
         // faiss_searcher.py:124)
         val indexed = layout.spread(base).persist(StorageLevel.MEMORY_AND_DISK)
-        val n = materialize(indexed)
-        (indexed, n, dimOf(indexed), layout, storage)
+        val (n, d) = materializeDim(indexed)
+        (indexed, n, d, layout, storage)
       } else {
         // codes under cos need MATERIALIZED normalization (ADC computes raw
         // dot tables) — the reference's own norm_vec trick
@@ -497,8 +497,7 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
         val pre = (if (storage.codesOnly && params.measurement == "cos")
             base.withColumn(VEC, VectorFunctions.vec_l2_normalize(col(VEC)))
           else base).persist(StorageLevel.MEMORY_AND_DISK)
-        val n = materialize(pre)
-        val d = dimOf(pre)
+        val (n, d) = materializeDim(pre)
         require(d > 0, s"$strategy fit on empty/zero-dim vectors")
         // the layout fits first: IVF cells are assigned before encoding
         val l = layout.fit(this, pre, n, d)
@@ -539,11 +538,21 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
       .drop("pos")
   }
 
-  private def dimOf(indexed: DataFrame): Int =
-    // a PCA prefix reduces below the encoder's declared dim — always probe
-    (if (pcaSpec.isDefined) None else encoder.dim).getOrElse(
-      // dim probe (faiss_searcher.py:56); empty index → 0, search() then errors
-      indexed.select(size(col(VEC))).head(1).headOption.map(_.getInt(0)).getOrElse(0))
+  /** [[SparkSearcher.materialize]] of a persisted frame with vectors, and
+    * their width (faiss_searcher.py:56) from the same job: the encoder's
+    * declared dim, else the observed one (a PCA prefix reduces below the
+    * declared dim); empty → 0, search() then errors. Vectors of two widths
+    * fail here. */
+  private def materializeDim(df: DataFrame): (Long, Int) = {
+    val width = when(col(VEC).isNotNull, size(col(VEC)))
+    val m = observeOnCache(df, count(lit(1)), min(width), max(width))
+    val Seq(lo, hi) = Seq(1, 2).map(i => if (m.isNullAt(i)) 0 else m.getInt(i))
+    if (lo != hi) {
+      df.unpersist()
+      throw new IllegalArgumentException(s"fit: vectors of different widths in one index: $lo and $hi")
+    }
+    (m.getLong(0), (if (pcaSpec.isDefined) None else encoder.dim).getOrElse(lo))
+  }
 }
 
 object SparkSearcher {
@@ -601,7 +610,7 @@ object SparkSearcher {
     // rank-k cosine per query = the minimum of its exact top-k (cos:
     // higher is closer); value-only, so heap tie-breaks don't matter
     val rankK = CellScan.topK(pre.select(col(ROW_ID), col(VEC), lit(0).as(IvfIndex.CID)), qdf,
-        array(lit(0)), math.min(k.toLong, n).toInt, asc = false, CellScan.DefaultQueryChunk)(
+        CellScan.cellZero, math.min(k.toLong, n).toInt, asc = false, CellScan.DefaultQueryChunk)(
         CellScan.floats("cos", 0.0))
       .groupBy(col(QID)).agg(min(col(DIST)).as("__rk"))
       .select(col("__rk")).collect().map(_.getDouble(0)).sorted
@@ -753,13 +762,18 @@ object SparkSearcher {
   /** Build persisted `df`'s cache and return its row count from that same
     * job: the count rides the cache-filling scan via observe (the add()
     * pattern), where `count()` would run its own aggregate jobs. */
-  private[search] def materialize(df: DataFrame): Long = {
-    val observed = df.observe("__materialize", count(lit(1)).as("__n"))
+  private[search] def materialize(df: DataFrame): Long =
+    observeOnCache(df, count(lit(1))).getLong(0)
+
+  /** Build persisted `df`'s cache and return `metrics` (aggregates) observed
+    * on that cache-filling scan. */
+  private[search] def observeOnCache(df: DataFrame, metrics: Column*): Row = {
+    val observed = df.observe("__materialize", metrics.head, metrics.tail: _*)
     val qe = observed.queryExecution
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("materialize")) {
       qe.toRdd.foreach(_ => ())
     }
-    qe.observedMetrics("__materialize").getLong(0)
+    qe.observedMetrics("__materialize")
   }
 
   /** The single params row Spark's JSON writer produced (a directory of
@@ -1456,7 +1470,10 @@ class SearcherModel private[search] (
    * returns its pinned hits (free them with `CacheDiscipline.release`);
    * the rest (a capped single chunk, the LSH bucket and `RFlat` routes)
    * return a lazy plan. A cell scan collects its query chunks here on
-   * either finish.
+   * either finish, as `InternalRow`s, and computes each query's probe list
+   * here after that collect; the driver finish builds its local relation
+   * from `InternalRow`s. A query vector that is null or has a NaN or
+   * infinite component gets no hits.
    */
   def search(queries: DataFrame, topK: Int, keepRankNo: Boolean = false,
       queryIdCol: Option[String] = None): DataFrame = {
@@ -1472,19 +1489,8 @@ class SearcherModel private[search] (
         .select(col(QID), col(qItemCol).as(SourceItem), col(QVEC)),
       QVEC, storage.codesOnly && params.measurement == "cos")
 
-    // payload gather-join (the reference's iloc, faiss_searcher.py:146-147).
-    // The broadcast decision is row-count AND byte guarded: the row
-    // threshold alone is byte-blind — 2M rows of 10 KB documents is a
-    // ~20 GB broadcast that OOMs every executor at exactly the corpus
-    // scale the row check still admits. Bytes come from the CACHED
-    // relation's real stats (the index is persisted + counted at fit),
-    // conservatively: column pruning doesn't shrink non-CBO stats, so
-    // the estimate includes the vector column and errs toward the
-    // shuffle join — correct either way, never an executor OOM.
-    val payloadSide = indexed.select(
-      (col(ROW_ID) +: col(ITEM) +: payloadCols.map(col)): _*)
-    val payloadBytes =
-      payloadSide.queryExecution.optimizedPlan.stats.sizeInBytes
+    // payload gather-join (the reference's iloc, faiss_searcher.py:146-147),
+    // under the byte guard of `payloadBytes`
     val gather = count <= params.broadcastThreshold && payloadBytes <= BigInt(payloadByteCap)
     // under the same guard a single-chunk cell scan carries the item and
     // payload to a driver finish (CellScan.topK): it runs here, as one job,
@@ -1592,6 +1598,20 @@ class SearcherModel private[search] (
     }.toMap
   }
 
+  /** The payload side of a search's gather-join: `(ROW_ID, ITEM, payload…)`. */
+  private lazy val payloadSide = indexed.select((col(ROW_ID) +: col(ITEM) +: payloadCols.map(col)): _*)
+
+  /** The payload side's estimated bytes, once per model (the index is
+    * fixed): the broadcast decision is row-count AND byte guarded, since
+    * the row threshold alone is byte-blind — 2M rows of 10 KB documents is
+    * a ~20 GB broadcast that OOMs every executor at exactly the corpus
+    * scale the row check still admits. Bytes come from the CACHED
+    * relation's real stats (the index is persisted + counted at fit),
+    * conservatively: column pruning doesn't shrink non-CBO stats, so the
+    * estimate includes the vector column and errs toward the shuffle join
+    * — correct either way, never an executor OOM. */
+  private lazy val payloadBytes: BigInt = payloadSide.queryExecution.optimizedPlan.stats.sizeInBytes
+
   /** Session-overridable byte cap for the payload gather-join's
     * broadcast (`graft.search.payloadBroadcastByteCap`) — the default is
     * the 2 GB [[SparkSearcher.DriverTableByteCap]]. */
@@ -1615,17 +1635,17 @@ class SearcherModel private[search] (
       ascending = !metric.higherIsCloser), q)
 
   /** Top-k hits through the one [[CellScan]]: the layout supplies each
-    * row's `cell` and each query's `probes`, the storage the scorer — the
+    * row's `cell` and each query's cells (`probe`), the storage the scorer — the
     * float kernels over a float view, ADC over codes (queries mapped into
     * the codes' space). `carry` as in [[Layout.topK]]. */
   private[search] def cellTopK(q: DataFrame, k: Int, carry: Seq[String], cell: Column,
-      probes: Column): DataFrame = {
+      probe: CellScan.Probe): DataFrame = {
     val (asc, chunk) = (!metric.higherIsCloser, CellScan.DefaultQueryChunk)
     withSource(storage.floats(indexed, cell +: carry.map(col): _*) match {
-      case Some(view) => CellScan.topK(view, q, probes, k, asc, chunk)(
+      case Some(view) => CellScan.topK(view, q, probe, k, asc, chunk)(
         CellScan.floats(metric.name, params.metricArg))
       case None => CellScan.topK(indexed.select(Seq(col(ROW_ID), col(PqIndex.CODES), cell) ++
-          carry.map(col): _*), storage.queries(q), probes, k, asc, chunk)(
+          carry.map(col): _*), storage.queries(q), probe, k, asc, chunk)(
         PqIndex.adcRows(spark, storage.codebooks.get, metric.name, params.metricArg,
           storage.adcBits))
     }, q)

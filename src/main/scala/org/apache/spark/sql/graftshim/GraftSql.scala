@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Minimal bridge into Spark's `private[sql]` Column↔Expression conversions
@@ -21,4 +25,12 @@ object GraftSql {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** `rows` (Catalyst values of `schema`) as a local relation: the plan
+    * `createDataFrame(rows, schema)` builds from `Row`s, with no
+    * conversion. */
+  def localRelation(spark: SparkSession, rows: Seq[InternalRow], schema: StructType): DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    session.withActive(Dataset.ofRows(session, LocalRelation(DataTypeUtils.toAttributes(schema), rows)))
+  }
 }

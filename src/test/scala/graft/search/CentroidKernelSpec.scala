@@ -4,7 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 
 /** The large-k ILP kernel ([[IvfKernels.nearestFast]]) must agree with the
-  * flat scan on WHICH centroids are nearest and in what order — the ids
+  * flat scan (the former `ArrayData` loop, [[NearestReference.nearest]])
+  * on WHICH centroids are nearest and in what order — the ids
   * are the operator's output; only the internal fp association differs
   * (dot-form vs sequential difference-sum), which can reorder true
   * near-ties within ~1e-15. The synthetic grids here have no such ties
@@ -49,7 +50,7 @@ class CentroidKernelSpec extends SparkSpec {
       var qi = 0
       while (qi < queries.length) {
         val v = arrData(queries(qi))
-        val flat = IvfKernels.nearest(v, cents, n).toIntArray()
+        val flat = NearestReference.nearest(v, cents, n).toIntArray()
         val fast = IvfKernels.nearestIdx(v, idx, n).toIntArray()
         assert(fast.sameElements(flat),
           s"mismatch at query $qi n=$n: flat=${flat.mkString(",")} fast=${fast.mkString(",")}")
@@ -72,9 +73,9 @@ class CentroidKernelSpec extends SparkSpec {
     }
     // warm both paths (JIT), then measure
     queries.take(20).foreach { q =>
-      IvfKernels.nearest(q, cents, 1); IvfKernels.nearestIdx(q, idx, 1)
+      NearestReference.nearest(q, cents, 1); IvfKernels.nearestIdx(q, idx, 1)
     }
-    val tFlat = time(queries.foreach(q => IvfKernels.nearest(q, cents, 1)))
+    val tFlat = time(queries.foreach(q => NearestReference.nearest(q, cents, 1)))
     val tFast = time(queries.foreach(q => IvfKernels.nearestIdx(q, idx, 1)))
     info(f"k=$k dim=$dim assign x200: flat ${tFlat}%.3fs fast ${tFast}%.3fs " +
       f"(${tFlat / math.max(tFast, 1e-9)}%.1fx)")
@@ -87,7 +88,7 @@ class CentroidKernelSpec extends SparkSpec {
         f"(${tFast}%.3fs vs ${tFlat}%.3fs) — machine noise, not a failure")
     queries.foreach { q =>
       assert(IvfKernels.nearestIdx(q, idx, 1).toIntArray()
-        .sameElements(IvfKernels.nearest(q, cents, 1).toIntArray()))
+        .sameElements(NearestReference.nearest(q, cents, 1).toIntArray()))
     }
   }
 
@@ -108,7 +109,7 @@ class CentroidKernelSpec extends SparkSpec {
       assert(hier.sameElements(IvfKernels.nearestIdx(q, idx, 4).toIntArray()))
       assert(hier.length == 4 && hier.distinct.length == 4)
       assert(hier.forall(id => id >= 0 && id < k))
-      val exact = IvfKernels.nearest(q, cents, 1).toIntArray()(0)
+      val exact = NearestReference.nearest(q, cents, 1).toIntArray()(0)
       if (hier(0) == exact) agree += 1
     }
     // top-1-vs-exact agreement is NOT the contract: this synthetic corpus

@@ -100,6 +100,45 @@ class DriverFinishLawSpec extends SparkSpec {
       assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
     }
 
+  test("a query vector with a NaN or infinite component gets no hits, like a null one") {
+    val rnd = new scala.util.Random(17)
+    val dim = 8
+    val items = corpus(rnd, 120, dim)
+    val good = Seq.fill(3)(vec(rnd, dim))
+    def bad(f: Int, x: Float) = { val v = vec(rnd, dim); v(f) = x; v }
+    val qs = good.zipWithIndex.map { case (v, i) => (i.toLong, v) } ++ Seq(
+      10L -> bad(0, Float.NaN), 11L -> bad(dim - 1, Float.PositiveInfinity),
+      12L -> bad(3, Float.NegativeInfinity), 13L -> null)
+    def frame(rs: Seq[(Long, Array[Float])]) = spark.createDataFrame(
+      java.util.Arrays.asList(rs.map { case (q, v) => Row(q, s"q$q", Option(v).map(_.toSeq).orNull) }: _*),
+      StructType(Seq(StructField("qid", LongType, nullable = false), StructField("item", StringType),
+        StructField("embedding", vecType))))
+    for (kind <- Seq("Flat", "IVF8", "HNSW8", "PQ4"); metric <- Seq("cos", "l2")) {
+      val model = new SparkSearcher(new PassthroughEncoder("embedding"),
+        SearcherParams(itemCol = Some("item"), idCol = Some("vec_id"), measurement = metric,
+          indexParam = kind, nprobe = 2)).fit(items)
+      try {
+        def run(rs: Seq[(Long, Array[Float])]) =
+          rows(model.search(frame(rs), 5, keepRankNo = true, queryIdCol = Some("qid")))
+        val alone = run(qs.take(3))
+        assert(alone.length == 15, s"$kind $metric")
+        assert(run(qs) == alone, s"$kind $metric: driver finish")
+        spark.conf.set(cap, "0")
+        try assert(run(qs) == alone, s"$kind $metric: distributed merge")
+        finally spark.conf.unset(cap)
+      } finally model.unpersist()
+    }
+    // a probe of another width fails with the kernels' message
+    val ivf = new SparkSearcher(new PassthroughEncoder("embedding"),
+      SearcherParams(itemCol = Some("item"), idCol = Some("vec_id"), measurement = "l2",
+        indexParam = "IVF8", nprobe = 2)).fit(items)
+    try {
+      val e = intercept[IllegalArgumentException](ivf.search(frame(Seq(0L -> vec(rnd, dim - 1))), 5,
+        queryIdCol = Some("qid")))
+      assert(e.getMessage == s"vector dimension mismatch: ${dim - 1} vs $dim")
+    } finally ivf.unpersist()
+  }
+
   /** Runs `body` and returns its value with the jobs it ran, in the order
     * the listener saw their events: `(start, job id, stage names)` and
     * `(end, job id, Nil)`. */
@@ -170,13 +209,15 @@ class DriverFinishLawSpec extends SparkSpec {
     val q = spark.createDataFrame(spark.sparkContext.parallelize(local.collect().toSeq, 2),
       local.schema).select(col("qid").as(QID), col("embedding").as(QVEC))
     def run(chunk: Int) = CellScan.topK(model.indexed.select(col(ROW_ID), col(VEC),
-        col(IvfIndex.CID)), q, IvfIndex.probesCol(model.fittedCentroids.get, 2), 5, asc = true,
+        col(IvfIndex.CID)), q, IvfKernels.probes(_, CentroidIndex.forCentroids(model.fittedCentroids.get), 2),
+      5, asc = true,
       chunk)(CellScan.floats("l2", 2.0))
     try {
       val (chunked, events) = observed(run(7)) // 50 queries → 8 chunks
-      // the chunk collects: the one collect call site that ran once per chunk
+      // the chunk collects (of InternalRows, executeCollect): the one collect
+      // call site that ran once per chunk
       val starts = events.filter(_._1)
-      val collects = starts.flatMap(_._3.headOption).filter(_.startsWith("collect at"))
+      val collects = starts.flatMap(_._3.headOption).filter(_.startsWith("executeCollect at"))
       val chunkSite = collects.groupBy(identity).collectFirst { case (site, n) if n.size == 8 => site }
       assert(chunkSite.nonEmpty, s"no collect ran once per chunk: $collects")
       val at = events.zipWithIndex

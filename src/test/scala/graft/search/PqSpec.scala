@@ -91,18 +91,18 @@ class PqSpec extends SparkSpec {
       .select(col("vec_id").cast("long").as(SparkSearcher.QID),
         col("embedding").cast("array<float>").as(SparkSearcher.QVEC))
     // the ADC cell scan over `m`'s codes at a given chunk size
-    def adcScan(m: SearcherModel, cell: org.apache.spark.sql.Column,
-        probes: org.apache.spark.sql.Column, chunk: Int) =
+    def adcScan(m: SearcherModel, cell: org.apache.spark.sql.Column, probe: CellScan.Probe,
+        chunk: Int) =
       CellScan.topK(m.indexed.select(col(SparkSearcher.ROW_ID), col(PqIndex.CODES), cell), q,
-        probes, 5, asc = true, chunk)(PqIndex.adcRows(spark, m.fittedCodebooks.get, "l2", 2.0, 8))
+        probe, 5, asc = true, chunk)(PqIndex.adcRows(spark, m.fittedCodebooks.get, "l2", 2.0, 8))
         .collect().map(_.toSeq).toSet
-    def run(chunk: Int) = adcScan(model, lit(0).as(IvfIndex.CID), array(lit(0)), chunk)
+    def run(chunk: Int) = adcScan(model, lit(0).as(IvfIndex.CID), CellScan.cellZero, chunk)
     assert(run(7) === run(Int.MaxValue)) // 50 queries → 8 chunks vs 1
     val ivfpq = new SparkSearcher(new PassthroughEncoder("embedding"),
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "l2", indexParam = "IVF8,PQ8", nprobe = 4)).fit(emb)
     def runIvf(chunk: Int) = adcScan(ivfpq, col(IvfIndex.CID),
-      IvfIndex.probesCol(ivfpq.fittedCentroids.get, 4), chunk)
+      IvfKernels.probes(_, CentroidIndex.forCentroids(ivfpq.fittedCentroids.get), 4), chunk)
     assert(runIvf(7) === runIvf(Int.MaxValue))
     // the graph scorer: the multi-chunk eager shape must equal the lazy
     // single-chunk shape (exhaustive ef -> exact -> set equality)
@@ -110,7 +110,7 @@ class PqSpec extends SparkSpec {
       SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),
         measurement = "l2", indexParam = "HNSW8")).fit(emb)
     def runNsw(chunk: Int) = CellScan.topK(HnswGraphs.scanRows(hnsw.indexed, Nil), q,
-        array(lit(0)), 5, asc = true, chunk)(NswGraph.scorer(5, efSearch = 100000, "l2", 2.0))
+        CellScan.cellZero, 5, asc = true, chunk)(NswGraph.scorer(5, efSearch = 100000, "l2", 2.0))
       .collect().map(_.toSeq).toSet
     assert(runNsw(7) === runNsw(Int.MaxValue))
     hnsw.unpersist(); ivfpq.unpersist(); model.unpersist()

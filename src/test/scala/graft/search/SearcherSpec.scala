@@ -118,6 +118,14 @@ class SearcherSpec extends SparkSpec {
       new SparkSearcher(new graft.encoders.PassthroughEncoder("embedding"),
         SearcherParams(itemCol = Some("text"), idCol = Some("vid"))).fit(itemPayload))
     assert(e2.getMessage.contains("item"))
+    // vectors of two widths fail at fit, on the job that fills the cache
+    val mixed = Seq(("a", 0L, Seq(1.0f, 2.0f)), ("b", 1L, Seq(1.0f, 2.0f, 3.0f))).toDF("text", "vid", "embedding")
+    for (kind <- Seq("Flat", "IVF2")) {
+      val e3 = intercept[IllegalArgumentException](
+        new SparkSearcher(new graft.encoders.PassthroughEncoder("embedding"),
+          SearcherParams(itemCol = Some("text"), idCol = Some("vid"), indexParam = kind)).fit(mixed))
+      assert(e3.getMessage.contains("different widths in one index: 2 and 3"), kind)
+    }
   }
 
   test("save/load round-trips a separator containing JSON-special characters") {
