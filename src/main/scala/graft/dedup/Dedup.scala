@@ -941,10 +941,26 @@ object Dedup {
   }
 
   /** MinHash near-dup pipeline: banded candidates, then exact-Jaccard
-    * verification of only the candidate pairs (join back to the texts). */
+    * verification of only the candidate pairs (join back to the texts).
+    *
+    * Two routes, identical rows. The signature job fills the persisted
+    * `(id, sz, sig)` table and observes its row count and gram total. When
+    * `rows·(bands+1)·8 + 8·Σsz` — the band keys and ids of every row plus
+    * every fingerprint, the most the driver could receive — is under an
+    * internal 256 MB cap (and the candidate pairs, at 16 bytes each, fit
+    * what is left of it), the candidates and the verify run on the driver
+    * ([[NearDupRoute]]: one job for the band keys, one for the candidates'
+    * fingerprints) and the result is a local relation. Otherwise the
+    * banded self-join and verify joins run distributed from the filled
+    * cache, and nothing past the cap reaches the driver. Integral ids
+    * only take the driver route; other id types always run distributed. */
   def minHashNearDups(df: DataFrame, idCol: String, textCol: String,
       n: Int = 5, numHashes: Int = 64, bands: Int = 8,
-      threshold: Double = 0.7): DataFrame = {
+      threshold: Double = 0.7): DataFrame =
+    pairsFrame(df, minHashRouted(df, idCol, textCol, n, numHashes, bands, threshold))
+
+  private def minHashRouted(df: DataFrame, idCol: String, textCol: String,
+      n: Int, numHashes: Int, bands: Int, threshold: Double): Routed = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val r = numHashes / bands
     // ONE fused kernel call per row ([[ShingleStatsKernel]]) produces the
@@ -1004,11 +1020,18 @@ object Dedup {
    * pass 33.4 s classic vs 9.7 s at one permutation — this scheme sits
    * proportionally between). MinHashOphSpec measures banded recall
    * against the classic kernel. Deterministic; bit-exact DuckDB oracle
-   * (dedup_minhash_oph).
+   * (dedup_minhash_oph). The candidates and verify take the same two
+   * routes as [[minHashNearDups]]: on the driver under the internal
+   * 256 MB cap on the signature table's band keys and fingerprints,
+   * distributed above it, identical rows either way.
    */
   def minHashNearDupsOph(df: DataFrame, idCol: String, textCol: String,
       n: Int = 5, numBins: Int = 64, bands: Int = 8,
-      threshold: Double = 0.7): DataFrame = {
+      threshold: Double = 0.7): DataFrame =
+    pairsFrame(df, ophRouted(df, idCol, textCol, n, numBins, bands, threshold))
+
+  private def ophRouted(df: DataFrame, idCol: String, textCol: String,
+      n: Int, numBins: Int, bands: Int, threshold: Double): Routed = {
     require(numBins % bands == 0, "numBins must divide into bands")
     val r = numBins / bands
     // the r permutations are `minHashCoefficients(r)` — one shared seed
@@ -1111,26 +1134,51 @@ object Dedup {
     }
   }
 
-  /** Shared tail of the minhash family: band the persisted `texts`
-    * (id, sz, sig) table, self-join on the band keys for candidates,
-    * recover sorted gram fingerprints for CANDIDATE ids only, verify by
-    * exact set-Jaccard. `texts` must be persisted by the caller (both
-    * self-join sides consume it; without the persist the signature kernel
-    * runs twice). */
+  /** Verified near-dup pairs of the minhash family: held on the driver with
+    * the id column's field (the route of [[NearDupRoute]]), or the
+    * distributed route's checkpointed frame. */
+  private type Routed = Either[(DriverPairs, org.apache.spark.sql.types.StructField), DataFrame]
+
+  /** The `[id_a, id_b, jaccard]` frame of either route. */
+  private def pairsFrame(df: DataFrame, routed: Routed): DataFrame = routed match {
+    case Left((p, id)) => NearDupRoute.frame(df.sparkSession, p, id.dataType, id.nullable)
+    case Right(pairs) => pairs
+  }
+
+  /** Shared tail of the minhash family: fill the persisted `texts`
+    * (id, sz, sig) table, observing its row count and gram total on that
+    * same job; then verify on the driver ([[NearDupRoute]]) when its bytes
+    * fit the route's cap, else band it, self-join on the band keys for
+    * candidates, recover sorted gram fingerprints for CANDIDATE ids only
+    * and verify by exact set-Jaccard, distributed, from the filled cache.
+    * Both routes give the same rows. `texts` must be persisted by the
+    * caller (both self-join sides consume it; without the persist the
+    * signature kernel runs twice). */
   private def bandedJaccardVerify(src: DataFrame, n: Int, bands: Int,
       r: Int, threshold: Double, texts: DataFrame,
-      srcCaches: Seq[DataFrame]): DataFrame = {
+      srcCaches: Seq[DataFrame]): Routed = {
     // the banded self-join's sides are bands × corpus rows; the operator
     // sizes their partitioning itself instead of riding the session knob
     // (see selfSizedParts). Repartitioning by the JOIN KEY once, BEFORE
     // the persist, makes the cached table's partitioning satisfy both
     // self-join sides — the join then plans with zero additional
-    // exchanges (the two per-side exchanges the unpartitioned cache paid)
+    // exchanges (the two per-side exchanges the unpartitioned cache paid).
+    // Sized before the fill below, from the same plan estimate as ever
     val sessParts = src.sparkSession.sessionState.conf.numShufflePartitions
     val bandedPre = texts.select(col("id"), posexplode(
       toCol(BandKeysExpr(toExpr(col("sig")), bands, r))).as(Seq("band", "bh")))
     val joinParts = selfSizedParts(sessParts,
       bandedPre.queryExecution.optimizedPlan.stats.sizeInBytes)
+    def free(): Unit = (texts +: srcCaches).foreach(_.unpersist(blocking = false))
+    val local = try {
+      val m = graft.util.CacheDiscipline.observeOnCache(texts, count(lit(1)),
+        coalesce(sum(col("sz").cast("long")), lit(0L)))
+      NearDupRoute.pairs(src, texts, n, bands, r, threshold, m.getLong(0), m.getLong(1))
+    } catch { case e: Throwable => free(); throw e }
+    if (local.isDefined) {
+      free()
+      return Left((local.get, src.schema("id")))
+    }
     val banded = bandedPre
       .repartition(joinParts, col("band"), col("bh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1167,8 +1215,8 @@ object Dedup {
         (col("sz_a") + col("sz_b") - col("common")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    graft.util.CacheDiscipline.materializeAndFree(pairs,
-      (Seq(texts, banded, hsTab) ++ srcCaches): _*)
+    Right(graft.util.CacheDiscipline.materializeAndFree(pairs,
+      (Seq(texts, banded, hsTab) ++ srcCaches): _*))
   }
 
   /**
@@ -1393,6 +1441,23 @@ object Dedup {
 
   private lazy val ccLog = org.slf4j.LoggerFactory.getLogger("graft.dedup.Dedup")
 
+  /** One partition's `(u, v)` edges with both ends non-null, packed into
+    * two long arrays. An object rather than a lambda, so the collect does
+    * not run the closure cleaner's bytecode scan. */
+  private object EdgesTask extends ((org.apache.spark.TaskContext,
+      Iterator[org.apache.spark.sql.catalyst.InternalRow]) => (Array[Long], Array[Long]))
+      with Serializable {
+    def apply(ctx: org.apache.spark.TaskContext,
+        it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): (Array[Long], Array[Long]) = {
+      val u = Array.newBuilder[Long]; val v = Array.newBuilder[Long]
+      while (it.hasNext) {
+        val r = it.next()
+        if (!r.isNullAt(0) && !r.isNullAt(1)) { u += r.getLong(0); v += r.getLong(1) }
+      }
+      (u.result(), v.result())
+    }
+  }
+
   /** Eager localCheckpoint with bookkeeping: returns the pinned DataFrame
     * plus the RDD ids its checkpoint added, so the caller can free each
     * round's blocks as soon as the next round no longer needs them (a
@@ -1438,7 +1503,9 @@ object Dedup {
    * recursive-CTE reachability query. Hybrid execution: contraction runs
    * distributed while the edge set is large and finishes with one bounded
    * collect + union-find once it fits driver broadcast capacity
-   * (`driverFinishEdges`) — identical labels either way. Returns `[id, component,
+   * (`driverFinishEdges`; the finish is [[UnionFind.minLabels]], the
+   * kernel the dedup driver route labels with) — identical labels either
+   * way. Returns `[id, component,
    * is_canonical]` for every id in `pairs` (self-loops keep a node alive as
    * a singleton), `component` = min id of the cluster, `is_canonical`
    * marking the survivor a keep-one policy retains. The result is pinned by
@@ -1449,15 +1516,12 @@ object Dedup {
       maxIters: Int = 25, driverFinishEdges: Long = 4L << 20): DataFrame = {
     val spark = pairs.sparkSession
     val sessParts = spark.sessionState.conf.numShufflePartitions
-    // the driver finish indexes dense ids into primitive INT arrays
-    // (2 ids per edge) — cap the knob where the ARITHMETIC stays safe:
-    // at nE edges the id table needs a power-of-two ≥ (2·nE)·4/3 slots,
-    // so nE must stay ≤ 3·2^28 for the table to fit `1 << tbits` as a
-    // positive Int (the old 2^30 cap let tbits reach 31/32 — a negative
-    // or 1-slot table — and 2·nE overflow `maxIds.toInt`). 2^28 keeps a
-    // power-of-two margin; the driver MEMORY story at that extreme
-    // (2^30-slot table ≈ 12 GB transient) is the operator's documented
-    // worst case — the 4M default stays a few-hundred-MB bound.
+    // the driver finish sorts both endpoints of every edge into one
+    // primitive array (2 ids per edge, [[UnionFind.minLabels]]) — cap the
+    // knob where the ARITHMETIC stays safe: 2·nE must index a JVM array.
+    // 2^28 keeps a power-of-two margin; the driver MEMORY story at that
+    // extreme (≈ 10 GB transient) is the operator's documented worst
+    // case — the 4M default stays a few-hundred-MB bound.
     require(driverFinishEdges <= (1L << 28),
       s"driverFinishEdges must be <= 2^28, got $driverFinishEdges")
     // order-independent edge-set signature: equal sets ⇒ equal (count,
@@ -1537,37 +1601,19 @@ object Dedup {
     // crossover. `driverFinishEdges = 0` forces the pure distributed
     // path (spec cross-check).
     //
-    // Driver footprint at the 4M default, honestly: everything below is
-    // PRIMITIVE arrays — edge endpoints 2×8B×E (64 MB), the open-
-    // addressed id→dense-index table ≤ 2^⌈log2(2·2E/0.75)⌉ slots × 12 B
-    // (≈ 256 MB worst when 2E ids force a 16M-slot table), dense
-    // union-find state 5 B per id (≈ 40 MB), and the relabel output ≤
-    // 16 B per renamed id — ≲ 0.5 GB transient worst-case, a few MB on
-    // a typical corpus (250k pairs). The earlier boxed shape (tuple
-    // collect + LongMaps + a materialized Seq) peaked at several times
-    // that and could OOM a modest driver just under the cap.
+    // Driver footprint at the 4M default: everything below is PRIMITIVE
+    // arrays — the collected edge endpoints 2×8B×E (64 MB), and inside
+    // [[UnionFind.minLabels]] their sorted copy (64 MB) plus 25 B per
+    // distinct id (≤ 8M ids, ≈ 200 MB), and the relabel output ≤ 16 B per
+    // renamed id — ≲ 0.5 GB transient worst-case, a few MB on a typical
+    // corpus (250k pairs).
     def driverComp(e: DataFrame): DataFrame = {
       // ONE job, primitive transport: each partition packs its edges
       // into two long arrays (toLocalIterator would run a job PER
       // partition — 32 scheduling round-trips cost the sf0.1 corpus
       // family ~0.4 s each; a row collect would box every edge)
-      val parts = e.select(col("u"), col("v")).rdd
-        .mapPartitions { it =>
-          var c = 16
-          var u = new Array[Long](c); var v = new Array[Long](c)
-          var n = 0
-          while (it.hasNext) {
-            if (n == c) {
-              c *= 2
-              u = java.util.Arrays.copyOf(u, c)
-              v = java.util.Arrays.copyOf(v, c)
-            }
-            val r = it.next(); u(n) = r.getLong(0); v(n) = r.getLong(1)
-            n += 1
-          }
-          Iterator.single((java.util.Arrays.copyOf(u, n),
-            java.util.Arrays.copyOf(v, n)))
-        }.collect()
+      val parts = graft.util.CacheDiscipline.runTask(e.select(col("u"), col("v")), "collect",
+        EdgesTask)
       val nE = parts.map(_._1.length).sum
       val us = new Array[Long](nE); val vs = new Array[Long](nE)
       var off = 0
@@ -1576,72 +1622,12 @@ object Dedup {
         System.arraycopy(v, 0, vs, off, v.length)
         off += u.length
       }
-      // open-addressed long→int: dense index per distinct endpoint
-      val maxIds = math.max(4L, 2L * nE)
-      var tbits = 64 - java.lang.Long.numberOfLeadingZeros(
-        (maxIds * 4 / 3) - 1)
-      if (tbits < 3) tbits = 3
-      val tcap = 1 << tbits; val tmask = tcap - 1
-      val tkeys = new Array[Long](tcap)
-      val tvals = new Array[Int](tcap)
-      java.util.Arrays.fill(tvals, -1)
-      val idByIdx = new Array[Long](maxIds.toInt)
-      var nIds = 0
-      val parent = new Array[Int](maxIds.toInt)
-      val rank = new Array[Byte](maxIds.toInt)
-      def idx(id: Long): Int = {
-        var h = (java.lang.Long.hashCode(id * -7046029254386353131L)) & tmask
-        while (tvals(h) != -1 && tkeys(h) != id) h = (h + 1) & tmask
-        if (tvals(h) == -1) {
-          tkeys(h) = id; tvals(h) = nIds; idByIdx(nIds) = id
-          parent(nIds) = nIds; nIds += 1
-        }
-        tvals(h)
-      }
-      def find(x0: Int): Int = {
-        var x = x0
-        while (parent(x) != x) {
-          val p = parent(x); val gp = parent(p)
-          parent(x) = gp; x = gp
-        }
-        x
-      }
-      var i = 0
-      while (i < nE) {
-        val ru = find(idx(us(i))); val rv = find(idx(vs(i)))
-        if (ru != rv) {
-          if (rank(ru) < rank(rv)) parent(ru) = rv
-          else if (rank(rv) < rank(ru)) parent(rv) = ru
-          else { parent(rv) = ru; rank(ru) = (rank(ru) + 1).toByte }
-        }
-        i += 1
-      }
-      // per-root minimum id = the component label (the distributed
-      // fixpoint's invariant)
-      val minRep = new Array[Long](nIds)
-      java.util.Arrays.fill(minRep, Long.MaxValue)
-      i = 0
-      while (i < nIds) {
-        val r = find(i)
-        if (idByIdx(i) < minRep(r)) minRep(r) = idByIdx(i)
-        i += 1
-      }
-      var m = 0
-      i = 0
-      while (i < nIds) {
-        if (minRep(find(i)) != idByIdx(i)) m += 1
-        i += 1
-      }
-      val outId = new Array[Long](m); val outComp = new Array[Long](m)
-      var j = 0
-      i = 0
-      while (i < nIds) {
-        val c = minRep(find(i))
-        if (c != idByIdx(i)) { outId(j) = idByIdx(i); outComp(j) = c; j += 1 }
-        i += 1
-      }
+      // every id whose label is not itself: the distributed fixpoint's
+      // non-root rows
+      val (ids, labels) = UnionFind.minLabels(us, vs)
+      val renamed = ids.indices.filter(i => ids(i) != labels(i))
       import spark.implicits._
-      spark.createDataset(Array.tabulate(m)(x => (outId(x), outComp(x))))
+      spark.createDataset(renamed.map(i => (ids(i), labels(i))))
         .toDF("id", "component")
         .repartition(sessParts)
     }
@@ -1756,6 +1742,14 @@ object Dedup {
    * candidate by EXACT set-Jaccard, so precision is identical; only
    * banding recall can differ. `numHashes` is the signature width under
    * either scheme: permutation count (classic) or bin count (OPH).
+   *
+   * Route: when the signature table fits the pair pipeline's internal
+   * 256 MB driver cap (see [[minHashNearDups]]), the pairs are verified on
+   * the driver, the drop list comes from [[UnionFind.minLabels]] as a
+   * local relation, and no checkpoint job runs; the driver holds at most
+   * the cap's band keys and fingerprints plus candidate pairs. Above the
+   * cap the pairs and [[connectedComponents]] run distributed. The
+   * survivors are identical either way.
    */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
       n: Int = 5, numHashes: Int = 64, bands: Int = 8,
@@ -1768,11 +1762,12 @@ object Dedup {
     val src = if (srcCached)
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else df
-    val pairs = nearDupPairs(src, idCol, textCol, n, numHashes, bands, threshold, scheme)
-    val comp = connectedComponents(pairs, "id_a", "id_b")
     // non-canonical members of any duplicate cluster; singletons never
-    // appear in `comp`, so they survive by construction
-    val drop = comp.filter(!col("is_canonical")).select(col("id"))
+    // appear in the labels, so they survive by construction
+    val drop = nearDupPairs(src, idCol, textCol, n, numHashes, bands, threshold, scheme) match {
+      case Left((p, _)) => NearDupRoute.drops(src.sparkSession, p)
+      case Right(pairs) => components(pairs).filter(!col("is_canonical")).select(col("id"))
+    }
     val out = src.join(drop, src(idCol) === drop("id"), "left_anti")
     if (srcCached) graft.util.CacheDiscipline.materializeAndFree(out, src)
     else out
@@ -1784,21 +1779,34 @@ object Dedup {
     * 2.48× control vs classic's 3.94× in r15) → connected components.
     * Returns `[id, component, is_canonical]` for every id appearing in a
     * verified pair. No input persist here: the pair pipeline manages its
-    * own input discipline and the contraction never re-reads the corpus. */
+    * own input discipline and the contraction never re-reads the corpus.
+    * When the signature table fits the internal 256 MB driver cap (see
+    * [[minHashNearDups]]) the pairs are verified on the driver and
+    * labelled there by [[UnionFind.minLabels]]: the labels come back as a
+    * local relation, three jobs in all, with no checkpoint. Above the cap
+    * the pairs and the contraction run distributed. The labels are
+    * identical either way. */
   def dedupCluster(df: DataFrame, idCol: String, textCol: String,
       n: Int = 5, numHashes: Int = 64, bands: Int = 8,
       threshold: Double = 0.7, scheme: String = "oph"): DataFrame =
-    connectedComponents(
-      nearDupPairs(df, idCol, textCol, n, numHashes, bands, threshold, scheme),
-      "id_a", "id_b")
+    nearDupPairs(df, idCol, textCol, n, numHashes, bands, threshold, scheme) match {
+      case Left((p, id)) => NearDupRoute.labels(df.sparkSession, p, id.nullable)
+      case Right(pairs) => components(pairs)
+    }
+
+  /** [[connectedComponents]] of a distributed route's checkpointed pairs,
+    * whose blocks are freed once the labels are pinned. */
+  private def components(pairs: DataFrame): DataFrame =
+    try connectedComponents(pairs, "id_a", "id_b")
+    finally graft.util.CacheDiscipline.release(pairs)
 
   /** Scheme dispatch shared by [[dedupCorpus]] and [[dedupCluster]] —
     * `k` is permutations (classic) or bins (OPH). */
   private def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int, threshold: Double, scheme: String): DataFrame =
+      n: Int, k: Int, bands: Int, threshold: Double, scheme: String): Routed =
     scheme match {
-      case "oph" => minHashNearDupsOph(df, idCol, textCol, n, k, bands, threshold)
-      case "classic" => minHashNearDups(df, idCol, textCol, n, k, bands, threshold)
+      case "oph" => ophRouted(df, idCol, textCol, n, k, bands, threshold)
+      case "classic" => minHashRouted(df, idCol, textCol, n, k, bands, threshold)
       case other => throw new IllegalArgumentException(
         s"""scheme must be "oph" or "classic", got "$other"""")
     }

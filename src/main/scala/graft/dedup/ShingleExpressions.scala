@@ -167,24 +167,25 @@ object ShingleKernels {
     * with the same polynomial combine the oracle uses:
     * `acc = (acc·B1 + v) mod P`. */
   def bandKeys(sig: ArrayData, bands: Int, r: Int): ArrayData = {
-    val p = graft.functions.PolyHash.P
-    val m = graft.functions.PolyHash.B1
     val out = new Array[Any](bands)
     var b = 0
-    while (b < bands) {
-      var acc = 0L
-      var j = 0
-      while (j < r) {
-        // signature values are < P except the empty-set sentinel
-        // Long.MaxValue; reduce first so the product stays < 2^52
-        acc = graft.functions.PolyHash.modP(
-          acc * m + graft.functions.PolyHash.modP(sig.getLong(b * r + j)))
-        j += 1
-      }
-      out(b) = Long.box(acc)
-      b += 1
-    }
+    while (b < bands) { out(b) = Long.box(bandKey(sig, b, r)); b += 1 }
     new GenericArrayData(out)
+  }
+
+  /** Key of band `b` (the fold of `sig(b·r until b·r + r)`), in [0, P). */
+  def bandKey(sig: ArrayData, b: Int, r: Int): Long = {
+    val m = graft.functions.PolyHash.B1
+    var acc = 0L
+    var j = 0
+    while (j < r) {
+      // signature values are < P except the empty-set sentinel
+      // Long.MaxValue; reduce first so the product stays < 2^52
+      acc = graft.functions.PolyHash.modP(
+        acc * m + graft.functions.PolyHash.modP(sig.getLong(b * r + j)))
+      j += 1
+    }
+    acc
   }
 }
 

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, FloatType}
 
 /**
  * Native Catalyst expressions for the 8 reference distance metrics
@@ -106,4 +106,15 @@ case class VecL2Normalize(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, a => s"graft.functions.VectorKernels.l2Normalize($a)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "vec_l2_normalize"
+}
+
+/** Whether an array<float> holds a NaN or infinite component
+  * ([[VectorKernels.nonFinite]]); null for a null vector. */
+case class VecNonFinite(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = BooleanType
+  override def nullSafeEval(v: Any): Any = VectorKernels.nonFinite(v.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.VectorKernels.nonFinite($a)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+  override def prettyName: String = "vec_non_finite"
 }

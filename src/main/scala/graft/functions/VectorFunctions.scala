@@ -32,6 +32,8 @@ object VectorFunctions {
   def vec_canberra(a: Column, b: Column): Column = column(VecCanberra(e(a), e(b)))
   def vec_jensen_shannon(a: Column, b: Column): Column = column(VecJensenShannon(e(a), e(b)))
   def vec_l2_normalize(v: Column): Column = column(VecL2Normalize(e(v)))
+  /** Whether a vector has a NaN or infinite component; null for null. */
+  private[graft] def vec_non_finite(v: Column): Column = column(VecNonFinite(e(v)))
 
   /** A similarity metric: distance column + ordering direction.
     * `higherIsCloser` mirrors faiss METRIC_INNER_PRODUCT vs the rest

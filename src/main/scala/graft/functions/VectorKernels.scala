@@ -143,6 +143,15 @@ object VectorKernels {
     s
   }
 
+  /** True when some component is NaN or ±Inf (a vector no metric can
+    * score and no centroid may absorb). */
+  def nonFinite(a: ArrayData): Boolean = {
+    val n = a.numElements()
+    var i = 0
+    while (i < n) { if (!java.lang.Float.isFinite(a.getFloat(i))) return true; i += 1 }
+    false
+  }
+
   /** L2-normalize into a fresh float array (faiss_searcher.py:96-98).
     * Norm accumulated in double, each element divided in double then cast
     * to float. Zero vector returned unchanged (reference NaNs — guarded

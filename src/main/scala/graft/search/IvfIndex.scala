@@ -1,10 +1,11 @@
 package graft.search
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftshim.GraftSql.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
@@ -544,11 +545,17 @@ object IvfIndex {
   private[search] def trainingSample(df: DataFrame, vecCol: String, total: Long,
       target: Long): Array[Array[Float]] = {
     val fraction = if (total <= target) 1.0 else target.toDouble / total
-    val qe = (if (fraction < 1.0) df.sample(withReplacement = false, fraction, seed = 42) else df)
-      .select(col(vecCol).cast(ArrayType(FloatType))).queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      qe.toRdd.map(_.getArray(0).toFloatArray()).collect()
-    }
+    graft.util.CacheDiscipline.runTask(
+      (if (fraction < 1.0) df.sample(withReplacement = false, fraction, seed = 42) else df)
+        .select(col(vecCol).cast(ArrayType(FloatType))), "collect", FloatRows).flatten
+  }
+
+  /** A partition's first column as float arrays. An object rather than a
+    * lambda, so the job does not run the closure cleaner's bytecode scan. */
+  private object FloatRows
+      extends ((TaskContext, Iterator[InternalRow]) => Array[Array[Float]]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): Array[Array[Float]] =
+      it.map(_.getArray(0).toFloatArray()).toArray
   }
 
   /** Two-level Lloyd for large k: cluster the sample into ⌈√k⌉ coarse

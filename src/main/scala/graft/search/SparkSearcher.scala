@@ -542,14 +542,23 @@ class SparkSearcher(val encoder: Encoder, val params: SearcherParams = SearcherP
     * their width (faiss_searcher.py:56) from the same job: the encoder's
     * declared dim, else the observed one (a PCA prefix reduces below the
     * declared dim); empty → 0, search() then errors. Vectors of two widths
-    * fail here. */
+    * fail here, and so do vectors with a NaN or infinite component (one
+    * such row would become every farthest-point centroid): the same job
+    * observes how many there are and the smallest such `row_id`. */
   private def materializeDim(df: DataFrame): (Long, Int) = {
     val width = when(col(VEC).isNotNull, size(col(VEC)))
-    val m = observeOnCache(df, count(lit(1)), min(width), max(width))
+    val bad = VectorFunctions.vec_non_finite(col(VEC))
+    val m = graft.util.CacheDiscipline.observeOnCache(df, count(lit(1)), min(width), max(width),
+      count(when(bad, lit(1))), min(when(bad, col(ROW_ID))))
     val Seq(lo, hi) = Seq(1, 2).map(i => if (m.isNullAt(i)) 0 else m.getInt(i))
     if (lo != hi) {
       df.unpersist()
       throw new IllegalArgumentException(s"fit: vectors of different widths in one index: $lo and $hi")
+    }
+    if (m.getLong(3) > 0) {
+      df.unpersist()
+      throw new IllegalArgumentException(s"fit: ${m.getLong(3)} vector(s) with a NaN or infinite " +
+        s"component, the first at row_id ${m.getLong(4)}")
     }
     (m.getLong(0), (if (pcaSpec.isDefined) None else encoder.dim).getOrElse(lo))
   }
@@ -763,18 +772,7 @@ object SparkSearcher {
     * job: the count rides the cache-filling scan via observe (the add()
     * pattern), where `count()` would run its own aggregate jobs. */
   private[search] def materialize(df: DataFrame): Long =
-    observeOnCache(df, count(lit(1))).getLong(0)
-
-  /** Build persisted `df`'s cache and return `metrics` (aggregates) observed
-    * on that cache-filling scan. */
-  private[search] def observeOnCache(df: DataFrame, metrics: Column*): Row = {
-    val observed = df.observe("__materialize", metrics.head, metrics.tail: _*)
-    val qe = observed.queryExecution
-    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("materialize")) {
-      qe.toRdd.foreach(_ => ())
-    }
-    qe.observedMetrics("__materialize")
-  }
+    graft.util.CacheDiscipline.observeOnCache(df, count(lit(1))).getLong(0)
 
   /** The single params row Spark's JSON writer produced (a directory of
     * part files holding one JSON line), read driver-side through the

@@ -1,6 +1,8 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /**
  * End-of-pipeline cache discipline for operators that persist shared
@@ -37,4 +39,31 @@ object CacheDiscipline {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Build persisted `df`'s cache and return `metrics` (aggregates) observed
+    * on that cache-filling scan: one job, where `count()` or a separate
+    * aggregate would run their own. */
+  def observeOnCache(df: DataFrame, metrics: Column*): Row = {
+    val observed = df.observe("__materialize", metrics.head, metrics.tail: _*)
+    runTask(observed, "materialize", Drain)
+    observed.queryExecution.observedMetrics("__materialize")
+  }
+
+  /** One job over `df`'s rows, as the SQL execution `name`: `task` per
+    * partition, results in partition order. Pass a named class or object
+    * for `task`, so `runJob` skips the closure cleaner's bytecode scan. */
+  def runTask[U: scala.reflect.ClassTag](df: DataFrame, name: String,
+      task: (TaskContext, Iterator[InternalRow]) => U): Array[U] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
+      val rdd = qe.toRdd
+      df.sparkSession.sparkContext.runJob(rdd, task, rdd.partitions.indices)
+    }
+  }
+
+  /** Consumes a partition. An object rather than a lambda, so `runJob` does
+    * not run the closure cleaner's bytecode scan per call. */
+  private object Drain extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): Unit = while (it.hasNext) it.next()
+  }
 }

@@ -87,9 +87,19 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("minhash/simhash/LSH near-dup: banded equi-joins only") {
-    Seq("dedup_minhash", "dedup_simhash", "dedup_embedding_lsh").foreach { q =>
-      val plan = physical(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))
-      assert(!plan.contains("CartesianProduct"), s"$q plan has a cartesian product")
+    // dedup_minhash builds under the forced distributed route: by default
+    // it verifies on the driver into a local scan, with no join to check.
+    // Every plan its build runs is checked, the banded self-join among them
+    graft.dedup.DedupRoutes.distributed {
+      Seq("dedup_minhash", "dedup_simhash", "dedup_embedding_lsh").foreach { q =>
+        val plan = physical(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))
+        assert(!plan.contains("CartesianProduct"), s"$q plan has a cartesian product")
+      }
+      val (plans, _) = observed(SparkEntry.queries("dedup_minhash")(spark, "/root/testdata/sf0.001"))
+      assert(plans.exists(_._2.contains("SortMergeJoin")), "dedup_minhash ran no banded self-join")
+      plans.foreach { case (name, plan) =>
+        assert(!plan.contains("CartesianProduct"), s"dedup_minhash $name plan has a cartesian product")
+      }
     }
   }
 

@@ -128,6 +128,27 @@ class SearcherSpec extends SparkSpec {
     }
   }
 
+  test("fit rejects vectors with a NaN or infinite component, naming the first row_id") {
+    val sp = spark
+    import sp.implicits._
+    val rnd = new scala.util.Random(5)
+    val bad = Map(31L -> Float.NegativeInfinity, 17L -> Float.NaN, 23L -> Float.PositiveInfinity)
+    val items = (0L until 40L).map { i =>
+      val v = Array.fill(8)(rnd.nextGaussian().toFloat)
+      bad.get(i).foreach(x => v((i % 8).toInt) = x)
+      (s"t$i", i, v.toSeq)
+    }.toDF("text", "vid", "embedding")
+    for (kind <- Seq("Flat", "IVF8", "PQ4")) {
+      val pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val e = intercept[IllegalArgumentException](
+        new SparkSearcher(new graft.encoders.PassthroughEncoder("embedding"),
+          SearcherParams(itemCol = Some("text"), idCol = Some("vid"), indexParam = kind)).fit(items))
+      assert(e.getMessage === "fit: 3 vector(s) with a NaN or infinite component, the first at row_id 17",
+        kind)
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- pinned).isEmpty, s"$kind left its cache behind")
+    }
+  }
+
   test("save/load round-trips a separator containing JSON-special characters") {
     val sp = spark
     import sp.implicits._
