@@ -165,13 +165,7 @@ object CellScan {
           val cB = spark.sparkContext.broadcast(c)
           val scanned = probed(rows.select(rows.columns.take(3).map(col): _*), c)
           val hits = TopKAggregate.mergeHits(spark.createDataFrame(
-            scanned.queryExecution.toRdd.mapPartitions { it =>
-              val c = cB.value
-              val heaps = c.qids.map(_ => new TopKBuffer(k, asc))
-              scorer(c.qvs).scan(it, c.byCell, heaps, null)
-              c.qids.indices.iterator.flatMap(qi =>
-                heaps(qi).sorted.iterator.map { case (id, d) => Row(c.qids(qi), id, d) })
-            }, hitSchema), k, asc)
+            scanned.queryExecution.toRdd.mapPartitions(new ScanTask(cB, k, asc, scorer)), hitSchema), k, asc)
           if (chunks.length == 1) hits
           else {
             val pinned = hits.localCheckpoint(eager = true)
@@ -299,6 +293,22 @@ object CellScan {
       retain(found, heaps)
       new TaskHits(heaps.map(_.size), heaps.flatMap(h => h.ids.take(h.size)),
         heaps.flatMap(h => h.dists.take(h.size)), found.values.toArray)
+    }
+  }
+
+  /** One lazy-scan task: scores its partition into one heap per query row
+    * and emits each row's ≤ k hits `(QID, ROW_ID, DIST)`. A class rather
+    * than a lambda, like [[FinishTask]], so `mapPartitions` does not run the
+    * closure cleaner's bytecode scan per search. */
+  private final class ScanTask(cB: Broadcast[Chunk], k: Int, asc: Boolean,
+      scorer: Array[Array[Float]] => PartitionScorer)
+      extends (Iterator[InternalRow] => Iterator[Row]) with Serializable {
+    def apply(it: Iterator[InternalRow]): Iterator[Row] = {
+      val c = cB.value
+      val heaps = c.qids.map(_ => new TopKBuffer(k, asc))
+      scorer(c.qvs).scan(it, c.byCell, heaps, null)
+      c.qids.indices.iterator.flatMap(qi =>
+        heaps(qi).sorted.iterator.map { case (id, d) => Row(c.qids(qi), id, d) })
     }
   }
 

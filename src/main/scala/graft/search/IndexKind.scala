@@ -1,8 +1,12 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.graftshim.GraftSql
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, StringType, StructField,
+  StructType}
 import org.apache.spark.storage.StorageLevel
 
 import SparkSearcher._
@@ -23,8 +27,8 @@ sealed trait Layout {
   /** Serve-parallelism floor at fit, applied after assign and encode: a
     * small input is 1-3 splits, which would pin every serve scan to 1-3
     * tasks. Results are partition-independent (top-k ties break on
-    * row_id). The co-locating layouts (IVF cells, HNSW graphs) already
-    * spread through their own grouped shuffle and skip it. */
+    * row_id). HNSW, whose graphs are built by their own grouped shuffle,
+    * skips it. */
   def spread(df: DataFrame): DataFrame = graft.util.Parallelism.scanFloor(df, ROW_ID)
   /** Lay loaded rows out again: the same floor as fit, unless overridden. */
   def atRest(read: DataFrame): DataFrame = spread(read)
@@ -56,13 +60,12 @@ final case class IvfCells(nlist: Int, centroids: Array[Array[Float]] = Array.emp
     extends Layout {
   override def fit(s: SparkSearcher, pre: DataFrame, n: Long, d: Int): Layout =
     copy(centroids = IvfIndex.fitCentroids(pre, VEC, IndexStrategy.resolveNlist(nlist, n), n))
-  // store each row's cell and co-partition by it, so probes scan only
-  // their nprobe cells
+  // store each row's cell in place, with no shuffle: the cell scan reads
+  // every partition and filters rows by the probed-cell mask, so nothing
+  // reads a co-partitioning by cell (and add() would not keep one). The
+  // cell is an ordinary stored column at rest
   override def assign(s: SparkSearcher, df: DataFrame, gpartOffset: => Int): DataFrame =
-    IvfIndex.assignCells(df, VEC, centroids, df.sparkSession.sparkContext.defaultParallelism)
-  override def spread(df: DataFrame): DataFrame = df
-  // the cell is an ordinary stored column at rest: every serve path
-  // reads the whole cached table and filters cells in the scan
+    IvfIndex.assignCells(df, VEC, centroids)
   override def save(meta: MetaDir): Unit =
     meta.writeRows("centroids", ("centroid_id", "centroid"), centroids)
   override def load(meta: MetaDir, fittedGraphs: Option[Int]): Layout =
@@ -370,15 +373,12 @@ final case class SqCodes(nbits: Int, vmin: Array[Float] = Array.empty,
   }
   def encode(df: DataFrame): DataFrame =
     df.withColumn(PqIndex.CODES, SqIndex.encodeCol(col(VEC), vmin, vdiff, nbits))
-  override def save(meta: MetaDir): Unit = {
-    import meta.spark.implicits._
-    meta.write("sq_bounds", 12L * vmin.length)(
-      vmin.indices.map(i => (i, vmin(i), vdiff(i))).toDF("i", "vmin", "vdiff"))
-  }
+  override def save(meta: MetaDir): Unit =
+    meta.write("sq_bounds", 12L * vmin.length, SqCodes.boundsSchema)(
+      vmin.indices.iterator.map(i => InternalRow(i, vmin(i), vdiff(i))))
   override def load(meta: MetaDir): Storage = {
-    val rows = meta.read("sq_bounds", "i" -> IntegerType, "vmin" -> FloatType, "vdiff" -> FloatType)
-      .sortBy(_.getAs[Int]("i"))
-    copy(vmin = rows.map(_.getAs[Float]("vmin")), vdiff = rows.map(_.getAs[Float]("vdiff")))
+    val rows = meta.read("sq_bounds", SqCodes.boundsSchema).sortBy(_.getInt(0))
+    copy(vmin = rows.map(_.getFloat(1)), vdiff = rows.map(_.getFloat(2)))
   }
   override def fittedDim: Option[Int] = Some(vmin.length)
   // SQ4's nibbles pair into byte-level tables, so the stream is 8-bit too
@@ -386,41 +386,55 @@ final case class SqCodes(nbits: Int, vmin: Array[Float] = Array.empty,
   override def codebooks: Option[Array[Array[Array[Float]]]] = Some(levels)
 }
 
+object SqCodes {
+  private val boundsSchema = MetaDir.schema("i" -> IntegerType, "vmin" -> FloatType, "vdiff" -> FloatType)
+}
+
 /** An index directory's metadata tables: each a few KB–MB of fitted
-  * constants, written as ONE parquet file (a local Seq would otherwise
-  * parallelize to the shuffle-partition count) and read back with the
-  * writer's own static schema — no footer-inference job — in a
-  * driver-side order. */
-final class MetaDir(val spark: SparkSession, path: String) {
-  /** Write the driver-side table `df` of `bytes` payload bytes. One task
-    * writes it, so a table past [[SparkSearcher.DriverTableByteCap]] fails
-    * first, before `df` is built or anything is written. */
-  def write(sub: String, bytes: Long)(df: => DataFrame): Unit = {
+  * constants, written and read on the driver ([[GraftSql.writeParquet]],
+  * [[GraftSql.readParquet]]) with the writer's own static schema, in a
+  * driver-side order. No job either way: on disk each table is the one
+  * part file plus `_SUCCESS` that `coalesce(1).write.parquet` leaves, so
+  * saves written either way load, and Spark reads these tables as ever. */
+final class MetaDir(spark: SparkSession, path: String) {
+  /** Write the driver-side table `rows` of `schema`, `bytes` payload bytes.
+    * One file holds it, so a table past [[SparkSearcher.DriverTableByteCap]]
+    * fails first, before `rows` is built or anything is written. */
+  def write(sub: String, bytes: Long, schema: StructType)(rows: => Iterator[InternalRow]): Unit = {
     require(bytes <= DriverTableByteCap, s"metadata table '$sub' holds $bytes bytes " +
       s"on the driver, over the $DriverTableByteCap-byte cap of a one-file write")
-    df.coalesce(1).write.mode("overwrite").parquet(s"$path/$sub")
+    GraftSql.writeParquet(spark, s"$path/$sub", schema, rows)
   }
-  def read(sub: String, fields: (String, DataType)*): Array[Row] =
-    spark.read.schema(StructType(fields.map { case (n, t) => StructField(n, t) }))
-      .parquet(s"$path/$sub").collect()
+  def read(sub: String, schema: StructType): Array[InternalRow] =
+    GraftSql.readParquet(spark, s"$path/$sub", schema)
 
-  private val floatArr = ArrayType(FloatType)
-  def writeRows(sub: String, names: (String, String), a: Array[Array[Float]]): Unit = {
-    import spark.implicits._
-    write(sub, a.map(4L + 4L * _.length).sum)(a.indices.map(i => (i, a(i).toSeq)).toDF(names._1, names._2))
-  }
+  def writeRows(sub: String, names: (String, String), a: Array[Array[Float]]): Unit =
+    write(sub, a.map(4L + 4L * _.length).sum, MetaDir.schema(names._1 -> IntegerType, names._2 -> MetaDir.floats))(
+      a.indices.iterator.map(i => InternalRow(i, UnsafeArrayData.fromPrimitiveArray(a(i)))))
   def readRows(sub: String, names: (String, String)): Array[Array[Float]] =
-    read(sub, names._1 -> IntegerType, names._2 -> floatArr).sortBy(_.getInt(0))
-      .map(_.getAs[scala.collection.Seq[Float]](1).toArray)
+    read(sub, MetaDir.schema(names._1 -> IntegerType, names._2 -> MetaDir.floats)).sortBy(_.getInt(0))
+      .map(_.getArray(1).toFloatArray())
   def writeNested(sub: String, names: (String, String, String),
-      a: Array[Array[Array[Float]]]): Unit = {
-    import spark.implicits._
-    write(sub, a.iterator.flatten.map(8L + 4L * _.length).sum)(
-      (for (i <- a.indices; j <- a(i).indices) yield (i, j, a(i)(j).toSeq)).toDF(names._1, names._2, names._3))
-  }
+      a: Array[Array[Array[Float]]]): Unit =
+    write(sub, a.iterator.flatten.map(8L + 4L * _.length).sum,
+      MetaDir.schema(names._1 -> IntegerType, names._2 -> IntegerType, names._3 -> MetaDir.floats))(
+      for (i <- a.indices.iterator; j <- a(i).indices.iterator)
+        yield InternalRow(i, j, UnsafeArrayData.fromPrimitiveArray(a(i)(j))))
   def readNested(sub: String, names: (String, String, String)): Array[Array[Array[Float]]] =
-    read(sub, names._1 -> IntegerType, names._2 -> IntegerType, names._3 -> floatArr)
+    read(sub, MetaDir.schema(names._1 -> IntegerType, names._2 -> IntegerType, names._3 -> MetaDir.floats))
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_.getInt(1)).map(_.getAs[scala.collection.Seq[Float]](2).toArray))
+      .map(_._2.sortBy(_.getInt(1)).map(_.getArray(2).toFloatArray()))
       .toArray
+}
+
+object MetaDir {
+  /** `array<float>` of non-null elements, as a `Seq[Float]` column encodes. */
+  val floats: ArrayType = ArrayType(FloatType, containsNull = false)
+
+  /** A table schema as `toDF` over Scala values derives it: primitive
+    * columns non-null, arrays and strings nullable. */
+  def schema(fields: (String, DataType)*): StructType = StructType(fields.map {
+    case (n, t @ (_: ArrayType | _: StringType)) => StructField(n, t)
+    case (n, t) => StructField(n, t, nullable = false)
+  })
 }

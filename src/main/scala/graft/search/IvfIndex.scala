@@ -470,11 +470,11 @@ case class NearestCentroids(child: Expression, index: CentroidIndex, n: Int)
  * collects each bounded query chunk and computes its probe lists
  * ([[IvfKernels.probes]]), and each
  * partition scores a stored row only against the queries probing its cell,
- * into one bounded heap per query. On a cluster the cells are
- * co-partitioned (`repartition(cellId)`) and unprobed cells are filtered
- * before their vectors are read, so a query scores nprobe/nlist of the
- * data — the partition-pruning that makes 100 TB similarity search
- * tractable where brute force isn't.
+ * into one bounded heap per query. Rows are not grouped by cell: every
+ * partition is read, and a row of an unprobed cell is filtered on its
+ * stored cell id before its vector is read or scored, so a query scores
+ * nprobe/nlist of the data — the pruning that makes 100 TB similarity
+ * search tractable where brute force isn't.
  */
 object IvfIndex {
   import IvfKernels.{d2, d2x4, nearest, widen}
@@ -896,10 +896,9 @@ object IvfIndex {
     }
   }
 
-  /** Assign each indexed row its cell id (fit-time, stored + co-partitioned). */
-  def assignCells(indexed: DataFrame, vecCol: String, cents: Array[Array[Float]],
-      partitions: Int): DataFrame =
-    indexed
-      .withColumn(CID, nearestCentroidsCol(col(vecCol), cents, 1).getItem(0))
-      .repartition(math.min(partitions, cents.length), col(CID))
+  /** Each indexed row with its nearest cell's id, a stored column (fit
+    * and add). Rows stay in their partitions: the cell scan filters cells
+    * per row, so no reader needs them grouped by cell. */
+  def assignCells(indexed: DataFrame, vecCol: String, cents: Array[Array[Float]]): DataFrame =
+    indexed.withColumn(CID, nearestCentroidsCol(col(vecCol), cents, 1).getItem(0))
 }

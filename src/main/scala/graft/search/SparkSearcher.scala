@@ -1693,8 +1693,12 @@ class SearcherModel private[search] (
       val itemsOut = indexed.withColumnRenamed(ITEM, ITEM_SAVED)
       // flat part files for every layout: IVF cells and HNSW graphs are
       // stored columns (load's explicit-schema read also serves older
-      // saves, whose cell/graph directories Spark maps back to columns)
-      itemsOut.write.mode("overwrite").parquet(s"$dir/items")
+      // saves, whose cell/graph directories Spark maps back to columns).
+      // Float vectors almost never repeat, so parquet's dictionary attempt
+      // on the vector elements is dropped for PLAIN after a page of work;
+      // the vector chunk is written PLAIN from the start, same bytes
+      itemsOut.write.option(s"parquet.enable.dictionary#$VEC.list.element", "false")
+        .mode("overwrite").parquet(s"$dir/items")
       val meta = new MetaDir(spark, dir)
       layout.save(meta)
       storage.save(meta)

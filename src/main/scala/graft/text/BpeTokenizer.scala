@@ -1,7 +1,10 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Fitted byte-pair-encoding model: an ordered merge list. Ranks are
@@ -244,28 +247,29 @@ object BpeTokenizer {
    * (≤ numMerges + |alphabet| rows).
    */
   def save(model: BpeModel, path: String): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    model.merges.zipWithIndex
-      .map { case ((a, b), i) => (i, a, b) }
-      .toDF("ord", "left", "right")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/merges")
-    model.alphabet.getOrElse(Set.empty).toSeq.sorted.toDF("sym")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/alphabet")
+    val meta = new graft.search.MetaDir(org.apache.spark.sql.SparkSession.active, path)
+    def utf8(s: String) = UTF8String.fromString(s)
+    val merges = model.merges
+    meta.write("merges", merges.iterator.map { case (a, b) => 4L + utf8(a).numBytes + utf8(b).numBytes }.sum,
+      MergesSchema)(merges.iterator.zipWithIndex.map { case ((a, b), i) => InternalRow(i, utf8(a), utf8(b)) })
+    val alphabet = model.alphabet.getOrElse(Set.empty).toSeq.sorted
+    meta.write("alphabet", alphabet.iterator.map(utf8(_).numBytes.toLong).sum, AlphabetSchema)(
+      alphabet.iterator.map(s => InternalRow(utf8(s))))
   }
 
-  /** Inverse of [[save]]; an empty alphabet directory loads as `None`
-    * (hand-built models without byte-level fallback round-trip). */
+  /** Inverse of [[save]]; an empty alphabet table loads as `None`
+    * (hand-built models without byte-level fallback round-trip). Both
+    * tables are read on the driver, merges in driver-side `ord` order. */
   def load(path: String): BpeModel = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    // driver-sorted collect (r22): orderBy on a tiny metadata table costs
-    // a range-boundary sampling job on top of the collect, per load
-    val merges = spark.read.parquet(s"$path/merges")
-      .collect().sortBy(_.getAs[Int]("ord"))
-      .map(r => (r.getAs[String]("left"), r.getAs[String]("right")))
+    val meta = new graft.search.MetaDir(org.apache.spark.sql.SparkSession.active, path)
+    val merges = meta.read("merges", MergesSchema).sortBy(_.getInt(0))
+      .map(r => (r.getUTF8String(1).toString, r.getUTF8String(2).toString))
       .toVector
-    val alpha = spark.read.parquet(s"$path/alphabet")
-      .collect().map(_.getAs[String]("sym")).toSet
+    val alpha = meta.read("alphabet", AlphabetSchema).map(_.getUTF8String(0).toString).toSet
     BpeModel(merges, if (alpha.isEmpty) None else Some(alpha))
   }
+
+  private val MergesSchema =
+    graft.search.MetaDir.schema("ord" -> IntegerType, "left" -> StringType, "right" -> StringType)
+  private val AlphabetSchema = graft.search.MetaDir.schema("sym" -> StringType)
 }

@@ -2,12 +2,13 @@ package graft.whitening
 
 import breeze.linalg.{svd, DenseMatrix, DenseVector}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.GraftSql.{column, expression}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 import graft.encoders.Encoder
 
@@ -160,35 +161,37 @@ class VecsWhiteningModel(val kernel: Array[Array[Double]], val bias: Array[Doubl
     df.withColumn(vecCol, transformCol(col(vecCol)))
 
   /** Persist as parquet + embedded params (vecs_whitening.py:58-65 pickle →
-    * columnar, SURVEY §2 O23). */
+    * columnar, SURVEY §2 O23): two driver-written metadata tables. */
   def save(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
     // one file per metadata table, byte-guarded (graft.search.MetaDir)
     val meta = new graft.search.MetaDir(spark, path)
-    meta.write("kernel", kernel.map(4L + 8L * _.length).sum)(
-      kernel.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq.toDF("row", "kernel_row"))
-    meta.write("meta", 8L + 8L * bias.length)(
-      Seq((bias.toSeq, nComponents, originDim)).toDF("bias", "n_components", "origin_dim"))
+    meta.write("kernel", kernel.map(4L + 8L * _.length).sum, VecsWhiteningModel.KernelSchema)(
+      kernel.indices.iterator.map(i => InternalRow(i, UnsafeArrayData.fromPrimitiveArray(kernel(i)))))
+    meta.write("meta", 8L + 8L * bias.length, VecsWhiteningModel.MetaSchema)(
+      Iterator(InternalRow(UnsafeArrayData.fromPrimitiveArray(bias), nComponents, originDim)))
   }
 }
 
 object VecsWhiteningModel {
-  /** Load; `expectComponents` mismatch errors like vecs_whitening.py:72-73. */
+  import graft.search.MetaDir.schema
+  private val doubles = ArrayType(DoubleType, containsNull = false)
+  private val KernelSchema = schema("row" -> IntegerType, "kernel_row" -> doubles)
+  private val MetaSchema = schema("bias" -> doubles, "n_components" -> IntegerType, "origin_dim" -> IntegerType)
+
+  /** Load; `expectComponents` mismatch errors like vecs_whitening.py:72-73.
+    * Both tables are read on the driver, in a driver-side order. */
   def load(spark: SparkSession, path: String,
       expectComponents: Option[Int] = None): VecsWhiteningModel = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val bias = meta.getAs[scala.collection.Seq[Double]]("bias").toArray
-    val nc = meta.getAs[Int]("n_components")
-    val od = meta.getAs[Int]("origin_dim")
+    val meta = new graft.search.MetaDir(spark, path)
+    val row = meta.read("meta", MetaSchema).head
+    val bias = row.getArray(0).toDoubleArray()
+    val nc = row.getInt(1)
+    val od = row.getInt(2)
     expectComponents.filter(_ != nc).foreach { e =>
       throw new IllegalArgumentException(
         s"loaded n_components $nc != expected $e (vecs_whitening.py:72-73)")
     }
-    // driver-sorted collect (r22): orderBy on a tiny metadata table costs
-    // a range-boundary sampling job on top of the collect, per load
-    val kernel = spark.read.parquet(s"$path/kernel").collect()
-      .sortBy(_.getAs[Int]("row"))
-      .map(_.getAs[scala.collection.Seq[Double]]("kernel_row").toArray)
+    val kernel = meta.read("kernel", KernelSchema).sortBy(_.getInt(0)).map(_.getArray(1).toDoubleArray())
     new VecsWhiteningModel(kernel, bias, nc, od)
   }
 }

@@ -1,8 +1,5 @@
 package graft.dedup
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
@@ -173,30 +170,13 @@ class NearDupRouteLawSpec extends SparkSpec {
   test("a small dedupCluster runs at most 4 jobs and plans a local scan") {
     val df = corpus(3L, 60)
     df.cache().count()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(e.properties.getProperty("callSite.short")))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val out = try {
+    val (out, jobs) = try jobsOf {
       val o = Dedup.dedupCluster(df, "doc_id", "text", 5, 64, 8, 0.5)
       o.collect()
-      // a marker job: once the listener has seen it, it has seen every
-      // job before it
-      spark.sparkContext.setCallSite("routeMarker")
-      try spark.range(1).collect() finally spark.sparkContext.clearCallSite()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!jobs.contains("routeMarker") && System.nanoTime() < deadline) Thread.sleep(10)
       o
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      df.unpersist()
-    }
-    assert(jobs.contains("routeMarker"), "listener did not drain")
+    } finally df.unpersist()
     assert(local(out))
-    val ran = jobs.asScala.count(_ != "routeMarker")
-    assert(ran <= 4, s"dedupCluster ran $ran jobs")
+    assert(jobs.length <= 4, s"dedupCluster ran ${jobs.length} jobs")
   }
 
   /** Random graphs: chains, stars, cliques, self-loops, duplicate and

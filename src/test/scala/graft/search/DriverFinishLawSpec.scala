@@ -139,35 +139,6 @@ class DriverFinishLawSpec extends SparkSpec {
     } finally ivf.unpersist()
   }
 
-  /** Runs `body` and returns its value with the jobs it ran, in the order
-    * the listener saw their events: `(start, job id, stage names)` and
-    * `(end, job id, Nil)`. */
-  private def observed[T](body: => T): (T, Seq[(Boolean, Int, Seq[String])]) = {
-    val events = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Int, Seq[String])]
-    @volatile var drained = false
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties.getProperty("spark.job.description") == "drain") drained = true
-        else events.add((true, j.jobId, j.stageInfos.map(_.name)))
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        events.add((false, j.jobId, Nil))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val out = try body finally {
-      // listener events arrive in order: once the drain job is seen, every
-      // job of `body` has been recorded
-      spark.sparkContext.setJobDescription("drain")
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(drained)
-    import scala.jdk.CollectionConverters._
-    (out, events.asScala.toSeq)
-  }
-
   private def queryFrame(rnd: scala.util.Random, n: Int, dim: Int): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList((0 until n).map(i =>
       Row(i.toLong, s"q$i", vec(rnd, dim).toSeq)): _*), StructType(Seq(
@@ -186,12 +157,11 @@ class DriverFinishLawSpec extends SparkSpec {
       model.unpersist()
       val loaded = SparkSearcher.load(spark, dir)
       val q = queryFrame(rnd, 16, 16)
-      val ((res, out), events) = observed {
+      val ((res, out), jobs) = jobsOf {
         val res = loaded.search(q, 10, keepRankNo = true, queryIdCol = Some("qid"))
         (res, res.collect())
       }
-      val jobs = events.count(_._1)
-      assert(jobs == 1, s"search + collect ran $jobs jobs")
+      assert(jobs.length == 1, s"search + collect ran ${jobs.length} jobs")
       assert(driverFinished(res), res.queryExecution.executedPlan.toString)
       assert(out.length == 160 && out.map(_.getAs[Long]("qid")).toSet == (0L until 16L).toSet)
       loaded.unpersist()
@@ -213,23 +183,20 @@ class DriverFinishLawSpec extends SparkSpec {
       5, asc = true,
       chunk)(CellScan.floats("l2", 2.0))
     try {
-      val (chunked, events) = observed(run(7)) // 50 queries → 8 chunks
+      val (chunked, jobs) = jobsOf(run(7)) // 50 queries → 8 chunks
       // the chunk collects (of InternalRows, executeCollect): the one collect
       // call site that ran once per chunk
-      val starts = events.filter(_._1)
-      val collects = starts.flatMap(_._3.headOption).filter(_.startsWith("executeCollect at"))
+      val collects = jobs.flatMap(_.stageNames.headOption).filter(_.startsWith("executeCollect at"))
       val chunkSite = collects.groupBy(identity).collectFirst { case (site, n) if n.size == 8 => site }
       assert(chunkSite.nonEmpty, s"no collect ran once per chunk: $collects")
-      val at = events.zipWithIndex
-      val chunkJobs = at.collect { case ((true, id, names), i) if names.headOption == chunkSite => (id, i) }
-      def endOf(id: Int) = at.collectFirst { case ((false, `id`, _), i) => i }.get
+      val chunkJobs = jobs.filter(_.stageNames.headOption == chunkSite)
       // between two chunk collects, a scan job of the earlier chunk ran to
       // its end: the next chunk is collected only after it
-      chunkJobs.sliding(2).foreach { case Seq((prev, _), (_, nextStart)) =>
-        val scans = at.collect { case ((true, id, names), i) if i > endOf(prev) &&
-          names.exists(_.startsWith("localCheckpoint at")) && endOf(id) < nextStart => id }
-        assert(scans.nonEmpty, s"chunk after job $prev collected before its scan finished: " +
-          events.mkString("\n"))
+      chunkJobs.sliding(2).foreach { case Seq(prev, next) =>
+        val scans = jobs.filter(j => j.startAt > prev.endAt &&
+          j.stageNames.exists(_.startsWith("localCheckpoint at")) && j.endAt < next.startAt)
+        assert(scans.nonEmpty, s"chunk after job ${prev.id} collected before its scan finished: " +
+          jobs.mkString("\n"))
       }
       def sorted(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
       assert(sorted(chunked) == sorted(run(Int.MaxValue)))

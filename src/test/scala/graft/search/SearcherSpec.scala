@@ -961,32 +961,10 @@ class SearcherSpec extends SparkSpec {
       // layout would list its leaf directories through a job of one task
       // per directory. Stages reading a shuffle (HNSW's graph
       // re-co-location) are sized by the shuffle, not the files
-      val tasksByJob = collection.mutable.Map.empty[Int, Int]
-      val jobOfStage = collection.mutable.Map.empty[Int, Int]
-      @volatile var drained = false
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (j.properties.getProperty("spark.job.description") == "drain") drained = true
-          else j.stageInfos.filter(_.parentIds.isEmpty)
-            .foreach(st => jobOfStage.getOrElseUpdate(st.stageId, j.jobId))
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          jobOfStage.get(t.stageId).foreach(j => tasksByJob(j) = tasksByJob.getOrElse(j, 0) + 1)
-      }
       val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
       spark.conf.set(threshold, "1")
-      spark.sparkContext.addSparkListener(listener)
-      val loaded = try SparkSearcher.load(spark, dir) finally {
-        spark.conf.unset(threshold)
-        // listener events arrive in order: once the drain job is seen,
-        // every load job and task has been counted
-        spark.sparkContext.setJobDescription("drain")
-        spark.sparkContext.parallelize(Seq(1), 1).count()
-        spark.sparkContext.setJobDescription(null)
-        val deadline = System.nanoTime() + 30000000000L
-        while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      assert(drained)
+      val (loaded, jobs) = try jobsOf(SparkSearcher.load(spark, dir)) finally spark.conf.unset(threshold)
+      val tasksByJob = jobs.map(j => j.id -> j.stages.filter(_.parentIds.isEmpty).map(_.numTasks).sum).toMap
       assert(tasksByJob.nonEmpty && tasksByJob.values.forall(_ <= parts.length),
         s"load jobs' scan task counts $tasksByJob vs ${parts.length} part files")
       // and the reloaded model answers searches identically
