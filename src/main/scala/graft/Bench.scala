@@ -1,9 +1,12 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graftshim.GraftCore
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: every SparkEntry query executed to completion via a
@@ -56,28 +59,30 @@ object Bench {
       if (sf == null) None else Some(sf.asText())
     } catch { case _: Throwable => None }
 
+  /** Total length of the union of `[start, end]` spans: the time at least
+    * one of them covers. The fold starts from an empty span at
+    * `Long.MinValue`, which adds 0 (a -1 sentinel seed once made no spans
+    * read -1). */
+  def unionLength(spans: Seq[(Long, Long)]): Long = {
+    val (closed, s0, e0) = spans.sortBy(_._1).foldLeft((0L, Long.MinValue, Long.MinValue)) {
+      case ((tot, cs, ce), (s, e)) =>
+        if (s > ce) (tot + (ce - cs), s, e) else (tot, cs, math.max(ce, e))
+    }
+    closed + (e0 - s0)
+  }
+
+  /** One measured run of a gate: wall seconds, success, and what the
+    * session's listener saw during it. */
+  private final case class Run(sec: Double, ok: Boolean, gcMs: Long, spill: Long,
+      cpuMs: Long, taskMs: Long, jobs: Int, gapSec: Double)
+
   private def loadavg(): String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(" ")
     catch { case _: Throwable => "" }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle partitions scale with DATA, not cores: partitions == cores
-    // is a single wave of huge tasks at sf100 (500 MB+ each — cache-
-    // hostile, no pipelining). A cluster config targets ~128-256 MB per
-    // partition; the probe harness exposes the same knob (AQE coalesces
-    // any excess at small sf).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.applySessionDefaults(spark)
+    val spark = Harness.session()
     // JIT/codegen warmup + one scan per table, so the alphabetically-first
     // query doesn't absorb one-time session costs (file listing, footer
     // reads, first-scan codegen) into its number
@@ -117,7 +122,15 @@ object Bench {
     // old-binary A/B to attribute to slot state; task_ms >> cpu_ms says
     // "the cores were stalled, not busy" without a re-measure
     val cpuAcc = new AtomicLong; val runAcc = new AtomicLong
+    // each run's jobs as (start, end) event times in ms: their count, and
+    // the wall no job covers (driver gap: planning, driver-side work and
+    // file IO between jobs)
+    val jobStart = new ConcurrentHashMap[Int, Long]
+    val jobSpans = new ConcurrentLinkedQueue[(Long, Long)]
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobStart.put(e.jobId, e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobStart.remove(e.jobId)).foreach(t0 => jobSpans.add((t0, e.time)))
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics
         if (m != null) {
@@ -136,20 +149,24 @@ object Bench {
     // the official number; repeats run back-to-back for OS-cache locality
     val repeats = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "2").toInt)
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Boolean, Long, Long, Long, Long) = {
+    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
       clearState()
       val (gc0, sp0, cpu0, run0) = metricSnapshot()
-      val t0 = System.nanoTime()
+      jobStart.clear(); jobSpans.clear()
+      val t0Ms = System.currentTimeMillis(); val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false
         }
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = (System.nanoTime() - t0) / 1e9; val t1Ms = System.currentTimeMillis()
       val (gc1, sp1, cpu1, run1) = metricSnapshot()
-      (sec, ok, gc1 - gc0, sp1 - sp0, (cpu1 - cpu0) / 1000000L, run1 - run0)
+      val spans = jobSpans.asScala.toSeq
+      val covered = unionLength(spans.map { case (s, e) => (math.max(s, t0Ms), math.min(e, t1Ms)) }
+        .filter { case (s, e) => e > s })
+      Run(sec, ok, gc1 - gc0, sp1 - sp0, (cpu1 - cpu0) / 1000000L, run1 - run0,
+        spans.size, math.max(0.0, sec - covered / 1e3))
     }
     val selected = {
       val filtered = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -166,13 +183,12 @@ object Bench {
       // ok only if EVERY repeat succeeded: a flaky query is a bug and must
       // surface as FAILED in the official output, not vanish behind a
       // lucky retry
-      val ok = runs.forall(_._2)
-      val dt = runs.map(_._1).min
+      val ok = runs.forall(_.ok)
+      val dt = runs.map(_.sec).min
+      System.err.println(f"[bench] $name%-24s $dt%8.2f s" + (if (ok) "" else "  FAILED"))
       // diagnosis rides with the SLOWEST repeat — that's the one that needs
       // explaining when min and max disagree
-      val slowest = runs.maxBy(_._1)
-      System.err.println(f"[bench] $name%-24s $dt%8.2f s" + (if (ok) "" else "  FAILED"))
-      (name, dt, ok, slowest._1, slowest._3, slowest._4, slowest._5, slowest._6)
+      (name, dt, ok, runs.maxBy(_.sec))
     }
     // Sustained-contention self-heal: min-of-2 misses episodes where BOTH
     // repeats land inside one machine-state event (the r9 driver artifact
@@ -199,15 +215,14 @@ object Bench {
     val driftRecheck = suspects(
       results.filter(_._3).map(r => r._1 -> r._2).toMap, refPre, k = 2.0)
     val spreadRecheck = results.collect {
-      case (k, dt, ok, maxSec, _, _, _, _)
-        if ok && maxSec > 3 * dt && maxSec - dt > 0.3 => k
+      case (k, dt, ok, slow) if ok && slow.sec > 3 * dt && slow.sec - dt > 0.3 => k
     }
     val firstPass = (driftRecheck ++ spreadRecheck).distinct
     val rechecked = firstPass.flatMap { name =>
       selected.find(_._1 == name).map { case (_, fn) =>
-        val (sec, ok, _, _, _, _) = runOnce(name, fn)
-        System.err.println(f"[bench] recheck $name%-16s $sec%8.2f s (was ${results.find(_._1 == name).get._2}%.2f)")
-        (name, results.find(_._1 == name).get._2, if (ok) sec else Double.MaxValue)
+        val run = runOnce(name, fn)
+        System.err.println(f"[bench] recheck $name%-16s ${run.sec}%8.2f s (was ${results.find(_._1 == name).get._2}%.2f)")
+        (name, results.find(_._1 == name).get._2, if (run.ok) run.sec else Double.MaxValue)
       }
     }
     results = results.map { r =>
@@ -221,17 +236,17 @@ object Bench {
     }.mkString("{", ",", "}")
     // a failed query records sentinel -1 (not its time-to-failure: a fast
     // regression must not read as an improvement) and is excluded from total
-    val qs = results.map { case (k, v, ok, _, _, _, _, _) =>
+    val qs = results.map { case (k, v, ok, _) =>
       "\"" + k + "\":" + (if (ok) f"$v%.3f" else "-1")
     }.mkString("{", ",", "}")
     // task_ms vs cpu_ms: stall diagnosis (see the accumulator comment)
-    val metricsJson = results.map { case (k, _, _, maxSec, gcMs, spill, cpuMs, runMs) =>
-      f""""$k":{"max_sec":$maxSec%.3f,"gc_ms":$gcMs,"spill_bytes":$spill,"cpu_ms":$cpuMs,"task_ms":$runMs}"""
+    val metricsJson = results.map { case (k, _, _, r) =>
+      f""""$k":{"max_sec":${r.sec}%.3f,"gc_ms":${r.gcMs},"spill_bytes":${r.spill},"cpu_ms":${r.cpuMs},"task_ms":${r.taskMs},"jobs":${r.jobs},"driver_gap_s":${r.gapSec}%.3f}"""
     }.mkString("{", ",", "}")
     // noise flag: min/max spread over 3x AND over 0.3 s absolute (sub-second
     // queries jitter multiplicatively without meaning anything)
     val noisy = results.collect {
-      case (k, dt, ok, maxSec, _, _, _, _) if ok && maxSec > 3 * dt && maxSec - dt > 0.3 =>
+      case (k, dt, ok, slow) if ok && slow.sec > 3 * dt && slow.sec - dt > 0.3 =>
         "\"" + k + "\""
     }.mkString("[", ",", "]")
     val failed = results.filterNot(_._3).map("\"" + _._1 + "\"").mkString("[", ",", "]")
@@ -270,7 +285,7 @@ object Bench {
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     val slowest = results.filter(_._3).sortBy(-_._2).take(25)
-      .map { case (k, v, _, _, _, _, _, _) => f""""$k":$v%.3f""" }
+      .map { case (k, v, _, _) => f""""$k":$v%.3f""" }
       .mkString("{", ",", "}")
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$slowest,"n_queries":${results.size},"n_ok":${results.count(_._3)},"failed":$failed,"noisy":$noisy,"suspect":$suspect,"loadavg":"$load"$controlJson,"queries_note":"slowest 25 of ${results.size}; full per-query record in $outPath","sf":"$sfDir"}""")
     spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -34,13 +33,7 @@ object BoilerGen {
     val out = args(0)
     val nDocs = args(1).toLong
     val sites = if (args.length > 2) args(2).toInt else 1000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val linesPerDoc = 8
     // site chrome: token t of the header/footer of site j — a bounded

@@ -12,7 +12,7 @@ import graft.functions._
  * Two installation paths:
  *
  *  - cluster-wide: `--conf spark.sql.extensions=graft.GraftExtensions` (or
- *    `SparkSession.builder().withExtensions(new GraftExtensions)`) — the
+ *    a session builder's `.withExtensions(new GraftExtensions)`) — the
  *    deployment shape a shared 1000-executor cluster expects;
  *  - per-session: [[GraftFunctions.register]] on an already-built session
  *    (notebooks, the verify harness).

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-evidence dump: prints `explain formatted` for a set of SparkEntry
@@ -9,9 +8,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *   sbt "runMain graft.PlanDump <sfDir> [gate,gate,...]"
   *
   * With no gate list, dumps the representative set (flagship + one per
-  * physical access-path family). Unlike Bench this never executes the
-  * plans — `explainString` compiles the physical plan only, so it is safe
-  * to run alongside nothing and costs seconds.
+  * physical access-path family). Unlike Bench this never executes a
+  * gate's final plan — `explainString` compiles the physical plan only;
+  * the jobs a gate runs while building it (index fits) still run.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -30,15 +29,7 @@ object PlanDump {
         "text_bm25",        // zero-shuffle broadcast-df BM25
         "dedup_simhash_auto", // corpus-scaled banding
         "q_percentiles_hist") // two-pass histogram narrowing
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.applySessionDefaults(spark)
+    val spark = Harness.session()
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         throw new IllegalArgumentException(s"unknown gate '$name'"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.encoders.PassthroughEncoder
@@ -33,15 +33,7 @@ object Recall {
         .split(",").toSeq
     val k = 10
     val nQueries = 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.applySessionDefaults(spark)
+    val spark = Harness.session()
     spark.range(1000000).selectExpr("sum(id)").collect() // JIT warmup
 
     val base = SearcherParams(itemCol = Some("vec_id"), idCol = Some("vec_id"),

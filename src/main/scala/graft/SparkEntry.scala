@@ -55,12 +55,6 @@ object SparkEntry {
   private val orderedDirCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String, Int), String]()
 
-  /** Probe-only alias: [[ProbeStreamCost]] needs the same memoized replay
-    * dir the ordered gates use, without widening the gate helper itself. */
-  private[graft] def orderedReplayDirForProbe(s: SparkSession, srcPath: String,
-      tsCol: String, numFiles: Int): String =
-    orderedReplayDir(s, srcPath, tsCol, numFiles)
-
   private def orderedReplayDir(s: SparkSession, srcPath: String, tsCol: String,
       numFiles: Int): String = {
     // memoized per (source PATH, ts, files) within the process: the
@@ -2071,7 +2065,7 @@ object SparkEntry {
       // in one micro-batch — across batches the 30-minute watermark may
       // evict buffered view rows and silently drop cross-batch matches.
       // Pin the assumption; the multi-batch ordered-replay completeness
-      // evidence lives in BenchStreamOrdered (sf100 artifact)
+      // evidence is bench/BENCH_r18_sf100_streamordered.json
       require(dataBatches == 1,
         s"q_stream_attribution expected single-batch replay, got $dataBatches " +
           "data batches — the batch oracle no longer applies")

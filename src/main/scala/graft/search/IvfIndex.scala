@@ -533,6 +533,11 @@ object IvfIndex {
     require(nlist > 0, s"fitCentroids needs a resolved nlist > 0, got $nlist")
     val sample = trainingSample(df, vecCol, total, trainTarget(nlist))
     require(sample.nonEmpty, "IVF fit: no vectors to train on")
+    // one such row would become every farthest-point centroid after the
+    // first, and Lloyd would then turn them all NaN
+    val bad = sample.count(_.exists(x => !java.lang.Float.isFinite(x)))
+    if (bad > 0) throw new IllegalArgumentException(
+      s"fit: $bad vector(s) with a NaN or infinite component in the training sample")
     val k = math.min(nlist, sample.length)
     if (k >= TwoLevelNlist) hierLloyd(sample, k, iters = 10)
     else lloyd(sample, k, iters = 10)

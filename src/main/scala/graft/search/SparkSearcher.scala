@@ -1240,7 +1240,7 @@ class SearcherModel private[search] (
     val encodedPart = storage.encode(layout.assign(searcher, base, hnswGraphCount))
     val newPart = if (searcher.keepFloats) encodedPart else encodedPart.drop(VEC)
     // Break the lineage BEFORE dropping the parent cache (r19).
-    // Mechanism (pinned by graft.ProbeCacheDep + graft.ProbeUnionCache):
+    // Mechanism (pinned by GrowHandOffSpec):
     // unions over LIVE caches substitute InMemoryTableScans fine, but
     // unpersist() on a parent DROPS the dependent union-cache's entry
     // from the cache manager — new plans miss it (zero IMTS) even while

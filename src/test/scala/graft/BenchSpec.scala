@@ -42,4 +42,14 @@ class BenchSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(g, "not json at all")
     assert(Bench.loadRef(g.toString) === Map.empty)
   }
+
+  test("unionLength: the time any span covers, over empty, disjoint, overlapping, nested and touching spans") {
+    assert(Bench.unionLength(Seq.empty) === 0L)
+    assert(Bench.unionLength(Seq((5L, 9L))) === 4L)
+    assert(Bench.unionLength(Seq((20L, 25L), (0L, 10L))) === 15L)  // disjoint, unsorted
+    assert(Bench.unionLength(Seq((0L, 10L), (5L, 15L))) === 15L)   // overlapping
+    assert(Bench.unionLength(Seq((0L, 20L), (5L, 10L), (12L, 14L))) === 20L) // nested
+    assert(Bench.unionLength(Seq((0L, 10L), (10L, 15L))) === 15L)  // touching
+    assert(Bench.unionLength(Seq((3L, 3L))) === 0L)                 // empty span
+  }
 }

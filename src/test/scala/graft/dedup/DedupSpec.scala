@@ -216,6 +216,21 @@ class DedupSpec extends SparkSpec {
     assert(a.values.groupBy(identity).values.map(_.size).max < a.size)
   }
 
+  test("embeddingClusters: a vector with a NaN component fails the fit, saying how many") {
+    val sp = spark
+    import sp.implicits._
+    // without the check the NaN row became every farthest-point centroid
+    // after the first, all 4 centroids ended with a NaN component, no row
+    // had a finite nearest centroid, and the collect failed on an
+    // out-of-bounds `getItem(0)` of the empty probe list
+    val emb = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(4)(j => if (i == 7 && j == 2) Float.NaN else ((i * 7 + j * 3) % 11).toFloat))
+    }.toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      Dedup.embeddingClusters(emb, "vec_id", "embedding", k = 4).collect())
+    assert(e.getMessage.contains("fit: 1 vector(s) with a NaN or infinite component"), e.getMessage)
+  }
+
   test("cell-blocked embedding near-dups: high recall vs brute force") {
     val emb = sf("embeddings")
     val brute = Dedup.embeddingNearDups(emb, "vec_id", "embedding", 0.4)
